@@ -1,4 +1,4 @@
-"""Minimal planar geometry: WKB polygons, ray-casting PIP, cell coverings.
+"""Minimal planar geometry: WKB polygons, PIP, tile masks, cell coverings.
 
 Replaces the reference's GeoPandas/shapely usage
 (/root/reference/gridfia/visualization/boundaries.py:30-49,
@@ -7,7 +7,14 @@ gridfia/utils/parallel_processing.py:90-91) with numpy + stdlib:
 - WKB (ISO, little-endian) polygon encode/decode — the ``geom_wkb`` column of
   the polygon dimension table (FIXTURES.md §2).
 - Vectorized even-odd ray-casting point-in-polygon — the exact refinement
-  stage of the cell-prefix hash join (north rule).
+  stage for scattered points (plot points, rect corners).
+- ``tile_mask``: the pixel-centre mask of one raster tile, computed as
+  pixel ranges per row (scanline, as in Raptor) — the boundary-pair kernel
+  of every zonal path. It evaluates the same ``xint`` expression with the
+  same float operations and the same strict ``x < xint`` test as
+  ``points_in_polygon``, once per (row, edge) instead of once per
+  (pixel, edge), so its mask is bit-identical to ray casting the tile's
+  meshgrid at O(h*E + w*h) instead of O(w*h*E) work.
 - Quadtree cell covering of a polygon at res range — the broadcast side of
   the spatial join, the analogue of H3 polyfill.
 """
@@ -19,6 +26,7 @@ import struct
 import numpy as np
 
 from . import grid
+from .constants import PIX, X0, Y0
 
 # ------------------------------------------------------------------ WKB
 
@@ -97,6 +105,35 @@ def points_in_polygon(
             ) * (x2[None, :] - x1[None, :])
         crossings = (straddle & (x[:, None] < xint)).sum(axis=1)
         inside ^= (crossings % 2).astype(bool)
+    return inside
+
+
+def tile_mask(tx: int, ty: int, w: int, h: int, rings: list[np.ndarray]) -> np.ndarray:
+    """(h, w) pixel-centre-in-polygon mask of tile (tx, ty), even-odd rule.
+
+    Pixel centres sit on a regular grid, so where an edge crosses a row
+    depends only on the row: per ring, compute the straddling (row, edge)
+    crossings once, count the pixel centres strictly left of each crossing
+    with ``searchsorted``, and turn the per-row histogram of those counts
+    into per-pixel crossing parities with a reversed cumsum. Bit-identical
+    to ``points_in_polygon`` over the tile's meshgrid.
+    """
+    cx = X0 + (tx * w + np.arange(w)) * PIX + PIX / 2
+    cy = Y0 - (ty * h + np.arange(h)) * PIX - PIX / 2
+    inside = np.zeros((h, w), dtype=bool)
+    for ring in rings:
+        x1, y1 = ring[:-1, 0], ring[:-1, 1]
+        x2, y2 = ring[1:, 0], ring[1:, 1]
+        # (row, edge) pairs whose edge straddles the row's centre line
+        row, e = np.nonzero(
+            (y1[None, :] > cy[:, None]) != (y2[None, :] > cy[:, None])
+        )
+        xint = x1[e] + (cy[row] - y1[e]) / (y2[e] - y1[e]) * (x2[e] - x1[e])
+        # pixel j counts a crossing iff cx[j] < xint, i.e. j < n_left
+        n_left = np.searchsorted(cx, xint, side="left")
+        hist = np.bincount(row * (w + 1) + n_left, minlength=h * (w + 1))
+        right = hist.reshape(h, w + 1)[:, :0:-1].cumsum(axis=1)[:, ::-1]
+        inside ^= (right & 1).astype(bool)
     return inside
 
 

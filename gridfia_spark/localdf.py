@@ -17,18 +17,32 @@ no pandas dtype inference in between (ints stay exact, None stays null).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.types import StructType
 
 
 def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
-    """LocalTableScan-backed DataFrame from a small list of row tuples."""
+    """LocalTableScan-backed DataFrame from a small list of row tuples.
+
+    Values are taken by position, so every row must be a plain tuple or list
+    with exactly one value per schema field. ``Row`` and dict rows are
+    rejected: their field order cannot be checked against the schema."""
     if isinstance(schema, str):
         from pyspark.sql.types import _parse_datatype_string
 
         schema = _parse_datatype_string(schema)
     if not isinstance(rows, (list, tuple)):
         rows = list(rows)
+    n = len(schema.fields)
+    for r in rows:
+        if isinstance(r, Row) or not isinstance(r, (tuple, list)):
+            raise ValueError(
+                f"local_df takes positional tuple/list rows, got {type(r).__name__}"
+            )
+        if len(r) != n:
+            raise ValueError(
+                f"local_df row has {len(r)} values, schema has {n} fields: {r!r:.200}"
+            )
     if not rows:
         # empty relations take the classic path (no pandas block to build)
         return spark.createDataFrame([], schema)

@@ -10,7 +10,10 @@ Arrow UDF batch — pure numpy/pandas merges, no per-row Python.
 This gives:
 - tile assignment: a map-only job (no shuffle at all);
 - zonal stats: one map pass emitting per-(tile,poly) partials + one tiny
-  final aggregation — the minimum possible stage count.
+  final aggregation — the minimum possible stage count. Tiles provably
+  inside a polygon skip the mask; boundary (tile, poly) pairs get an exact
+  scanline pixel mask (``geom.tile_mask``: pixel ranges per row, not a
+  per-pixel test).
 
 The DataFrame cell-join path (operators/spatial_join.py) remains the plan
 for LARGE polygon sides (millions of polygons), where the index no longer
@@ -28,7 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import codecs, geom, grid
-from ..constants import PIX, X0, Y0
 from . import decode
 
 
@@ -143,10 +145,10 @@ def assign_tiles_fast(
 
 def _iter_pair_values(pdf: pd.DataFrame, index: PolygonIndex):
     """Yield ``(pidx, batch_row, vals)`` for every candidate (tile, poly)
-    pair of one Arrow batch: decode each tile once (cache per row), ray-cast
-    each (tile coords, poly) boundary mask once (cache shared across the
-    co-located species rows of a tile). Shared by the sum- and
-    histogram-partial map stages."""
+    pair of one Arrow batch: decode each tile once (cache per row), build
+    each (tile coords, poly) boundary scanline mask once (``geom.tile_mask``;
+    cache shared across the co-located species rows of a tile). Shared by
+    the sum- and histogram-partial map stages."""
     xmin = pdf["xmin"].to_numpy()
     ymin = pdf["ymin"].to_numpy()
     xmax = pdf["xmax"].to_numpy()
@@ -154,41 +156,43 @@ def _iter_pair_values(pdf: pd.DataFrame, index: PolygonIndex):
     cand = index.candidates(xmin, ymin, xmax, ymax)
     if cand.empty:
         return
-    arrs: dict[int, np.ndarray] = {}
-    masks: dict[tuple[int, int, int], np.ndarray] = {}
+    data = pdf["bytes"].to_numpy()
+    fmts = pdf["fmt"].to_numpy()
+    ws = pdf["w"].to_numpy()
+    hs = pdf["h"].to_numpy()
     txs = pdf["tx"].to_numpy()
     tys = pdf["ty"].to_numpy()
-    for r in cand.itertuples(index=False):
-        i = int(r.row)
-        if i not in arrs:
-            row = pdf.iloc[i]
+    n_hit = cand["n_hit"].to_numpy()
+    inside = (n_hit == cand["n_cells"].to_numpy()) & (
+        cand["n_full"].to_numpy() == n_hit
+    )
+    arrs: dict[int, np.ndarray] = {}
+    masks: dict[tuple[int, int, int], np.ndarray] = {}
+    for i, pidx, tile_inside in zip(
+        cand["row"].to_numpy(dtype=np.int64).tolist(),
+        cand["pidx"].to_numpy(dtype=np.int64).tolist(),
+        inside.tolist(),
+    ):
+        arr = arrs.get(i)
+        if arr is None:
             # stay float32: halves memory traffic; sums accumulate
             # in float64 via dtype= (bit-identical to converting)
-            arrs[i] = codecs.decode(
-                row["bytes"], int(row["w"]), int(row["h"]), row["fmt"]
+            arr = arrs[i] = codecs.decode(
+                data[i], int(ws[i]), int(hs[i]), fmts[i]
             ).ravel()
-        arr = arrs[i]
-        tile_inside = r.n_hit == r.n_cells and r.n_full == r.n_hit
         if tile_inside:
             vals = arr
         else:
-            pidx = int(r.pidx)
             mkey = (int(txs[i]), int(tys[i]), pidx)
             mask = masks.get(mkey)
             if mask is None:
-                row = pdf.iloc[i]
-                w_, h_ = int(row["w"]), int(row["h"])
-                cx = X0 + (int(txs[i]) * w_ + np.arange(w_)) * PIX + PIX / 2
-                cy = Y0 - (int(tys[i]) * h_ + np.arange(h_)) * PIX - PIX / 2
-                gx, gy = np.meshgrid(cx, cy)
-                mask = geom.points_in_polygon(
-                    gx.ravel(), gy.ravel(), index.rings[pidx]
-                )
-                masks[mkey] = mask
+                mask = masks[mkey] = geom.tile_mask(
+                    mkey[0], mkey[1], int(ws[i]), int(hs[i]), index.rings[pidx]
+                ).ravel()
             if not mask.any():
                 continue
             vals = arr[mask]
-        yield int(r.pidx), i, vals
+        yield pidx, i, vals
 
 
 _ZONAL_META_COLS = (
@@ -208,12 +212,13 @@ def _zonal_partials(meta: DataFrame, index: PolygonIndex) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
+            s_col = pdf["s"].to_numpy()
             out = []
             for pidx, i, vals in _iter_pair_values(pdf, index):
                 out.append(
                     (
                         index.poly_ids[pidx],
-                        int(pdf["s"].iloc[i]),
+                        int(s_col[i]),
                         int(vals.size),
                         float(vals.sum(dtype=np.float64)),
                         float(vals.max()),
@@ -247,12 +252,13 @@ def _zonal_hist_partials(meta: DataFrame, index: PolygonIndex) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
+            s_col = pdf["s"].to_numpy()
             pids, ss, vv, cc = [], [], [], []
             for pidx, i, vals in _iter_pair_values(pdf, index):
                 counts = np.bincount(vals.astype(np.int64))
                 nz = np.flatnonzero(counts)
                 pids.append(np.full(nz.size, index.poly_ids[pidx], dtype=object))
-                ss.append(np.full(nz.size, int(pdf["s"].iloc[i]), dtype=np.int32))
+                ss.append(np.full(nz.size, int(s_col[i]), dtype=np.int32))
                 vv.append(nz.astype(np.int32))
                 cc.append(counts[nz])
             if pids:

@@ -9,8 +9,9 @@ Execution shape (scale-first):
 1. cell-prefix candidate join (image_id × poly_id) — broadcast, no shuffle of
    tile bytes;
 2. one ``mapInPandas`` pass over candidate pairs: decode each tile once,
-   vectorized PIP mask for boundary tiles (skipped entirely for tiles provably
-   inside), emit **per-tile partial aggregates** (sum/count/max/nonzero);
+   scanline pixel mask (``geom.tile_mask``) for boundary tiles (skipped
+   entirely for tiles provably inside), emit **per-tile partial
+   aggregates** (sum/count/max/nonzero);
 3. tiny ``groupBy(poly_id)`` final aggregation over partials.
 
 Per-tile partials keep the shuffle O(pairs), not O(pixels), and make float
@@ -29,7 +30,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import codecs, geom
-from ..constants import PIX, X0, Y0
 from . import decode, spatial_join
 
 
@@ -64,14 +64,11 @@ def clip_to_polygon(
             for row in pdf.itertuples(index=False):
                 arr = codecs.decode(row.bytes, row.w, row.h, row.fmt)
                 if not row.tile_inside:
-                    cx = X0 + (row.tx * row.w + np.arange(row.w)) * PIX + PIX / 2
-                    cy = Y0 - (row.ty * row.h + np.arange(row.h)) * PIX - PIX / 2
-                    gx, gy = np.meshgrid(cx, cy)
                     rings = geom.wkb_to_polygon(bytes(row.geom_wkb))
-                    mask = geom.points_in_polygon(gx.ravel(), gy.ravel(), rings)
+                    mask = geom.tile_mask(row.tx, row.ty, row.w, row.h, rings)
                     if not mask.any():
                         continue  # cell-candidate false positive: no overlap
-                    arr = np.where(mask.reshape(arr.shape), arr, 0.0).astype(np.float32)
+                    arr = np.where(mask, arr, 0.0).astype(np.float32)
                 from ..datagen import pixels as pxgen
 
                 out["image_id"].append(row.image_id)
@@ -165,12 +162,8 @@ def zonal_stats(
                 if row.tile_inside:
                     vals = arr.ravel().astype(np.float64)
                 else:
-                    # pixel-center coordinates of this tile
-                    cx = X0 + (row.tx * row.w + np.arange(row.w)) * PIX + PIX / 2
-                    cy = Y0 - (row.ty * row.h + np.arange(row.h)) * PIX - PIX / 2
-                    gx, gy = np.meshgrid(cx, cy)
                     rings = geom.wkb_to_polygon(bytes(row.geom_wkb))
-                    mask = geom.points_in_polygon(gx.ravel(), gy.ravel(), rings)
+                    mask = geom.tile_mask(row.tx, row.ty, row.w, row.h, rings).ravel()
                     if not mask.any():
                         continue
                     vals = arr.ravel().astype(np.float64)[mask]

@@ -1102,9 +1102,11 @@ def chunk_grid_df(
     n = len(layers) * per_layer
     parts = max(1, min(n, spark.sparkContext.defaultParallelism * 4))
     smap = F.array(*[F.lit(int(s)) for s in layers])
+    # integer ``div``/``%`` on the bigint id: exact for any grid size
+    # (float division plus a cast can round wrongly once ids pass 2**53)
     return spark.range(0, n, 1, parts).select(
-        F.element_at(smap, (F.col("id") / per_layer).cast("int") + 1).alias("s"),
-        ((F.col("id") % per_layer) / n_cx).cast("int").alias("cy"),
+        F.element_at(smap, F.expr(f"id div {per_layer}").cast("int") + 1).alias("s"),
+        F.expr(f"(id % {per_layer}) div {n_cx}").cast("int").alias("cy"),
         (F.col("id") % n_cx).cast("int").alias("cx"),
     )
 

@@ -8,7 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gridfia_spark import codecs, geom, grid
-from gridfia_spark.constants import SF_SPECS
+from gridfia_spark.constants import PIX, SF_SPECS, X0, Y0
 from gridfia_spark.datagen import pixels, vectors
 
 
@@ -138,6 +138,87 @@ class TestGeom:
             for x0, y0, x1, y1 in zip(xmin, ymin, xmax, ymax):
                 covered |= (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
             assert covered[inside].all()
+
+
+def _meshgrid_mask(tx, ty, w, h, rings):
+    """Reference: ray-cast every pixel centre of the tile."""
+    cx = X0 + (tx * w + np.arange(w)) * PIX + PIX / 2
+    cy = Y0 - (ty * h + np.arange(h)) * PIX - PIX / 2
+    gx, gy = np.meshgrid(cx, cy)
+    return geom.points_in_polygon(gx.ravel(), gy.ravel(), rings).reshape(h, w)
+
+
+def _lattice_ring(tx, ty, w, h, u, v):
+    """Closed ring with vertices on the half-pixel lattice of tile (tx, ty):
+    even (u, v) are pixel corners, odd ones pixel centres."""
+    x = X0 + (tx * w) * PIX + np.asarray(u) * PIX / 2
+    y = Y0 - (ty * h) * PIX - np.asarray(v) * PIX / 2
+    r = np.stack([x, y], axis=1)
+    return np.vstack([r, r[:1]])
+
+
+class TestTileMask:
+    """geom.tile_mask is bit-identical to ray casting the tile's meshgrid."""
+
+    def _check(self, tx, ty, w, h, rings):
+        got = geom.tile_mask(tx, ty, w, h, rings)
+        assert got.shape == (h, w) and got.dtype == bool
+        np.testing.assert_array_equal(got, _meshgrid_mask(tx, ty, w, h, rings))
+        return got
+
+    @settings(max_examples=300, deadline=None)
+    @given(
+        st.integers(0, 3), st.integers(0, 3),
+        st.integers(1, 24), st.integers(1, 24),
+        st.lists(st.tuples(st.integers(-6, 54), st.integers(-6, 54)),
+                 min_size=3, max_size=14),
+        st.one_of(st.none(), st.lists(
+            st.tuples(st.integers(-6, 54), st.integers(-6, 54)),
+            min_size=3, max_size=8)),
+    )
+    def test_random_lattice_polygons(self, tx, ty, w, h, outer, hole):
+        rings = [_lattice_ring(tx, ty, w, h, *zip(*outer))]
+        if hole is not None:
+            rings.append(_lattice_ring(tx, ty, w, h, *zip(*hole)))
+        self._check(tx, ty, w, h, rings)
+
+    def test_vertices_on_pixel_centre_rows(self):
+        # every vertex sits on a pixel-centre row (odd v), four on centres
+        ring = _lattice_ring(2, 1, 16, 16, [1, 20, 31, 9, -3], [3, 1, 17, 29, 13])
+        self._check(2, 1, 16, 16, [ring])
+
+    def test_horizontal_and_vertical_edges(self):
+        # horizontal edges on centre rows and on pixel edges; vertical edges
+        # through pixel centres (odd u) and on pixel edges (even u)
+        ring = _lattice_ring(
+            0, 0, 12, 12,
+            [3, 3, 9, 9, 15, 15, 20, 20],
+            [-2, 7, 7, 12, 12, 5, 5, -2],
+        )
+        m = self._check(0, 0, 12, 12, [ring])
+        assert m.any() and not m.all()
+
+    def test_hole(self):
+        outer = _lattice_ring(1, 1, 20, 20, [2, 36, 36, 2], [2, 2, 36, 36])
+        hole = _lattice_ring(1, 1, 20, 20, [11, 25, 25, 11], [11, 11, 25, 25])
+        m = self._check(1, 1, 20, 20, [outer, hole])
+        assert not m[9, 9] and m[3, 3]
+
+    @pytest.mark.parametrize("w,h", [(1, 9), (9, 1), (7, 31), (40, 3)])
+    def test_non_square_tiles(self, w, h):
+        ring = _lattice_ring(3, 2, w, h, [-1, 2 * w - 1, w], [1, h, 2 * h + 1])
+        self._check(3, 2, w, h, [ring])
+
+    def test_outside_and_covering(self):
+        w, h = 8, 5
+        outside = _lattice_ring(1, 1, w, h, [20, 30, 30, 20], [0, 0, 9, 9])
+        assert not self._check(1, 1, w, h, [outside]).any()
+        cover = _lattice_ring(1, 1, w, h, [-4, 2 * w + 3, 2 * w + 3, -4],
+                              [-4, -4, 2 * h + 3, 2 * h + 3])
+        assert self._check(1, 1, w, h, [cover]).all()
+        # the tile's own outline: every centre is strictly inside
+        own = _lattice_ring(1, 1, w, h, [0, 2 * w, 2 * w, 0], [0, 0, 2 * h, 2 * h])
+        assert self._check(1, 1, w, h, [own]).all()
 
 
 class TestPixelGen:

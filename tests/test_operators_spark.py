@@ -237,6 +237,53 @@ class TestBroadcastJoinEquivalence:
         assert fast == slow
 
 
+class TestLShapePins:
+    """Rows of the three mask consumers on the concave L-shape fixture,
+    pinned to the values of the per-pixel ray-casting masks they replaced
+    (and cross-checked against the whole-raster oracle)."""
+
+    @pytest.fixture(scope="class")
+    def lshape(self, polys):
+        return polys.filter(F.col("poly_id") == "L01")
+
+    def test_zonal_stats(self, spark, tiles, lshape):
+        want = {0: (768, 22875.0, 90.0, 709), 3: (768, 848.0, 40.0, 50)}
+        poly = vectors.concave_polygons(SPEC)[0]
+        for s, row in want.items():
+            (r,) = zonal.zonal_stats(tiles, lshape, species=s).collect()
+            got = (r.n_px, r.sum_v, r.max_v, r.nonzero_px)
+            assert (r.poly_id, got) == ("L01", row) and got == oracle_zonal(poly, s)
+
+    def test_zonal_stats_fast(self, spark, tiles, lshape):
+        from gridfia_spark.operators import broadcast_join
+
+        got = {
+            r.s: (r.n_px, r.sum_v, r.max_v, r.nonzero_px)
+            for r in broadcast_join.zonal_stats_fast(
+                tiles, lshape, species=None, res=14
+            ).collect()
+        }
+        assert got == {
+            0: (768, 22875.0, 90.0, 709),
+            1: (768, 15719.0, 49.0, 629),
+            2: (768, 5472.0, 30.0, 370),
+            3: (768, 848.0, 40.0, 50),
+            4: (768, 0.0, 0.0, 0),
+            5: (768, 836.0, 15.0, 105),
+        }
+
+    def test_clip_to_polygon(self, spark, tiles, polys):
+        from gridfia_spark import codecs
+
+        rows = zonal.clip_to_polygon(tiles, polys, "L01", species=0).collect()
+        arrs = [codecs.decode(bytes(r.bytes), r.w, r.h, r.fmt) for r in rows]
+        assert sorted(r.image_id for r in rows) == [
+            "sp0000_tx000_ty000", "sp0000_tx000_ty001", "sp0000_tx001_ty001"
+        ]
+        assert sum(float(a.sum(dtype=np.float64)) for a in arrs) == 22875.0
+        assert sum(int((a != 0).sum()) for a in arrs) == 709
+
+
 class TestManyPolygons:
     """The DataFrame cell-join path is the plan for large polygon dims —
     exercise it with a 10x10 grid of 100 small counties and check both paths

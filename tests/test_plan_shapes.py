@@ -7,6 +7,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import Row
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -98,3 +99,31 @@ class TestPlanShapes:
         plan = _plan(spark, "zonal_percentiles")
         assert "percentile(" not in plan
         assert "ObjectHashAggregate" not in plan
+
+
+class TestLocalDf:
+    """local_df takes values by position, so rows whose field order or
+    width cannot be checked against the schema must fail loudly."""
+
+    def test_positional_rows_plan_as_local_table_scan(self, spark):
+        from gridfia_spark.localdf import local_df
+
+        df = local_df(spark, [(1, 2), [3, 4]], "a long, b long")
+        assert [tuple(r) for r in df.collect()] == [(1, 2), (3, 4)]
+        assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+
+    @pytest.mark.parametrize(
+        "row",
+        [
+            # same types: the Row was silently transposed a<->b before
+            pytest.param(Row(b=2, a=1), id="Row-out-of-schema-order"),
+            pytest.param({"a": 1, "b": 2}, id="dict"),
+            pytest.param((1, 2, 3), id="too-long"),
+            pytest.param((1,), id="too-short"),
+        ],
+    )
+    def test_uncheckable_rows_raise(self, spark, row):
+        from gridfia_spark.localdf import local_df
+
+        with pytest.raises(ValueError, match="local_df"):
+            local_df(spark, [(0, 0), row], "a long, b long")

@@ -680,6 +680,27 @@ class TestDiffStores:
                 for cx in range(4)]
         assert [(r.s, r.cy, r.cx) for r in got] == want
 
+    def test_chunk_grid_df_integer_indices(self, spark):
+        """(s, cy, cx) come from integer div/%: they equal numpy divmod on a
+        grid whose per-layer chunk count (5 * 7) is not a power of two, and
+        no expression of the projection is a double."""
+        layers, n_cy, n_cx = [1, 4], 5, 7
+        df = zarrstore.chunk_grid_df(spark, layers, n_cy, n_cx)
+        ids = np.arange(len(layers) * n_cy * n_cx)
+        li, rem = np.divmod(ids, n_cy * n_cx)
+        cy, cx = np.divmod(rem, n_cx)
+        want = list(zip(np.asarray(layers)[li].tolist(), cy.tolist(), cx.tolist()))
+        assert [(r.s, r.cy, r.cx) for r in df.collect()] == want
+        exprs = df._jdf.queryExecution().analyzed().expressions()
+        stack = [exprs.apply(i) for i in range(exprs.size())]
+        types = set()
+        while stack:
+            e = stack.pop()
+            types.add(e.dataType().simpleString())
+            kids = e.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        assert "bigint" in types and "double" not in types, types
+
     def test_absent_chunk_diffs_against_fill(self, spark, tmp_path):
         """A chunk deleted from epoch B diffs against zeros (Zarr fill
         semantics); deleted from BOTH, the pair is skipped."""
