@@ -99,7 +99,10 @@ def generate_tiles(spark: SparkSession, spec: GridSpec, fmt: str = "rawz") -> Da
 
 # ------------------------------------------------------------------ cache
 
-CACHE_ROOT = os.environ.get("GRIDFIA_CACHE", "/root/repo/.cache")
+CACHE_ROOT = os.environ.get(
+    "GRIDFIA_CACHE",
+    os.path.normpath(os.path.join(os.path.dirname(os.path.abspath(__file__)), "../../.cache")),
+)
 
 
 def _sf_tag(sf_dir: str) -> str:

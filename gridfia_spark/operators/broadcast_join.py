@@ -1,23 +1,17 @@
-"""Map-side spatial join for small polygon dimensions (the common case).
+"""The spatial-join core: one pair kernel for every zonal plan.
 
-When the polygon side is a small dimension (state/county boundaries — the
-reference's GeoDataFrame fits in memory, boundaries.py:30-49), the idiomatic
-distributed plan is a **broadcast hash join with zero shuffles**: the
-covering-cell→polygon index is built once on the driver, shipped to every
-task closure (Spark broadcasts pickled closures), and probed inside the
-Arrow UDF batch — pure numpy/pandas merges, no per-row Python.
+Every candidate (tile, polygon) pair runs one kernel, ``_pair_values``:
+candidates -> sure/maybe -> mask -> partials. A sure pair (tile provably
+inside the polygon) skips the mask; a boundary pair gets an exact scanline
+pixel mask (``geom.tile_mask``). Plans differ only in how pairs are found:
 
-This gives:
-- tile assignment: a map-only job (no shuffle at all);
-- zonal stats: one map pass emitting per-(tile,poly) partials + one tiny
-  final aggregation — the minimum possible stage count. Tiles provably
-  inside a polygon skip the mask; boundary (tile, poly) pairs get an exact
-  scanline pixel mask (``geom.tile_mask``: pixel ranges per row, not a
-  per-pixel test).
-
-The DataFrame cell-join path (operators/spatial_join.py) remains the plan
-for LARGE polygon sides (millions of polygons), where the index no longer
-fits on the driver. Both paths are semantically identical and tested equal.
+- ``PolygonIndex`` (small polygon side, like the reference's in-memory
+  GeoDataFrame, boundaries.py:30-49): a covering-cell index built on the
+  driver, broadcast once per worker and probed inside the Arrow batch.
+  ``assign_tiles_fast`` is map-only; ``zonal_stats_fast`` is one map pass of
+  per-pair partials plus one tiny final aggregation (``final_zonal``).
+- the cell join ``spatial_join.join_tiles_polygons`` (large polygon side or
+  hot cells, picked by ``zonal.zonal_stats``) feeds the same kernel.
 """
 
 from __future__ import annotations
@@ -32,6 +26,9 @@ from pyspark.sql import functions as F
 
 from .. import codecs, geom, grid
 from . import decode
+
+# PolygonIndex.build refuses more polygons; zonal_stats('auto') goes distributed
+AUTO_DIST_THRESHOLD = 10_000  # driver covering is fine up to ~10^4 polygons
 
 
 @dataclass
@@ -48,7 +45,12 @@ class PolygonIndex:
     def build(cls, polygons: DataFrame, res: int) -> "PolygonIndex":
         from .spatial_join import covering_at_res
 
-        rows = polygons.select("poly_id", "geom_wkb").collect()
+        rows = polygons.select("poly_id", "geom_wkb").limit(AUTO_DIST_THRESHOLD + 1).collect()
+        if len(rows) > AUTO_DIST_THRESHOLD:
+            raise ValueError(
+                f"more than {AUTO_DIST_THRESHOLD} polygons for a driver index; use "
+                "zonal_stats(distributed=True) or join_points_polygons(distributed=True)"
+            )
         poly_ids, all_rings, bounds = [], [], []
         recs = []
         for pidx, r in enumerate(rows):
@@ -71,22 +73,20 @@ class PolygonIndex:
         self, xmin: np.ndarray, ymin: np.ndarray, xmax: np.ndarray, ymax: np.ndarray
     ) -> pd.DataFrame:
         """Vectorized cell-prefix probe: bboxes -> candidate (row, pidx) pairs
-        with ``n_full`` (count of fully-inside cell hits) and ``n_cells``
-        (total covering cells of the bbox)."""
+        with ``n_full`` (count of fully-inside cell hits), ``n_cells`` (total
+        covering cells of the bbox) and ``inside`` (every covering cell of
+        the bbox is a fully-inside polygon cell: a sure pair)."""
         row_idx, cells = grid.bbox_cells_batch(xmin, ymin, xmax, ymax, self.res)
         probe = pd.DataFrame({"row": row_idx, "cell_id": cells})
         n_cells = np.bincount(row_idx, minlength=len(xmin))
         hits = probe.merge(self.cell_to_poly, on="cell_id", how="inner")
-        if hits.empty:
-            return pd.DataFrame(
-                {"row": [], "pidx": [], "n_hit": [], "n_full": [], "n_cells": []}
-            )
         agg = (
             hits.groupby(["row", "pidx"], sort=False)
             .agg(n_hit=("fully_inside", "size"), n_full=("fully_inside", "sum"))
             .reset_index()
         )
         agg["n_cells"] = n_cells[agg["row"].to_numpy()]
+        agg["inside"] = (agg.n_hit == agg.n_cells) & (agg.n_full == agg.n_hit)
         return agg
 
 
@@ -104,6 +104,8 @@ def assign_tiles_fast(
     # task closure (a ~100KB+ pickle per task otherwise dominates job time)
     bc = tiles_meta.sparkSession.sparkContext.broadcast(index)
     cols = tiles_meta.select("image_id", "xmin", "ymin", "xmax", "ymax")
+    # positive-area overlap: edge-touching tiles are not assigned (fixture
+    # coordinates are integers, so shrinking by eps cannot flip an overlap)
     eps = 1e-3
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -118,9 +120,8 @@ def assign_tiles_fast(
             cand = index.candidates(xmin, ymin, xmax, ymax)
             if cand.empty:
                 continue
-            sure = cand[(cand.n_hit == cand.n_cells) & (cand.n_full == cand.n_hit)]
-            maybe = cand.drop(sure.index)
-            keep = [sure[["row", "pidx"]]]
+            keep = [cand.loc[cand.inside, ["row", "pidx"]]]
+            maybe = cand[~cand.inside]
             for pidx, g in maybe.groupby("pidx", sort=False):
                 rows = g["row"].to_numpy()
                 rel = geom.rect_relation_batch(
@@ -143,56 +144,67 @@ def assign_tiles_fast(
     return cols.mapInPandas(run, "poly_id string, image_id string")
 
 
-def _iter_pair_values(pdf: pd.DataFrame, index: PolygonIndex):
-    """Yield ``(pidx, batch_row, vals)`` for every candidate (tile, poly)
-    pair of one Arrow batch: decode each tile once (cache per row), build
-    each (tile coords, poly) boundary scanline mask once (``geom.tile_mask``;
-    cache shared across the co-located species rows of a tile). Shared by
-    the sum- and histogram-partial map stages."""
-    xmin = pdf["xmin"].to_numpy()
-    ymin = pdf["ymin"].to_numpy()
-    xmax = pdf["xmax"].to_numpy()
-    ymax = pdf["ymax"].to_numpy()
-    cand = index.candidates(xmin, ymin, xmax, ymax)
-    if cand.empty:
-        return
+def _pair_values(pdf: pd.DataFrame, rows, keys, inside, rings):
+    """The pair kernel: yield ``(key, batch_row, vals)`` for the candidate
+    pairs ``zip(rows, keys, inside)`` of one Arrow batch. Sure pairs take the
+    whole tile; boundary pairs the pixels of their scanline mask over
+    ``rings[key]`` (dropped when empty). Each batch row is decoded once and
+    each (tx, ty, key) mask built once (shared by a tile's species rows)."""
     data = pdf["bytes"].to_numpy()
     fmts = pdf["fmt"].to_numpy()
     ws = pdf["w"].to_numpy()
     hs = pdf["h"].to_numpy()
     txs = pdf["tx"].to_numpy()
     tys = pdf["ty"].to_numpy()
-    n_hit = cand["n_hit"].to_numpy()
-    inside = (n_hit == cand["n_cells"].to_numpy()) & (
-        cand["n_full"].to_numpy() == n_hit
-    )
     arrs: dict[int, np.ndarray] = {}
-    masks: dict[tuple[int, int, int], np.ndarray] = {}
-    for i, pidx, tile_inside in zip(
-        cand["row"].to_numpy(dtype=np.int64).tolist(),
-        cand["pidx"].to_numpy(dtype=np.int64).tolist(),
-        inside.tolist(),
-    ):
+    masks: dict[tuple, np.ndarray] = {}
+    for i, key, tile_inside in zip(rows, keys, inside):
         arr = arrs.get(i)
         if arr is None:
             # stay float32: halves memory traffic; sums accumulate
             # in float64 via dtype= (bit-identical to converting)
-            arr = arrs[i] = codecs.decode(
-                data[i], int(ws[i]), int(hs[i]), fmts[i]
-            ).ravel()
+            arr = arrs[i] = codecs.decode(data[i], int(ws[i]), int(hs[i]), fmts[i]).ravel()
         if tile_inside:
             vals = arr
         else:
-            mkey = (int(txs[i]), int(tys[i]), pidx)
+            mkey = (int(txs[i]), int(tys[i]), key)
             mask = masks.get(mkey)
             if mask is None:
                 mask = masks[mkey] = geom.tile_mask(
-                    mkey[0], mkey[1], int(ws[i]), int(hs[i]), index.rings[pidx]
+                    mkey[0], mkey[1], int(ws[i]), int(hs[i]), rings[key]
                 ).ravel()
             if not mask.any():
                 continue
             vals = arr[mask]
-        yield pidx, i, vals
+        yield key, i, vals
+
+
+def _iter_pair_values(pdf: pd.DataFrame, index: PolygonIndex):
+    """Index probe of one Arrow batch into the pair kernel (keys: ``pidx``)."""
+    cand = index.candidates(*(pdf[c].to_numpy() for c in ("xmin", "ymin", "xmax", "ymax")))
+    return _pair_values(
+        pdf, cand["row"].tolist(), cand["pidx"].tolist(), cand["inside"].tolist(), index.rings
+    )
+
+
+def pair_stats(vals: np.ndarray) -> tuple[int, float, float, int]:
+    """Zonal partials of one pair's pixels: (n_px, sum_v, max_v, nonzero_px)."""
+    return (int(vals.size), float(vals.sum(dtype=np.float64)), float(vals.max()),
+            int((vals > 0).sum()))
+
+
+def final_zonal(part: DataFrame, keys: list[str]) -> DataFrame:
+    """The one final zonal aggregation: per-pair partials -> stats by ``keys``."""
+    return (
+        part.groupBy(*keys)
+        .agg(
+            F.sum("n_px").alias("n_px"),
+            F.sum("sum_v").alias("sum_v"),
+            F.max("max_v").alias("max_v"),
+            F.sum("nonzero_px").alias("nonzero_px"),
+        )
+        .withColumn("mean_v", F.col("sum_v") / F.col("n_px"))
+    )
 
 
 _ZONAL_META_COLS = (
@@ -213,18 +225,10 @@ def _zonal_partials(meta: DataFrame, index: PolygonIndex) -> DataFrame:
             if pdf.empty:
                 continue
             s_col = pdf["s"].to_numpy()
-            out = []
-            for pidx, i, vals in _iter_pair_values(pdf, index):
-                out.append(
-                    (
-                        index.poly_ids[pidx],
-                        int(s_col[i]),
-                        int(vals.size),
-                        float(vals.sum(dtype=np.float64)),
-                        float(vals.max()),
-                        int((vals > 0).sum()),
-                    )
-                )
+            out = [
+                (index.poly_ids[pidx], int(s_col[i]), *pair_stats(vals))
+                for pidx, i, vals in _iter_pair_values(pdf, index)
+            ]
             if out:
                 yield pd.DataFrame(
                     out,
@@ -305,14 +309,4 @@ def zonal_stats_fast(
     if species is not None:
         meta = meta.filter(F.col("s") == species)
     part = _zonal_partials(meta, index)
-    keys = ["poly_id", "s"] if species is None else ["poly_id"]
-    return (
-        part.groupBy(*keys)
-        .agg(
-            F.sum("n_px").alias("n_px"),
-            F.sum("sum_v").alias("sum_v"),
-            F.max("max_v").alias("max_v"),
-            F.sum("nonzero_px").alias("nonzero_px"),
-        )
-        .withColumn("mean_v", F.col("sum_v") / F.col("n_px"))
-    )
+    return final_zonal(part, ["poly_id", "s"] if species is None else ["poly_id"])

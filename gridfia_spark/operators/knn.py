@@ -75,9 +75,11 @@ def knn_join(
     (dist_sq, neighbor_id).
 
     ``target_stats``: optional ``(n_targets, xmin, xmax, ymin, ymax)`` when
-    the caller already knows them (table spec, manifest) — skips the one
-    stats job otherwise used to size the first ring radius. The stats only
-    steer the radius ESTIMATE; exactness never depends on them.
+    the caller already knows them (table spec, manifest) — skips the
+    aggregation job otherwise used to size the first ring radius. The stats
+    only steer the radius ESTIMATE: the query count that ends the proof loop
+    is always counted from the data, so a wrong caller stat can cost extra
+    iterations but never change the result.
     """
     q = queries.select("point_id", "x", "y")
     t = _with_cell(targets.select("point_id", "x", "y"), res).select(
@@ -98,7 +100,7 @@ def knn_join(
     # even when the estimate is off (clustered or adversarial layouts).
     if target_stats is not None:
         n_t, x0, x1, y0, y1 = target_stats
-        n_queries = int(n_t) if queries is targets else q.count()
+        n_queries = q.count()
     else:
         tstats = t.agg(
             F.count("*").alias("n"),

@@ -1,20 +1,21 @@
-"""Spatial joins: broadcast cell-prefix hash join + ray-casting refinement.
+"""Spatial joins on the cell grid (north rule; SURVEY §2.3 J1-J3).
 
-The engine's centerpiece (north rule; SURVEY §2.3 J1-J3). Both sides are
-indexed into the same single-resolution cell grid (the H3-polyfill analogue):
+Both sides are indexed into the same single-resolution cell grid (the
+H3-polyfill analogue): polygons -> covering cells ``(poly_id, cell_id,
+fully_inside)`` by one kernel (``covering_at_res``) run on the driver
+(``polygon_cells_df``) or in-cluster (``polygon_cells_dist``); probes
+(points or tiles) -> their cell id(s) at the same resolution.
 
-- polygons -> covering cells ``(poly_id, cell_id, fully_inside)`` — tiny
-  dimension, broadcast;
-- probes (points or tiles) -> their cell id(s) at the same resolution.
+- ``join_points_polygons``: by default one map-only pass over a broadcast
+  ``broadcast_join.PolygonIndex`` (cell probe, fully-inside fast path,
+  vectorized ray casting); ``distributed=True`` equi-joins an in-cluster
+  covering on ``cell_id`` and ray-casts only cells not fully inside.
+- ``join_tiles_polygons``: candidate (tile, polygon) pairs with
+  ``tile_inside`` for the cell-join zonal plans (``zonal.zonal_stats`` with
+  ``distributed=True`` / ``salted=True``), whose pixels then go through the
+  one pair kernel in ``broadcast_join``.
 
-The join is then a plain equi-join on ``cell_id`` (hash join, broadcastable),
-followed by exact refinement **only for cells not fully inside** — refinement
-is vectorized ray-casting PIP in a pandas UDF, never per-row Python.
-
-Why this scales: the equi-join shuffles nothing when the polygon side is
-broadcast; the refinement UDF sees only the boundary sliver of candidates;
-Iceberg/Parquet min-max pruning on ``cell_id`` (tiles are written sorted by
-cell) prunes non-overlapping files before any decode.
+Tile assignment has one implementation: ``broadcast_join.assign_tiles_fast``.
 """
 
 from __future__ import annotations
@@ -172,14 +173,8 @@ def join_points_polygons(
         maybe = cand.filter(~F.col("fully_inside")).drop("fully_inside", "cell_id")
         return sure.unionByName(_pip_refine(maybe, polygons))
     # Small polygon side: ONE map-only pass over a broadcast covering index
-    # (same kernel as broadcast_join.assign_tiles_fast). The previous
-    # cells-join + sure/maybe-union plan evaluated the point scan and its
-    # cell UDF once per union branch (and the optimizer duplicated the UDF
-    # around the pushed null-filter — guide §4.4: 4 ArrowEvalPython nodes),
-    # plus three broadcast builds and a refine MapInPandas. This form is a
-    # single ArrowEvalPython-free mapInPandas: cell probe, fully-inside
-    # fast path and ray-cast refinement all happen on numpy inside one
-    # batch pass; rows and schema are identical (tested equal).
+    # (broadcast_join.PolygonIndex): cell probe, fully-inside fast path and
+    # ray-cast refinement all happen on numpy inside one batch pass.
     from pyspark.sql.types import StringType, StructField, StructType
 
     from .broadcast_join import PolygonIndex
@@ -286,40 +281,3 @@ def join_tiles_polygons(
     return out.select(
         "image_id", "poly_id", "tile_inside", "xmin", "ymin", "xmax", "ymax"
     )
-
-
-def assign_tiles(
-    tiles_meta: DataFrame, polygons: DataFrame, res: int = grid.JOIN_RES
-) -> DataFrame:
-    """Vector→raster **tile assignment** (north rule): exact set of
-    (poly_id, image_id) pairs whose tile rectangle intersects the polygon.
-
-    Candidates from the cell join are refined with an exact rectangle-polygon
-    relation test (corners-in + edge-clip), so the output rows are exact — the
-    contract checked against the reference's sjoin indices."""
-    cand = join_tiles_polygons(tiles_meta, polygons, res)
-    sure = cand.filter(F.col("tile_inside")).select("poly_id", "image_id")
-    maybe = cand.filter(~F.col("tile_inside")).join(
-        F.broadcast(polygons.select("poly_id", "geom_wkb")), "poly_id"
-    )
-
-    # Assignment contract is positive-area overlap (edge-touching tiles are
-    # NOT assigned) — shrink the rect by eps before the exact relation test;
-    # all fixture coordinates are integers, so eps cannot flip a true overlap.
-    eps = 1e-3
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep = []
-            for row in pdf.itertuples(index=False):
-                rings = geom.wkb_to_polygon(bytes(row.geom_wkb))
-                rel = geom.rect_relation(
-                    rings, row.xmin + eps, row.ymin + eps, row.xmax - eps, row.ymax - eps
-                )
-                if rel != "outside":
-                    keep.append((row.poly_id, row.image_id))
-            if keep:
-                yield pd.DataFrame(keep, columns=["poly_id", "image_id"])
-
-    refined = maybe.mapInPandas(refine, "poly_id string, image_id string")
-    return sure.unionByName(refined)

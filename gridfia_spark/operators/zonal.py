@@ -5,16 +5,13 @@ inside the polygon — the distributed recast of GridFIA's "summarize biomass by
 county" workflow (spatial join at parallel_processing.py:90 + stats like
 species_presence.py:92-125).
 
-Execution shape (scale-first):
-1. cell-prefix candidate join (image_id × poly_id) — broadcast, no shuffle of
-   tile bytes;
-2. one ``mapInPandas`` pass over candidate pairs: decode each tile once,
-   scanline pixel mask (``geom.tile_mask``) for boundary tiles (skipped
-   entirely for tiles provably inside), emit **per-tile partial
-   aggregates** (sum/count/max/nonzero);
-3. tiny ``groupBy(poly_id)`` final aggregation over partials.
+``zonal_stats`` only picks the plan that finds candidate (tile, polygon)
+pairs: the driver index (``broadcast_join.zonal_stats_fast``) for a small
+polygon side, or the cell join (``spatial_join.join_tiles_polygons``) with
+``distributed=True`` / ``salted=True``. Every plan runs the one pair kernel
+(``broadcast_join._pair_values``) and final aggregation (``final_zonal``).
 
-Per-tile partials keep the shuffle O(pairs), not O(pixels), and make float
+Per-pair partials keep the shuffle O(pairs), not O(pixels), and make float
 sums deterministic across parallelism levels: pixel values are integer-valued
 float32, partial sums are exact in float64, and the final combine sums a few
 hundred exact values — bit-equal at local[1] and local[32].
@@ -30,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import codecs, geom
-from . import decode, spatial_join
+from . import broadcast_join, decode, spatial_join
 
 
 def clip_to_polygon(
@@ -86,9 +83,6 @@ def clip_to_polygon(
     return pairs.mapInPandas(clip, TILE_SCHEMA)
 
 
-AUTO_DIST_THRESHOLD = 10_000  # driver covering is fine up to ~10^4 polygons
-
-
 def zonal_stats(
     tiles: DataFrame,
     polygons: DataFrame,
@@ -108,16 +102,19 @@ def zonal_stats(
     (species_presence.py:92-125). ``distributed=True`` computes the polygon
     covering in-cluster (the large-polygon-side plan); ``'auto'`` (default)
     counts the polygon side — one cheap job against a dimension table —
-    and picks the driver covering below AUTO_DIST_THRESHOLD polygons, the
-    in-cluster covering above it (the choice Iceberg table stats would
-    make for free on the cluster). ``salted=True`` routes the candidate
-    cell join through the explicit hot-key salting path (operators/skew.py)
-    — the plan for a polygon that covers most of the raster."""
+    and picks the driver index (``broadcast_join.zonal_stats_fast``) up to
+    ``AUTO_DIST_THRESHOLD`` polygons, the in-cluster covering above it (the
+    choice Iceberg table stats would make for free on the cluster).
+    ``salted=True`` routes the candidate cell join through the explicit
+    hot-key salting path (operators/skew.py) — the plan for a polygon that
+    covers most of the raster."""
     from .. import grid
 
     res = res if res is not None else grid.JOIN_RES
     if distributed == "auto":
-        distributed = polygons.count() > AUTO_DIST_THRESHOLD
+        distributed = polygons.count() > broadcast_join.AUTO_DIST_THRESHOLD
+    if not (distributed or salted):
+        return broadcast_join.zonal_stats_fast(tiles, polygons, species, res)
     meta = decode.with_tile_meta(tiles).filter(F.col("s") == species)
     cand = spatial_join.join_tiles_polygons(
         meta,
@@ -147,35 +144,25 @@ def zonal_stats(
         )
         pairs = meta_sel.join(cand_w.hint("shuffle_hash"), "image_id")
     else:
-        # driver-covering path: cand and the polygon dim are tiny — broadcast
-        # both so tile bytes never shuffle (the map-side join the reference's
-        # in-memory GeoDataFrame approximates on one node)
+        # salted driver-covering path: cand and the polygon dim are tiny —
+        # broadcast both so tile bytes never shuffle
         pairs = meta_sel.join(F.broadcast(cand), "image_id").join(
             F.broadcast(polygons.select("poly_id", "geom_wkb")), "poly_id"
         )
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                arr = codecs.decode(row.bytes, row.w, row.h, row.fmt)
-                if row.tile_inside:
-                    vals = arr.ravel().astype(np.float64)
-                else:
-                    rings = geom.wkb_to_polygon(bytes(row.geom_wkb))
-                    mask = geom.tile_mask(row.tx, row.ty, row.w, row.h, rings).ravel()
-                    if not mask.any():
-                        continue
-                    vals = arr.ravel().astype(np.float64)[mask]
-                out.append(
-                    (
-                        row.poly_id,
-                        int(vals.size),
-                        float(vals.sum()),
-                        float(vals.max()),
-                        int((vals > 0).sum()),
-                    )
+            if pdf.empty:
+                continue
+            wkbs = pdf.drop_duplicates("poly_id").set_index("poly_id")["geom_wkb"]
+            rings = {pid: geom.wkb_to_polygon(bytes(w)) for pid, w in wkbs.items()}
+            out = [
+                (pid, *broadcast_join.pair_stats(vals))
+                for pid, _, vals in broadcast_join._pair_values(
+                    pdf, range(len(pdf)), pdf["poly_id"].tolist(),
+                    pdf["tile_inside"].tolist(), rings,
                 )
+            ]
             if out:
                 yield pd.DataFrame(
                     out, columns=["poly_id", "n_px", "sum_v", "max_v", "nonzero_px"]
@@ -185,13 +172,4 @@ def zonal_stats(
         partials,
         "poly_id string, n_px long, sum_v double, max_v double, nonzero_px long",
     )
-    return (
-        part.groupBy("poly_id")
-        .agg(
-            F.sum("n_px").alias("n_px"),
-            F.sum("sum_v").alias("sum_v"),
-            F.max("max_v").alias("max_v"),
-            F.sum("nonzero_px").alias("nonzero_px"),
-        )
-        .withColumn("mean_v", F.col("sum_v") / F.col("n_px"))
-    )
+    return broadcast_join.final_zonal(part, ["poly_id"])

@@ -67,13 +67,4 @@ def zonal_result(spark: SparkSession, work_dir: str) -> DataFrame:
     """Final zonal stats from accumulated partials (same shape as
     broadcast_join.zonal_stats_fast output, per (poly_id, s))."""
     part = spark.read.parquet(os.path.join(work_dir, "partials"))
-    return (
-        part.groupBy("poly_id", "s")
-        .agg(
-            F.sum("n_px").alias("n_px"),
-            F.sum("sum_v").alias("sum_v"),
-            F.max("max_v").alias("max_v"),
-            F.sum("nonzero_px").alias("nonzero_px"),
-        )
-        .withColumn("mean_v", F.col("sum_v") / F.col("n_px"))
-    )
+    return broadcast_join.final_zonal(part, ["poly_id", "s"])

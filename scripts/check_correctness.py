@@ -8,6 +8,7 @@ Usage: python scripts/check_correctness.py [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -15,7 +16,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()

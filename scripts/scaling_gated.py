@@ -8,10 +8,11 @@ documented methodology for measuring engine scaling on shared hardware
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402
 
 MAX_ATTEMPTS = int(sys.argv[1]) if len(sys.argv) > 1 else 4

@@ -3,9 +3,10 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gridfia_spark.datagen import tiles as tgen
 from gridfia_spark.operators import broadcast_join, decode, knn

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +14,7 @@ from gridfia_spark.constants import SF_SPECS
 from gridfia_spark.datagen import pixels
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPEC = SF_SPECS["0.001"]
 
 
@@ -214,7 +217,7 @@ class TestDriverSampleOrder:
         ):
             assert name in head, name
         # nothing already green in the r05 snapshot occupies a head slot
-        r05 = set(json.load(open("/root/repo/CORRECTNESS_r05.json")))
+        r05 = set(json.load(open(os.path.join(ROOT, "CORRECTNESS_r05.json"))))
         overlap = [n for n in head if n in r05]
         assert not overlap, f"head wastes slots on r05-sampled queries: {overlap}"
         assert all(n in oracled for n in head)

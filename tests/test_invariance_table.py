@@ -4,6 +4,7 @@ analogue), table-layer roundtrip, and knn ring-expansion tests."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
@@ -15,9 +16,10 @@ from gridfia_spark.operators import knn
 from gridfia_spark.sources import table
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _INVARIANCE_SNIPPET = """
-import sys, json; sys.path.insert(0, "/root/repo")
+import sys, json; sys.path.insert(0, {root!r})
 from gridfia_spark.session import get_spark
 from gridfia_spark import queries as Q
 from gridfia_spark.queries_products import (
@@ -97,7 +99,7 @@ spark.stop()
 
 def _run_at(cores: int, shuffle: int) -> list[dict]:
     out = subprocess.run(
-        [sys.executable, "-c", _INVARIANCE_SNIPPET.format(cores=cores, sh=shuffle)],
+        [sys.executable, "-c", _INVARIANCE_SNIPPET.format(root=ROOT, cores=cores, sh=shuffle)],
         capture_output=True,
         text=True,
         timeout=300,

@@ -13,10 +13,12 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from gridfia_spark import geom
+from gridfia_spark import geom, grid
 from gridfia_spark.constants import PIX, SF_SPECS, X0, Y0
 from gridfia_spark.datagen import pixels, tiles as tgen, vectors
-from gridfia_spark.operators import decode, knn, metrics, spatial_join, zonal
+from gridfia_spark.operators import (
+    broadcast_join, decode, knn, metrics, spatial_join, zonal,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 SPEC = SF_SPECS["0.001"]
@@ -65,11 +67,12 @@ class TestZonal:
 
 
 class TestTileAssignment:
-    def test_vs_oracle(self, spark, tiles, polys):
+    @pytest.mark.parametrize("res", [grid.JOIN_RES, 14])
+    def test_vs_oracle(self, spark, tiles, polys, res):
         meta = decode.with_tile_meta(tiles)
         got = {
             (r.poly_id, r.image_id)
-            for r in spatial_join.assign_tiles(meta, polys).collect()
+            for r in broadcast_join.assign_tiles_fast(meta, polys, res=res).collect()
         }
         want = set()
         eps = 1e-3
@@ -110,6 +113,41 @@ class TestKnn:
             )[:3]
             mine = got[got.point_id == qi].sort_values("rank")
             assert [(r.dist_sq, r.neighbor_id) for r in mine.itertuples()] == order
+
+    def test_wrong_target_count_equals_no_stats(self, spark):
+        """Caller stats only steer the first radius: a wrong target count
+        must neither end the proof loop early nor crash it."""
+        pts = tgen.points_df(spark, SF_DIR)
+        _, xs, ys = vectors.points_xy(SPEC, vectors.N_POINTS["0.001"])
+        bounds = (float(xs.min()), float(xs.max()), float(ys.min()), float(ys.max()))
+        key = ["point_id", "rank"]
+        want = knn.knn_join(pts, pts, k=3).toPandas().sort_values(key, ignore_index=True)
+        for n_wrong in (len(xs) // 2, len(xs) * 2):
+            got = knn.knn_join(pts, pts, k=3, target_stats=(n_wrong, *bounds))
+            pd.testing.assert_frame_equal(
+                got.toPandas().sort_values(key, ignore_index=True), want
+            )
+
+
+class TestPolygonIndexBound:
+    """The driver index collects a bounded number of polygons; above the
+    bound it refuses and ``zonal_stats('auto')`` takes the scale path."""
+
+    def test_build_refuses_above_threshold(self, spark, tiles, polys, monkeypatch):
+        def rows():
+            return {
+                r.poly_id: (r.n_px, r.sum_v, r.max_v, r.nonzero_px)
+                for r in zonal.zonal_stats(tiles, polys, species=0).collect()
+            }
+
+        n = polys.count()
+        monkeypatch.setattr(broadcast_join, "AUTO_DIST_THRESHOLD", n)
+        assert len(broadcast_join.PolygonIndex.build(polys, grid.JOIN_RES).poly_ids) == n
+        via_index = rows()
+        monkeypatch.setattr(broadcast_join, "AUTO_DIST_THRESHOLD", n - 1)
+        with pytest.raises(ValueError, match=r"zonal_stats\(distributed=True\)"):
+            broadcast_join.PolygonIndex.build(polys, grid.JOIN_RES)
+        assert rows() == via_index  # 'auto' routed to the distributed plan
 
 
 class TestMetricsPipeline:
@@ -203,60 +241,30 @@ class TestRowInvariants:
             assert codecs.psnr(want, got) >= 40.0
 
 
-class TestBroadcastJoinEquivalence:
-    """The map-side broadcast path must produce identical results to the
-    DataFrame cell-join path (both vs the numpy oracle elsewhere)."""
-
-    def test_assign_equal(self, spark, tiles, polys):
-        from gridfia_spark.operators import broadcast_join
-
-        meta = decode.with_tile_meta(tiles)
-        slow = {
-            (r.poly_id, r.image_id)
-            for r in spatial_join.assign_tiles(meta, polys, res=14).collect()
-        }
-        fast = {
-            (r.poly_id, r.image_id)
-            for r in broadcast_join.assign_tiles_fast(meta, polys, res=14).collect()
-        }
-        assert fast == slow
-
-    def test_zonal_equal(self, spark, tiles, polys):
-        from gridfia_spark.operators import broadcast_join
-
-        slow = {
-            r.poly_id: (r.n_px, r.sum_v, r.max_v, r.nonzero_px)
-            for r in zonal.zonal_stats(tiles, polys, species=0, res=14).collect()
-        }
-        fast = {
-            r.poly_id: (r.n_px, r.sum_v, r.max_v, r.nonzero_px)
-            for r in broadcast_join.zonal_stats_fast(
-                tiles, polys, species=0, res=14
-            ).collect()
-        }
-        assert fast == slow
-
-
 class TestLShapePins:
-    """Rows of the three mask consumers on the concave L-shape fixture,
-    pinned to the values of the per-pixel ray-casting masks they replaced
-    (and cross-checked against the whole-raster oracle)."""
+    """Rows of the mask consumers on the concave L-shape fixture, pinned to
+    the values of the per-pixel ray-casting masks they replaced (and
+    cross-checked against the whole-raster oracle). Every zonal plan shares
+    one pair kernel, so each must give the same pinned rows."""
 
     @pytest.fixture(scope="class")
     def lshape(self, polys):
         return polys.filter(F.col("poly_id") == "L01")
 
-    def test_zonal_stats(self, spark, tiles, lshape):
+    @pytest.mark.parametrize(
+        "plan",
+        [{}, {"distributed": True}, {"salted": True, "salt_threshold": 0}],
+        ids=["index", "distributed", "salted"],
+    )
+    def test_zonal_stats(self, spark, tiles, lshape, plan):
         want = {0: (768, 22875.0, 90.0, 709), 3: (768, 848.0, 40.0, 50)}
         poly = vectors.concave_polygons(SPEC)[0]
         for s, row in want.items():
-            (r,) = zonal.zonal_stats(tiles, lshape, species=s).collect()
+            (r,) = zonal.zonal_stats(tiles, lshape, species=s, **plan).collect()
             got = (r.n_px, r.sum_v, r.max_v, r.nonzero_px)
             assert (r.poly_id, got) == ("L01", row) and got == oracle_zonal(poly, s)
 
     def test_zonal_stats_fast(self, spark, tiles, lshape):
-        from gridfia_spark.operators import broadcast_join
-
         got = {
             r.s: (r.n_px, r.sum_v, r.max_v, r.nonzero_px)
             for r in broadcast_join.zonal_stats_fast(
@@ -290,9 +298,6 @@ class TestManyPolygons:
     agree (and against the exhaustive pixel oracle for a sample)."""
 
     def test_dense_polygon_grid(self, spark, tiles):
-        from gridfia_spark import geom
-        from gridfia_spark.operators import broadcast_join
-
         n = 10
         w_m, h_m = SPEC.gw * PIX, SPEC.gh * PIX
         wc, hc = w_m / n, h_m / n
@@ -314,7 +319,9 @@ class TestManyPolygons:
         )
         slow = {
             r.poly_id: (r.n_px, r.sum_v)
-            for r in zonal.zonal_stats(tiles, polys, species=0, res=16).collect()
+            for r in zonal.zonal_stats(
+                tiles, polys, species=0, res=16, distributed=True
+            ).collect()
         }
         fast = {
             r.poly_id: (r.n_px, r.sum_v)
@@ -364,8 +371,6 @@ class TestManyPolygons:
         covering set as the driver-side polygon_cells_df, and the zonal
         result through the distributed path must match the broadcast path —
         on the 100-county dense grid plus the concave fixtures."""
-        from gridfia_spark.operators import broadcast_join
-
         dense = self._poly_grid(spark)
         concave = tgen.polygons_df(spark, "sf0.001").filter(~F.col("is_rect"))
         polys = dense.unionByName(concave)
@@ -380,13 +385,13 @@ class TestManyPolygons:
         assert dist == drv and len(dist) > 0
 
         via_dist = {
-            r.poly_id: (r.n_px, r.sum_v)
+            r.poly_id: (r.n_px, r.sum_v, r.max_v, r.nonzero_px)
             for r in zonal.zonal_stats(
                 tiles, polys, species=0, res=16, distributed=True
             ).collect()
         }
         via_bcast = {
-            r.poly_id: (r.n_px, r.sum_v)
+            r.poly_id: (r.n_px, r.sum_v, r.max_v, r.nonzero_px)
             for r in broadcast_join.zonal_stats_fast(tiles, polys, species=0, res=16).collect()
         }
         assert via_dist == via_bcast
