@@ -16,8 +16,8 @@ scan:
 3. a window *within* each bucket (bounded memory, parallel across
    buckets) plus the broadcast offset yields the exact global scan.
 
-Used by the sequence-packing query (token-budget batching of an LLM
-training corpus). Reference analogue: running accumulation in the
+This is the distributed replacement for any unpartitioned running window;
+no registered query calls it at present. Reference analogue: running accumulation in the
 reference's chunked processors (parallel_processing.py merges per-chunk
 partials the same way).
 """

@@ -2,7 +2,7 @@
 
 The reference exports metric rasters as NetCDF via xarray
 (forest_metrics.py:603-637).  The sandbox ships no netCDF library, so —
-same precedent as the pure-numpy WAV/PNG/JPEG codecs — the container is
+same precedent as the pure-numpy PNG/JPEG codecs — the container is
 written from the public classic-format spec (the on-disk layout documented
 in the NetCDF User's Guide, appendix "File Format Specification"):
 

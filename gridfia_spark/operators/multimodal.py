@@ -3,15 +3,16 @@ metadata, processed by Arrow-batched UDFs.
 
 The Spark-side machinery (schemas, partitioning, UDF signatures, batch
 shapes) is real and tested. PNG is a REAL codec (pure numpy+zlib,
-gridfia_spark/png.py — 8-bit gray/RGB/RGBA, all five scanline filters), so
-is WAV (pure numpy+struct RIFF/PCM16, gridfia_spark/wav.py), and so is
-baseline JPEG (pure numpy DCT+Huffman, gridfia_spark/jpeg.py — the lossy
-format behind the PSNR>=40dB row contract);
-MP3/H.264 remain STUBBED behind ``NotImplementedError`` because the
-sandbox ships no media libraries — drop PIL/ffmpeg into ``_MEDIA_DECODERS``
-and everything else works unchanged. The engine's own raster codecs double
-as the working "image" format, and a deterministic fake decoder supports
-tests.
+gridfia_spark/png.py — 8-bit gray/RGB/RGBA, all five scanline filters), and
+so are WAV (pure numpy+struct RIFF/PCM16, gridfia_spark/wav.py), baseline
+JPEG (pure numpy DCT+Huffman, gridfia_spark/jpeg.py — the lossy format
+behind the PSNR>=40dB row contract), WebP-lossless (gridfia_spark/vp8l.py)
+and GeoTIFF (gridfia_spark/tiff.py); video rows use the 'pngseq'
+intra-frame container. Formats that need an external library (mp3/h264)
+stay STUBBED behind ``NotImplementedError`` — plug one in with
+``register_decoder`` and everything else works unchanged. The engine's own
+raster codecs double as the working "image" format, and a deterministic
+fake decoder supports tests.
 """
 
 from __future__ import annotations

@@ -3,8 +3,7 @@
 The table schema carries a ``phash`` int64 per image (BASELINE.json
 input_hint). This module adds the operator that column exists for: find
 image pairs whose perceptual hashes differ in at most ``max_hamming`` bits
-— the image twin of the text MinHash/SimHash near-dup family
-(operators/text.py), with the same scale discipline:
+— with the scale discipline of a banded LSH join:
 
 - The 64-bit hash is held as FOUR 16-bit band values. Bands double as the
   LSH join keys AND the Hamming representation, so no int64 sign games.
@@ -85,7 +84,7 @@ def near_dup_pairs(
     standard LSH recall.
 
     ``max_bucket`` is the hot-bucket guard for corpus scale: a degenerate
-    band value shared by millions of items (blank images, constant audio)
+    band value shared by millions of items (blank images)
     makes that bucket's self-join quadratic. Setting a cap drops buckets
     larger than it from CANDIDATE GENERATION only — members can still pair
     through their other 3 bands, so only pairs whose every <=max_hamming

@@ -1,161 +1,9 @@
-"""Training-data pipeline facade: the LLM-corpus operations in one place.
-
-`api.GridFIASpark` fronts the reference-parity raster surface; this class
-fronts the engine's large-scale data-pipeline extensions (dedup, similarity,
-multimodal, batching) so a corpus curator discovers them without knowing the
-operator modules. Every method is a thin delegation — the operators stay
-independently importable and tested.
-
-Typical flow (see examples/corpus_dedup_pipeline.py and
-examples/multimodal_pipeline.py for runnable versions)::
-
-    p = DataPipeline(spark)
-    docs = spark.read.parquet(".../documents.parquet")
-    groups = p.exact_dedup_groups(docs)             # hash-groupBy dedup
-    pairs = p.near_dup_pairs(docs)                  # MinHash-LSH, exact-verify
-    comps = p.near_dup_components(pairs, docs)      # canonical representatives
-    splits = p.split(docs)                          # train/val/test hash split
-    dirty = p.contamination(docs)                   # benchmark overlap
-    packed = p.pack(docs, budget=4096)              # token-budget batches
-"""
+"""`RasterPipeline`: one facade over the raster/store analytics operators.
+`api.GridFIASpark` fronts the reference-parity raster surface."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-class DataPipeline:
-    """Facade over the corpus/dedup/similarity/multimodal operator family."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    # ------------------------------------------------------------- text
-    def exact_dedup_groups(self, docs: DataFrame) -> DataFrame:
-        from .operators import text
-
-        return text.exact_dedup_groups(docs)
-
-    def near_dup_pairs(self, docs: DataFrame, k: int = 5, threshold: float = 0.5) -> DataFrame:
-        from .operators import text
-
-        return text.minhash_lsh_pairs(docs, k=k, threshold=threshold)
-
-    def near_dup_components(self, pairs: DataFrame, docs: DataFrame) -> DataFrame:
-        from .operators import text
-
-        return text.near_dup_components(pairs, docs)
-
-    def quality(self, docs: DataFrame) -> DataFrame:
-        from .operators import text
-
-        return text.token_stats(docs)
-
-    def language_id(self, docs: DataFrame) -> DataFrame:
-        from .operators import text
-
-        return text.lang_scores(docs)
-
-    # ------------------------------------------------------- embeddings
-    def cosine_topk(self, queries: DataFrame, targets: DataFrame, k: int = 5) -> DataFrame:
-        from .operators import similarity
-
-        return similarity.cosine_topk(queries, targets, k=k)
-
-    def ann_topk(self, queries: DataFrame, targets: DataFrame, k: int = 5) -> DataFrame:
-        from .operators import similarity
-
-        return similarity.ann_cosine_topk(queries, targets, k=k)
-
-    def build_ann_index(self, targets: DataFrame, path: str) -> None:
-        from .operators import similarity
-
-        similarity.build_ivf_index(targets, path)
-
-    def ann_topk_indexed(
-        self, queries: DataFrame, targets: DataFrame, index_path: str, k: int = 5
-    ) -> DataFrame:
-        from .operators import similarity
-
-        return similarity.ivf_cosine_topk(
-            queries, targets, k=k,
-            assignments=self.spark.read.parquet(index_path),
-        )
-
-    def embedding_dedup(self, emb: DataFrame, threshold: float = 0.95) -> DataFrame:
-        from .operators import similarity
-
-        return similarity.embedding_cosine_dedup(emb, threshold=threshold)
-
-    # -------------------------------------------------------- multimodal
-    def image_near_dup(self, media: DataFrame, max_hamming: int = 3) -> DataFrame:
-        from .operators import phash
-
-        return phash.near_dup_pairs(
-            phash.portable_phash_bands(media), max_hamming=max_hamming
-        )
-
-    def extract_features(self, media: DataFrame) -> DataFrame:
-        from .operators import multimodal
-
-        return multimodal.extract_features(media)
-
-    def thumbnails(self, media: DataFrame, w: int = 8, h: int = 8) -> DataFrame:
-        from .operators import multimodal
-
-        return multimodal.resize(media, w, h)
-
-    def sample_frames(self, media: DataFrame, every_k: int = 2) -> DataFrame:
-        from .operators import multimodal
-
-        return multimodal.sample_frames(media, every_k=every_k)
-
-    # ---------------------------------------------------------- batching
-    def split(self, docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-        """Deterministic 80/10/10 hash split column (reproducible at any
-        cluster size)."""
-        bucket = (F.col(id_col) * F.lit(2654435761)) % F.lit(2147483648) % 100
-        return docs.withColumn(
-            "split",
-            F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test"),
-        )
-
-    def pack(
-        self,
-        docs: DataFrame,
-        budget: int = 4096,
-        id_col: str = "doc_id",
-        tokens_col: str = "n_chars",
-    ) -> DataFrame:
-        """Token-budget contiguous packing via the distributed prefix sum."""
-        from .functions import prefix
-
-        cum = prefix.prefix_sum(docs, id_col, tokens_col)
-        return cum.withColumn(
-            "bin",
-            F.floor((F.col("cum") - F.col(tokens_col)) / budget).cast("long"),
-        )
-
-    def contamination(
-        self, docs: DataFrame, k: int = 12, id_col: str = "doc_id"
-    ) -> DataFrame:
-        """Test-split documents sharing verbatim k-grams with the train
-        split (pre-evaluation decontamination)."""
-        from .operators import text
-
-        with_split = self.split(docs, id_col)
-        tr = text.shingles(with_split.filter(F.col("split") == "train"), k).select(
-            F.col(id_col).alias("train_doc"), "shingle"
-        ).distinct()
-        te = text.shingles(with_split.filter(F.col("split") == "test"), k).select(
-            F.col(id_col).alias("test_doc"), "shingle"
-        ).distinct()
-        ov = tr.join(F.broadcast(te), "shingle")
-        return ov.groupBy(F.col("test_doc").alias(id_col)).agg(
-            F.countDistinct("shingle").alias("n_shared_shingles"),
-            F.countDistinct("train_doc").alias("n_train_docs"),
-        )
 
 
 class RasterPipeline:

@@ -1,6 +1,6 @@
-"""Extended query registry: remaining metric kernels, relational/window
-operators over the driver's TPC-H-ish tables, and the training-data pipeline
-ops (dedup / text analysis / similarity search).
+"""Extended query registry: remaining metric kernels, the two-group
+statistics over the driver's ``lineitem``/``documents`` tables, spatial
+statistics and the zonal roll-ups.
 
 Registered into the same registry as queries.py (imported from there)."""
 
@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from .constants import spec_for_sf_dir
 from .datagen import oracle_sql as osql
 from .datagen import tiles as tgen
-from .operators import decode, metrics, similarity, text
+from .operators import decode, metrics
 from .localdf import local_df
 from .queries import q
 
@@ -193,336 +193,6 @@ def percentile_stretch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pct.select(
         "s", F.round("p2", 6).alias("p2"), F.round("p98", 6).alias("p98")
     )
-
-
-# ===================================================================
-# Relational / window operators over driver tables (SURVEY §2.4-2.6)
-# ===================================================================
-
-
-def _o_tpch_q1(sf_dir: str) -> str:
-    return """SELECT l_returnflag, l_linestatus,
-       CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-       ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       ROUND(AVG(l_quantity), 6) AS avg_qty,
-       ROUND(AVG(l_discount), 6) AS avg_disc,
-       COUNT(*)::BIGINT AS n
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus"""
-
-
-@q("tpch_q1", _o_tpch_q1)
-def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary (multi-aggregate groupBy)."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
-    )
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum("l_quantity").cast("double").alias("sum_qty"),
-        F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-        F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-        F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-        F.count("*").alias("n"),
-    )
-
-
-def _o_segment_revenue(sf_dir: str) -> str:
-    return """SELECT c_mktsegment,
-       ROUND(SUM(o_totalprice), 2) AS revenue,
-       COUNT(*)::BIGINT AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment"""
-
-
-@q("segment_revenue", _o_segment_revenue)
-def segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fact-dimension broadcast join + aggregate."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    j = orders.join(
-        F.broadcast(cust), orders.o_custkey == cust.c_custkey
-    )
-    return j.groupBy("c_mktsegment").agg(
-        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        F.count("*").alias("n_orders"),
-    )
-
-
-def _o_sessions(sf_dir: str) -> str:
-    return """WITH s AS (
-  SELECT user_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-               OR CAST(epoch(ts) AS BIGINT) - CAST(epoch(lag(ts) OVER w) AS BIGINT) > 1800
-              THEN 1 ELSE 0 END AS ns
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT user_id, CAST(SUM(ns) AS BIGINT) AS n_sessions, COUNT(*)::BIGINT AS n_events
-FROM s GROUP BY user_id"""
-
-
-@q("user_sessions", _o_sessions)
-def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (lag window, 30-min timeout) — the batch
-    form of the streaming session operator."""
-    from pyspark.sql.window import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = ev.withColumn(
-        "ns",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-                > 1800
-            ),
-            1,
-        ).otherwise(0),
-    )
-    return s.groupBy("user_id").agg(
-        F.sum("ns").alias("n_sessions"), F.count("*").alias("n_events")
-    )
-
-
-def _o_top_event_users(sf_dir: str) -> str:
-    return """WITH c AS (
-  SELECT event_type, user_id, COUNT(*)::BIGINT AS n
-  FROM events GROUP BY event_type, user_id
-)
-SELECT event_type, user_id, n, rk::INT AS rk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY n DESC, user_id) AS rk
-  FROM c
-) WHERE rk <= 3"""
-
-
-@q("top_event_users", _o_top_event_users)
-def top_event_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group top-k ranking window (SURVEY W1/W4 shape)."""
-    from pyspark.sql.window import Window
-
-    ev = _t(spark, sf_dir, "events")
-    c = ev.groupBy("event_type", "user_id").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("event_type").orderBy(F.desc("n"), F.asc("user_id"))
-    return (
-        c.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("event_type", "user_id", "n", F.col("rk").cast("int").alias("rk"))
-    )
-
-
-# ===================================================================
-# Training-data pipeline: dedup / text / similarity
-# ===================================================================
-
-
-def _o_dedup_exact(sf_dir: str) -> str:
-    return """SELECT md5(text) AS text_hash, COUNT(*)::BIGINT AS n_docs,
-       MIN(doc_id) AS canonical_id
-FROM documents GROUP BY md5(text)"""
-
-
-@q("dedup_exact", _o_dedup_exact)
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: content-hash groupBy with keep-first canonical id."""
-    return text.exact_dedup_groups(_t(spark, sf_dir, "documents"))
-
-
-def _o_token_stats(sf_dir: str) -> str:
-    return r"""SELECT doc_id,
-       length(text)::BIGINT AS n_chars,
-       len(regexp_split_to_array(trim(text), '\s+'))::BIGINT AS n_tokens,
-       ROUND(length(text)::DOUBLE / len(regexp_split_to_array(trim(text), '\s+')), 6) AS chars_per_token,
-       ROUND(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::DOUBLE / length(text), 6) AS punct_ratio,
-       ROUND(((length(text) - length(replace(text, ' the ', ''))) / 5.0) / len(regexp_split_to_array(trim(text), '\s+')), 6) AS stopword_ratio
-FROM documents"""
-
-
-@q("token_stats", _o_token_stats)
-def token_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting + quality scoring over documents."""
-    out = text.token_stats(_t(spark, sf_dir, "documents"))
-    return out.select(
-        "doc_id", "n_chars", "n_tokens",
-        F.round("chars_per_token", 6).alias("chars_per_token"),
-        F.round("punct_ratio", 6).alias("punct_ratio"),
-        F.round("stopword_ratio", 6).alias("stopword_ratio"),
-    )
-
-
-# DuckDB 1.0 can't lateral-join generate_series on a column: cross join a
-# fixed series (docs are <600 chars at every sf; 4096 is a safe bound) and
-# filter by per-doc length.
-_SHINGLE_SERIES = """
-  FROM documents d, generate_series(1, 4096) g(i)
-  WHERE g.i <= greatest(length(d.text) - 4, 1)"""
-
-
-def _o_fingerprint(sf_dir: str) -> str:
-    return f"""SELECT d.doc_id AS doc_id, MIN(md5(substr(d.text, g.i::INT, 5))) AS fingerprint
-{_SHINGLE_SERIES}
-GROUP BY d.doc_id"""
-
-
-@q("doc_fingerprint", _o_fingerprint)
-def doc_fingerprint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: min-hash over 5-char shingles (rolling-hash
-    fingerprint family)."""
-    return text.doc_fingerprint(_t(spark, sf_dir, "documents"))
-
-
-def _o_ngram_jaccard(sf_dir: str) -> str:
-    return f"""WITH sh AS (
-  SELECT DISTINCT d.doc_id, substr(d.text, g.i::INT, 5) AS g
-{_SHINGLE_SERIES}
-),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS ni
-  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b, ROUND(ni::DOUBLE / (x.n + y.n - ni), 6) AS jaccard
-FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-WHERE ni::DOUBLE / (x.n + y.n - ni) >= 0.5"""
-
-
-@q("ngram_jaccard_pairs", _o_ngram_jaccard)
-def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-duplicate pairs (threshold 0.5)."""
-    return text.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), k=5, threshold=0.5)
-
-
-@q("minhash_lsh_pairs", _o_ngram_jaccard)
-def minhash_lsh_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, Jaccard-verified. The output contract is
-    EXACT — LSH only prunes candidates, the emitted jaccard is the true
-    shingle-set Jaccard — so the exact all-pairs SQL is a valid oracle
-    whenever banding recall is 1.0 on the (fixed, deterministic) testdata;
-    pytest separately asserts LSH == brute force on engineered near-dups."""
-    return text.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), k=5, n_hashes=32, bands=16, threshold=0.5
-    )
-
-
-def _o_simhash_portable(sf_dir: str) -> str:
-    return f"""WITH sh AS (
-  SELECT d.doc_id, substr(d.text, g.i::INT, 5) AS shingle
-{_SHINGLE_SERIES}
-),
-h AS (
-  SELECT doc_id,
-    list_reduce(list_prepend(17::BIGINT,
-      list_transform(generate_series(1, length(shingle)),
-                     i -> ascii(substr(shingle, i::INT, 1))::BIGINT)),
-      (a, b) -> (a * 31 + b) % 2147483647) AS h1,
-    list_reduce(list_prepend(29::BIGINT,
-      list_transform(generate_series(1, length(shingle)),
-                     i -> ascii(substr(shingle, i::INT, 1))::BIGINT)),
-      (a, b) -> (a * 37 + b) % 2147483647) AS h2
-  FROM sh
-),
-votes AS (
-  SELECT doc_id, b.i AS b,
-         SUM(CASE WHEN (CASE WHEN b.i < 31 THEN h1 >> b.i::INT
-                             ELSE h2 >> (b.i - 31)::INT END) & 1 = 1
-                  THEN 1 ELSE -1 END) AS v
-  FROM h, generate_series(0, 61) b(i)
-  GROUP BY doc_id, b.i
-)
-SELECT doc_id,
-       SUM(CASE WHEN v > 0 THEN 1::BIGINT << b::INT ELSE 0::BIGINT END)::BIGINT
-         AS simhash
-FROM votes GROUP BY doc_id"""
-
-
-@q("simhash_portable", _o_simhash_portable)
-def simhash_portable_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash bit-vote machinery through the value gate (engine-portable
-    polynomial shingle hash; simhash64/xxhash64 stays the production op)."""
-    return text.simhash_portable(_t(spark, sf_dir, "documents"))
-
-
-@q("simhash64", None)  # rows-only
-def simhash64_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash per document."""
-    return text.simhash64(_t(spark, sf_dir, "documents"))
-
-
-def _o_lang(sf_dir: str) -> str:
-    def cnt(tok: str) -> str:
-        t2 = "' ' || lower(text) || ' '"
-        return f"(length({t2}) - length(replace({t2}, '{tok}', ''))) / {len(tok)}"
-
-    en = " + ".join(cnt(t) for t in [" the ", " and ", " of "])
-    de = " + ".join(cnt(t) for t in [" der ", " und ", " die "])
-    fr = " + ".join(cnt(t) for t in [" le ", " et ", " la "])
-    return f"""SELECT doc_id, lang,
-       CAST({en} AS BIGINT) AS score_en,
-       CAST({de} AS BIGINT) AS score_de,
-       CAST({fr} AS BIGINT) AS score_fr,
-       CASE WHEN ({de}) > ({en}) AND ({de}) >= ({fr}) THEN 'de'
-            WHEN ({fr}) > ({en}) AND ({fr}) > ({de}) THEN 'fr'
-            ELSE 'en' END AS predicted_lang
-FROM documents"""
-
-
-@q("lang_id", _o_lang)
-def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-count language-ID heuristic."""
-    return text.lang_scores(_t(spark, sf_dir, "documents"))
-
-
-def _o_emb_norms(sf_dir: str) -> str:
-    return """SELECT vec_id,
-       ROUND(sqrt(CAST(list_sum(list_transform(embedding::DOUBLE[], x -> x * x)) AS DOUBLE)), 6) AS l2_norm,
-       label
-FROM embeddings"""
-
-
-@q("embedding_norms", _o_emb_norms)
-def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2 norms via built-in array aggregation (JVM-side)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.with_l2_norm(emb).select(
-        "vec_id", F.round("l2_norm", 6).alias("l2_norm"), "label"
-    )
-
-
-def _o_cosine_topk(sf_dir: str) -> str:
-    return """WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20),
-scored AS (
-  SELECT q.vec_id AS q_id, t.vec_id AS t_id,
-         ROUND(
-           CAST(list_sum(list_transform(list_zip(q.embedding::DOUBLE[], t.embedding::DOUBLE[]),
-                                        p -> p[1] * p[2])) AS DOUBLE)
-           / (sqrt(CAST(list_sum(list_transform(q.embedding::DOUBLE[], x -> x * x)) AS DOUBLE))
-              * sqrt(CAST(list_sum(list_transform(t.embedding::DOUBLE[], x -> x * x)) AS DOUBLE))),
-         6) AS cosine
-  FROM q, embeddings t WHERE t.vec_id <> q.vec_id
-)
-SELECT q_id, rank::INT AS rank, t_id, cosine FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, t_id) AS rank
-  FROM scored
-) WHERE rank <= 5"""
-
-
-@q("cosine_topk", _o_cosine_topk)
-def cosine_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force exact cosine top-k (similarity-search baseline)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk(emb.filter(F.col("vec_id") < 20), emb, k=5)
-
-
-@q("ann_cosine_topk", None)  # rows-only: hyperplane LSH not SQL-expressible
-def ann_cosine_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k via random-hyperplane LSH banding + exact re-rank; recall
-    vs brute force measured in pytest."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.ann_cosine_topk(emb.filter(F.col("vec_id") < 20), emb, k=5)
 
 
 def _o_sample_diversity(sf_dir: str) -> str:
@@ -801,44 +471,6 @@ def rare_common_tile_scope(spark: SparkSession, sf_dir: str) -> DataFrame:
     return metrics.metric_layers(tiles, specs)
 
 
-def _o_emb_dedup(sf_dir: str) -> str:
-    # exact all-pairs verify: valid as the oracle because every organic pair
-    # in the testdata has cosine <= 0.61 (measured at all sf) and the seeded
-    # duplicates have identical LSH signatures, so the LSH prune provably
-    # drops nothing above the 0.9 threshold
-    return """WITH e AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000, embedding FROM embeddings WHERE vec_id < 5
-),
-p AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         ROUND(
-           CAST(list_sum(list_transform(list_zip(a.embedding::DOUBLE[], b.embedding::DOUBLE[]),
-                                        z -> z[1] * z[2])) AS DOUBLE)
-           / (sqrt(CAST(list_sum(list_transform(a.embedding::DOUBLE[], x -> x * x)) AS DOUBLE))
-              * sqrt(CAST(list_sum(list_transform(b.embedding::DOUBLE[], x -> x * x)) AS DOUBLE))),
-         6) AS cosine
-  FROM e a JOIN e b ON a.vec_id < b.vec_id
-)
-SELECT vec_a, vec_b, cosine FROM p WHERE cosine >= 0.9"""
-
-
-@q("embedding_cosine_dedup", _o_emb_dedup)
-def embedding_cosine_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-duplicate pairs (cosine >= 0.9 after LSH candidates).
-    The corpus is seeded with five known duplicates (vec_id+1000000 copies),
-    so the query provably returns rows and the exact-cosine verify stage is
-    oracle-checked against brute-force all-pairs."""
-    emb = _t(spark, sf_dir, "embeddings")
-    seeded = emb.unionByName(
-        emb.filter(F.col("vec_id") < 5).withColumn(
-            "vec_id", F.col("vec_id") + 1000000
-        )
-    )
-    return similarity.embedding_cosine_dedup(seeded, threshold=0.9, n_planes=16, bands=8)
-
-
 def _o_morans(sf_dir: str) -> str:
     spec = spec_for_sf_dir(sf_dir)
     tw, th = spec.tile_w, spec.tile_h
@@ -934,233 +566,6 @@ def clip_tile_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     clipped = zonal.clip_to_polygon(tiles, polys, "C11", species=0)
     st = decode.decode_stats(clipped)
     return st.select("image_id", "vsum", "nonzero")
-
-
-def _o_tpch_q3(sf_dir: str) -> str:
-    return """SELECT o_orderkey,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-  AND l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
-GROUP BY o_orderkey, strftime(o_orderdate, '%Y-%m-%d')
-ORDER BY revenue DESC, o_orderkey
-LIMIT 10"""
-
-
-@q("tpch_q3", _o_tpch_q3)
-def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-style: 3-way join + filtered aggregate + top-k
-    (ranking on the rounded revenue for cross-engine determinism)."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp")
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1997-01-01 00:00:00").cast("timestamp")
-    )
-    j = cust.join(orders, cust.c_custkey == orders.o_custkey).join(
-        li, li.l_orderkey == orders.o_orderkey
-    )
-    return (
-        j.groupBy("o_orderkey", F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
-        .limit(10)
-        .select("o_orderkey", "revenue", "o_orderdate")
-    )
-
-
-def _o_tpch_q5(sf_dir: str) -> str:
-    return """SELECT n_name,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       COUNT(*)::BIGINT AS n_items
-FROM region
-JOIN nation ON n_regionkey = r_regionkey
-JOIN customer ON c_nationkey = n_nationkey
-JOIN orders ON o_custkey = c_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE r_name = 'ASIA'
-GROUP BY n_name"""
-
-
-@q("tpch_q5", _o_tpch_q5)
-def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-style: 5-way star join (broadcast dims) + regional rollup."""
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    j = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-    return j.groupBy("n_name").agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-        F.count("*").alias("n_items"),
-    )
-
-
-def _o_session_windows(sf_dir: str) -> str:
-    return """WITH o AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-               OR CAST(epoch(ts) AS BIGINT) - CAST(epoch(lag(ts) OVER w) AS BIGINT) > 1800
-              THEN 1 ELSE 0 END AS ns
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-s AS (
-  SELECT *, SUM(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS sid
-  FROM o
-)
-SELECT user_id,
-       strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       strftime(MAX(ts) + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S') AS session_end,
-       COUNT(*)::BIGINT AS n_events,
-       ROUND(SUM(value), 6) AS sum_value
-FROM s GROUP BY user_id, sid"""
-
-
-@q("session_windows", _o_session_windows)
-def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based session windows via the built-in session_window aggregation
-    — the batch form of the streaming operator (streaming/sessions.py;
-    stream==batch equivalence is pytest-verified)."""
-    from .streaming import sessions as S
-
-    ev = _t(spark, sf_dir, "events")
-    out = S.batch_user_sessions(ev, gap="30 minutes")
-    return out.select(
-        "user_id",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-        F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-        "n_events",
-        F.round("sum_value", 6).alias("sum_value"),
-    )
-
-
-@q("ivf_cosine_topk", None)  # rows-only (IVF bucketing not SQL-expressible)
-def ivf_cosine_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-bucketed ANN top-k (inverted-file variant; recall vs brute force
-    measured in pytest)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.ivf_cosine_topk(
-        emb.filter(F.col("vec_id") < 20), emb, k=5, n_clusters=16, nprobe=4
-    )
-
-
-def _o_ann_recall(sf_dir: str) -> str:
-    # the oracle asserts the CONTRACT (recall >= 0.9 against the exact
-    # brute-force top-k, over all 20 probe queries); the engine emits the
-    # MEASUREMENT — a recall regression in either ANN index flips the
-    # boolean and fails the gate
-    return """SELECT 'ann_lsh' AS method, 1::BIGINT AS recall_ge_090, 20::BIGINT AS n_queries
-UNION ALL
-SELECT 'ivf' AS method, 1::BIGINT AS recall_ge_090, 20::BIGINT AS n_queries
-ORDER BY method"""
-
-
-@q("ann_recall", _o_ann_recall)
-def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measured recall@1 of both approximate indexes (hyperplane-LSH and IVF
-    multi-probe) against the exact cosine top-1, through the value gate —
-    converting the rows-only ANN entries into a value-asserted contract.
-
-    Probes are PLANTED near-duplicates (source vector + 8% deterministic
-    seeded noise): the testdata embeddings are uniform-random, where true
-    top-k neighbors are barely closer than random points — a regime NO
-    sublinear index can serve (LSH/IVF recall there measures the data, not
-    the index). Planted probes measure the regime ANN exists for: genuinely
-    near neighbors. Exact top-1 is computed in-engine as the baseline; the
-    oracle asserts the recall>=0.9 contract booleans."""
-    import numpy as np
-
-    emb = _t(spark, sf_dir, "embeddings")
-    src = emb.filter(F.col("vec_id") < 20).select("vec_id", "embedding").collect()
-    probes = []
-    for r in src:
-        v = np.asarray(r.embedding, dtype=np.float64)
-        noise = np.random.default_rng(int(r.vec_id)).standard_normal(v.size)
-        q = v + 0.08 * float(np.linalg.norm(v)) * noise / float(np.linalg.norm(noise))
-        probes.append((1_000_000 + int(r.vec_id), [float(x) for x in q]))
-    qdf = local_df(spark, probes, "vec_id long, embedding array<double>")
-    exact = similarity.cosine_topk(qdf, emb, k=1).select("q_id", "t_id").cache()
-    n_q = exact.count()
-    rows = []
-    for method, topk in (
-        ("ann_lsh", similarity.ann_cosine_topk(qdf, emb, k=1)),
-        ("ivf", similarity.ivf_cosine_topk(qdf, emb, k=1, n_clusters=16, nprobe=4)),
-    ):
-        hits = exact.join(topk.select("q_id", "t_id"), ["q_id", "t_id"]).count()
-        rows.append((method, int(hits / n_q >= 0.9), n_q))
-    exact.unpersist()
-    return local_df(
-        spark, rows, "method string, recall_ge_090 long, n_queries long"
-    )
-
-
-def _o_ivf_trained(sf_dir: str) -> str:
-    # contract booleans: on clustered embeddings the k-means-trained
-    # codebook must beat the seeded random codebook by >=0.2 recall AND
-    # clear 0.8 absolute (measured margins ~0.46 vs ~0.95, VERDICT r4 #4)
-    return """SELECT 16::BIGINT AS n_queries,
-       1::BIGINT AS trained_ge_080,
-       1::BIGINT AS trained_beats_random_by_020"""
-
-
-@q("ivf_trained_contract", _o_ivf_trained)
-def ivf_trained_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained-codebook quality gate (VERDICT r4 #4): spherical-k-means
-    centroids (similarity.train_ivf_centroids — deterministic hash-order
-    sample, driver-side numpy) must lift IVF recall@5 on CLUSTERED
-    embeddings far above the seeded random codebook at nprobe=1, where
-    bucket quality is exactly what is measured. Clustered data is the
-    regime codebook training exists for — the uniform testdata embeddings
-    have no cluster structure to learn. The engine emits the measured
-    contract booleans; the oracle asserts them."""
-    import numpy as np
-    import pandas as pd
-
-    rng = np.random.default_rng(11)
-    cents = rng.standard_normal((8, 64))
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-    vecs = np.repeat(cents, 40, axis=0) + 0.12 * rng.standard_normal((320, 64))
-    pdf = pd.DataFrame(
-        {"vec_id": range(320),
-         "embedding": [v.tolist() for v in vecs.astype(np.float32)]}
-    )
-    df = spark.createDataFrame(pdf)
-    queries = df.filter(F.col("vec_id") % 40 < 2)  # 2 probes per true cluster
-    exact = similarity.cosine_topk(queries, df, k=5).select("q_id", "t_id").cache()
-    n_pairs = exact.count()
-    n_q = n_pairs // 5
-
-    def recall(topk) -> float:
-        return exact.join(topk.select("q_id", "t_id"), ["q_id", "t_id"]).count() / n_pairs
-
-    r_rand = recall(similarity.ivf_cosine_topk(queries, df, k=5, n_clusters=8, nprobe=1))
-    trained = similarity.train_ivf_centroids(df, n_clusters=8)
-    r_tr = recall(
-        similarity.ivf_cosine_topk(queries, df, k=5, nprobe=1, centroids=trained)
-    )
-    exact.unpersist()
-    return local_df(
-        spark,
-        [(n_q, int(r_tr >= 0.8), int(r_tr >= r_rand + 0.2))],
-        "n_queries long, trained_ge_080 long, trained_beats_random_by_020 long",
-    )
 
 
 def _o_perm_test(sf_dir: str) -> str:
@@ -1272,56 +677,6 @@ def zonal_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_v",
             "n_px",
         )
-    )
-
-
-def _o_clean_corpus(sf_dir: str) -> str:
-    return r"""WITH stats AS (
-  SELECT doc_id, source, text,
-         len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
-         length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::DOUBLE / length(text) AS punct_ratio,
-         md5(text) AS h
-  FROM documents
-),
-kept AS (
-  SELECT * FROM stats
-  WHERE n_tokens >= 20 AND punct_ratio < 0.1
-    AND doc_id = (SELECT MIN(doc_id) FROM stats s2 WHERE s2.h = stats.h)
-)
-SELECT source,
-       COUNT(*)::BIGINT AS n_docs,
-       CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-FROM kept GROUP BY source"""
-
-
-@q("clean_corpus", _o_clean_corpus)
-def clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end corpus cleaning: quality gates (token count, punctuation
-    ratio) + exact-dedup keep-first — the composed training-data pipeline."""
-    from pyspark.sql.window import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    stats = docs.select(
-        "doc_id",
-        "source",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
-        (
-            F.length(F.regexp_replace("text", r"[^.,;:!?]", "")) / F.length("text")
-        ).alias("punct_ratio"),
-        F.md5(F.col("text").cast("binary")).alias("h"),
-    )
-    w = Window.partitionBy("h")
-    kept = (
-        stats.withColumn("canon", F.min("doc_id").over(w))
-        .filter(
-            (F.col("n_tokens") >= 20)
-            & (F.col("punct_ratio") < 0.1)
-            & (F.col("doc_id") == F.col("canon"))
-        )
-    )
-    return kept.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
     )
 
 

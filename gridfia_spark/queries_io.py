@@ -1328,41 +1328,6 @@ def point_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
 from . import queries_products  # noqa: E402,F401
 
 
-def _o_streaming_dedup(sf_dir: str) -> str:
-    from .queries_ext import _o_ngram_jaccard
-
-    return _o_ngram_jaccard(sf_dir)
-
-
-@q("streaming_dedup", _o_streaming_dedup)
-def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental LSH dedup (streaming/dedup.py): the corpus arrives in
-    two deltas; each AvailableNow pass hashes ONLY its delta, joins the new
-    band keys against the persisted index of prior batches, and
-    exact-verifies candidates. The accumulated pair set must equal the
-    batch answer over the full corpus — checked against the same exact
-    all-pairs Jaccard oracle as minhash_lsh_pairs (the streaming plan
-    changes the schedule, never the result)."""
-    from .queries_ext import _t
-    from .streaming import dedup as sd
-
-    corpus_dir = _cache(sf_dir, "dedup_corpus")
-    work = _cache(sf_dir, "dedup_stream")
-    shutil.rmtree(corpus_dir, ignore_errors=True)
-    shutil.rmtree(work, ignore_errors=True)
-    docs = _t(spark, sf_dir, "documents")
-    split_at = 250
-    docs.filter(F.col("doc_id") < split_at).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(corpus_dir)
-    sd.incremental_near_dups(spark, corpus_dir, work, n_hashes=32, bands=16)
-    docs.filter(F.col("doc_id") >= split_at).coalesce(1).write.mode(
-        "append"
-    ).parquet(corpus_dir)
-    sd.incremental_near_dups(spark, corpus_dir, work, n_hashes=32, bands=16)
-    return sd.near_dup_result(spark, work)
-
-
 # ===================================================================
 # Multiscale Zarr store (OME-NGFF pyramid group, S12 + pyramid fusion)
 # ===================================================================

@@ -330,70 +330,6 @@ def _cache_path(sf_dir: str, name: str) -> str:
 
 
 # ===================================================================
-# Event funnel (staged sequence analysis over the event stream)
-# ===================================================================
-
-
-def _o_funnel(sf_dir: str) -> str:
-    return """WITH s AS (
-  SELECT user_id, MIN(ts) AS t1 FROM events WHERE event_type = 'signup' GROUP BY user_id
-),
-c AS (
-  SELECT e.user_id, MIN(e.ts) AS t2 FROM events e JOIN s ON e.user_id = s.user_id
-  WHERE e.event_type = 'click' AND e.ts > s.t1 GROUP BY e.user_id
-),
-p AS (
-  SELECT e.user_id, MIN(e.ts) AS t3 FROM events e JOIN c ON e.user_id = c.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > c.t2 GROUP BY e.user_id
-)
-SELECT 'signup' AS stage, (SELECT COUNT(*) FROM s)::BIGINT AS n_users
-UNION ALL SELECT 'click_after_signup', (SELECT COUNT(*) FROM c)::BIGINT
-UNION ALL SELECT 'purchase_after_click', (SELECT COUNT(*) FROM p)::BIGINT"""
-
-
-@q("funnel_stages", _o_funnel)
-def funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged funnel over the event stream: users who signed up, then
-    clicked after signing up, then purchased after that click.
-
-    Single-scan plan: ONE shuffle clusters each user's events; three chained
-    window expressions over that one partitioning derive the stage
-    timestamps (t2 = min click after t1, t3 = min purchase after t2 — every
-    row of a user sees the same t1/t2, so the chain is well-defined);
-    groupBy(user_id) reuses the window's hash partitioning (no second
-    exchange); one global conditional-count aggregate stacks to the three
-    funnel rows. Events are read exactly once — vs the naive
-    per-stage-action form that rebuilds the chain (~6 scans)."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("signup", "click", "purchase")
-    )
-    w = Window.partitionBy("user_id")
-    ts, et = F.col("ts"), F.col("event_type")
-    staged = (
-        ev.select("user_id", "ts", "event_type")
-        .withColumn("t1", F.min(F.when(et == "signup", ts)).over(w))
-        .withColumn(
-            "t2", F.min(F.when((et == "click") & (ts > F.col("t1")), ts)).over(w)
-        )
-        .withColumn(
-            "t3", F.min(F.when((et == "purchase") & (ts > F.col("t2")), ts)).over(w)
-        )
-    )
-    per_user = staged.groupBy("user_id").agg(
-        F.max("t1").alias("t1"), F.max("t2").alias("t2"), F.max("t3").alias("t3")
-    )
-    agg = per_user.agg(
-        F.count("t1").alias("n1"), F.count("t2").alias("n2"), F.count("t3").alias("n3")
-    )
-    return agg.selectExpr(
-        "stack(3, 'signup', n1, 'click_after_signup', n2, "
-        "'purchase_after_click', n3) AS (stage, n_users)"
-    )
-
-
-# ===================================================================
 # CUBE zonal aggregation (full grouping-set lattice)
 # ===================================================================
 
@@ -492,303 +428,6 @@ def zonal_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("p25", 6).alias("p25"),
         F.round("p50", 6).alias("p50"),
         F.round("p90", 6).alias("p90"),
-    )
-
-
-# ===================================================================
-# Semi/anti joins (relational completeness)
-# ===================================================================
-
-
-def _o_dormant(sf_dir: str) -> str:
-    return """SELECT c.c_custkey AS c_custkey, c.c_mktsegment AS c_mktsegment
-FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-                  AND o.o_orderdate >= TIMESTAMP '1998-01-01 00:00:00')"""
-
-
-@q("dormant_customers", _o_dormant)
-def dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi + anti join in one query: customers with at least one order ever
-    (left_semi) but none on/after 1998-01-01 (left_anti)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    recent = orders.filter(
-        F.col("o_orderdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
-        .join(recent, F.col("c_custkey") == recent.o_custkey, "left_anti")
-        .select("c_custkey", "c_mktsegment")
-    )
-
-
-# ===================================================================
-# As-of join (point-in-time lookup over the event stream)
-# ===================================================================
-
-
-def _o_asof(sf_dir: str) -> str:
-    return """WITH clicks AS (
-  SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'click'
-),
-purch AS (
-  SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'
-)
-SELECT c.event_id AS event_id, c.user_id AS user_id,
-       strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS ts,
-       ROUND(c.value, 6) AS value,
-       ROUND(p.value, 6) AS asof_value
-FROM clicks c ASOF LEFT JOIN purch p
-  ON c.user_id = p.user_id AND c.ts >= p.ts"""
-
-
-@q("asof_events", _o_asof)
-def asof_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: each click event annotated with the user's most recent
-    purchase value at or before the click (operators/asof.py — union + one
-    window pass, no range explosion); oracle is DuckDB's native ASOF JOIN."""
-    from .operators import asof
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    purch = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value"
-    )
-    out = asof.asof_join(clicks, purch, on=["user_id"], ts="ts", right_vals=["value"])
-    return out.select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-        F.round("value", 6).alias("value"),
-        F.round("asof_value", 6).alias("asof_value"),
-    )
-
-
-# ===================================================================
-# applyInPandasWithState custom stateful operator at the driver gate
-# ===================================================================
-
-
-def _o_stateful(sf_dir: str) -> str:
-    return """WITH run AS (
-  SELECT user_id, ts, value,
-         SUM(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS cum
-  FROM events
-),
-crossed AS (
-  SELECT user_id, MIN(ts) AS crossed_at FROM run WHERE cum >= 100.005 GROUP BY user_id
-),
-tot AS (
-  SELECT user_id, COUNT(*)::BIGINT AS n_events, SUM(value) AS sum_value
-  FROM events GROUP BY user_id
-)
-SELECT t.user_id AS user_id, t.n_events AS n_events,
-       ROUND(t.sum_value, 6) AS sum_value,
-       strftime(c.crossed_at, '%Y-%m-%d %H:%M:%S') AS crossed_at
-FROM tot t LEFT JOIN crossed c ON t.user_id = c.user_id"""
-
-
-@q("stateful_monitor", _o_stateful)
-def stateful_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState,
-    streaming/stateful.py) through the oracle gate: one AvailableNow pass of
-    the per-user running activity monitor (count + running sum + threshold
-    crossing time, state in the checkpoint); final state must equal the
-    batch window-function semantics. The 100.005 threshold sits off the
-    2-decimal value grid, so the crossing comparison cannot flip on float
-    summation order."""
-    import shutil
-
-    from .streaming import stateful
-
-    ev = _t(spark, sf_dir, "events")
-    stage = _cache_path(sf_dir, "monstage")
-    work = _cache_path(sf_dir, "monwork")
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(work, ignore_errors=True)
-    ev.write.mode("overwrite").parquet(stage)
-    stateful.stream_activity_monitor(spark, stage, work, threshold=100.005)
-    out = stateful.monitor_result(spark, work)
-    return out.select(
-        "user_id",
-        "n_events",
-        F.round("sum_value", 6).alias("sum_value"),
-        F.date_format("crossed_at", "yyyy-MM-dd HH:mm:ss").alias("crossed_at"),
-    )
-
-
-# ===================================================================
-# Banded range join (interval containment as an equi-join)
-# ===================================================================
-
-_TIERS = [(f"T{i}", float(lo), float(hi)) for i, (lo, hi) in enumerate(
-    [(0, 1), (1, 5), (5, 20), (20, 50), (50, 100), (100, 200), (200, 350), (350, 500)]
-)]
-
-
-def _o_range_join(sf_dir: str) -> str:
-    rows = ",".join(f"('{t}',{lo!r},{hi!r})" for t, lo, hi in _TIERS)
-    return f"""WITH tiers(tier, lo, hi) AS (SELECT * FROM (VALUES {rows}) v(tier, lo, hi))
-SELECT t.tier AS tier,
-       COUNT(*)::BIGINT AS n_events,
-       -- exact cent-integer sum: immune to float summation order
-       ROUND(CAST(SUM(CAST(ROUND(e.value * 100) AS BIGINT)) AS DOUBLE) / 100.0, 6) AS sum_value
-FROM events e JOIN tiers t ON e.value >= t.lo AND e.value < t.hi
-GROUP BY t.tier"""
-
-
-@q("range_join_tiers", _o_range_join)
-def range_join_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value-tier assignment via the banded range join
-    (operators/rangejoin.py): interval containment as a bucket equi-join +
-    residual filter — no nested-loop comparisons; oracle is the plain
-    non-equi join."""
-    from .operators import rangejoin
-
-    ev = _t(spark, sf_dir, "events")
-    tiers = local_df(spark, _TIERS, "tier string, lo double, hi double")
-    j = rangejoin.range_join(ev, tiers, val="value", bucket_width=50.0)
-    cents = F.round(F.col("value") * 100).cast("long")
-    return j.groupBy("tier").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum(cents).cast("double") / 100.0, 6).alias("sum_value"),
-    )
-
-
-# ===================================================================
-# Near-dup connected components (dedup-group assignment)
-# ===================================================================
-
-
-def _o_dedup_components(sf_dir: str) -> str:
-    from .queries_ext import _o_ngram_jaccard
-
-    return f"""WITH RECURSIVE p AS ({_o_ngram_jaccard(sf_dir)}),
-edges AS (
-  SELECT doc_a AS s, doc_b AS d FROM p
-  UNION ALL
-  SELECT doc_b AS s, doc_a AS d FROM p
-),
-reach(node, r) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.s, reach.r FROM edges e JOIN reach ON e.d = reach.node
-)
-SELECT node AS doc_id, MIN(r) AS comp,
-       CAST(CASE WHEN node = MIN(r) THEN 1 ELSE 0 END AS INT) AS is_canonical
-FROM reach GROUP BY node"""
-
-
-@q("dedup_components", _o_dedup_components)
-def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate connected components: MinHash-LSH pairs -> distributed
-    min-label propagation -> one canonical doc per dedup group (the
-    keep-one-representative stage of a corpus-dedup pipeline). The oracle
-    recomputes the components with a recursive CTE over the exact-Jaccard
-    pair graph."""
-    from .operators import text
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = text.minhash_lsh_pairs(docs, k=5, n_hashes=32, bands=16, threshold=0.5)
-    return text.near_dup_components(pairs, docs)
-
-
-# ===================================================================
-# Windowed running stats over the event stream (W-family breadth)
-# ===================================================================
-
-
-def _o_moving_avg(sf_dir: str) -> str:
-    return """SELECT event_id, user_id,
-       ROUND(AVG(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS ma7,
-       ROUND(SUM(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING), 6) AS cum_value,
-       ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id)::INT AS seq
-FROM events"""
-
-
-@q("moving_avg_events", _o_moving_avg)
-def moving_avg_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user 7-row moving average + running total + sequence number over
-    the event stream — the rolling-statistics window family."""
-    from pyspark.sql.window import Window
-
-    ev = _t(spark, sf_dir, "events")
-    order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    w7 = order.rowsBetween(-6, Window.currentRow)
-    cum = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round(F.avg("value").over(w7), 6).alias("ma7"),
-        F.round(F.sum("value").over(cum), 6).alias("cum_value"),
-        F.row_number().over(order).cast("int").alias("seq"),
-    )
-
-
-# ===================================================================
-# TPC-H Q7-style two-nation trade volume
-# ===================================================================
-
-
-def _o_tpch_q7(sf_dir: str) -> str:
-    # revenue in exact integer cent-arithmetic: price and discount are
-    # 2-decimal values, so sum(price_cents * (100 - disc_cents)) is an exact
-    # int64 — immune to the float summation-order half-cent boundary that
-    # bites ROUND(SUM(double), 2) on small groups
-    return """SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation,
-       strftime(l_shipdate, '%Y') AS l_year,
-       ROUND(CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                      * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) AS DOUBLE)
-             / 10000.0, 2) AS revenue,
-       COUNT(*)::BIGINT AS n_items
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-WHERE cn.n_name < sn.n_name
-GROUP BY cn.n_name, sn.n_name, strftime(l_shipdate, '%Y')"""
-
-
-@q("tpch_q7", _o_tpch_q7)
-def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7-style cross-nation trade volume: 6-way join (broadcast dims
-    on both legs) + yearly rollup."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    cn = nation.select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
-    )
-    sn = nation.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    j = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(cn), cust.c_nationkey == F.col("cn_key"))
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(sn), supp.s_nationkey == F.col("sn_key"))
-        .filter(F.col("cust_nation") < F.col("supp_nation"))
-    )
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long") * (
-        F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
-    )
-    return j.groupBy(
-        "cust_nation", "supp_nation", F.date_format("l_shipdate", "yyyy").alias("l_year")
-    ).agg(
-        F.round(F.sum(cents).cast("double") / 10000.0, 2).alias("revenue"),
-        F.count("*").alias("n_items"),
     )
 
 
@@ -1038,195 +677,6 @@ def custom_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===================================================================
-# TPC-H Q2-style correlated-min supplier and Q18-style HAVING/IN
-# (relational completeness: correlated subqueries, semijoin-on-agg)
-# ===================================================================
-
-
-def _o_min_cost_supplier(sf_dir: str) -> str:
-    # equality on the stored parquet double (no arithmetic before the
-    # compare), so MIN and the re-join match bit-for-bit on both engines
-    return """WITH cost AS (
-  SELECT l_partkey, l_suppkey, MIN(l_extendedprice) AS price
-  FROM lineitem GROUP BY l_partkey, l_suppkey
-),
-best AS (SELECT l_partkey, MIN(price) AS best_price FROM cost GROUP BY l_partkey)
-SELECT c.l_partkey AS p_partkey, s.s_name AS s_name, n.n_name AS n_name,
-       ROUND(c.price, 2) AS min_price
-FROM cost c
-JOIN best b ON c.l_partkey = b.l_partkey AND c.price = b.best_price
-JOIN supplier s ON c.l_suppkey = s.s_suppkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-WHERE r.r_name = 'EUROPE' AND c.l_partkey < 200"""
-
-
-@q("min_cost_supplier", _o_min_cost_supplier)
-def min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2-style correlated minimum: for each part, the EUROPE
-    supplier(s) quoting the minimum price — groupBy-min + equality re-join
-    (the decorrelated plan Catalyst produces for the Q2 subquery), dims
-    broadcast."""
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    cost = (
-        li.filter(F.col("l_partkey") < 200)
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.min("l_extendedprice").alias("price"))
-    )
-    best = (
-        cost.groupBy("l_partkey")
-        .agg(F.min("price").alias("best_price"))
-        .withColumnRenamed("l_partkey", "b_partkey")
-    )
-    dims = (
-        supp.join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .filter(F.col("r_name") == "EUROPE")
-        .select("s_suppkey", "s_name", "n_name")
-    )
-    return (
-        cost.join(
-            best,
-            (F.col("l_partkey") == F.col("b_partkey"))
-            & (F.col("price") == F.col("best_price")),
-        )
-        .select(F.col("l_partkey").alias("p_partkey"), "l_suppkey", "price")
-        .join(F.broadcast(dims), F.col("l_suppkey") == dims.s_suppkey)
-        .select(
-            "p_partkey", "s_name", "n_name", F.round("price", 2).alias("min_price")
-        )
-    )
-
-
-def _o_big_orders(sf_dir: str) -> str:
-    return """SELECT c.c_custkey AS c_custkey, o.o_orderkey AS o_orderkey,
-       CAST(SUM(l.l_quantity) AS DOUBLE) AS total_qty
-FROM orders o
-JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-WHERE o.o_orderkey IN (
-  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey HAVING SUM(l_quantity) > 150
-)
-GROUP BY c.c_custkey, o.o_orderkey"""
-
-
-@q("big_orders", _o_big_orders)
-def big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18-style large-volume orders: HAVING-filtered aggregate as an
-    IN-subquery, recast as an aggregate + left-semi join (the distributed
-    decorrelation; quantities are small ints so SUM is exact)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("tq"))
-        .filter(F.col("tq") > 150)
-        .select("l_orderkey")
-    )
-    return (
-        orders.join(big, orders.o_orderkey == big.l_orderkey, "left_semi")
-        .join(li, orders.o_orderkey == li.l_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("c_custkey", "o_orderkey")
-        .agg(F.sum("l_quantity").cast("double").alias("total_qty"))
-    )
-
-
-# ===================================================================
-# Genuine-WAV multimodal path (un-stubbed audio codec, wav.py)
-# ===================================================================
-
-
-def _o_wav_stats(sf_dir: str) -> str:
-    return """WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-s AS (
-  SELECT d.doc_id,
-         ((d.doc_id*7919 + i.i*104729 + 13) % 65536) - 32768 AS v
-  FROM d, generate_series(0, 256) i(i)
-  WHERE i.i < 100 + (d.doc_id % 157)
-)
-SELECT doc_id,
-       COUNT(*)::BIGINT AS n_samples,
-       SUM(v)::BIGINT AS sum_v,
-       SUM(ABS(v))::BIGINT AS sum_abs,
-       MAX(ABS(v))::BIGINT AS peak,
-       ROUND(SUM(v)::DOUBLE / COUNT(*), 6) AS mean_v
-FROM s GROUP BY doc_id"""
-
-
-@q("wav_audio_stats", _o_wav_stats)
-def wav_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio stats through GENUINE WAV containers: synthesize a deterministic
-    int16 PCM stream per document (pure int64 math, mirrored in the oracle),
-    wrap it in a real RIFF/WAVE file (gridfia_spark/wav.py), then decode
-    through the multimodal registry ('wav' is a built-in decoder, not a
-    stub) and aggregate waveform stats. Two chained map-only Arrow stages,
-    zero shuffle before the final per-doc aggregate — the audio twin of
-    png_tile_stats, proving the audio-pipeline plumbing end-to-end on an
-    actual media container (ref analogue: opaque-container-at-the-task,
-    zarr_utils.py:684-694)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from . import wav
-    from .operators import multimodal
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    ids = docs.select("doc_id")
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                n = 100 + (d % 157)
-                i = np.arange(n, dtype=np.int64)
-                v = ((d * 7919 + i * 104729 + 13) % 65536) - 32768
-                out.append(
-                    (str(d), wav.encode_wav(v.astype(np.int16), 16_000), n, 1)
-                )
-            yield pd.DataFrame(out, columns=["media_id", "bytes", "w", "h"])
-
-    media = ids.mapInPandas(
-        synth, "media_id string, bytes binary, w int, h int"
-    )
-    decs = dict(multimodal._MEDIA_DECODERS)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = multimodal._decode_media(
-                    bytes(r.bytes), "wav", int(r.w), int(r.h), decs
-                )
-                v = arr.astype(np.int64).ravel()
-                out.append(
-                    (int(r.media_id), v.size, int(v.sum()),
-                     int(np.abs(v).sum()), int(np.abs(v).max()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "n_samples", "sum_v", "sum_abs", "peak"],
-            )
-
-    out = media.mapInPandas(
-        stats,
-        "doc_id long, n_samples long, sum_v long, sum_abs long, peak long",
-    )
-    # mean computed JVM-side so ROUND semantics (HALF_UP) match DuckDB
-    return out.select(
-        "doc_id", "n_samples", "sum_v", "sum_abs", "peak",
-        F.round(F.col("sum_v") / F.col("n_samples"), 6).alias("mean_v"),
-    )
-
-
-# ===================================================================
 # Z-order (space-filling-curve) storage layout — cluster-by key + locality
 # ===================================================================
 
@@ -1295,101 +745,6 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _o_video_stats(sf_dir: str) -> str:
-    return """WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 60),
-f AS (
-  SELECT d.doc_id, fi.i AS frame_idx
-  FROM d, generate_series(0, 8) fi(i)
-  WHERE fi.i < 4 + (d.doc_id % 5) AND fi.i % 2 = 0
-),
-px AS (
-  SELECT f.doc_id, f.frame_idx,
-         ((f.doc_id*7907 + f.frame_idx*104723 + yi.i*31 + xi.i*17 + 11) % 251) AS v
-  FROM f, generate_series(0, 11) yi(i), generate_series(0, 15) xi(i)
-)
-SELECT doc_id, frame_idx,
-       COUNT(*)::BIGINT AS npx,
-       SUM(v)::BIGINT AS sum_v,
-       MIN(v)::BIGINT AS min_v,
-       MAX(v)::BIGINT AS max_v,
-       SUM(CASE WHEN v > 0 THEN 1 ELSE 0 END)::BIGINT AS nonzero
-FROM px GROUP BY doc_id, frame_idx"""
-
-
-@q("video_frame_stats", _o_video_stats)
-def video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame sampling through a GENUINE intra-frame container:
-    synthesize a deterministic multi-frame video per document (pure int64
-    pixel math, mirrored in the oracle), pack it as 'pngseq' — real PNG
-    frames behind a length-prefixed index, the MJPEG pattern — then run the
-    engine's sample_frames explode (every 2nd frame, decoded through the
-    registry's built-in png codec without touching unsampled frames) and
-    aggregate per sampled frame. Three chained map-only Arrow stages, one
-    final tiny groupBy — the video twin of png_tile_stats/wav_audio_stats,
-    closing the image/audio/video multimodal triple on actual container
-    bytes (ref analogue: opaque-container-at-the-task, zarr_utils.py:684-694)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from .operators import multimodal
-
-    W, H = 16, 12
-    ids = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60).select("doc_id")
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yi = np.arange(H, dtype=np.int64)[:, None]
-        xi = np.arange(W, dtype=np.int64)[None, :]
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                n = 4 + (d % 5)
-                frames = [
-                    ((d * 7907 + f * 104723 + yi * 31 + xi * 17 + 11) % 251
-                     ).astype(np.uint8)
-                    for f in range(n)
-                ]
-                out.append(
-                    (str(d), multimodal.encode_pngseq(frames), "video",
-                     "pngseq", W, H, n, 0, "")
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "bytes", "media_type", "fmt", "w", "h",
-                         "n_frames", "sample_rate", "caption"],
-            )
-
-    media = ids.mapInPandas(synth, multimodal.MEDIA_SCHEMA)
-    sampled = multimodal.sample_frames(media, every_k=2, fmt="raw32")
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import codecs
-
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode(bytes(r.bytes), int(r.w), int(r.h), r.fmt)
-                v = arr.astype(np.int64).ravel()
-                doc = int(r.media_id.split("_f")[0])
-                out.append(
-                    (doc, int(r.frame_idx), v.size, int(v.sum()),
-                     int(v.min()), int(v.max()), int((v > 0).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "frame_idx", "npx", "sum_v", "min_v",
-                         "max_v", "nonzero"],
-            )
-
-    return sampled.mapInPandas(
-        stats,
-        "doc_id long, frame_idx long, npx long, sum_v long, min_v long, "
-        "max_v long, nonzero long",
-    )
-
-
 def _o_approx_pct(sf_dir: str) -> str:
     return """SELECT l_returnflag,
        1::BIGINT AS p50_ok, 1::BIGINT AS p95_ok,
@@ -1405,10 +760,10 @@ def approx_percentile_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan that survives a CONUS-sized zone) vs the exact per-group
     percentile, on genuinely continuous doubles (l_extendedprice). The
     oracle pins the contract booleans: each approximation must land within
-    0.1% relative error of the exact quantile. Same honest-gate pattern as
-    ann_recall — the engine emits the measurement, the oracle the required
-    outcome. The exact `percentile` aggregate here is the gate-scale
-    VERIFIER only, never the product path: at deployment scale the sketch
+    0.1% relative error of the exact quantile: the engine emits the
+    measurement, the oracle the required outcome. The exact `percentile`
+    aggregate here is the gate-scale VERIFIER only, never the product
+    path: at deployment scale the sketch
     is the answer and the verifier runs on a sampled-down slice."""
     from .functions import histpct
 
@@ -1531,201 +886,6 @@ def phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ph.near_dup_pairs(seeded, max_hamming=3)
 
 
-def _o_audio_fp(sf_dir: str) -> str:
-    return """WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-s AS (
-  SELECT d.doc_id, i.i AS i,
-         ((d.doc_id*7919 + i.i*104729 + 13) % 65536) - 32768 AS v,
-         100 + (d.doc_id % 157) AS n
-  FROM d, generate_series(0, 256) i(i)
-  WHERE i.i < 100 + (d.doc_id % 157)
-),
-wind AS (
-  SELECT doc_id, (i*64) // n AS w, SUM(ABS(v))::BIGINT AS e
-  FROM s GROUP BY doc_id, (i*64) // n
-),
-tot AS (SELECT doc_id, SUM(e)::BIGINT AS t FROM wind GROUP BY doc_id),
-bits AS (
-  SELECT w.doc_id, w.w, CASE WHEN 64*w.e > t.t THEN 1 ELSE 0 END AS bit
-  FROM wind w JOIN tot t ON w.doc_id = t.doc_id
-),
-bands AS (
-  SELECT doc_id, w // 16 AS bi,
-         SUM(bit << (15 - (w % 16)))::BIGINT AS bv
-  FROM bits GROUP BY doc_id, w // 16
-),
-ph AS (
-  SELECT doc_id::VARCHAR AS image_id,
-         SUM(CASE WHEN bi = 0 THEN bv END)::BIGINT AS b0,
-         SUM(CASE WHEN bi = 1 THEN bv END)::BIGINT AS b1,
-         SUM(CASE WHEN bi = 2 THEN bv END)::BIGINT AS b2,
-         SUM(CASE WHEN bi = 3 THEN bv END)::BIGINT AS b3
-  FROM bands GROUP BY doc_id
-),
-allp AS (
-  SELECT image_id, b0, b1, b2, b3 FROM ph
-  UNION ALL
-  SELECT image_id || '_near', xor(b0, 1::BIGINT), b1, b2, b3 FROM ph
-),
-eb AS (
-  SELECT image_id, 0 AS bi, b0 AS bv FROM allp UNION ALL
-  SELECT image_id, 1, b1 FROM allp UNION ALL
-  SELECT image_id, 2, b2 FROM allp UNION ALL
-  SELECT image_id, 3, b3 FROM allp
-),
-cand AS (
-  SELECT DISTINCT l.image_id AS id_a, r.image_id AS id_b
-  FROM eb l JOIN eb r
-    ON l.bi = r.bi AND l.bv = r.bv AND l.image_id < r.image_id
-)
-SELECT c.id_a, c.id_b,
-       (bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-      + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)))::BIGINT AS hamming
-FROM cand c
-JOIN allp a ON a.image_id = c.id_a
-JOIN allp b ON b.image_id = c.id_b
-WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-    + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 3"""
-
-
-@q("audio_fingerprint_dedup", _o_audio_fp)
-def audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio near-duplicate pairs through the SAME banded Hamming join as
-    images (operators/phash.near_dup_pairs is modality-agnostic): each
-    document's PCM stream round-trips through a genuine WAV container, then
-    a 64-bit energy fingerprint (64 windows; bit = 64*window_energy >
-    total_energy, integer-exact) is packed into 4x16-bit bands and joined.
-    Loss-free prune at hamming<=3 (pigeonhole), '_near' twins seeded at the
-    hash level — the audio member of the image/audio near-dup family."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from . import wav
-    from .operators import phash as ph
-
-    ids = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select("doc_id")
-
-    def fingerprint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = 1 << (15 - np.arange(16, dtype=np.int64))
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                n = 100 + (d % 157)
-                i = np.arange(n, dtype=np.int64)
-                v = (((d * 7919 + i * 104729 + 13) % 65536) - 32768).astype(
-                    np.int16
-                )
-                # through the real container, as production audio would be
-                decoded, _ = wav.decode_wav(wav.encode_wav(v, 16_000))
-                a = np.abs(decoded[:, 0].astype(np.int64))
-                e = np.bincount((i * 64) // n, weights=a, minlength=64).astype(
-                    np.int64
-                )
-                bits = (64 * e > e.sum()).astype(np.int64)
-                bands = (bits.reshape(4, 16) * weights).sum(axis=1)
-                out.append((str(d), *map(int, bands)))
-            yield pd.DataFrame(out, columns=["image_id", "b0", "b1", "b2", "b3"])
-
-    bands = ids.mapInPandas(
-        fingerprint, "image_id string, b0 long, b1 long, b2 long, b3 long"
-    )
-    seeded = bands.unionByName(
-        bands.select(
-            F.concat("image_id", F.lit("_near")).alias("image_id"),
-            F.col("b0").bitwiseXOR(F.lit(1)).alias("b0"),
-            "b1", "b2", "b3",
-        )
-    )
-    return ph.near_dup_pairs(seeded, max_hamming=3)
-
-
-# ===================================================================
-# Training-corpus batching: distributed prefix sum + sequence packing,
-# deterministic train/val/test split
-# ===================================================================
-
-PACK_BUDGET = 4096
-
-
-def _o_seq_pack(sf_dir: str) -> str:
-    return f"""WITH c AS (
-  SELECT doc_id, n_chars,
-         (SUM(n_chars) OVER (ORDER BY doc_id
-                             ROWS UNBOUNDED PRECEDING))::BIGINT AS cum
-  FROM documents
-),
-b AS (
-  SELECT doc_id, n_chars, ((cum - n_chars) // {PACK_BUDGET})::BIGINT AS bin FROM c
-)
-SELECT bin,
-       COUNT(*)::BIGINT AS n_docs,
-       SUM(n_chars)::BIGINT AS sum_tokens,
-       MIN(doc_id)::BIGINT AS first_doc,
-       MAX(doc_id)::BIGINT AS last_doc
-FROM b GROUP BY bin"""
-
-
-@q("sequence_packing", _o_seq_pack)
-def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget sequence packing for LLM training batches: contiguous
-    documents (doc_id order) are packed into bins by their global
-    cumulative token count's start offset — bin = (cum - tokens) // budget,
-    the deterministic contiguous-packing contract. The global cumsum uses
-    functions/prefix.prefix_sum (range-partition -> per-partition totals ->
-    broadcast offsets -> bounded within-partition scan), NEVER a
-    single-task global window — the plan that still packs a 100 TB corpus.
-    The oracle states the same packing with a plain SQL window."""
-    from .functions import prefix
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    cum = prefix.prefix_sum(docs, "doc_id", "n_chars")
-    b = cum.withColumn(
-        "bin",
-        F.floor((F.col("cum") - F.col("n_chars")) / PACK_BUDGET).cast("long"),
-    )
-    return b.groupBy("bin").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("sum_tokens"),
-        F.min("doc_id").alias("first_doc"),
-        F.max("doc_id").alias("last_doc"),
-    )
-
-
-def _o_split(sf_dir: str) -> str:
-    return """SELECT CASE WHEN (doc_id * 2654435761) % 2147483648 % 100 < 80 THEN 'train'
-            WHEN (doc_id * 2654435761) % 2147483648 % 100 < 90 THEN 'val'
-            ELSE 'test' END AS split,
-       lang,
-       COUNT(*)::BIGINT AS n_docs,
-       SUM(n_chars)::BIGINT AS sum_chars
-FROM documents GROUP BY 1, 2"""
-
-
-@q("train_val_split", _o_split)
-def train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 80/10/10 train/val/test corpus split by multiplicative
-    integer hash of doc_id — reproducible across runs, engines and cluster
-    sizes (no rand(), no sampleBy seeds), reported per (split, lang) so
-    stratification skew is visible. Pure built-in int64 expressions,
-    map-side aggregated."""
-    docs = _t(spark, sf_dir, "documents")
-    bucket = (F.col("doc_id") * F.lit(2654435761)) % F.lit(2147483648) % 100
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    )
-    return (
-        docs.withColumn("split", split)
-        .groupBy("split", "lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("sum_chars"),
-        )
-    )
-
-
 def _o_thumb(sf_dir: str) -> str:
     spec = spec_for_sf_dir(sf_dir)
     tw, th = spec.tile_w, spec.tile_h
@@ -1805,421 +965,6 @@ def multimodal_resize(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     return multimodal.resize(media, out_w, out_h)
 
 
-def _o_contamination(sf_dir: str) -> str:
-    return """WITH d AS (
-  SELECT doc_id, text,
-         (doc_id * 2654435761) % 2147483648 % 100 AS b
-  FROM documents
-),
-trs AS (
-  SELECT DISTINCT doc_id, substr(text, i.i, 12) AS shingle
-  FROM d, generate_series(1, 600) i(i)
-  WHERE b < 80 AND i.i <= GREATEST(length(text) - 11, 1)
-),
-tes AS (
-  SELECT DISTINCT doc_id, substr(text, i.i, 12) AS shingle
-  FROM d, generate_series(1, 600) i(i)
-  WHERE b >= 90 AND i.i <= GREATEST(length(text) - 11, 1)
-),
-ov AS (
-  SELECT te.doc_id AS test_doc, tr.doc_id AS train_doc, te.shingle
-  FROM tes te JOIN trs tr ON te.shingle = tr.shingle
-)
-SELECT test_doc AS doc_id,
-       COUNT(DISTINCT shingle)::BIGINT AS n_shared_shingles,
-       COUNT(DISTINCT train_doc)::BIGINT AS n_train_docs,
-       (CASE WHEN COUNT(DISTINCT shingle) >= 2 THEN 1 ELSE 0 END)::BIGINT AS contaminated
-FROM ov GROUP BY test_doc"""
-
-
-@q("contamination_check", _o_contamination)
-def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark-contamination check: which held-out (test-split) documents
-    share verbatim 12-grams with the train split — the standard n-gram
-    overlap decontamination pass run before LLM evaluation. Reuses the
-    shingle machinery (operators/text.shingles) and the deterministic
-    train_val_split hash; the join is a shingle equi-join with the TEST
-    side broadcast (a benchmark set is small by definition — at 100 TB the
-    train side streams past an in-memory benchmark shingle table, no
-    shuffle of the corpus)."""
-    from .operators import text as T
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    bucket = (F.col("doc_id") * F.lit(2654435761)) % F.lit(2147483648) % 100
-    tr = docs.filter(bucket < 80)
-    te = docs.filter(bucket >= 90)
-    trs = T.shingles(tr, 12).select(
-        F.col("doc_id").alias("train_doc"), "shingle"
-    ).distinct()
-    tes = T.shingles(te, 12).select(
-        F.col("doc_id").alias("test_doc"), "shingle"
-    ).distinct()
-    ov = trs.join(F.broadcast(tes), "shingle")
-    return ov.groupBy(F.col("test_doc").alias("doc_id")).agg(
-        F.countDistinct("shingle").alias("n_shared_shingles"),
-        F.countDistinct("train_doc").alias("n_train_docs"),
-        (F.countDistinct("shingle") >= 2).cast("long").alias("contaminated"),
-    )
-
-
-def _o_mixture(sf_dir: str) -> str:
-    # per-source rate from the engine-portable polynomial string hash
-    # (verified bit-equal Spark aggregate() vs DuckDB list_reduce);
-    # per-doc selection from the multiplicative doc_id hash — all exact
-    # int64, so both engines pick the IDENTICAL document set
-    return """WITH r AS (
-  SELECT doc_id, n_chars, source,
-    (20 + list_reduce(list_prepend(17::BIGINT,
-        list_transform(generate_series(1, length(source)),
-                       i -> ascii(substr(source, i::INT, 1))::BIGINT)),
-        (a, b) -> (a * 31 + b) % 2147483647) % 61)::BIGINT AS rate,
-    ((doc_id * 2654435761) % 2147483648) % 100 AS bucket
-  FROM documents
-)
-SELECT source, MIN(rate)::BIGINT AS rate_pct,
-       COUNT(*)::BIGINT AS n_docs,
-       SUM(CASE WHEN bucket < rate THEN 1 ELSE 0 END)::BIGINT AS n_selected,
-       SUM(CASE WHEN bucket < rate THEN n_chars ELSE 0 END)::BIGINT AS sel_chars
-FROM r GROUP BY source"""
-
-
-@q("mixture_sample", _o_mixture)
-def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-mixture sampling: each source (domain) contributes at its
-    own target rate — the data-mixing stage of an LLM corpus pipeline
-    (domain reweighting), done as a DETERMINISTIC per-row predicate:
-    rate(source) from the portable polynomial string hash, membership
-    from the multiplicative doc_id hash. No rand(), no sampleBy seeds —
-    the same mixture reproduces across runs, engines, and cluster sizes,
-    and at 100 TB the sampled write is a map-side filter (zero shuffle;
-    the only exchange here is the tiny per-source report aggregation)."""
-    docs = _t(spark, sf_dir, "documents")
-    srchash = F.expr(
-        "aggregate(transform(sequence(1, length(source)), "
-        "i -> ascii(substring(source, i, 1))), 17L, "
-        "(a, c) -> (a * 31 + cast(c as long)) % 2147483647)"
-    )
-    rate = (F.lit(20) + srchash % 61).cast("long")
-    bucket = (F.col("doc_id") * F.lit(2654435761)) % F.lit(2147483648) % 100
-    sel = (bucket < F.col("rate")).cast("long")
-    return (
-        docs.withColumn("rate", rate)
-        .withColumn("sel", sel)
-        .groupBy("source")
-        .agg(
-            F.min("rate").alias("rate_pct"),
-            F.count("*").alias("n_docs"),
-            F.sum("sel").alias("n_selected"),
-            F.sum(F.col("sel") * F.col("n_chars")).alias("sel_chars"),
-        )
-    )
-
-
-def _o_repetition(sf_dir: str) -> str:
-    # exact integer gram counts on both sides; the flag threshold is the
-    # integer cross-multiplication d5*10 > n5 (dup-5-gram fraction > 0.1)
-    # so no float ever enters the comparison
-    return r"""WITH t AS (
-  SELECT doc_id, source, regexp_split_to_array(trim(text), '\s+') AS toks
-  FROM documents
-), g AS (
-  SELECT doc_id, source,
-    CASE WHEN len(toks) >= 2 THEN list_transform(
-      generate_series(1, len(toks)-1), i -> toks[i] || ' ' || toks[i+1])
-    ELSE [] END AS g2,
-    CASE WHEN len(toks) >= 5 THEN list_transform(
-      generate_series(1, len(toks)-4), i -> array_to_string(toks[i:i+4], ' '))
-    ELSE [] END AS g5
-  FROM t
-), d AS (
-  SELECT source,
-    len(g2) AS n2, len(g2) - len(list_distinct(g2)) AS d2,
-    len(g5) AS n5, len(g5) - len(list_distinct(g5)) AS d5
-  FROM g
-)
-SELECT source, COUNT(*)::BIGINT AS n_docs,
-  SUM(n2)::BIGINT AS n2_grams, SUM(d2)::BIGINT AS n2_dup,
-  SUM(n5)::BIGINT AS n5_grams, SUM(d5)::BIGINT AS n5_dup,
-  SUM(CASE WHEN d5 * 10 > n5 THEN 1 ELSE 0 END)::BIGINT AS n_flagged
-FROM d GROUP BY source"""
-
-
-@q("repetition_filter", _o_repetition)
-def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intra-document repetition filter (the Gopher-rules repetition
-    signal, Rae et al. 2021 §A1.1): per doc, the duplicate word-2-gram and
-    word-5-gram fractions; a doc is flagged when >10% of its 5-gram
-    occurrences are repeats. Entirely map-side JVM array functions
-    (transform/array_distinct) — no explode, no per-gram shuffle; the only
-    exchange is the tiny per-source report. Dup fractions stay exact
-    integers (count - distinct) and the flag is the integer
-    cross-multiplication d5*10 > n5, so results are bit-stable across
-    engines and parallelism."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    d = docs.select("doc_id", "source", toks.alias("toks"))
-    # guard: Spark sequence(1, n) DESCENDS when n < 1 — never emit it
-    g2 = F.when(
-        F.size("toks") >= 2,
-        F.expr(
-            "transform(sequence(1, size(toks)-1), "
-            "i -> concat(element_at(toks, i), ' ', element_at(toks, i+1)))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    g5 = F.when(
-        F.size("toks") >= 5,
-        F.expr(
-            "transform(sequence(1, size(toks)-4), "
-            "i -> concat_ws(' ', slice(toks, i, 5)))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    d = d.select("source", g2.alias("g2"), g5.alias("g5")).select(
-        "source",
-        F.size("g2").cast("long").alias("n2"),
-        (F.size("g2") - F.size(F.array_distinct("g2"))).cast("long").alias("d2"),
-        F.size("g5").cast("long").alias("n5"),
-        (F.size("g5") - F.size(F.array_distinct("g5"))).cast("long").alias("d5"),
-    )
-    return d.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n2").alias("n2_grams"),
-        F.sum("d2").alias("n2_dup"),
-        F.sum("n5").alias("n5_grams"),
-        F.sum("d5").alias("n5_dup"),
-        F.sum(
-            F.when(F.col("d5") * 10 > F.col("n5"), 1).otherwise(0)
-        ).alias("n_flagged"),
-    )
-
-
-def _o_pii_scrub(sf_dir: str) -> str:
-    # both engines apply the SAME deterministic augmentation (seeded
-    # emails/phones keyed on doc_id) before scrubbing, so the redaction
-    # counts are oracle-checkable even though the raw corpus has no PII
-    return r"""WITH aug AS (
-  SELECT doc_id, source,
-    text
-    || CASE WHEN doc_id % 7 = 0
-         THEN ' contact user' || doc_id::VARCHAR || '@example.com now'
-         ELSE '' END
-    || CASE WHEN doc_id % 11 = 0 THEN ' call 555-0142 ext 9' ELSE '' END
-    AS text2
-  FROM documents
-), s AS (
-  SELECT source,
-    len(regexp_extract_all(text2, '[a-z0-9]+@[a-z]+\.[a-z]+')) AS n_emails,
-    len(regexp_extract_all(text2, '\d{3}-\d{4}')) AS n_phones,
-    length(text2) - length(
-      regexp_replace(
-        regexp_replace(text2, '[a-z0-9]+@[a-z]+\.[a-z]+', '<EMAIL>', 'g'),
-        '\d{3}-\d{4}', '<PHONE>', 'g')) AS chars_removed
-  FROM aug
-)
-SELECT source, COUNT(*)::BIGINT AS n_docs,
-  SUM(CASE WHEN n_emails + n_phones > 0 THEN 1 ELSE 0 END)::BIGINT
-    AS n_docs_with_pii,
-  SUM(n_emails)::BIGINT AS n_emails,
-  SUM(n_phones)::BIGINT AS n_phones,
-  SUM(chars_removed)::BIGINT AS chars_removed
-FROM s GROUP BY source"""
-
-
-@q("pii_scrub", _o_pii_scrub)
-def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII-style redaction scrub — the privacy pass of a training-data
-    pipeline: regex-detect emails/phone fragments, replace with typed
-    placeholder tokens, report per-source detection counts and the exact
-    character delta. The corpus is word-salad with no organic PII, so both
-    engines first apply the same deterministic augmentation (doc_id-keyed
-    synthetic emails/phones — the r2 seeded-duplicates oracle trick).
-    Map-side regexp_count/regexp_replace (JVM, whole-stage codegen); the
-    only shuffle is the per-source report aggregation. At 100 TB the
-    redacted-text write is a pure map stage."""
-    docs = _t(spark, sf_dir, "documents")
-    email_re = r"[a-z0-9]+@[a-z]+\.[a-z]+"
-    phone_re = r"\d{3}-\d{4}"
-    text2 = F.concat(
-        F.col("text"),
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(
-                F.lit(" contact user"),
-                F.col("doc_id").cast("string"),
-                F.lit("@example.com now"),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 11 == 0, F.lit(" call 555-0142 ext 9")).otherwise(
-            F.lit("")
-        ),
-    )
-    a = docs.select("source", text2.alias("text2"))
-    red = F.regexp_replace(
-        F.regexp_replace(F.col("text2"), email_re, "<EMAIL>"), phone_re, "<PHONE>"
-    )
-    s = a.select(
-        "source",
-        F.regexp_count(F.col("text2"), F.lit(email_re)).cast("long").alias("n_emails"),
-        F.regexp_count(F.col("text2"), F.lit(phone_re)).cast("long").alias("n_phones"),
-        (F.length("text2") - F.length(red)).cast("long").alias("chars_removed"),
-    )
-    return s.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(
-            F.when(F.col("n_emails") + F.col("n_phones") > 0, 1).otherwise(0)
-        ).alias("n_docs_with_pii"),
-        F.sum("n_emails").alias("n_emails"),
-        F.sum("n_phones").alias("n_phones"),
-        F.sum("chars_removed").alias("chars_removed"),
-    )
-
-
-def _o_c4_filter(sf_dir: str) -> str:
-    # Both engines apply the SAME deterministic line augmentation (the
-    # corpus is word-salad with no sentence structure): tokens are cut
-    # into pseudo-lines of width 4 + doc_id % 5; a terminal '.' lands on
-    # lines where (i + doc_id) % 3 != 0; docs with doc_id % 13 == 0 get a
-    # 'lorem ipsum' line 0 and doc_id % 17 == 0 an appended '{' on line 1.
-    # All counts are exact integers.
-    return r"""WITH t AS (
-  SELECT doc_id, source, regexp_split_to_array(trim(text), '\s+') AS toks,
-         (4 + doc_id % 5)::BIGINT AS w
-  FROM documents
-), l AS (
-  SELECT doc_id, source,
-    list_transform(
-      generate_series(0, ((len(toks) + w - 1) // w) - 1),
-      i -> (CASE
-              WHEN doc_id % 13 = 0 AND i = 0 THEN 'lorem ipsum dolor sit'
-              WHEN doc_id % 17 = 0 AND i = 1
-                THEN array_to_string(toks[i*w+1 : i*w+w], ' ') || ' {'
-              ELSE array_to_string(toks[i*w+1 : i*w+w], ' ')
-            END)
-           || (CASE WHEN (i + doc_id) % 3 <> 0 THEN '.' ELSE '' END)
-    ) AS lines
-  FROM t
-), f AS (
-  SELECT doc_id, source, len(lines) AS n_lines,
-    len(list_filter(lines,
-        x -> ends_with(x, '.') AND len(string_split(x, ' ')) >= 5)) AS n_kept,
-    COALESCE(list_sum(list_transform(
-        list_filter(lines,
-          x -> ends_with(x, '.') AND len(string_split(x, ' ')) >= 5),
-        x -> length(x))), 0)::BIGINT AS kept_chars,
-    len(list_filter(lines,
-        x -> contains(x, 'lorem ipsum') OR contains(x, '{'))) AS n_bad
-  FROM l
-)
-SELECT source, COUNT(*)::BIGINT AS n_docs,
-  SUM(CASE WHEN n_bad = 0 AND n_kept >= 3 THEN 1 ELSE 0 END)::BIGINT
-    AS n_docs_kept,
-  SUM(n_lines)::BIGINT AS n_lines,
-  SUM(CASE WHEN n_bad = 0 AND n_kept >= 3 THEN n_kept ELSE 0 END)::BIGINT
-    AS n_lines_kept,
-  SUM(CASE WHEN n_bad = 0 AND n_kept >= 3 THEN kept_chars ELSE 0 END)::BIGINT
-    AS chars_kept
-FROM f GROUP BY source"""
-
-
-@q("c4_line_filter", _o_c4_filter)
-def c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style line/document cleaning (Raffel et al. 2020 §2.2): keep
-    only lines that end in terminal punctuation AND have >= 5 words; drop
-    whole documents that contain 'lorem ipsum' or a '{', or that retain
-    fewer than 3 lines. The word-salad corpus has no sentence structure,
-    so both engines first apply the same deterministic pseudo-line
-    augmentation keyed on doc_id (the pii_scrub oracle trick). The whole
-    pass is map-side JVM higher-order array functions — no explode, no
-    per-line shuffle; at 100 TB the cleaned-text write is a pure map
-    stage and the only exchange is the tiny per-source report."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        "source",
-        F.split(F.trim(F.col("text")), r"\s+").alias("toks"),
-        (F.lit(4) + F.col("doc_id") % 5).cast("long").alias("w"),
-    )
-    # guard: Spark sequence(0, n) DESCENDS when n < 0 — never emit it
-    lines = F.when(
-        F.size("toks") >= 1,
-        F.expr(
-            "transform(sequence(0, cast((size(toks) + w - 1) div w as int) - 1), "
-            "i -> concat("
-            "  CASE"
-            "    WHEN doc_id % 13 = 0 AND i = 0 THEN 'lorem ipsum dolor sit'"
-            "    WHEN doc_id % 17 = 0 AND i = 1"
-            "      THEN concat(concat_ws(' ', slice(toks, cast(i*w+1 as int), cast(w as int))), ' {')"
-            "    ELSE concat_ws(' ', slice(toks, cast(i*w+1 as int), cast(w as int)))"
-            "  END,"
-            "  CASE WHEN (i + doc_id) % 3 != 0 THEN '.' ELSE '' END))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    keep = "x -> endswith(x, '.') AND size(split(x, ' ')) >= 5"
-    # Build the per-doc flags off a named 'lines' column so the three
-    # filter() passes share one materialized array.
-    d2 = d.select("doc_id", "source", lines.alias("lines"))
-    f = d2.select(
-        "source",
-        F.size("lines").cast("long").alias("n_lines"),
-        F.expr(f"cast(size(filter(lines, {keep})) as long)").alias("n_kept"),
-        F.expr(
-            f"cast(coalesce(aggregate(filter(lines, {keep}), 0L,"
-            " (a, x) -> a + length(x)), 0L) as long)"
-        ).alias("kept_chars"),
-        F.expr(
-            "cast(size(filter(lines,"
-            " x -> x like '%lorem ipsum%' or contains(x, '{'))) as long)"
-        ).alias("n_bad"),
-    )
-    kept_doc = (F.col("n_bad") == 0) & (F.col("n_kept") >= 3)
-    return f.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.when(kept_doc, 1).otherwise(0)).alias("n_docs_kept"),
-        F.sum("n_lines").alias("n_lines"),
-        F.sum(F.when(kept_doc, F.col("n_kept")).otherwise(0)).alias("n_lines_kept"),
-        F.sum(F.when(kept_doc, F.col("kept_chars")).otherwise(0)).alias("chars_kept"),
-    )
-
-
-def _o_corpus_validate(sf_dir: str) -> str:
-    return """SELECT COUNT(*)::BIGINT AS n_docs,
-       SUM(CASE WHEN text IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_null_text,
-       SUM(CASE WHEN length(text) = 0 THEN 1 ELSE 0 END)::BIGINT AS n_empty,
-       (COUNT(*) - COUNT(DISTINCT doc_id))::BIGINT AS n_dup_ids,
-       MIN(n_chars)::BIGINT AS min_chars,
-       MAX(n_chars)::BIGINT AS max_chars,
-       SUM(CASE WHEN n_chars <> length(text) THEN 1 ELSE 0 END)::BIGINT
-         AS n_chars_mismatch,
-       SUM(CASE WHEN lang IS NULL OR lang = '' THEN 1 ELSE 0 END)::BIGINT
-         AS n_missing_lang
-FROM documents"""
-
-
-@q("corpus_validate", _o_corpus_validate)
-def corpus_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus data-quality gate — the validation pass a pipeline runs
-    before any curation step (the text twin of S6's tile-table validation):
-    null/empty text, duplicate ids, metadata consistency (stored n_chars vs
-    actual length), missing language tags. One map-side aggregate, one
-    row out."""
-    d = _t(spark, sf_dir, "documents")
-    return d.agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.when(F.col("text").isNull(), 1).otherwise(0)).alias("n_null_text"),
-        F.sum(F.when(F.length("text") == 0, 1).otherwise(0)).alias("n_empty"),
-        (F.count("*") - F.countDistinct("doc_id")).alias("n_dup_ids"),
-        F.min("n_chars").alias("min_chars"),
-        F.max("n_chars").alias("max_chars"),
-        F.sum(
-            F.when(F.col("n_chars") != F.length("text"), 1).otherwise(0)
-        ).alias("n_chars_mismatch"),
-        F.sum(
-            F.when(
-                F.col("lang").isNull() | (F.col("lang") == ""), 1
-            ).otherwise(0)
-        ).alias("n_missing_lang"),
-    )
-
-
 def _o_jpeg_stats(sf_dir: str) -> str:
     spec = spec_for_sf_dir(sf_dir)
     npx = spec.tile_w * spec.tile_h
@@ -2271,158 +1016,3 @@ def jpeg_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _o_json_props(sf_dir: str) -> str:
-    return """SELECT event_type,
-       COUNT(*)::BIGINT AS n_events,
-       MIN(CAST(json_extract_string(props, '$.k') AS BIGINT))::BIGINT AS min_k,
-       MAX(CAST(json_extract_string(props, '$.k') AS BIGINT))::BIGINT AS max_k,
-       SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))::BIGINT AS sum_k,
-       SUM(CASE WHEN json_extract_string(props, '$.k') IS NULL
-                THEN 1 ELSE 0 END)::BIGINT AS n_missing
-FROM events GROUP BY event_type"""
-
-
-@q("json_props_stats", _o_json_props)
-def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured property extraction (SURVEY §2.8 JSON family; ref
-    fia_client.py:532-545 parses REST JSON responses): the events table's
-    ``props`` JSON column parsed with the JVM-side ``from_json`` — schema
-    projection happens inside whole-stage codegen, no Python — and
-    aggregated per event type, with a missing-key count (the schema-drift
-    check a pipeline over semi-structured logs needs)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    ev = _t(spark, sf_dir, "events")
-    schema = StructType([StructField("k", LongType(), True)])
-    k = F.from_json("props", schema)["k"]
-    return (
-        ev.withColumn("k", k)
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("k").alias("min_k"),
-            F.max("k").alias("max_k"),
-            F.sum("k").alias("sum_k"),
-            F.sum(F.when(F.col("k").isNull(), 1).otherwise(0)).alias("n_missing"),
-        )
-    )
-
-
-def _o_ntile(sf_dir: str) -> str:
-    return """WITH spend AS (
-  SELECT o_custkey, SUM(o_totalprice) AS total
-  FROM orders GROUP BY o_custkey
-),
-q AS (
-  SELECT o_custkey, total,
-         NTILE(4) OVER (ORDER BY total DESC, o_custkey) AS quartile
-  FROM spend
-)
-SELECT quartile,
-       COUNT(*)::BIGINT AS n_customers,
-       -- exact integer-cent sum: order-independent across engines (a 1e9
-       -- double sum rounded at 6dp is past float64 determinism)
-       ROUND(SUM(CAST(ROUND(total * 100) AS BIGINT)) / 100.0, 6) AS sum_spend,
-       ROUND(MIN(total), 6) AS min_spend,
-       ROUND(MAX(total), 6) AS max_spend
-FROM q GROUP BY quartile"""
-
-
-@q("spend_quartiles", _o_ntile)
-def spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer-spend quartiles with NTILE semantics — the bucketed-ranking
-    window flavor (SURVEY §2.5 family) — computed WITHOUT a global sort.
-    A bare ``NTILE(4) OVER (ORDER BY ...)`` funnels every row through one
-    task; here the exact global rank in (total DESC, custkey) order is
-    assembled scale-safely instead:
-
-    1. value histogram of totals (``groupBy(total)``, one row per distinct
-       value) + distributed prefix count in total-DESC order
-       (functions/prefix.prefix_sum — range buckets, no single-task sort)
-       gives each value's starting rank;
-    2. ``row_number`` within a tie run (``Window.partitionBy(total)`` —
-       bounded, parallel) breaks ties by custkey;
-    3. the NTILE bucket is closed-form from (rank, n): the first n%4
-       buckets take ceil(n/4) rows — pure map-side arithmetic.
-
-    Bit-identical to NTILE(4) for every row, including tie runs that
-    straddle a bucket boundary."""
-    orders = _t(spark, sf_dir, "orders")
-    spend = orders.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("total"))
-    from pyspark.sql import Window
-
-    from .functions import prefix
-
-    hist = spend.groupBy("total").agg(F.count("*").alias("cnt"))
-    cum = prefix.prefix_sum(
-        hist.withColumn("_k", -F.col("total")), "_k", "cnt", "cum_le"
-    ).select("total", (F.col("cum_le") - F.col("cnt")).alias("cum_before"))
-    n_row = hist.agg(F.sum("cnt").alias("_n"))
-    w_run = Window.partitionBy("total").orderBy("o_custkey")
-    ranked = (
-        spend.join(cum, "total")
-        .withColumn("rank", F.col("cum_before") + F.row_number().over(w_run))
-        .crossJoin(F.broadcast(n_row))
-    )
-    qsz = F.floor(F.col("_n") / 4)
-    rem = F.col("_n") % 4
-    big = qsz + 1
-    quartile = (
-        F.when(F.col("rank") <= rem * big, F.floor((F.col("rank") - 1) / big))
-        .otherwise(
-            rem
-            + F.floor((F.col("rank") - rem * big - 1) / F.greatest(qsz, F.lit(1)))
-        )
-        + 1
-    )
-    q4 = ranked.withColumn("quartile", quartile.cast("int"))
-    # per-customer totals are prices (2-decimal) summed — convert to exact
-    # int64 cents before the bucket sum so the result is order-independent
-    cents = F.round(F.col("total") * 100, 0).cast("long")
-    return q4.groupBy("quartile").agg(
-        F.count("*").alias("n_customers"),
-        F.round(F.sum(cents) / 100.0, 6).alias("sum_spend"),
-        F.round(F.min("total"), 6).alias("min_spend"),
-        F.round(F.max("total"), 6).alias("max_spend"),
-    )
-
-
-def _o_event_gaps(sf_dir: str) -> str:
-    return """WITH g AS (
-  SELECT user_id,
-         EPOCH_US(ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
-           AS gap_us
-  FROM events
-)
-SELECT user_id,
-       COUNT(gap_us)::BIGINT AS n_gaps,
-       ROUND(SUM(gap_us)::BIGINT / COUNT(gap_us) / 1e6, 6) AS avg_gap_s,
-       ROUND(MAX(gap_us)::BIGINT / 1e6, 6) AS max_gap_s,
-       SUM(CASE WHEN gap_us > 3600000000 THEN 1 ELSE 0 END)::BIGINT AS n_gaps_1h
-FROM g GROUP BY user_id"""
-
-
-@q("event_gaps", _o_event_gaps)
-def event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-event gap statistics per user via LAG (SURVEY §2.5 family —
-    the lag/lead flavor): partitioned by user, ordered by (ts, event_id)
-    for a deterministic tie order. The window partitions are per-user
-    event sequences — bounded and parallel, no global sort. This is the
-    gap analysis behind the session-window threshold choice
-    (streaming/sessions.py)."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    g = ev.withColumn("gap_us", us - F.lag(us).over(w))
-    # exact int64 microsecond sums; one final division -> bit-identical
-    # rounding on both engines (the sample_stats float-match rule)
-    return g.groupBy("user_id").agg(
-        F.count("gap_us").alias("n_gaps"),
-        F.round(F.sum("gap_us") / F.count("gap_us") / 1e6, 6).alias("avg_gap_s"),
-        F.round(F.max("gap_us") / 1e6, 6).alias("max_gap_s"),
-        F.sum(
-            F.when(F.col("gap_us") > 3_600_000_000, 1).otherwise(0)
-        ).alias("n_gaps_1h"),
-    )

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """spark-submit entry point (north rule: ``spark-submit --py-files``).
 
-Package the library, then submit:
+Package the library from the checkout root, then submit:
 
-    cd /root/repo && zip -qr /tmp/gridfia_spark.zip gridfia_spark
+    zip -qr /tmp/gridfia_spark.zip gridfia_spark
     spark-submit --master local[8] --py-files /tmp/gridfia_spark.zip \
-        scripts/submit_job.py --job flagship --sf-dir /root/testdata/sf0.1
+        scripts/submit_job.py --job flagship
 
 On a real cluster the same invocation takes ``--master yarn|k8s://...`` and
 ``--num-executors N``; the job code is identical. Jobs print one JSON line.

@@ -126,36 +126,6 @@ class TestSpatialFacade:
         assert got == want
 
 
-class TestDataPipelineFacade:
-    def test_facade_delegates(self, spark, tmp_path):
-        """Every facade method runs and returns the operator's result shape
-        (delegation only — operator semantics are tested in their own
-        suites)."""
-        from pyspark.sql import functions as F
-
-        from gridfia_spark.pipeline import DataPipeline
-
-        p = DataPipeline(spark)
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-
-        assert p.exact_dedup_groups(docs).columns == [
-            "text_hash", "n_docs", "canonical_id"
-        ]
-        assert "split" in p.split(docs).columns
-        packed = p.pack(docs, budget=2048)
-        assert {"bin", "cum"} <= set(packed.columns)
-        assert packed.count() == docs.count()
-        cont = p.contamination(docs.limit(100))
-        assert set(cont.columns) == {"doc_id", "n_shared_shingles", "n_train_docs"}
-        q = emb.limit(5)
-        topk = p.cosine_topk(q, emb.limit(100), k=3)
-        assert topk.filter(F.col("rank") > 3).count() == 0
-        idx = str(tmp_path / "ivf")
-        p.build_ann_index(emb.limit(100), idx)
-        assert p.ann_topk_indexed(q, emb.limit(100), idx, k=2).count() > 0
-
-
 class TestRasterPipelineFacade:
     def test_facade_delegates(self, spark, tmp_path):
         """Every RasterPipeline method runs and returns the operator's
@@ -194,32 +164,18 @@ class TestRasterPipelineFacade:
 class TestDriverSampleOrder:
     def test_driver_sample_covers_oldest_evidence_queries(self):
         """The driver's correctness snapshot samples the FIRST 50 registry
-        entries — the r6 head rotates to the queries ABSENT from the r05
-        sample (VERDICT r5 #2), oldest driver evidence first, and every
-        sampled query carries an oracle."""
+        entries: every registered query absent from the last snapshot
+        (CORRECTNESS_r06.json) sits in that head, and every head entry
+        carries an oracle."""
         import json
 
         from gridfia_spark import queries as Q
 
         head = list(Q.registry())[:50]
         oracled = Q.oracles()
-        for name in (
-            "minhash_lsh_pairs",  # absent from both r04 and r05 samples
-            "dedup_exact",
-            "percentile_stretch",
-            "session_windows",
-            "embedding_cosine_dedup",
-            "zonal_total_biomass",  # r04-era evidence, rotated back in
-            "pip_points",
-            "metrics_pixel",
-            "tile_decode_stats",
-            "zarr_store_roundtrip",
-        ):
-            assert name in head, name
-        # nothing already green in the r05 snapshot occupies a head slot
-        r05 = set(json.load(open(os.path.join(ROOT, "CORRECTNESS_r05.json"))))
-        overlap = [n for n in head if n in r05]
-        assert not overlap, f"head wastes slots on r05-sampled queries: {overlap}"
+        r06 = set(json.load(open(os.path.join(ROOT, "CORRECTNESS_r06.json"))))
+        missing = [n for n in Q.registry() if n not in r06 and n not in head]
+        assert not missing, f"unsampled queries below the 50 boundary: {missing}"
         assert all(n in oracled for n in head)
         # registry() and oracles() agree on the ordering
         assert [n for n in Q.registry() if n in oracled] == list(oracled)

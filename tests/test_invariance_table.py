@@ -23,25 +23,15 @@ import sys, json; sys.path.insert(0, {root!r})
 from gridfia_spark.session import get_spark
 from gridfia_spark import queries as Q
 from gridfia_spark.queries_products import (
-    zonal_percentiles, wav_audio_stats, zorder_layout, sequence_packing,
-    spend_quartiles, zonal_skewed, webp_tile_stats)
+    zonal_percentiles, zorder_layout, zonal_skewed, webp_tile_stats)
 spark = get_spark(cores={cores}, shuffle_partitions={sh})
 pdf = Q.zonal_total_biomass(spark, "/root/testdata/sf0.001").toPandas()
 pdf = pdf.sort_values("poly_id", ignore_index=True)
 pct = zonal_percentiles(spark, "/root/testdata/sf0.001").toPandas()
 pct = pct.sort_values("poly_id", ignore_index=True)
-wav = wav_audio_stats(spark, "/root/testdata/sf0.001").toPandas()
-wav = wav.sort_values("doc_id", ignore_index=True)
 zo = zorder_layout(spark, "/root/testdata/sf0.001").toPandas()
 zo = zo.sort_values("bucket", ignore_index=True)
-# prefix-sum range-partition boundaries change with parallelism; the
-# packing result must not
-sp = sequence_packing(spark, "/root/testdata/sf0.001").toPandas()
-sp = sp.sort_values("bin", ignore_index=True)
-# round-4: distributed-rank NTILE (prefix buckets change with cores),
-# salted zonal, and the VP8L transcode chain must all be invariant
-sq = spend_quartiles(spark, "/root/testdata/sf0.001").toPandas()
-sq = sq.sort_values("quartile", ignore_index=True)
+# round-4: salted zonal and the VP8L transcode chain must be invariant
 zk = zonal_skewed(spark, "/root/testdata/sf0.001").toPandas()
 zk = zk.sort_values("poly_id", ignore_index=True)
 wb = webp_tile_stats(spark, "/root/testdata/sf0.001").toPandas()
@@ -81,10 +71,7 @@ print("RESULT" + json.dumps({{"zonal": pdf.to_dict("records"),
                               "sharded": zs.to_dict("records"),
                               "multiscale": zm.to_dict("records"),
                               "pct": pct.to_dict("records"),
-                              "wav": wav.to_dict("records"),
                               "zorder": zo.to_dict("records"),
-                              "pack": sp.to_dict("records"),
-                              "quartiles": sq.to_dict("records"),
                               "skewed": zk.to_dict("records"),
                               "webp": wb.to_dict("records"),
                               "blosc": zb.to_dict("records"),

@@ -111,55 +111,3 @@ class TestIncrementalStreaming:
         assert r2 == batch
         # first pass saw only half the tiles (strictly less than final)
         assert all(r1[p] <= batch[p][1] for p in r1)
-
-
-class TestIncrementalDedup:
-    def test_incremental_equals_batch_lsh(self, spark, tmp_path):
-        """Two AvailableNow passes over a growing corpus must accumulate
-        exactly the batch LSH pair set over the final corpus — including
-        pairs that CROSS the ingest boundary (new doc vs a doc committed in
-        an earlier batch) — and a third pass over unchanged input must add
-        nothing."""
-        from pyspark.sql import functions as F
-
-        from gridfia_spark.operators import text
-        from gridfia_spark.streaming import dedup
-
-        docs = (
-            spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .filter(F.col("doc_id") < 40)
-        )
-        first = docs.filter(F.col("doc_id") < 20)
-        # second delta: new docs 20..39 PLUS near-copies of batch-1 docs
-        # (cross-batch duplicates)
-        copies = first.filter(F.col("doc_id") < 5).withColumn(
-            "doc_id", F.col("doc_id") + 10_000
-        )
-        second = docs.filter(F.col("doc_id") >= 20).unionByName(copies)
-
-        corpus_dir = str(tmp_path / "corpus")
-        work = str(tmp_path / "dedup")
-        first.coalesce(1).write.mode("overwrite").parquet(corpus_dir)
-        dedup.incremental_near_dups(spark, corpus_dir, work)
-        second.coalesce(1).write.mode("append").parquet(corpus_dir)
-        dedup.incremental_near_dups(spark, corpus_dir, work)
-
-        got = {
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in dedup.near_dup_result(spark, work).collect()
-        }
-        full = first.unionByName(second)
-        want = {
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in text.minhash_lsh_pairs(full).collect()
-        }
-        assert got == want
-        # the seeded cross-batch exact copies must be present
-        assert {(d, d + 10_000, 1.0) for d in range(5)} <= got
-        # idempotent third pass: no new files -> no new pairs
-        dedup.incremental_near_dups(spark, corpus_dir, work)
-        again = {
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in dedup.near_dup_result(spark, work).collect()
-        }
-        assert again == got

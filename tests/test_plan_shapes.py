@@ -43,7 +43,9 @@ class TestPlanShapes:
     def test_media_chains_have_no_exchange(self, spark):
         """PLANS.md §14: container pipelines are fused map-only chains —
         media bytes never cross the network."""
-        for name in ("wav_audio_stats", "video_frame_stats"):
+        for name in (
+            "png_tile_stats", "jpeg_tile_stats", "webp_tile_stats", "thumbnail_stats"
+        ):
             plan = _plan(spark, name)
             assert "Exchange" not in plan, f"{name} plan shuffles: {plan[:400]}"
 
@@ -71,19 +73,6 @@ class TestPlanShapes:
         scan = next(l for l in plan.splitlines() if "FileScan" in l)
         assert "bytes" in scan  # the one pass that decodes
         assert _hash_exchanges(plan) == 1  # partials -> final groupBy only
-
-    def test_spend_quartiles_no_global_window(self, spark):
-        """PLANS.md §12 addendum: NTILE semantics without a global sort —
-        no ntile over an unpartitioned window; every Window operator is
-        partitioned, and the only SinglePartition exchange is the 1-row
-        scalar count aggregate."""
-        plan = _plan(spark, "spend_quartiles")
-        assert "ntile" not in plan
-        for line in plan.splitlines():
-            line = line.strip().lstrip("+-: ")
-            if line.startswith("Window "):
-                assert not re.search(r"\], \[\s*\], \[", line), line
-        assert plan.count("Exchange SinglePartition") <= 1
 
     def test_container_roundtrips_are_map_only(self, spark):
         """PLANS.md §14 extension: the GeoTIFF transcode chain and the

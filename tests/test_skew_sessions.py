@@ -1,4 +1,4 @@
-"""Tests: explicit salting correctness + stateful streaming sessions."""
+"""Tests: explicit salting correctness and hot-cell detection."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from gridfia_spark.operators import skew
-from gridfia_spark.streaming import sessions
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -67,212 +66,3 @@ class TestSaltedJoin:
         )
         hot = [r.cell_id for r in skew.hot_cells(probe, threshold=1000).collect()]
         assert hot == [9]
-
-
-class TestStreamingSessions:
-    def test_stream_equals_batch(self, spark, tmp_path):
-        events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-        stage = str(tmp_path / "events")
-        work = str(tmp_path / "stream")
-        events.write.mode("overwrite").parquet(stage)
-        sessions.stream_user_sessions(spark, stage, work)
-
-        # append-mode emits only watermark-closed sessions; flush the tail
-        # with a sentinel event far in the future, re-run the same stream
-        mx = events.agg(F.max("ts")).first()[0]
-        sentinel = spark.createDataFrame(
-            [(999999, mx, 999999, "x", 0.0, "")], sessions.EVENT_SCHEMA
-        ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 10 DAYS"))
-        sentinel.write.mode("append").parquet(stage)
-        sessions.stream_user_sessions(spark, stage, work)
-
-        got = {
-            (r.user_id, r.session_start, r.session_end): (r.n_events, r.sum_value)
-            for r in sessions.sessions_result(spark, work).collect()
-            if r.user_id != 999999
-        }
-        want = {
-            (r.user_id, r.session_start, r.session_end): (r.n_events, r.sum_value)
-            for r in sessions.batch_user_sessions(events).collect()
-        }
-        assert got == want and len(want) > 0
-
-
-class TestStatefulMonitor:
-    def test_stateful_stream_equals_batch_and_resumes(self, spark, tmp_path):
-        from gridfia_spark.streaming import stateful
-
-        events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-        stage = str(tmp_path / "ev")
-        work = str(tmp_path / "mon")
-        # first half, then the rest — state must carry across restarts
-        first = events.filter(F.col("event_id") % 2 == 0)
-        rest = events.filter(F.col("event_id") % 2 == 1)
-        first.write.mode("overwrite").parquet(stage)
-        stateful.stream_activity_monitor(spark, stage, work, threshold=50.0)
-        rest.write.mode("append").parquet(stage)
-        stateful.stream_activity_monitor(spark, stage, work, threshold=50.0)
-
-        got = {
-            r.user_id: (r.n_events, round(r.sum_value, 6))
-            for r in stateful.monitor_result(spark, work).collect()
-        }
-        want = {
-            r.user_id: (r.n_events, round(r.sum_value, 6))
-            for r in stateful.batch_activity_monitor(events, threshold=50.0).collect()
-        }
-        assert got == want and len(want) > 0
-
-
-class TestAsofJoin:
-    def test_matches_pandas_merge_asof(self, spark):
-        """asof_join == pandas merge_asof(direction='backward') per key."""
-        import numpy as np
-        import pandas as pd
-
-        from gridfia_spark.operators import asof
-
-        rng = np.random.default_rng(11)
-        lpdf = pd.DataFrame(
-            {
-                "k": rng.integers(0, 4, 60),
-                "ts": rng.integers(0, 1000, 60).astype("int64"),
-                "lv": rng.normal(size=60),
-            }
-        ).drop_duplicates(["k", "ts"])
-        rpdf = pd.DataFrame(
-            {
-                "k": rng.integers(0, 4, 40),
-                "ts": rng.integers(0, 1000, 40).astype("int64"),
-                "rv": rng.normal(size=40),
-            }
-        ).drop_duplicates(["k", "ts"])
-        out = asof.asof_join(
-            spark.createDataFrame(lpdf),
-            spark.createDataFrame(rpdf),
-            on=["k"],
-            ts="ts",
-            right_vals=["rv"],
-        ).toPandas()
-        want = pd.merge_asof(
-            lpdf.sort_values("ts"), rpdf.sort_values("ts"),
-            on="ts", by="k", direction="backward",
-        ).rename(columns={"rv": "asof_rv"})
-        got = out.sort_values(["k", "ts"]).reset_index(drop=True)
-        want = want.sort_values(["k", "ts"]).reset_index(drop=True)
-        pd.testing.assert_frame_equal(
-            got[["k", "ts", "lv", "asof_rv"]], want[["k", "ts", "lv", "asof_rv"]]
-        )
-
-    def test_inclusive_and_missing(self, spark):
-        from gridfia_spark.operators import asof
-
-        left = spark.createDataFrame(
-            [(1, 10, "a"), (1, 5, "b"), (2, 7, "c")], "k int, ts int, tag string"
-        )
-        right = spark.createDataFrame(
-            [(1, 10, 100.0), (1, 4, 40.0)], "k int, ts int, v double"
-        )
-        out = {
-            r.tag: r.asof_v
-            for r in asof.asof_join(left, right, ["k"], "ts", ["v"]).collect()
-        }
-        assert out["a"] == 100.0  # equal ts is inclusive
-        assert out["b"] == 40.0
-        assert out["c"] is None  # key with no right rows -> null
-
-    def test_null_right_value_attaches_as_null(self, spark):
-        """A matched right row with a NULL value column attaches as NULL
-        (merge_asof / DuckDB ASOF semantics) — an older row's value must
-        not leak forward past it."""
-        from gridfia_spark.operators import asof
-
-        left = spark.createDataFrame(
-            [(1, 5, "early"), (1, 15, "after_null")], "k int, ts int, tag string"
-        )
-        right = spark.createDataFrame(
-            [(1, 4, 40.0), (1, 10, None)], "k int, ts int, v double"
-        )
-        out = {
-            r.tag: r.asof_v
-            for r in asof.asof_join(left, right, ["k"], "ts", ["v"]).collect()
-        }
-        assert out["early"] == 40.0
-        assert out["after_null"] is None  # matched row (ts=10) has NULL v
-
-    def test_prefix_collision_raises(self, spark):
-        import pytest as _pytest
-
-        from gridfia_spark.operators import asof
-
-        left = spark.createDataFrame([(1, 5, 0.0)], "k int, ts int, asof_v double")
-        right = spark.createDataFrame([(1, 4, 40.0)], "k int, ts int, v double")
-        with _pytest.raises(ValueError, match="collide"):
-            asof.asof_join(left, right, ["k"], "ts", ["v"])
-
-
-class TestRangeJoin:
-    def test_equals_theta_join(self, spark):
-        """Banded range join == plain non-equi join on random values/ranges,
-        including ranges wider than the bucket and values outside any range."""
-        import numpy as np
-        import pandas as pd
-
-        from gridfia_spark.operators import rangejoin
-
-        rng = np.random.default_rng(3)
-        vals = spark.createDataFrame(
-            pd.DataFrame({"row_id": range(300), "v": rng.uniform(-20, 520, 300)})
-        )
-        ranges = spark.createDataFrame(
-            [("R0", -10.0, 0.5), ("R1", 0.5, 130.0), ("R2", 130.0, 131.0),
-             ("R3", 250.0, 500.0), ("R4", 1000.0, 2000.0)],
-            "tier string, lo double, hi double",
-        )
-        banded = {
-            (r.row_id, r.tier)
-            for r in rangejoin.range_join(vals, ranges, "v", bucket_width=37.0).collect()
-        }
-        theta = {
-            (r.row_id, r.tier)
-            for r in vals.join(
-                ranges, (vals.v >= ranges.lo) & (vals.v < ranges.hi)
-            ).collect()
-        }
-        assert banded == theta and len(theta) > 0
-
-
-class TestLateData:
-    def test_event_behind_watermark_is_dropped(self, spark, tmp_path):
-        """The late-data contract, executed: once the checkpointed watermark
-        has advanced past a session's window, a late-arriving event for that
-        window is DROPPED — the closed session is never reopened, re-emitted,
-        or double-counted (withWatermark + session_window append semantics)."""
-        events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-        stage = str(tmp_path / "events")
-        work = str(tmp_path / "stream")
-        events.write.mode("overwrite").parquet(stage)
-        sessions.stream_user_sessions(spark, stage, work)
-
-        mx = events.agg(F.max("ts")).first()[0]
-        sentinel = spark.createDataFrame(
-            [(999999, mx, 999999, "x", 0.0, "")], sessions.EVENT_SCHEMA
-        ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 10 DAYS"))
-        sentinel.write.mode("append").parquet(stage)
-        sessions.stream_user_sessions(spark, stage, work)
-        before = sorted(
-            (r.user_id, r.session_start, r.session_end, r.n_events)
-            for r in sessions.sessions_result(spark, work).collect()
-        )
-        assert len(before) > 0
-
-        # a duplicate of the EARLIEST event arrives 10 days late — far
-        # behind the advanced watermark
-        late = events.orderBy("ts").limit(1)
-        late.write.mode("append").parquet(stage)
-        sessions.stream_user_sessions(spark, stage, work)
-        after = sorted(
-            (r.user_id, r.session_start, r.session_end, r.n_events)
-            for r in sessions.sessions_result(spark, work).collect()
-        )
-        assert after == before

@@ -1,304 +1,6 @@
-"""Tests for the training-data pipeline operators (dedup / text / ANN)."""
+"""Image near-duplicate similarity: the banded perceptual-hash join."""
 
 from __future__ import annotations
-
-import numpy as np
-import pandas as pd
-import pytest
-from pyspark.sql import functions as F
-
-from gridfia_spark.operators import similarity, text
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    """Dup-heavy corpus: exact dups, near-dups (high jaccard), unique docs."""
-    base = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight"
-    rows = [
-        (0, base, "src0"),
-        (1, base, "src0"),  # exact dup of 0
-        (2, base + " again", "src1"),  # near dup of 0
-        (3, base.replace("quick", "slow"), "src1"),  # near dup
-        (4, "completely different content about spark dataframes and shuffles", "src2"),
-        (5, "another unrelated document mentioning zonal statistics and rasters", "src2"),
-        (6, base + " extra tail words here", "src0"),  # near dup
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string, source string")
-
-
-class TestExactDedup:
-    def test_groups(self, spark, docs):
-        out = {r.canonical_id: r.n_docs for r in text.exact_dedup_groups(docs).collect()}
-        assert out[0] == 2  # docs 0 and 1 identical, canonical = min id
-        assert sum(out.values()) == 7
-
-
-class TestMinhashLSH:
-    def test_matches_bruteforce(self, spark, docs):
-        """LSH-pruned + verified pairs == exact n-gram Jaccard pairs."""
-        exact = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in text.ngram_jaccard_pairs(docs, k=5, threshold=0.5).collect()
-        }
-        lsh = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in text.minhash_lsh_pairs(
-                docs, k=5, n_hashes=32, bands=16, threshold=0.5
-            ).collect()
-        }
-        assert lsh == exact
-        assert (0, 1) in exact and exact[(0, 1)] == 1.0  # exact dup pair
-
-    def test_signature_shape(self, spark, docs):
-        sig = text.minhash_signatures(docs, k=5, n_hashes=16).collect()
-        assert len(sig) == 7
-        assert all(len(r.signature) == 16 for r in sig)
-
-
-class TestNearDupComponents:
-    def test_components_match_transitive_closure(self, spark, docs):
-        """Min-label propagation must produce the transitive closure of the
-        pair graph: {0,1,2,3,6} form one chain-connected cluster (even when
-        some pairs only connect through an intermediate doc), 4 and 5 stay
-        singletons."""
-        pairs = text.ngram_jaccard_pairs(docs, k=5, threshold=0.5)
-        out = {r.doc_id: (r.comp, r.is_canonical) for r in
-               text.near_dup_components(pairs, docs).collect()}
-        cluster = {0, 1, 2, 3, 6}
-        assert all(out[d][0] == 0 for d in cluster)
-        assert out[4] == (4, 1) and out[5] == (5, 1)
-        assert out[0][1] == 1 and out[1][1] == 0
-
-    def test_chain_requires_iteration(self, spark):
-        """A 4-link chain (0-1, 1-2, 2-3) converges to a single component —
-        needs >1 propagation round, exercising the fixpoint loop."""
-        docs = spark.createDataFrame(
-            [(i, f"d{i}", "s") for i in range(5)], "doc_id long, text string, source string"
-        )
-        pairs = spark.createDataFrame(
-            [(0, 1, 0.9), (1, 2, 0.9), (2, 3, 0.9)],
-            "doc_a long, doc_b long, jaccard double",
-        )
-        out = {r.doc_id: r.comp for r in text.near_dup_components(pairs, docs).collect()}
-        assert out == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4}
-
-    def test_nonconvergence_raises(self, spark):
-        """max_iter too small for the graph diameter -> loud RuntimeError,
-        never silently-wrong component ids."""
-        import pytest as _pytest
-
-        docs = spark.createDataFrame(
-            [(i, f"d{i}", "s") for i in range(6)], "doc_id long, text string, source string"
-        )
-        pairs = spark.createDataFrame(
-            [(i, i + 1, 0.9) for i in range(5)],
-            "doc_a long, doc_b long, jaccard double",
-        )
-        with _pytest.raises(RuntimeError, match="did not converge"):
-            text.near_dup_components(pairs, docs, max_iter=2)
-
-
-class TestSimhash:
-    def test_one_row_per_doc_and_dups_collide(self, spark, docs):
-        out = {r.doc_id: r.simhash for r in text.simhash64(docs).collect()}
-        assert len(out) == 7
-        assert out[0] == out[1]  # identical docs -> identical simhash
-        # near-dup has small hamming distance; unrelated doc large
-        def ham(a, b):
-            return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-        assert ham(out[0], out[2]) < ham(out[0], out[4])
-
-    def test_portable_variant_same_semantics(self, spark, docs):
-        """simhash_portable (engine-portable polynomial hash, 62 bits) keeps
-        the simhash contract: identical docs collide, near-dups are closer
-        than unrelated docs."""
-        out = {r.doc_id: r.simhash for r in text.simhash_portable(docs).collect()}
-        assert len(out) == 7
-        assert out[0] == out[1]
-        assert all(0 <= v < (1 << 62) for v in out.values())
-
-        def ham(a, b):
-            return bin(a ^ b).count("1")
-
-        assert ham(out[0], out[2]) < ham(out[0], out[4])
-
-
-class TestLangAndQuality:
-    def test_lang_scores(self, spark):
-        rows = [
-            (0, "the cat and the dog of the house", "en"),
-            (1, "der hund und die katze und der vogel", "de"),
-            (2, "le chat et la maison et le chien", "fr"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-        out = {r.doc_id: r.predicted_lang for r in text.lang_scores(df).collect()}
-        assert out == {0: "en", 1: "de", 2: "fr"}
-
-    def test_token_stats(self, spark):
-        df = spark.createDataFrame(
-            [(0, "hello world, this is fine.")], "doc_id long, text string"
-        )
-        r = text.token_stats(df).first()
-        assert r.n_tokens == 5
-        assert r.n_chars == 26
-        assert r.punct_ratio == pytest.approx(2 / 26)
-
-
-class TestSimilarity:
-    @pytest.fixture(scope="class")
-    def emb(self, spark):
-        rng = np.random.default_rng(3)
-        vecs = rng.standard_normal((60, 64)).astype(np.float32)
-        vecs[1] = vecs[0] + 0.01 * rng.standard_normal(64).astype(np.float32)  # near-dup
-        pdf = pd.DataFrame(
-            {"vec_id": range(60), "embedding": [v.tolist() for v in vecs]}
-        )
-        return spark.createDataFrame(pdf), vecs
-
-    def test_bruteforce_topk_vs_numpy(self, spark, emb):
-        df, vecs = emb
-        out = similarity.cosine_topk(df.filter(F.col("vec_id") < 5), df, k=3).toPandas()
-        v = vecs.astype(np.float64)
-        norms = np.linalg.norm(v, axis=1)
-        for qi in range(5):
-            cos = (v @ v[qi]) / (norms * norms[qi])
-            cos[qi] = -np.inf
-            order = sorted(
-                ((round(float(cos[j]), 6), -j) for j in range(60)), reverse=True
-            )[:3]
-            mine = out[out.q_id == qi].sort_values("rank")
-            assert [(r.cosine, -r.t_id) for r in mine.itertuples()] == order
-
-    def test_near_dup_is_rank1(self, spark, emb):
-        df, _ = emb
-        out = similarity.cosine_topk(df.filter(F.col("vec_id") == 0), df, k=1).first()
-        assert out.t_id == 1 and out.cosine > 0.99
-
-    def test_ann_recall(self, spark, emb):
-        df, _ = emb
-        exact = similarity.cosine_topk(df.filter(F.col("vec_id") < 10), df, k=5).toPandas()
-        ann = similarity.ann_cosine_topk(
-            df.filter(F.col("vec_id") < 10), df, k=5, n_planes=16, bands=8
-        ).toPandas()
-        e = set(zip(exact.q_id, exact.t_id))
-        a = set(zip(ann.q_id, ann.t_id))
-        recall = len(e & a) / len(e)
-        assert recall >= 0.5  # 8 bands of 2 bits: generous candidate net
-        # the engineered near-dup must always survive LSH
-        assert (0, 1) in a
-
-    def test_embedding_dedup(self, spark, emb):
-        df, _ = emb
-        pairs = similarity.embedding_cosine_dedup(
-            df, threshold=0.95, n_planes=16, bands=8
-        ).collect()
-        assert any(r.vec_a == 0 and r.vec_b == 1 for r in pairs)
-
-
-class TestIVF:
-    def test_ivf_recall_and_near_dup(self, spark):
-        rng = np.random.default_rng(5)
-        vecs = rng.standard_normal((80, 64)).astype(np.float32)
-        vecs[1] = vecs[0] + 0.01 * rng.standard_normal(64).astype(np.float32)
-        pdf = pd.DataFrame({"vec_id": range(80), "embedding": [v.tolist() for v in vecs]})
-        df = spark.createDataFrame(pdf)
-        exact = similarity.cosine_topk(df.filter(F.col("vec_id") < 10), df, k=5).toPandas()
-        ivf = similarity.ivf_cosine_topk(
-            df.filter(F.col("vec_id") < 10), df, k=5, n_clusters=8, nprobe=4
-        ).toPandas()
-        e = set(zip(exact.q_id, exact.t_id))
-        a = set(zip(ivf.q_id, ivf.t_id))
-        assert len(e & a) / len(e) >= 0.5
-        # near-dup lands in the same cluster -> always found
-        assert (0, 1) in a
-
-    def test_cluster_assignment_deterministic(self, spark):
-        rng = np.random.default_rng(6)
-        pdf = pd.DataFrame(
-            {"vec_id": range(20),
-             "embedding": [v.tolist() for v in rng.standard_normal((20, 64)).astype(np.float32)]}
-        )
-        df = spark.createDataFrame(pdf)
-        a = {r.vec_id: r.ivf_cluster for r in similarity.with_ivf_cluster(df).collect()}
-        b = {r.vec_id: r.ivf_cluster for r in similarity.with_ivf_cluster(df).collect()}
-        assert a == b and 0 <= min(a.values()) and max(a.values()) < 16
-
-
-class TestTrainedIVF:
-    @staticmethod
-    def _clustered(spark, n_clusters=8, per=40, noise=0.12, seed=11):
-        """Clustered (non-uniform) synthetic embeddings: unit centers +
-        gaussian spread — the regime where codebook quality matters."""
-        rng = np.random.default_rng(seed)
-        cents = rng.standard_normal((n_clusters, 64))
-        cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-        vecs = np.repeat(cents, per, axis=0) + noise * rng.standard_normal(
-            (n_clusters * per, 64)
-        )
-        pdf = pd.DataFrame(
-            {"vec_id": range(len(vecs)),
-             "embedding": [v.tolist() for v in vecs.astype(np.float32)]}
-        )
-        return spark.createDataFrame(pdf), per
-
-    @staticmethod
-    def _recall(exact, got):
-        e = set(zip(exact.q_id, exact.t_id))
-        return len(e & set(zip(got.q_id, got.t_id))) / len(e)
-
-    def test_trained_codebook_beats_random_on_clustered(self, spark):
-        """VERDICT r4 #4: k-means-on-sample codebook must raise recall over
-        the seeded random codebook on clustered embeddings (nprobe=1 so
-        bucket quality is what's measured)."""
-        df, per = self._clustered(spark)
-        queries = df.filter(F.col("vec_id") % per < 2)  # 2 per true cluster
-        exact = similarity.cosine_topk(queries, df, k=5).toPandas()
-        random_ivf = similarity.ivf_cosine_topk(
-            queries, df, k=5, n_clusters=8, nprobe=1
-        ).toPandas()
-        cents = similarity.train_ivf_centroids(df, n_clusters=8)
-        assert cents.shape == (8, 64)
-        np.testing.assert_allclose(np.linalg.norm(cents, axis=1), 1.0, atol=1e-9)
-        trained_ivf = similarity.ivf_cosine_topk(
-            queries, df, k=5, nprobe=1, centroids=cents
-        ).toPandas()
-        r_rand = self._recall(exact, random_ivf)
-        r_trained = self._recall(exact, trained_ivf)
-        assert r_trained >= r_rand, (r_trained, r_rand)
-        assert r_trained >= 0.8, r_trained
-
-    def test_trained_codebook_persists_with_index(self, spark, tmp_path):
-        """build_ivf_index persists the trained codebook as _codebook.json;
-        load_ivf_codebook restores it and indexed queries reproduce the
-        inline trained result exactly."""
-        df, per = self._clustered(spark, per=20)
-        cents = similarity.train_ivf_centroids(df, n_clusters=8)
-        idx = str(tmp_path / "ivf_t")
-        similarity.build_ivf_index(df, idx, centroids=cents)
-        back = similarity.load_ivf_codebook(idx)
-        np.testing.assert_array_equal(back, cents)
-        queries = df.filter(F.col("vec_id") % per == 0)
-        inline = similarity.ivf_cosine_topk(
-            queries, df, k=3, nprobe=2, centroids=cents
-        ).toPandas()
-        assigned = similarity.ivf_cosine_topk(
-            queries, df, k=3, nprobe=2,
-            assignments=spark.read.parquet(idx), centroids=back,
-        ).toPandas()
-        key = lambda p: sorted(zip(p["q_id"], p["rank"], p["t_id"]))  # noqa: E731
-        assert key(inline) == key(assigned)
-        # seeded-fallback index has no codebook sidecar
-        idx2 = str(tmp_path / "ivf_r")
-        similarity.build_ivf_index(df, idx2)
-        assert similarity.load_ivf_codebook(idx2) is None
-
-    def test_training_deterministic(self, spark):
-        df, _ = self._clustered(spark, per=20)
-        a = similarity.train_ivf_centroids(df, n_clusters=8)
-        b = similarity.train_ivf_centroids(df, n_clusters=8)
-        np.testing.assert_array_equal(a, b)
-
 
 class TestPhashNearDup:
     def test_banded_join_equals_brute_force_at_h3(self, spark):
@@ -346,149 +48,3 @@ class TestPhashNearDup:
                 ("h000", "p3", 3)} <= got
         assert not any(a == "p4" or b == "p4" for a, b, _ in got
                        if "h000" in (a, b))
-
-
-class TestIvfIndexPersistence:
-    def test_persisted_index_equals_inline(self, spark, tmp_path):
-        """build_ivf_index -> query with assignments must reproduce the
-        inline ivf_cosine_topk exactly (the build-once/query-many contract)."""
-        from gridfia_spark.operators import similarity
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        targets = emb.limit(300)
-        queries = emb.limit(20)
-        idx = str(tmp_path / "ivf")
-        similarity.build_ivf_index(targets, idx)
-        inline = similarity.ivf_cosine_topk(queries, targets).collect()
-        stored = similarity.ivf_cosine_topk(
-            queries, targets, assignments=spark.read.parquet(idx)
-        ).collect()
-        assert sorted(map(tuple, inline), key=lambda t: (t[0], t[1])) == \
-               sorted(map(tuple, stored), key=lambda t: (t[0], t[1]))
-        assert len(inline) > 0
-
-
-    def test_hot_bucket_guard(self, spark):
-        """max_bucket drops degenerate-band buckets from candidate
-        generation; items still pair through their other bands."""
-        import numpy as np
-
-        from gridfia_spark.operators import phash as ph
-
-        rng = np.random.default_rng(5)
-        rows = []
-        # 30 items share band 0 == 0 (degenerate) but have random other bands
-        for i in range(30):
-            rows.append((f"d{i:02d}", 0, *map(int, rng.integers(0, 1 << 16, 3))))
-        # one true near pair whose bands 1-3 match, band 0 degenerate too
-        rows.append(("x1", 0, 7, 8, 9))
-        rows.append(("x2", 0, 7, 8, 9))
-        bands = spark.createDataFrame(
-            rows, "image_id string, b0 long, b1 long, b2 long, b3 long"
-        )
-        capped = {
-            (r.id_a, r.id_b)
-            for r in ph.near_dup_pairs(bands, 3, max_bucket=5).collect()
-        }
-        # the x pair survives via bands 1..3 even though band 0's bucket
-        # (32 members) was dropped
-        assert ("x1", "x2") in capped
-        # uncapped equals capped here because every qualifying pair also
-        # shares a small bucket
-        full = {
-            (r.id_a, r.id_b) for r in ph.near_dup_pairs(bands, 3).collect()
-        }
-        assert capped == full
-
-
-class TestRepetitionFilter:
-    def test_short_docs_and_flagging(self, spark):
-        """The Gopher repetition signal: docs with <5 (or <2) tokens
-        produce zero grams rather than tripping Spark's descending
-        sequence(); a run-on repeated phrase is flagged, clean text is
-        not. Mirrors the queries_products.repetition_filter math."""
-        from gridfia_spark.queries_products import repetition_filter
-
-        rows = [
-            (0, "one", "short"),           # 1 token: no 2-grams, no 5-grams
-            (1, "a b c d", "short"),       # 4 tokens: 2-grams only
-            (2, "spam ham " * 30, "rep"),  # heavy repetition -> flagged
-            (3, " ".join(f"w{i}" for i in range(40)), "clean"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-        import gridfia_spark.queries_products as QP
-
-        orig = QP._t
-        QP._t = lambda s, d, name: df  # feed the fixture corpus
-        try:
-            out = {r.source: r.asDict() for r in repetition_filter(spark, "x").collect()}
-        finally:
-            QP._t = orig
-        assert out["short"]["n5_grams"] == 0 and out["short"]["n2_grams"] == 3
-        assert out["short"]["n_flagged"] == 0
-        assert out["rep"]["n_flagged"] == 1
-        assert out["rep"]["n5_dup"] > 0
-        assert out["clean"]["n_flagged"] == 0 and out["clean"]["n5_dup"] == 0
-
-
-class TestC4LineFilter:
-    def test_rules_match_python_reimplementation(self, spark):
-        """c4_line_filter vs an independent pure-Python recompute of the
-        same augmentation + rules on hand-picked doc_ids that exercise
-        every branch: lorem injection (13), brace injection (17), both
-        (221), short docs, and a clean doc."""
-        from gridfia_spark.queries_products import c4_line_filter
-        import gridfia_spark.queries_products as QP
-
-        rows = [
-            (13, " ".join(f"w{i}" for i in range(30)), "lorem"),
-            (17, " ".join(f"w{i}" for i in range(30)), "brace"),
-            (221, " ".join(f"w{i}" for i in range(30)), "both"),
-            (1, "tiny doc", "short"),
-            (2, " ".join(f"w{i}" for i in range(60)), "clean"),
-        ]
-
-        def py_flags(doc_id, text):
-            toks = text.split()
-            w = 4 + doc_id % 5
-            nl = (len(toks) + w - 1) // w
-            lines = []
-            for i in range(nl):
-                if doc_id % 13 == 0 and i == 0:
-                    s = "lorem ipsum dolor sit"
-                elif doc_id % 17 == 0 and i == 1:
-                    s = " ".join(toks[i * w : i * w + w]) + " {"
-                else:
-                    s = " ".join(toks[i * w : i * w + w])
-                if (i + doc_id) % 3 != 0:
-                    s += "."
-                lines.append(s)
-            kept = [x for x in lines if x.endswith(".") and len(x.split(" ")) >= 5]
-            bad = [x for x in lines if "lorem ipsum" in x or "{" in x]
-            return {
-                "n_lines": len(lines),
-                "n_kept": len(kept),
-                "kept_chars": sum(len(x) for x in kept),
-                "ok": not bad and len(kept) >= 3,
-            }
-
-        df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-        orig = QP._t
-        QP._t = lambda s, d, name: df
-        try:
-            out = {r.source: r.asDict() for r in c4_line_filter(spark, "x").collect()}
-        finally:
-            QP._t = orig
-        for doc_id, text, source in rows:
-            exp = py_flags(doc_id, text)
-            got = out[source]
-            assert got["n_lines"] == exp["n_lines"], source
-            assert got["n_docs_kept"] == (1 if exp["ok"] else 0), source
-            assert got["n_lines_kept"] == (exp["n_kept"] if exp["ok"] else 0), source
-            assert got["chars_kept"] == (exp["kept_chars"] if exp["ok"] else 0), source
-        # the deliberately poisoned docs are dropped; the clean one kept
-        assert out["lorem"]["n_docs_kept"] == 0
-        assert out["brace"]["n_docs_kept"] == 0
-        assert out["both"]["n_docs_kept"] == 0
-        assert out["short"]["n_docs_kept"] == 0  # < 3 kept lines
-        assert out["clean"]["n_docs_kept"] == 1
