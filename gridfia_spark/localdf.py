@@ -20,19 +20,31 @@ import pandas as pd
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.types import StructType
 
+# the driver holds every row twice (Python tuples + the pandas/Arrow copy)
+# and ships them inside the plan; past this a LocalTableScan is the wrong
+# tool. The largest caller is the tile manifest of the "bench" grid spec
+# (6 x 144 x 144 = 124,416 rows).
+MAX_ROWS = 250_000
+
 
 def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
     """LocalTableScan-backed DataFrame from a small list of row tuples.
 
     Values are taken by position, so every row must be a plain tuple or list
     with exactly one value per schema field. ``Row`` and dict rows are
-    rejected: their field order cannot be checked against the schema."""
+    rejected: their field order cannot be checked against the schema.
+    More than ``MAX_ROWS`` rows raise before any pandas or Arrow work."""
+    if not isinstance(rows, (list, tuple)):
+        rows = list(rows)
+    if len(rows) > MAX_ROWS:
+        raise ValueError(
+            f"local_df takes at most {MAX_ROWS} rows, got {len(rows)}: build "
+            "large tables with spark.createDataFrame or read them from Parquet"
+        )
     if isinstance(schema, str):
         from pyspark.sql.types import _parse_datatype_string
 
         schema = _parse_datatype_string(schema)
-    if not isinstance(rows, (list, tuple)):
-        rows = list(rows)
     n = len(schema.fields)
     for r in rows:
         if isinstance(r, Row) or not isinstance(r, (tuple, list)):

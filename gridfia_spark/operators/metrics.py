@@ -101,7 +101,7 @@ def metric_layers(
     forest_metrics.py:410-423). ``on_error='sentinel'`` keeps going on kernel
     failures, emitting NaN/-1 sentinel layers (reference convention).
 
-    Co-location is repartition(tx, ty) + sortWithinPartitions + a streaming
+    Co-location is repartition(n, tx, ty) + sortWithinPartitions + a streaming
     ``mapInPandas`` that groups inside each Arrow batch — the same single
     exchange as ``groupBy().applyInPandas`` (plan pin unchanged) but without
     FlatMapGroupsInPandas' one-Python-call-and-one-Arrow-batch-per-group
@@ -109,7 +109,16 @@ def metric_layers(
     applyInPandas 1.05 s vs identity mapInPandas 0.35 s at the mid scale).
     The sort makes groups contiguous, so the kernel pass holds at most ONE
     tile group across a batch boundary — memory stays O(tile), not
-    O(partition)."""
+    O(partition).
+
+    The exchange asks for exactly ``defaultParallelism`` partitions: one
+    Python task per core. A count-less repartition lets AQE coalesce by
+    shuffle bytes, and the encoded tiles are small next to the work they
+    carry (~1.4 MB for 4.8 Mpx of decode + kernels + per-pixel rows), so
+    AQE packed the whole pass into ONE task on one core. More tasks than
+    cores would not help either: every PySpark task pays ~0.2-0.3 s of
+    worker set-up before the UDF runs. A REPARTITION_BY_NUM exchange is
+    never coalesced, and the plan keeps its single hash exchange."""
     meta = decode.with_tile_meta(tiles).select(
         "tx", "ty", "s", "bytes", "w", "h", "fmt"
     )
@@ -119,7 +128,8 @@ def metric_layers(
     # fresh import (the same snapshot rule as multimodal._MEDIA_DECODERS)
     fns = {m.kernel: kernels.get(m.kernel) for m in specs}
     schema = "gx long, gy long, " + ", ".join(f"{m.out} {m.sql_type}" for m in specs)
-    part = meta.repartition("tx", "ty").sortWithinPartitions("tx", "ty")
+    n = tiles.sparkSession.sparkContext.defaultParallelism
+    part = meta.repartition(n, "tx", "ty").sortWithinPartitions("tx", "ty")
 
     def run(batches):
         pending: pd.DataFrame | None = None

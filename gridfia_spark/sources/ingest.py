@@ -53,11 +53,9 @@ def ingest_raster_dir(
         .filter(F.col("code") != "")
     )
     # small raster files + default open-cost packing = ~one task per file;
-    # a NARROW coalesce (no shuffle) packs many files per task — the same
-    # 10x planning fix as the Zarr chunk scan (BENCH/BASELINE.md round 4)
-    target = spark.sparkContext.defaultParallelism * 4
-    if files.rdd.getNumPartitions() > target:
-        files = files.coalesce(target)
+    # a NARROW coalesce (no shuffle) packs them into one Python task per
+    # core — the same fix as the Zarr chunk scan (read_zarr_store)
+    files = files.coalesce(spark.sparkContext.defaultParallelism)
     code_to_name = dict(SPECIES)
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -122,7 +120,7 @@ def read_geotiff_strips(spark: SparkSession, path: str) -> DataFrame:
     df = local_df(
         spark, specs, "strip int, off long, cnt long, row0 int, nrows int"
     )
-    par = min(len(specs), spark.sparkContext.defaultParallelism * 2) or 1
+    par = min(len(specs), spark.sparkContext.defaultParallelism) or 1
     df = df.repartition(par)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -730,15 +730,15 @@ def read_zarr_store(
             files = reader.load([os.path.join(base, str(s)) for s in wanted])
     files = files.select("path", "content")
     # chunk files are tiny (a compressed tile each) but the default
-    # open-cost packing schedules ~one file per task — at 10^5 chunks that
-    # is pure scheduler overhead. A NARROW coalesce (no shuffle, plan stays
-    # map-only) packs many chunks per task; 4x parallelism keeps AQE-free
-    # balance even with skewed chunk sizes.
+    # open-cost packing schedules ~one file per task. Each of those tasks
+    # is a Python task, and every Python task pays ~0.2-0.3 s of worker
+    # set-up before the UDF runs, so the task count, not the compressed
+    # bytes, is the cost. A NARROW coalesce (no shuffle, plan stays
+    # map-only) to one partition per core packs many chunks per task.
     # coalesce() never INCREASES partition count, so no need to probe the
     # current count first (the .rdd round-trip built a full RDD conversion
     # plan just to ask); a no-op coalesce costs nothing
-    target = spark.sparkContext.defaultParallelism * 4
-    files = files.coalesce(target)
+    files = files.coalesce(spark.sparkContext.defaultParallelism)
     nested = sep == "/"
     strip_c = enc_name == "default" and not nested
 
@@ -901,7 +901,7 @@ def read_shard_window(
 
     work = local_df(
         spark, items, "path string, s int, sy int, sx int"
-    ).repartition(min(len(items), spark.sparkContext.defaultParallelism * 2))
+    ).repartition(min(len(items), spark.sparkContext.defaultParallelism))
     n_inner = ks_y * ks_x
     idx_nb = _sh.index_nbytes(n_inner, index_codecs)
     if include_read_bytes:
@@ -1100,7 +1100,7 @@ def chunk_grid_df(
     in one task and sharded reads keep hitting the per-task shard cache."""
     per_layer = n_cy * n_cx
     n = len(layers) * per_layer
-    parts = max(1, min(n, spark.sparkContext.defaultParallelism * 4))
+    parts = max(1, min(n, spark.sparkContext.defaultParallelism))
     smap = F.array(*[F.lit(int(s)) for s in layers])
     # integer ``div``/``%`` on the bigint id: exact for any grid size
     # (float division plus a cast can round wrongly once ids pass 2**53)

@@ -1,0 +1,93 @@
+"""Python task counts on the cube path, and the local_df row bound.
+
+Every PySpark task pays a fixed Python worker set-up before its UDF runs,
+so the two Python stages of the cube path (Zarr chunk scan, metric kernel
+pass) ask for exactly one task per core: neither AQE's byte-based
+coalescing nor the file-split packing decides how many there are."""
+
+from __future__ import annotations
+
+import re
+
+import pytest
+
+from gridfia_spark.constants import GridSpec
+from gridfia_spark.datagen import tiles as tgen
+from gridfia_spark.operators import metrics
+from gridfia_spark.sources import zarrstore
+
+SCALE = "sf0.001"  # a 2x2-tile grid of 32x32 px, six species
+SPECS = [
+    metrics.MetricSpec("richness", "species_richness", {}, "long"),
+    metrics.MetricSpec("total_v", "total_biomass", {}, "double"),
+]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+class TestMetricKernelTasks:
+    def test_exchange_is_repartition_by_num(self, spark):
+        """The one kernel exchange names its partition count, so AQE may
+        not coalesce it."""
+        dp = spark.sparkContext.defaultParallelism
+        plan = _plan(metrics.metric_layers(tgen.ensure_tiles(spark, SCALE), SPECS))
+        ex = re.findall(r"Exchange hashpartitioning\(([^)]*)\), (\w+)", plan)
+        assert len(ex) == 1, plan
+        keys, mode = ex[0]
+        assert re.fullmatch(rf"tx#\d+, ty#\d+, {dp}", keys), keys
+        assert mode == "REPARTITION_BY_NUM"
+
+    def test_kernel_pass_is_not_coalesced(self, spark):
+        """After execution the final plan reads the shuffle as written: no
+        coalesced AQEShuffleRead sits under the kernel's MapInPandas, and
+        the kernel stage runs one task per core."""
+        sc = spark.sparkContext
+        df = metrics.metric_layers(tgen.ensure_tiles(spark, SCALE), SPECS)
+        sc.setJobGroup("kernel-tasks", "metric kernel pass")
+        try:
+            rows = df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == 64 * 64
+        final = _plan(df).split("== Initial Plan ==")[0]
+        assert "MapInPandas" in final
+        assert not re.search(r"AQEShuffleRead.*coalesced", final), final
+        st = sc.statusTracker()
+        job = st.getJobInfo(max(st.getJobIdsForGroup("kernel-tasks")))
+        kernel_stage = st.getStageInfo(max(job.stageIds))
+        assert kernel_stage.numTasks == sc.defaultParallelism
+
+
+class TestZarrScanTasks:
+    def test_chunk_scan_one_partition_per_core(self, spark, tmp_path):
+        """384 tiny chunks: the file-split packing alone makes more than
+        one partition per core; the scan coalesces them to exactly one."""
+        dp = spark.sparkContext.defaultParallelism
+        tiles = tgen.generate_tiles(spark, GridSpec(8, 8, 8, 8))
+        store = str(tmp_path / "many.zarr")
+        n_chunks = zarrstore.write_zarr_store(tiles, store)
+        assert n_chunks > dp
+        back = zarrstore.read_zarr_store(spark, store)
+        assert back.rdd.getNumPartitions() == min(dp, n_chunks)
+        assert back.count() == n_chunks
+
+
+class TestLocalDfRowBound:
+    def test_at_bound_builds(self, spark):
+        from gridfia_spark.localdf import MAX_ROWS, local_df
+
+        df = local_df(spark, [(i,) for i in range(MAX_ROWS)], "a long")
+        assert "LocalTableScan" in _plan(df)
+
+    def test_above_bound_raises_before_building(self, spark, monkeypatch):
+        from gridfia_spark import localdf
+
+        def no_pandas(*a, **k):  # the check must come before any pandas work
+            raise AssertionError("pandas frame built above the row bound")
+
+        monkeypatch.setattr(localdf.pd, "DataFrame", no_pandas)
+        rows = ((i,) for i in range(localdf.MAX_ROWS + 1))
+        with pytest.raises(ValueError, match="spark.createDataFrame"):
+            localdf.local_df(spark, rows, "a long")
