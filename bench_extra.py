@@ -105,15 +105,13 @@ def time_flagship(sf_dir: str, n: int = 5) -> dict:
 
 
 def raster_ops(scale: str = "bench") -> dict:
-    """At-scale rows for the store/raster family (diff, trend, focal) —
-    the operators the driver bench does not time. Uses the 'bench' tile
-    scale (124,416 chunks = 2.04 B px) by default so the jobs run for
-    seconds; the store is (re)created from the tile cache each invocation
-    (no reuse across runs: create time is reported too)."""
+    """At-scale store-create row — the writer the driver bench does not
+    time. Uses the 'bench' tile scale (124,416 chunks = 2.04 B px) by
+    default so the job runs for seconds; the store is (re)created from the
+    tile cache each invocation."""
     import shutil
 
     from gridfia_spark.datagen import tiles as tgen
-    from gridfia_spark.operators import focal
     from gridfia_spark.sources import zarrstore
 
     spark = _spark()
@@ -133,30 +131,6 @@ def raster_ops(scale: str = "bench") -> dict:
         "create_sec": round(create_s, 3),
         "create_px_per_sec": round(px / create_s, 0),
     }
-    spark.sparkContext.setJobDescription("diff_stores self-diff")
-    t0 = time.time()
-    zarrstore.diff_stores(spark, store, store).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    dt = time.time() - t0
-    out["diff_sec"] = round(dt, 3)
-    out["diff_px_decoded_per_sec"] = round(2 * px / dt, 0)
-    spark.sparkContext.setJobDescription("trend_stores 3-epoch self-trend")
-    t0 = time.time()
-    zarrstore.trend_stores(spark, [store, store, store]).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    dt = time.time() - t0
-    out["trend3_sec"] = round(dt, 3)
-    out["trend3_px_decoded_per_sec"] = round(3 * px / dt, 0)
-    spark.sparkContext.setJobDescription("focal_sum3x3_store")
-    t0 = time.time()
-    focal.focal_sum3x3_store(spark, store).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    dt = time.time() - t0
-    out["focal_sum_sec"] = round(dt, 3)
-    out["focal_px_per_sec"] = round(px / dt, 0)
     spark.stop()
     shutil.rmtree(store, ignore_errors=True)
     return out

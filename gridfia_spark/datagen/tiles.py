@@ -29,7 +29,7 @@ from pyspark.sql.types import (
 )
 
 from .. import codecs
-from ..constants import SPECIES, GridSpec, caption, image_id, spec_for_sf_dir
+from ..constants import SPECIES, GridSpec, caption, spec_for_sf_dir
 from . import pixels, vectors
 
 TILE_SCHEMA = StructType(
@@ -46,20 +46,26 @@ TILE_SCHEMA = StructType(
 
 
 def manifest_df(spark: SparkSession, spec: GridSpec, fmt: str = "rawz") -> DataFrame:
-    """The id manifest: one row per (species, tile). ``fmt='mixed'`` assigns a
-    lossy format to a deterministic quarter of tiles (for PSNR-gate tests)."""
-    rows = []
-    for s, (code, name) in enumerate(SPECIES):
-        for ty in range(spec.tiles_y):
-            for tx in range(spec.tiles_x):
-                f = fmt
-                if fmt == "mixed":
-                    f = "qnt8" if (tx + ty + s) % 4 == 3 else "rawz"
-                rows.append((image_id(code, tx, ty), s, tx, ty, f))
-    from ..localdf import local_df
+    """The id manifest: one row per (species, tile), in (s, ty, tx) order.
+    ``fmt='mixed'`` assigns a lossy format to a deterministic quarter of
+    tiles (for PSNR-gate tests).
 
-    return local_df(
-        spark, rows, "image_id string, s int, tx int, ty int, fmt string"
+    Built from ``spark.range`` with integer ``div``/``%`` (exact for any
+    grid), so no row list ever sits on the driver. One partition keeps the
+    (s, ty, tx) order through ``generate_tiles``' hash repartition."""
+    per_layer = spec.tiles_y * spec.tiles_x
+    s = F.expr(f"id div {per_layer}").cast("int")
+    ty = F.expr(f"(id % {per_layer}) div {spec.tiles_x}").cast("int")
+    tx = (F.col("id") % spec.tiles_x).cast("int")
+    codes = F.array(*[F.lit(code) for code, _ in SPECIES])
+    iid = F.format_string("sp%s_tx%03d_ty%03d", F.element_at(codes, s + 1), tx, ty)
+    if fmt == "mixed":
+        f = F.when((tx + ty + s) % 4 == 3, "qnt8").otherwise("rawz")
+    else:
+        f = F.lit(fmt)
+    return spark.range(0, len(SPECIES) * per_layer, 1, 1).select(
+        iid.alias("image_id"), s.alias("s"), tx.alias("tx"), ty.alias("ty"),
+        f.alias("fmt"),
     )
 
 

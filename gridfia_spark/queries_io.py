@@ -899,430 +899,6 @@ def config_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DIFF_CLIP = 20  # epoch-B tiles are epoch A clipped at this value
-
-
-def _o_store_diff(sf_dir: str) -> str:
-    spec = spec_for_sf_dir(sf_dir)
-    tw, th = spec.tile_w, spec.tile_h
-    c = _DIFF_CLIP
-    codes = ",".join(f"({i},'{cd}')" for i, (cd, _) in enumerate(SPECIES))
-    return f"""WITH {osql.val_cte(spec)},
-allpx AS (
-  SELECT s, gx, gy, v FROM val
-  UNION ALL
-  SELECT 0 AS s, gx, gy, SUM(v) AS v FROM val GROUP BY gx, gy
-),
-spn(s, code) AS (SELECT * FROM (VALUES {codes}) v(s, code))
-SELECT printf('sp%s_tx%03d_ty%03d', n.code,
-              CAST(p.gx // {tw} AS INT), CAST(p.gy // {th} AS INT)) AS image_id,
-       p.s::INT AS s,
-       CAST(SUM(CASE WHEN p.v > {c} THEN 1 ELSE 0 END) AS BIGINT) AS n_diff,
-       CAST(MAX(CASE WHEN p.v > {c} THEN p.v - {c} ELSE 0 END) AS DOUBLE) AS max_abs,
-       CAST(SUM(p.v) AS DOUBLE) AS sum_a,
-       CAST(SUM(LEAST(p.v, {c})) AS DOUBLE) AS sum_b,
-       CAST(SUM(CASE WHEN p.v > {c} THEN p.v - {c} ELSE 0 END) AS DOUBLE) AS delta_sum
-FROM allpx p JOIN spn n ON n.s = p.s
-GROUP BY 1, 2"""
-
-
-@q("store_diff", _o_store_diff)
-def store_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal change detection between two store epochs with ZERO
-    shuffle (zarrstore.diff_stores): epoch A is the canonical raster in
-    the v2/zlib dialect, epoch B the same raster value-clipped at 20
-    (_DIFF_CLIP) written in the v3/gzip dialect — the diff must see
-    exactly the clipped mass, proving both the file-level chunk-pair
-    join and the cross-dialect metadata normalization. The driver
-    enumerates the chunk grid from metadata alone; every task opens its
-    chunk pair directly — no listing, no bytes on the network."""
-    import shutil as _sh
-
-    from collections.abc import Iterator as _It
-
-    import numpy as _np
-    import pandas as _pd
-
-    from .datagen.tiles import TILE_SCHEMA
-    from .sources import zarrstore
-
-    spec = spec_for_sf_dir(sf_dir)
-    tiles = tgen.ensure_tiles(spark, sf_dir)
-    store_a = _cache(sf_dir, "diffA") + ".zarr"
-    store_b = _cache(sf_dir, "diffB") + ".zarr"
-    _sh.rmtree(store_a, ignore_errors=True)
-    _sh.rmtree(store_b, ignore_errors=True)
-    zarrstore.write_zarr_store(tiles, store_a, zarr_format=2)
-    clip = float(_DIFF_CLIP)
-
-    def clipper(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                a = codecs.decode(r.bytes, r.w, r.h, r.fmt)
-                b = _np.minimum(a, _np.float32(clip))
-                rows.append(
-                    (r.image_id, codecs.encode(b, "rawz"), r.w, r.h,
-                     "rawz", r.caption, r.phash)
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-                ],
-            )
-
-    zarrstore.write_zarr_store(
-        tiles.mapInPandas(clipper, TILE_SCHEMA), store_b, zarr_format=3
-    )
-    # no in-query count(): the driver's rows_match already counts, and the
-    # extra action doubled the most expensive job here (VERDICT r5 #4)
-    return zarrstore.diff_stores(spark, store_a, store_b)
-
-
-_TREND_CAPS = (15, 25, 35)  # epoch e = epoch-0 raster clipped at caps[e]
-
-
-def _o_epoch_trend(sf_dir: str) -> str:
-    spec = spec_for_sf_dir(sf_dir)
-    tw, th = spec.tile_w, spec.tile_h
-    c0, c1, c2 = _TREND_CAPS
-    codes = ",".join(f"({i},'{cd}')" for i, (cd, _) in enumerate(SPECIES))
-    # n=3 epochs: st=3, stt=5, den = 3*5 - 3*3 = 6;
-    # num = 3*(0*v0 + 1*v1 + 2*v2) - 3*(v0 + v1 + v2)
-    return f"""WITH {osql.val_cte(spec)},
-allpx AS (
-  SELECT s, gx, gy, v FROM val
-  UNION ALL
-  SELECT 0 AS s, gx, gy, SUM(v) AS v FROM val GROUP BY gx, gy
-),
-pnum AS (
-  SELECT s, gx, gy,
-         3*(LEAST(v, {c1}) + 2*LEAST(v, {c2}))
-           - 3*(LEAST(v, {c0}) + LEAST(v, {c1}) + LEAST(v, {c2})) AS num
-  FROM allpx
-),
-spn(s, code) AS (SELECT * FROM (VALUES {codes}) v(s, code))
-SELECT printf('sp%s_tx%03d_ty%03d', n.code,
-              CAST(p.gx // {tw} AS INT), CAST(p.gy // {th} AS INT)) AS image_id,
-       p.s::INT AS s,
-       CAST(3 AS INT) AS n_epochs,
-       CAST(6 AS BIGINT) AS den,
-       CAST(SUM(p.num) AS BIGINT) AS sum_num,
-       CAST(MIN(p.num) AS BIGINT) AS min_num,
-       CAST(MAX(p.num) AS BIGINT) AS max_num,
-       CAST(SUM(CASE WHEN p.num > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_rising
-FROM pnum p JOIN spn n ON n.s = p.s
-GROUP BY 1, 2"""
-
-
-@q("epoch_trend", _o_epoch_trend)
-def epoch_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-pixel temporal trend across THREE store epochs with zero
-    shuffle (zarrstore.trend_stores): epochs are the canonical raster
-    clipped at rising caps (15/25/35) — pixels above 35 rise every epoch,
-    pixels under 15 are flat — with epoch 2 written in the v3 dialect to
-    exercise mixed-dialect time series. The OLS slope numerator is exact
-    int64 (den is a constant of n), so the oracle reproduces every
-    per-tile aggregate bit-for-bit."""
-    import shutil as _sh
-
-    from collections.abc import Iterator as _It
-
-    import numpy as _np
-    import pandas as _pd
-
-    from .datagen.tiles import TILE_SCHEMA
-    from .sources import zarrstore
-
-    spec = spec_for_sf_dir(sf_dir)
-    tiles = tgen.ensure_tiles(spark, sf_dir)
-    paths = []
-    for e, cap in enumerate(_TREND_CAPS):
-        store = _cache(sf_dir, f"trend{e}") + ".zarr"
-        _sh.rmtree(store, ignore_errors=True)
-
-        def clipper(batches: _It[_pd.DataFrame], cap=float(cap)):
-            for pdf in batches:
-                rows = []
-                for r in pdf.itertuples(index=False):
-                    a = codecs.decode(r.bytes, r.w, r.h, r.fmt)
-                    rows.append(
-                        (r.image_id,
-                         codecs.encode(_np.minimum(a, _np.float32(cap)),
-                                       "rawz"),
-                         r.w, r.h, "rawz", r.caption, r.phash)
-                    )
-                yield _pd.DataFrame(
-                    rows,
-                    columns=["image_id", "bytes", "w", "h", "fmt",
-                             "caption", "phash"],
-                )
-
-        zarrstore.write_zarr_store(
-            tiles.mapInPandas(clipper, TILE_SCHEMA), store,
-            zarr_format=3 if e == 2 else 2,
-        )
-        paths.append(store)
-    # no in-query count() — same rationale as store_diff (VERDICT r5 #4)
-    return zarrstore.trend_stores(spark, paths)
-
-
-_COMPOSE_CLIP = 12  # the epoch-1 patch is the raster clipped at this
-
-
-def _o_compose(sf_dir: str) -> str:
-    spec = spec_for_sf_dir(sf_dir)
-    tw, th = spec.tile_w, spec.tile_h
-    c = _COMPOSE_CLIP
-    codes = ",".join(f"({i},'{cd}')" for i, (cd, _) in enumerate(SPECIES))
-    return f"""WITH {osql.val_cte(spec)},
-allpx AS (
-  SELECT s, gx, gy, v FROM val
-  UNION ALL
-  SELECT 0 AS s, gx, gy, SUM(v) AS v FROM val GROUP BY gx, gy
-),
-eff AS (
-  SELECT s, gx, gy,
-         CASE WHEN ((gx // {tw}) + (gy // {th})) % 2 = 0
-              THEN LEAST(v, {c}) ELSE v END AS v
-  FROM allpx
-),
-spn(s, code) AS (SELECT * FROM (VALUES {codes}) v(s, code))
-SELECT printf('sp%s_tx%03d_ty%03d', n.code,
-              CAST(p.gx // {tw} AS INT), CAST(p.gy // {th} AS INT)) AS image_id,
-       p.s::INT AS s,
-       CAST(MIN(p.v) AS DOUBLE) AS vmin,
-       CAST(MAX(p.v) AS DOUBLE) AS vmax,
-       CAST(SUM(p.v) AS DOUBLE) AS vsum,
-       CAST(SUM(CASE WHEN p.v > 0 THEN 1 ELSE 0 END) AS BIGINT) AS nonzero,
-       COUNT(*)::BIGINT AS npx
-FROM eff p JOIN spn n ON n.s = p.s
-GROUP BY 1, 2"""
-
-
-@q("compose_epochs", _o_compose)
-def compose_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest-wins epoch compositing (compositing.compose_latest — the
-    raster MERGE INTO): epoch 0 is the full canonical table, epoch 1 a
-    PATCH covering only even-parity tiles with values clipped at 12; the
-    composite must show clipped pixels exactly on the patched tiles and
-    untouched originals everywhere else. The plan's load-bearing
-    property: partial max_by collapses duplicates map-side, so the one
-    shuffle carries ~one tile per image_id however many epochs pile up
-    (a window formulation would shuffle every epoch's bytes)."""
-    from collections.abc import Iterator as _It
-
-    import numpy as _np
-    import pandas as _pd
-
-    from .datagen.tiles import TILE_SCHEMA
-    from .operators import compositing
-
-    spec = spec_for_sf_dir(sf_dir)
-    tiles = tgen.ensure_tiles(spark, sf_dir)
-    meta = decode.with_tile_meta(tiles)
-    cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
-    clip = float(_COMPOSE_CLIP)
-
-    def clipper(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                a = codecs.decode(r.bytes, r.w, r.h, r.fmt)
-                rows.append(
-                    (r.image_id,
-                     codecs.encode(_np.minimum(a, _np.float32(clip)), "rawz"),
-                     r.w, r.h, "rawz", r.caption, r.phash)
-                )
-            yield _pd.DataFrame(rows, columns=cols)
-
-    patch = (
-        meta.filter((F.col("tx") + F.col("ty")) % 2 == 0)
-        .select(*cols)
-        .mapInPandas(clipper, TILE_SCHEMA)
-    )
-    # no in-query count() — same rationale as store_diff (VERDICT r5 #4)
-    out = compositing.compose_latest([tiles, patch])
-    return decode.decode_stats(out).select(
-        "image_id", "s", "vmin", "vmax", "vsum", "nonzero", "npx"
-    )
-
-
-_MATCH_CLIP = 25  # the drifted epoch = the raster clipped at this
-
-
-def _o_hist_match(sf_dir: str) -> str:
-    spec = spec_for_sf_dir(sf_dir)
-    tw, th = spec.tile_w, spec.tile_h
-    c = _MATCH_CLIP
-    codes = ",".join(f"({i},'{cd}')" for i, (cd, _) in enumerate(SPECIES))
-    return f"""WITH {osql.val_cte(spec)},
-allpx AS (
-  SELECT s, gx, gy, v FROM val
-  UNION ALL
-  SELECT 0 AS s, gx, gy, SUM(v) AS v FROM val GROUP BY gx, gy
-),
-hb AS (SELECT s, LEAST(v, {c}) AS v, COUNT(*)::BIGINT AS cnt
-       FROM allpx GROUP BY 1, 2),
-ha AS (SELECT s, v, COUNT(*)::BIGINT AS cnt FROM allpx GROUP BY 1, 2),
-cb AS (SELECT s, v,
-              CAST(SUM(cnt) OVER (PARTITION BY s ORDER BY v) AS BIGINT) AS cum,
-              CAST(SUM(cnt) OVER (PARTITION BY s) AS BIGINT) AS n
-       FROM hb),
-ca AS (SELECT s, v,
-              CAST(SUM(cnt) OVER (PARTITION BY s ORDER BY v) AS BIGINT) AS cum,
-              CAST(SUM(cnt) OVER (PARTITION BY s) AS BIGINT) AS n
-       FROM ha),
-mp AS (
-  SELECT b.s AS s, b.v AS v, MIN(a.v) AS a
-  FROM cb b JOIN ca a ON a.s = b.s AND a.cum * b.n >= b.cum * a.n
-  GROUP BY 1, 2
-),
-mpx AS (
-  SELECT p.s AS s, p.gx AS gx, p.gy AS gy, m.a AS v
-  FROM allpx p JOIN mp m ON m.s = p.s AND m.v = LEAST(p.v, {c})
-),
-spn(s, code) AS (SELECT * FROM (VALUES {codes}) v(s, code))
-SELECT printf('sp%s_tx%03d_ty%03d', n.code,
-              CAST(p.gx // {tw} AS INT), CAST(p.gy // {th} AS INT)) AS image_id,
-       p.s::INT AS s,
-       CAST(MIN(p.v) AS DOUBLE) AS vmin,
-       CAST(MAX(p.v) AS DOUBLE) AS vmax,
-       CAST(SUM(p.v) AS DOUBLE) AS vsum,
-       CAST(SUM(CASE WHEN p.v > 0 THEN 1 ELSE 0 END) AS BIGINT) AS nonzero,
-       COUNT(*)::BIGINT AS npx
-FROM mpx p JOIN spn n ON n.s = p.s
-GROUP BY 1, 2"""
-
-
-@q("histogram_match", _o_hist_match)
-def histogram_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact radiometric normalization (normalize.histogram_match): a
-    drifted epoch (the raster clipped at 25 — a saturated sensor) is
-    remapped through the monotone integer quantile map onto the
-    reference epoch's per-layer distribution; the map, built from exact
-    value histograms with cross-multiplied rational compares, is
-    regenerated bit-for-bit by the SQL oracle. Two tiny histogram jobs
-    + one map-only transform; tile bytes never shuffle."""
-    from collections.abc import Iterator as _It
-
-    import numpy as _np
-    import pandas as _pd
-
-    from .datagen.tiles import TILE_SCHEMA
-    from .operators import normalize
-
-    tiles = tgen.ensure_tiles(spark, sf_dir)
-    clip = float(_MATCH_CLIP)
-
-    def clipper(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                a = codecs.decode(r.bytes, r.w, r.h, r.fmt)
-                rows.append(
-                    (r.image_id,
-                     codecs.encode(_np.minimum(a, _np.float32(clip)), "rawz"),
-                     r.w, r.h, "rawz", r.caption, r.phash)
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "caption",
-                         "phash"],
-            )
-
-    drifted = tiles.mapInPandas(clipper, TILE_SCHEMA)
-    out = normalize.histogram_match(drifted, tiles)
-    return decode.decode_stats(out).select(
-        "image_id", "s", "vmin", "vmax", "vsum", "nonzero", "npx"
-    )
-
-
-def _o_point_ts(sf_dir: str) -> str:
-    from .datagen import vectors
-
-    spec = spec_for_sf_dir(sf_dir)
-    sf = sf_dir.rstrip("/").rsplit("/", 1)[-1][2:]
-    n = vectors.N_POINTS.get(sf, 200)
-    c0, c1, c2 = _TREND_CAPS
-    return f"""WITH {osql.val_cte(spec)},
-allpx AS (
-  SELECT s, gx, gy, v FROM val
-  UNION ALL
-  SELECT 0 AS s, gx, gy, SUM(v) AS v FROM val GROUP BY gx, gy
-),
-{osql.points_cte(spec, n)},
-ppx AS (
-  SELECT point_id,
-         CAST(FLOOR((x - {osql.X0_SQL}) / 30.0) AS BIGINT) AS gx,
-         CAST(FLOOR(({osql.Y0_SQL} - y) / 30.0) AS BIGINT) AS gy
-  FROM points
-),
-e(epoch, cap) AS (SELECT * FROM (VALUES (0,{c0}),(1,{c1}),(2,{c2})) v(epoch, cap))
-SELECT pp.point_id AS point_id, a.s::INT AS s, e.epoch::INT AS epoch,
-       CAST(LEAST(a.v, e.cap) AS DOUBLE) AS v
-FROM ppx pp
-JOIN allpx a ON a.gx = pp.gx AND a.gy = pp.gy
-JOIN e ON TRUE"""
-
-
-@q("point_timeseries", _o_point_ts)
-def point_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monitoring-site drill-through (zarrstore.extract_timeseries): the
-    per-point value time series across THREE store epochs (the same
-    rising-cap epochs as epoch_trend, epoch 2 in the v3 dialect). The
-    plan inverts the scan: ~16-byte point rows shuffle once to their
-    chunk key, each task ghost-reads its chunk across every epoch —
-    raster bytes never move, cost scales with |points| x N, not the
-    cube."""
-    import os as _os
-    import shutil as _sh
-
-    from collections.abc import Iterator as _It
-
-    import numpy as _np
-    import pandas as _pd
-
-    from .datagen.tiles import TILE_SCHEMA
-    from .sources import zarrstore
-
-    tiles = tgen.ensure_tiles(spark, sf_dir)
-    paths = []
-    for e, cap in enumerate(_TREND_CAPS):
-        store = _cache(sf_dir, f"ptse{e}") + ".zarr"
-        marker = _os.path.join(store, "_DONE")
-        if not _os.path.exists(marker):
-            _sh.rmtree(store, ignore_errors=True)
-
-            def clipper(batches: _It[_pd.DataFrame], cap=float(cap)):
-                for pdf in batches:
-                    rows = []
-                    for r in pdf.itertuples(index=False):
-                        a = codecs.decode(r.bytes, r.w, r.h, r.fmt)
-                        rows.append(
-                            (r.image_id,
-                             codecs.encode(
-                                 _np.minimum(a, _np.float32(cap)), "rawz"),
-                             r.w, r.h, "rawz", r.caption, r.phash)
-                        )
-                    yield _pd.DataFrame(
-                        rows,
-                        columns=["image_id", "bytes", "w", "h", "fmt",
-                                 "caption", "phash"],
-                    )
-
-            zarrstore.write_zarr_store(
-                tiles.mapInPandas(clipper, TILE_SCHEMA), store,
-                zarr_format=3 if e == 2 else 2,
-            )
-            open(marker, "w").close()
-        paths.append(store)
-    pts = tgen.points_df(spark, sf_dir)
-    out = zarrstore.extract_timeseries(spark, paths, pts)
-    return out
-
-
 # product/statistics queries (render, threshold kernels, bootstrap CI) —
 # imported last so their @q registrations land in the shared registry
 from . import queries_products  # noqa: E402,F401

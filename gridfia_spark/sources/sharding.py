@@ -167,18 +167,6 @@ def _encode_inner(buf: bytes, codec: str | None, level: int) -> bytes:
     return buf
 
 
-def _decode_inner(blob: bytes, codec: str | None) -> bytes:
-    if codec == "gzip":
-        return _gzip.decompress(blob)
-    if codec == "zlib":
-        return zlib.decompress(blob)
-    if codec == "blosc":
-        from .. import blosc as _blosc
-
-        return _blosc.decode_chunk(blob)
-    return blob
-
-
 def build_shard(
     chunks: dict[tuple[int, int], bytes],
     ks_y: int,
@@ -214,13 +202,15 @@ def read_shard(
 ) -> dict[tuple[int, int], bytes]:
     """Parse one shard object back to ``{(cy, cx): raw chunk bytes}`` —
     the exact inverse of ``build_shard``."""
+    from .zarrstore import _decode_chunk_bytes
+
     idx = parse_index(blob, ks_y * ks_x, index_codecs)
     out = {}
     for i, (off, size) in enumerate(idx):
         if off == MAX_U64:
             continue
         cy, cx = divmod(i, ks_x)
-        out[(cy, cx)] = _decode_inner(blob[off : off + size], codec)
+        out[(cy, cx)] = _decode_chunk_bytes(blob[off : off + size], codec)
     return out
 
 

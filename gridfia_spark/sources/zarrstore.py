@@ -793,8 +793,6 @@ def read_zarr_store(
         return files.mapInPandas(rds, TILE_SCHEMA)
 
     def rd(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .. import blosc as _blosc
-
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
@@ -806,13 +804,7 @@ def read_zarr_store(
                     if strip_c:
                         parts = parts[1:]
                     s, cy, cx = (int(x) for x in parts)
-                raw = bytes(r.content)
-                if compressor == "zlib":
-                    raw = zlib.decompress(raw)
-                elif compressor == "gzip":
-                    raw = _gzip.decompress(raw)
-                elif compressor == "blosc":
-                    raw = _blosc.decode_chunk(raw)
+                raw = _decode_chunk_bytes(bytes(r.content), compressor)
                 arr = np.frombuffer(raw, dtype="<f4").reshape(th, tw)
                 code, nm = codes[s]
                 rows.append(
@@ -936,7 +928,7 @@ def read_shard_window(
                             if off == _sh.MAX_U64:
                                 continue
                             fh.seek(off)
-                            raw = _sh._decode_inner(fh.read(nb), compressor)
+                            raw = _decode_chunk_bytes(fh.read(nb), compressor)
                             arr = np.frombuffer(raw, dtype="<f4").reshape(th, tw)
                             row = (
                                 image_id(code, tx, ty),
@@ -961,28 +953,16 @@ def read_shard_window(
     return work.mapInPandas(rdw, schema)
 
 
-def _chunk_file(adir: str, key_enc: tuple[str, str],
-                s: int, cy: int, cx: int) -> str:
-    """On-disk path of chunk (s, cy, cx) under the array dir for any of
-    the supported chunk-key encodings."""
-    enc_name, sep = key_enc
-    if sep == ".":
-        pre = "c." if enc_name == "default" else ""
-        return os.path.join(adir, f"{pre}{s}.{cy}.{cx}")
-    parts = [str(s), str(cy), str(cx)]
-    if enc_name == "default":
-        parts.insert(0, "c")
-    return os.path.join(adir, *parts)
-
-
 def _decode_chunk_bytes(raw: bytes, compressor: str | None) -> bytes:
-    from .. import blosc as _blosc
-
+    """Decompress one stored chunk (flat file or shard inner chunk) to its
+    raw C-order bytes; ``None`` means an uncompressed store."""
     if compressor == "zlib":
         return zlib.decompress(raw)
     if compressor == "gzip":
         return _gzip.decompress(raw)
     if compressor == "blosc":
+        from .. import blosc as _blosc
+
         return _blosc.decode_chunk(raw)
     return raw
 
@@ -997,391 +977,6 @@ def _affine_order(t: list | None) -> list | None:
     if t[2] == 0 and t[1] != 0:  # GDAL order
         return [t[1], 0.0, t[0], 0.0, t[5], t[3]]
     return list(t)
-
-
-def _aligned_meta(
-    op: str, path: str, array: str | None, ref: ZarrMeta | None,
-    allow_sharded: bool = False,
-) -> tuple[ZarrMeta, str]:
-    """Load a store's meta for a multi-store op and validate it against a
-    reference meta: shape, INNER chunk grid, and georeferencing
-    (Affine-normalized, ``np.allclose``) must agree. With
-    ``allow_sharded`` the stores may pack chunks into shard objects —
-    ``zarr_meta`` normalizes ``chunks`` to the inner chunk shape, so a
-    flat epoch and a sharded epoch stay comparable chunk-for-chunk."""
-    m = zarr_meta(path, array)
-    if array is None:
-        array = find_array(path)
-    if m.shard is not None and not allow_sharded:
-        raise ValueError(
-            f"{op} supports flat chunk layouts; scan sharded stores "
-            "with read_zarr_store and join the tile tables instead"
-        )
-    if ref is not None:
-        if list(m.shape) != list(ref.shape):
-            raise ValueError(
-                f"{op}: shape mismatch {ref.shape} vs {m.shape}"
-            )
-        if list(m.chunks) != list(ref.chunks):
-            raise ValueError(
-                f"{op}: chunk-grid mismatch {ref.chunks} vs {m.chunks}"
-            )
-        ta = _affine_order(ref.attrs.get("transform"))
-        tb = _affine_order(m.attrs.get("transform"))
-        if ta is not None and tb is not None and not np.allclose(
-            ta, tb, rtol=1e-5
-        ):
-            raise ValueError(
-                f"{op}: georeferencing mismatch ({ta} vs {tb})"
-            )
-    return m, array
-
-
-class _ChunkReader:
-    """Uniform per-chunk random access over a FLAT or SHARDED store for
-    the store-zip operators (diff / trend). Flat: one file open per
-    chunk. Sharded: the shard object is opened once, its crc32c-guarded
-    index parsed, and the decoded inner chunks cached — iterating the
-    work list in (s, cy, cx) order means consecutive chunks usually hit
-    the cached shard, so the decode amplification stays ~1x. Instances
-    are closure-captured with an empty cache; each task mutates only its
-    own copy."""
-
-    def __init__(self, path: str, array: str, m: ZarrMeta):
-        self.adir = os.path.join(path, array)
-        self.enc = m.key_enc
-        self.comp = m.compressor
-        self.shard = m.shard
-        if m.shard is not None:
-            _, th, tw = (int(c) for c in m.chunks)
-            self.ks_y, self.ks_x = m.shard[1] // th, m.shard[2] // tw
-            self.index_codecs = m.index_codecs
-        self._cache: dict = {}
-
-    def load(self, s: int, cy: int, cx: int,
-             th: int, tw: int) -> np.ndarray | None:
-        if self.shard is None:
-            p = _chunk_file(self.adir, self.enc, s, cy, cx)
-            if not os.path.exists(p):
-                return None
-            with open(p, "rb") as fh:
-                raw = _decode_chunk_bytes(fh.read(), self.comp)
-            return np.frombuffer(raw, dtype="<f4").reshape(th, tw)
-        from . import sharding as _sh
-
-        key = (s, cy // self.ks_y, cx // self.ks_x)
-        if key not in self._cache:
-            if len(self._cache) >= 8:
-                self._cache.clear()
-            p = _chunk_file(self.adir, self.enc, *key)
-            if not os.path.exists(p):
-                self._cache[key] = {}
-            else:
-                with open(p, "rb") as fh:
-                    self._cache[key] = _sh.read_shard(
-                        fh.read(), self.ks_y, self.ks_x,
-                        self.comp, self.index_codecs,
-                    )
-        raw = self._cache[key].get((cy % self.ks_y, cx % self.ks_x))
-        if raw is None:
-            return None
-        return np.frombuffer(raw, dtype="<f4").reshape(th, tw)
-
-
-def chunk_grid_df(
-    spark: SparkSession, layers: list[int], n_cy: int, n_cx: int
-) -> DataFrame:
-    """Distributed (s, cy, cx) chunk-grid work list via ``spark.range`` +
-    column arithmetic — nothing is materialized on the driver (a Python
-    list of every chunk tuple is ~25 M objects / GBs of driver memory at
-    100 TB with (1,1000,1000) chunks). ``spark.range(n, numPartitions=p)``
-    hands each task a CONTIGUOUS id slice, exactly like the old
-    order-preserving ``parallelize`` slicing, so consecutive chunks stay
-    in one task and sharded reads keep hitting the per-task shard cache."""
-    per_layer = n_cy * n_cx
-    n = len(layers) * per_layer
-    parts = max(1, min(n, spark.sparkContext.defaultParallelism))
-    smap = F.array(*[F.lit(int(s)) for s in layers])
-    # integer ``div``/``%`` on the bigint id: exact for any grid size
-    # (float division plus a cast can round wrongly once ids pass 2**53)
-    return spark.range(0, n, 1, parts).select(
-        F.element_at(smap, F.expr(f"id div {per_layer}").cast("int") + 1).alias("s"),
-        F.expr(f"(id % {per_layer}) div {n_cx}").cast("int").alias("cy"),
-        (F.col("id") % n_cx).cast("int").alias("cx"),
-    )
-
-
-DIFF_SCHEMA = (
-    "image_id string, s int, n_diff bigint, max_abs double, "
-    "sum_a double, sum_b double, delta_sum double"
-)
-
-
-def diff_stores(
-    spark: SparkSession,
-    path_a: str,
-    path_b: str,
-    array_a: str | None = None,
-    array_b: str | None = None,
-    species: list[int] | None = None,
-) -> DataFrame:
-    """Chunk-aligned comparison of two stores with ZERO shuffle — the
-    temporal change-detection / regression-check primitive (two survey
-    epochs, a re-run pipeline vs its last output). The reference can only
-    do this by loading both cubes into memory; the engine joins at the
-    FILE level instead: the driver enumerates the chunk grid from
-    metadata alone (no listing), every task opens its chunk pair directly
-    and emits one diff-stats row — the plan is a single map stage, no
-    bytes ever cross the network. The two stores may use DIFFERENT
-    dialects (v2 zlib vs v3 gzip/blosc — metadata normalization makes
-    them comparable), but must agree on shape, chunk grid, and
-    georeferencing (``np.allclose``, same contract as ``append_layer``).
-    A chunk absent from one side diffs against the Zarr fill value
-    (zeros) — spec semantics, not an error; a chunk absent from BOTH is
-    skipped (identical by definition). Either epoch may also use the
-    ``sharding_indexed`` packed layout (or both, or mixed flat/sharded):
-    alignment is on the INNER chunk grid, and tasks read packed chunks
-    through the shard index (one object open per shard, cached)."""
-    ma, array_a = _aligned_meta(
-        "diff_stores", path_a, array_a, None, allow_sharded=True
-    )
-    mb, array_b = _aligned_meta(
-        "diff_stores", path_b, array_b, ma, allow_sharded=True
-    )
-    n_layers, gh, gw = (int(x) for x in ma.shape)
-    _, th, tw = (int(c) for c in ma.chunks)
-    n_cy, n_cx = -(-gh // th), -(-gw // tw)
-    stored_codes = ma.attrs.get("species_codes") or [c for c, _ in SPECIES]
-    layers = (
-        sorted({int(s) for s in species}) if species is not None
-        else list(range(n_layers))
-    )
-    reader_a = _ChunkReader(path_a, array_a, ma)
-    reader_b = _ChunkReader(path_b, array_b, mb)
-    # chunk grid straight off spark.range — no driver-side work list; the
-    # contiguous id slices keep the per-task shard cache hitting
-    work = chunk_grid_df(spark, layers, n_cy, n_cx)
-    codes = {i: c for i, c in enumerate(stored_codes)}
-
-    def dd(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                # Zarr stores edge chunks PADDED to the full chunk shape
-                # (same contract as the read_zarr_store reshape)
-                a = reader_a.load(int(r.s), int(r.cy), int(r.cx), th, tw)
-                b = reader_b.load(int(r.s), int(r.cy), int(r.cx), th, tw)
-                if a is None and b is None:
-                    continue
-                if a is None:
-                    a = np.zeros_like(b)
-                if b is None:
-                    b = np.zeros_like(a)
-                d = a.astype(np.float64) - b.astype(np.float64)
-                rows.append(
-                    (
-                        image_id(codes[int(r.s)], int(r.cx), int(r.cy)),
-                        int(r.s),
-                        int((d != 0).sum()),
-                        float(np.abs(d).max(initial=0.0)),
-                        float(a.sum(dtype=np.float64)),
-                        float(b.sum(dtype=np.float64)),
-                        float(d.sum()),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "s", "n_diff", "max_abs",
-                        "sum_a", "sum_b", "delta_sum",
-                    ],
-                )
-
-    return work.mapInPandas(dd, DIFF_SCHEMA)
-
-
-TREND_SCHEMA = (
-    "image_id string, s int, n_epochs int, den bigint, "
-    "sum_num bigint, min_num bigint, max_num bigint, n_rising bigint"
-)
-
-
-def trend_stores(
-    spark: SparkSession,
-    paths: list[str],
-    arrays: list[str] | None = None,
-    species: list[int] | None = None,
-) -> DataFrame:
-    """Per-pixel temporal TREND across N aligned store epochs, zero
-    shuffle — the time-series extension of ``diff_stores``: the driver
-    enumerates the shared chunk grid once, and each task opens its N
-    chunk files (one per epoch, ranged GETs on an object store), stacks
-    them, and reduces the per-pixel ordinary-least-squares slope
-    numerator in EXACT int64:
-
-        num(px) = n * sum(t * v_t) - sum(t) * sum(v_t)
-        slope(px) = num / den,   den = n * sum(t^2) - sum(t)^2
-
-    ``den`` is a constant of n alone, so per-tile aggregates of ``num``
-    (sum / min / max, plus the count of strictly-rising pixels) carry
-    the full trend information without a float in sight — the DuckDB
-    oracle reproduces every value bit-for-bit, and mean slope is
-    ``sum_num / (npx * den)`` on either side. Epochs may mix dialects
-    AND layouts (flat or ``sharding_indexed`` — alignment is on the
-    inner chunk grid);
-    alignment is validated pairwise (same contract as ``diff_stores``).
-    Absent chunks read as the fill value (zeros) for that epoch."""
-    if len(paths) < 2:
-        raise ValueError("trend_stores needs at least 2 epochs")
-    arrays = list(arrays) if arrays is not None else [None] * len(paths)
-    m0, a0 = _aligned_meta(
-        "trend_stores", paths[0], arrays[0], None, allow_sharded=True
-    )
-    metas = [(m0, a0)]
-    for p, a in zip(paths[1:], arrays[1:]):
-        metas.append(
-            _aligned_meta("trend_stores", p, a, m0, allow_sharded=True)
-        )
-    n_layers, gh, gw = (int(x) for x in m0.shape)
-    _, th, tw = (int(c) for c in m0.chunks)
-    n_cy, n_cx = -(-gh // th), -(-gw // tw)
-    n = len(paths)
-    t = np.arange(n, dtype=np.int64)
-    st, stt = int(t.sum()), int((t * t).sum())
-    den = n * stt - st * st
-    stored_codes = m0.attrs.get("species_codes") or [c for c, _ in SPECIES]
-    layers = (
-        sorted({int(s) for s in species}) if species is not None
-        else list(range(n_layers))
-    )
-    readers = [
-        _ChunkReader(p, a, m) for p, (m, a) in zip(paths, metas)
-    ]
-    codes = {i: c for i, c in enumerate(stored_codes)}
-    # chunk grid straight off spark.range — no driver-side work list; the
-    # contiguous id slices keep the per-task shard cache hitting
-    work = chunk_grid_df(spark, layers, n_cy, n_cx)
-
-    def tr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                s, cy, cx = int(r.s), int(r.cy), int(r.cx)
-                stack = np.zeros((n, th, tw), dtype=np.int64)
-                for e in range(n):
-                    arr = readers[e].load(s, cy, cx, th, tw)
-                    if arr is not None:
-                        stack[e] = arr.astype(np.int64)
-                sv = stack.sum(axis=0)
-                stv = (stack * t[:, None, None]).sum(axis=0)
-                num = n * stv - st * sv
-                rows.append(
-                    (
-                        image_id(codes[s], cx, cy),
-                        s,
-                        n,
-                        den,
-                        int(num.sum()),
-                        int(num.min()),
-                        int(num.max()),
-                        int((num > 0).sum()),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "s", "n_epochs", "den",
-                        "sum_num", "min_num", "max_num", "n_rising",
-                    ],
-                )
-
-    return work.mapInPandas(tr, TREND_SCHEMA)
-
-
-TS_SCHEMA = "point_id long, s int, epoch int, v double"
-
-
-def extract_timeseries(
-    spark: SparkSession,
-    paths: list[str],
-    points: DataFrame,
-    species: list[int] | None = None,
-) -> DataFrame:
-    """Per-point value TIME SERIES across N aligned store epochs — the
-    monitoring-site drill-through (plot networks, calibration targets,
-    eddy-flux towers): for each point and layer, the pixel value at
-    every epoch, long-format ``(point_id, s, epoch, v)``. The plan
-    inverts the access pattern of a full scan: points map to their
-    chunk key via the store affine (column expressions), ONE tiny
-    shuffle groups the ~16-byte point rows by chunk, and each task
-    ghost-reads its chunk across all epochs through the cached shard
-    index — raster bytes never move, and the cost scales with
-    |points| x N, not with the cube. Epochs may mix dialects and
-    layouts (same alignment contract as ``trend_stores``)."""
-    if not paths:
-        raise ValueError("extract_timeseries needs at least 1 epoch")
-    m0, a0 = _aligned_meta(
-        "extract_timeseries", paths[0], None, None, allow_sharded=True
-    )
-    metas = [(m0, a0)]
-    for p in paths[1:]:
-        metas.append(
-            _aligned_meta("extract_timeseries", p, None, m0,
-                          allow_sharded=True)
-        )
-    n_layers, gh, gw = (int(x) for x in m0.shape)
-    _, th, tw = (int(c) for c in m0.chunks)
-    t = _affine_order(m0.attrs.get("transform")) or [
-        PIX, 0.0, X0, 0.0, -PIX, Y0
-    ]
-    a, _, c, _, e, f = (float(v) for v in t)
-    layers = (
-        sorted({int(s) for s in species}) if species is not None
-        else list(range(n_layers))
-    )
-    readers = [_ChunkReader(p, arr, m) for p, (m, arr) in zip(paths, metas)]
-    n_epochs = len(paths)
-    pts = (
-        points.select("point_id", "x", "y")
-        .withColumn("gx", F.floor((F.col("x") - F.lit(c)) / F.lit(a)).cast("long"))
-        .withColumn("gy", F.floor((F.col("y") - F.lit(f)) / F.lit(e)).cast("long"))
-        .filter(
-            (F.col("gx") >= 0) & (F.col("gx") < gw)
-            & (F.col("gy") >= 0) & (F.col("gy") < gh)
-        )
-        .withColumn("cy", (F.col("gy") / th).cast("int"))
-        .withColumn("cx", (F.col("gx") / tw).cast("int"))
-    )
-
-    def ex(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        cy, cx = (int(k) for k in key)
-        ids = pdf["point_id"].to_numpy()
-        ly = (pdf["gy"].to_numpy() % th).astype(np.int64)
-        lx = (pdf["gx"].to_numpy() % tw).astype(np.int64)
-        out_id, out_s, out_e, out_v = [], [], [], []
-        for s in layers:
-            for ep in range(n_epochs):
-                arr = readers[ep].load(s, cy, cx, th, tw)
-                vals = (
-                    arr[ly, lx] if arr is not None
-                    else np.zeros(len(ids), dtype=np.float32)
-                )
-                out_id.append(ids)
-                out_s.append(np.full(len(ids), s, dtype=np.int32))
-                out_e.append(np.full(len(ids), ep, dtype=np.int32))
-                out_v.append(vals.astype(np.float64))
-        return pd.DataFrame(
-            {
-                "point_id": np.concatenate(out_id),
-                "s": np.concatenate(out_s),
-                "epoch": np.concatenate(out_e),
-                "v": np.concatenate(out_v),
-            }
-        )
-
-    return pts.groupBy("cy", "cx").applyInPandas(ex, TS_SCHEMA)
 
 
 def validate_store(path: str, array: str | None = None) -> dict:

@@ -28,36 +28,23 @@ def main() -> None:
     broadcast_join.zonal_stats_fast(tiles, polys, species=0, res=15).explain("formatted")
     print("===== knn ring join =====")
     # one ring iteration's plan (the loop reuses it)
-    q = knn._with_cell(pts.select("point_id", "x", "y"), 15)
-    t = knn._with_cell(pts.select("point_id", "x", "y"), 15).selectExpr(
+    q = pts.select("point_id", "x", "y")
+    t = knn._with_cell(q, 15).selectExpr(
         "point_id as neighbor_id", "x as nx", "y as ny", "cell_id as probe_cell"
     )
-    knn._ring_explode(q, 15, 1).join(t, "probe_cell").explain("formatted")
+    knn._ring_explode_xy(q, 15, 1).join(t, "probe_cell").explain("formatted")
 
-    # round-5 raster/store operators (PLANS §29-37)
-    import tempfile
-
+    # round-5 warp operators (PLANS §31, §37)
     from gridfia_spark.constants import spec_for_sf_dir
-    from gridfia_spark.operators import compositing, focal, warp
-    from gridfia_spark.sources import zarrstore
+    from gridfia_spark.operators import warp
 
     spec = spec_for_sf_dir(SF)
-    store = tempfile.mkdtemp() + "/p.zarr"
-    zarrstore.write_zarr_store(tiles, store)
     print("===== warp_tiles (one exchange = output pixels) =====")
     warp.warp_tiles(tiles, spec, (3, 2, 1), (2, 3, 1)).explain("formatted")
     print("===== warp_tiles_bilinear (<=4x output, no tile bytes) =====")
     warp.warp_tiles_bilinear(
         tiles, spec, (3, 2, 1), (2, 3, 1)
     ).explain("formatted")
-    print("===== diff_stores (map-only, zero shuffle) =====")
-    zarrstore.diff_stores(spark, store, store).explain("formatted")
-    print("===== trend_stores (map-only at any N) =====")
-    zarrstore.trend_stores(spark, [store, store]).explain("formatted")
-    print("===== focal_sum3x3_store (ghost reads, map-only) =====")
-    focal.focal_sum3x3_store(spark, store).explain("formatted")
-    print("===== compose_latest (partial max_by below the exchange) =====")
-    compositing.compose_latest([tiles, tiles]).explain("formatted")
     spark.stop()
 
 

@@ -126,41 +126,6 @@ class TestSpatialFacade:
         assert got == want
 
 
-class TestRasterPipelineFacade:
-    def test_facade_delegates(self, spark, tmp_path):
-        """Every RasterPipeline method runs and returns the operator's
-        result shape (delegation only — semantics live in the operator
-        suites)."""
-        from gridfia_spark.constants import SPECIES, spec_for_sf_dir
-        from gridfia_spark.datagen import tiles as tgen
-        from gridfia_spark.pipeline import RasterPipeline
-
-        spec = spec_for_sf_dir("/root/testdata/sf0.001")
-        rp = RasterPipeline(spark)
-        tiles = tgen.ensure_tiles(spark, "/root/testdata/sf0.001")
-        a = str(tmp_path / "a.zarr")
-        n = rp.create_store(tiles, a)
-        assert n == tiles.count()
-        back = rp.read_store(a)
-        assert back.count() == n
-        d = rp.diff(a, a)
-        assert d.filter("n_diff > 0").count() == 0
-        t = rp.trend([a, a])
-        assert t.count() == n and t.first().den == 1
-        blur = rp.focal(a, stat="max")
-        assert blur.count() == n
-        cur = rp.compose([tiles, tiles.limit(2)])
-        assert cur.count() == n
-        norm = rp.normalize(tiles, tiles)
-        assert norm.count() == n
-        w = rp.warp(tiles, spec, (2, 1, 0), (2, 1, 0))
-        assert w.count() == len(SPECIES)  # 2x downscale of a 2x2 grid
-        wb = rp.warp(tiles, spec, (2, 1, 0), (2, 1, 0), bilinear=True)
-        assert wb.count() == len(SPECIES)
-        ov = rp.overview(tiles, spec)
-        assert ov.count() == len(SPECIES)
-
-
 class TestDriverSampleOrder:
     def test_driver_sample_covers_oldest_evidence_queries(self):
         """The driver's correctness snapshot samples the FIRST 50 registry

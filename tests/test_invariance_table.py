@@ -44,10 +44,7 @@ zb = zarr_blosc_roundtrip(spark, "/root/testdata/sf0.001").toPandas()
 zb = zb.sort_values("image_id", ignore_index=True)
 gs = geotiff_strip_scan(spark, "/root/testdata/sf0.001").toPandas()
 gs = gs.sort_values("strip", ignore_index=True)
-# round-5 late: halo-exchange stencil (strip routing changes with task
-# layout) and the overview mosaic (quadrant grouping) must be invariant
-ee = Q.edge_energy(spark, "/root/testdata/sf0.001").toPandas()
-ee = ee.sort_values(["s", "ty", "tx"], ignore_index=True)
+# round-5 late: the overview mosaic (quadrant grouping) must be invariant
 ov = Q.overview_stats(spark, "/root/testdata/sf0.001").toPandas()
 ov = ov.sort_values("image_id", ignore_index=True)
 # round-5 session 4: the warp gather (one shuffle whose contribution
@@ -76,7 +73,6 @@ print("RESULT" + json.dumps({{"zonal": pdf.to_dict("records"),
                               "webp": wb.to_dict("records"),
                               "blosc": zb.to_dict("records"),
                               "stripscan": gs.to_dict("records"),
-                              "edge": ee.to_dict("records"),
                               "overview": ov.to_dict("records"),
                               "warp": wr.to_dict("records"),
                               "metrics": mx.to_dict("records")}}))

@@ -1,4 +1,5 @@
-"""Python task counts on the cube path, and the local_df row bound.
+"""Python task counts on the cube path, the local_df row bound, and the
+tile manifest that feeds the generator without a driver row list.
 
 Every PySpark task pays a fixed Python worker set-up before its UDF runs,
 so the two Python stages of the cube path (Zarr chunk scan, metric kernel
@@ -11,7 +12,7 @@ import re
 
 import pytest
 
-from gridfia_spark.constants import GridSpec
+from gridfia_spark.constants import SF_SPECS, SPECIES, GridSpec, image_id
 from gridfia_spark.datagen import tiles as tgen
 from gridfia_spark.operators import metrics
 from gridfia_spark.sources import zarrstore
@@ -91,3 +92,35 @@ class TestLocalDfRowBound:
         rows = ((i,) for i in range(localdf.MAX_ROWS + 1))
         with pytest.raises(ValueError, match="spark.createDataFrame"):
             localdf.local_df(spark, rows, "a long")
+
+
+class TestTileManifest:
+    @pytest.mark.parametrize("fmt", ["rawz", "mixed"])
+    def test_rows_match_nested_loop_in_order(self, spark, fmt):
+        """The spark.range manifest equals the (s, ty, tx) nested loop, row
+        for row and in order, including the mixed-format quarter, on the
+        sf0.01 grid and on a non-square one."""
+        for spec in (SF_SPECS["0.01"], GridSpec(5, 3, 8, 8)):
+            want = []
+            for s, (code, _) in enumerate(SPECIES):
+                for ty in range(spec.tiles_y):
+                    for tx in range(spec.tiles_x):
+                        f = fmt
+                        if fmt == "mixed":
+                            f = "qnt8" if (tx + ty + s) % 4 == 3 else "rawz"
+                        want.append((image_id(code, tx, ty), s, tx, ty, f))
+            m = tgen.manifest_df(spark, spec, fmt)
+            assert m.rdd.getNumPartitions() == 1
+            assert [tuple(r) for r in m.collect()] == want
+
+    def test_grid_above_local_df_bound_builds(self, spark):
+        """A grid with more tiles than local_df.MAX_ROWS still builds."""
+        from gridfia_spark.localdf import MAX_ROWS
+
+        spec = GridSpec(205, 205, 8, 8)
+        n = len(SPECIES) * 205 * 205
+        assert n > MAX_ROWS
+        m = tgen.manifest_df(spark, spec)
+        assert m.count() == n
+        last = m.orderBy(m.s.desc(), m.ty.desc(), m.tx.desc()).first()
+        assert last.image_id == image_id(SPECIES[-1][0], 204, 204)
