@@ -32,7 +32,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(cores=8, app_name="raster-containers")
 
-    from gridfia_spark import codecs, netcdf3, tiff
+    from gridfia_spark import netcdf3, tiff
     from gridfia_spark.constants import CRS, PIX, SPECIES, X0, Y0, spec_for_sf_dir
     from gridfia_spark.datagen import pixels as pxgen
     from gridfia_spark.operators import metrics

@@ -22,7 +22,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from . import grid
-from .constants import PIX, spec_for_sf_dir
+from .constants import PIX
 from .functions import kernels
 from .operators import broadcast_join, decode, knn as knn_op, metrics, spatial_join
 

@@ -15,7 +15,6 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

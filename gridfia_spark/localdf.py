@@ -22,8 +22,8 @@ from pyspark.sql.types import StructType
 
 # the driver holds every row twice (Python tuples + the pandas/Arrow copy)
 # and ships them inside the plan; past this a LocalTableScan is the wrong
-# tool. Callers pass dimension tables, strip and shard work lists and small
-# result rows; grid-sized tables (the tile manifest) use spark.range.
+# tool. Callers pass dimension tables, strip work lists and small result
+# rows; grid-sized tables (the tile manifest) use spark.range.
 MAX_ROWS = 250_000
 
 

@@ -23,7 +23,6 @@ The reference's sequential-fallback/retry behavior
 from __future__ import annotations
 
 import glob
-import json
 import os
 import time
 import uuid

@@ -489,71 +489,6 @@ def zarr_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q("streaming_store_ingest", _o_zarr_store)
-def streaming_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming raster ingest into a persisted store (SURVEY §2.9 x S2,
-    engine extension; streaming/storeingest.py): an initial checkerboard
-    epoch creates the store, then two staged tile drops arrive and each
-    AvailableNow pass writes ONLY the new tiles' chunk files into it —
-    chunk counts grow exactly by each drop's size, previously-written
-    chunks keep their mtimes (the file-source checkpoint proves the
-    second pass never re-reads the first drop), and the final store
-    decodes to the same exact pixel oracle as every store round trip."""
-    import time as _time
-
-    from .sources import zarrstore
-    from .streaming import storeingest
-
-    spec = spec_for_sf_dir(sf_dir)
-    tiles = tgen.ensure_tiles(spark, sf_dir)
-    meta = decode.with_tile_meta(tiles)
-    cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
-    work = _cache(sf_dir, "streamstore")
-    shutil.rmtree(work, ignore_errors=True)
-    store = os.path.join(work, "cube.zarr")
-    drops = os.path.join(work, "drops")
-
-    def n_chunks() -> int:
-        adir = os.path.join(store, "biomass")
-        return sum(
-            1 for f in os.listdir(adir)
-            if f.count(".") == 2 and f.split(".")[0].isdigit()
-        )
-
-    # epoch 0: checkerboard creates the store (spans the full extent, so
-    # the declared shape is the whole grid; half the chunks are absent)
-    parity = (F.col("tx") + F.col("ty")) % 2
-    zarrstore.write_zarr_store(meta.filter(parity == 0).select(*cols), store)
-    n0 = n_chunks()
-    rest = meta.filter(parity == 1)
-    n_d1 = rest.filter(F.col("tx") % 2 == 0).count()
-    n_d2 = rest.filter(F.col("tx") % 2 == 1).count()
-    # drop 1 arrives -> pass 1 fills exactly those chunks
-    rest.filter(F.col("tx") % 2 == 0).select(*cols).write.mode(
-        "append"
-    ).parquet(drops)
-    storeingest.incremental_store_ingest(spark, drops, store, work)
-    n1 = n_chunks()
-    assert n1 == n0 + n_d1, (n0, n_d1, n1)
-    # probe a chunk drop 1 just wrote: tile (tx=0, ty=1) has parity 1 and
-    # even tx, so "0.1.0" (s.ty.tx) landed in pass 1
-    probe = os.path.join(store, "biomass", "0.1.0")
-    mt = os.path.getmtime(probe)
-    _time.sleep(0.05)
-    # drop 2 arrives -> pass 2 processes ONLY the new files
-    rest.filter(F.col("tx") % 2 == 1).select(*cols).write.mode(
-        "append"
-    ).parquet(drops)
-    storeingest.incremental_store_ingest(spark, drops, store, work)
-    assert n_chunks() == n1 + n_d2, (n1, n_d2, n_chunks())
-    assert os.path.getmtime(probe) == mt, "pass 2 rewrote an old chunk"
-    assert n_chunks() == len(SPECIES) * spec.tiles_x * spec.tiles_y
-    back = zarrstore.read_zarr_store(spark, store)
-    return decode.decode_stats(back).select(
-        "image_id", "s", "vmin", "vmax", "vsum", "nonzero", "npx"
-    )
-
-
 def _o_zarr_slice(sf_dir: str) -> str:
     from .queries_products import _o_png_stats
 
@@ -902,217 +837,3 @@ def config_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 # product/statistics queries (render, threshold kernels, bootstrap CI) —
 # imported last so their @q registrations land in the shared registry
 from . import queries_products  # noqa: E402,F401
-
-
-# ===================================================================
-# Multiscale Zarr store (OME-NGFF pyramid group, S12 + pyramid fusion)
-# ===================================================================
-
-
-def _ms_depth(spec) -> int:
-    """Auto-depth of the multiscale pyramid for a grid: levels exist while
-    the tile grid halves evenly and hasn't collapsed to a single tile
-    (mirrors write_multiscale_store's stop conditions)."""
-    k, tx, ty = 0, spec.tiles_x, spec.tiles_y
-    while not (tx == 1 and ty == 1) and tx % 2 == 0 and ty % 2 == 0:
-        k, tx, ty = k + 1, tx // 2, ty // 2
-    return k
-
-
-def _o_zarr_multiscale(sf_dir: str) -> str:
-    spec = spec_for_sf_dir(sf_dir)
-    tw, th = spec.tile_w, spec.tile_h
-    depth = _ms_depth(spec)
-    codes = ",".join(f"({i},'{c}')" for i, (c, _) in enumerate(SPECIES))
-    blocks = ",\n".join(
-        f"""b{k} AS (
-  SELECT s, bx // 2 AS bx, by // 2 AS by, CAST(SUM(v) AS BIGINT) AS v
-  FROM b{k - 1} GROUP BY 1, 2, 3
-)"""
-        for k in range(2, depth + 1)
-    )
-    union = "\n  UNION ALL\n".join(
-        f"  SELECT {k} AS lvl, s, bx, by, v FROM b{k}"
-        for k in range(1, depth + 1)
-    )
-    return f"""WITH {osql.val_cte(spec)},
-allpx AS (
-  SELECT s, gx, gy, v FROM val
-  UNION ALL
-  SELECT 0 AS s, gx, gy, SUM(v) AS v FROM val GROUP BY gx, gy
-),
-b1 AS (
-  SELECT s, gx // 2 AS bx, gy // 2 AS by, CAST(SUM(v) AS BIGINT) AS v
-  FROM allpx GROUP BY 1, 2, 3
-),
-{blocks + "," if blocks else ""}
-spn(s, code) AS (SELECT * FROM (VALUES {codes}) v(s, code)),
-lv AS (
-{union}
-)
-SELECT b.lvl::INT AS lvl,
-       printf('sp%s_tx%03d_ty%03d', n.code,
-              CAST(b.bx // {tw} AS INT), CAST(b.by // {th} AS INT)) AS image_id,
-       CAST(MIN(b.v) AS DOUBLE) AS vmin,
-       CAST(MAX(b.v) AS DOUBLE) AS vmax,
-       CAST(SUM(b.v) AS DOUBLE) AS vsum,
-       CAST(SUM(CASE WHEN b.v > 0 THEN 1 ELSE 0 END) AS BIGINT) AS nonzero,
-       COUNT(*)::BIGINT AS npx
-FROM lv b JOIN spn n ON b.s = n.s
-GROUP BY 1, 2"""
-
-
-@q("zarr_multiscale", _o_zarr_multiscale)
-def zarr_multiscale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OME-NGFF-pattern multiscale Zarr group (write_multiscale_store):
-    level arrays 0..K where level k's pixel is the exact int64 sum over a
-    2**k x 2**k base-pixel block, each level built from the PERSISTED
-    chunks of the previous one, with the pyramid declared in a root
-    ``multiscales`` attribute (per-level scale transforms alongside the
-    reference-layout georeferencing keys). Every coarser level is read
-    back from disk and gated against independent block-sum oracles — so
-    the pyramid build, the per-level chunk writes, AND the re-read path
-    that feeds each level from the one below are all bit-exact end to
-    end."""
-    import shutil as _sh
-
-    from .sources import zarrstore
-
-    spec = spec_for_sf_dir(sf_dir)
-    depth = _ms_depth(spec)
-    tiles = tgen.ensure_tiles(spark, sf_dir)
-    store = _cache(sf_dir, "zarrms") + ".zarr"
-    _sh.rmtree(store, ignore_errors=True)
-    n = zarrstore.write_multiscale_store(tiles, spec, store, zarr_format=3)
-    nt = spec.tiles_x * spec.tiles_y
-    assert n == len(SPECIES) * sum(nt // 4**k for k in range(depth + 1)), n
-    ms = zarrstore._read_root_attrs(store, 3)["multiscales"][0]
-    assert [d["path"] for d in ms["datasets"]] == [
-        str(k) for k in range(depth + 1)
-    ]
-    scales = [
-        d["coordinateTransformations"][0]["scale"][1] for d in ms["datasets"]
-    ]
-    assert scales == [30.0 * 2**k for k in range(depth + 1)]
-    out = None
-    for lvl in range(1, depth + 1):
-        back = zarrstore.read_zarr_store(spark, store, array=str(lvl))
-        st = decode.decode_stats(back).select(
-            F.lit(lvl).cast("int").alias("lvl"),
-            "image_id", "vmin", "vmax", "vsum", "nonzero", "npx",
-        )
-        out = st if out is None else out.unionByName(st)
-    return out
-
-
-@q("zarr_sharded_roundtrip", _o_zarr_store)
-def zarr_sharded_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB small-file fix: Zarr v3 ``sharding_indexed`` — stored
-    objects each pack a 2x2 block of chunks behind a crc32c-guarded index
-    footer (sources/sharding.py), 4x fewer objects to list/open/schedule
-    than the flat chunk layout at identical pixel content. ONE hash
-    shuffle co-locates each shard's tiles on write; the scan back parses
-    shard indexes task-side and is gated against the same exact pixel
-    oracle as every other store dialect — and the object-count reduction
-    is asserted in-query from the actual file listing."""
-    import shutil as _sh
-
-    from .sources import zarrstore
-
-    spec = spec_for_sf_dir(sf_dir)
-    tiles = tgen.ensure_tiles(spark, sf_dir)
-    store = _cache(sf_dir, "zarrshard") + ".zarr"
-    _sh.rmtree(store, ignore_errors=True)
-    n = zarrstore.write_sharded_store(tiles, store, shard_tiles=(2, 2))
-    n_chunks = len(SPECIES) * spec.tiles_x * spec.tiles_y
-    assert n == n_chunks // 4, (n, n_chunks)
-    m = zarrstore.zarr_meta(store)
-    assert m.shard == [1, 2 * spec.tile_h, 2 * spec.tile_w]
-    assert m.chunks == [1, spec.tile_h, spec.tile_w]
-    assert m.index_codecs == ("bytes", "crc32c")
-    back = zarrstore.read_zarr_store(spark, store)
-    assert len(back.inputFiles()) == n, "scan must list shard objects only"
-    return decode.decode_stats(back).select(
-        "image_id", "s", "vmin", "vmax", "vsum", "nonzero", "npx"
-    )
-
-
-def _win(spec) -> tuple[int, int, int, int]:
-    """sf-adaptive tile window (inclusive): the second quarter of each
-    axis — a proper sub-window on every grid with >= 4 tiles per axis."""
-    return (
-        spec.tiles_x // 4, spec.tiles_x // 2,
-        spec.tiles_y // 4, spec.tiles_y // 2,
-    )
-
-
-def _o_shard_window(sf_dir: str) -> str:
-    spec = spec_for_sf_dir(sf_dir)
-    tw, th = spec.tile_w, spec.tile_h
-    tx0, tx1, ty0, ty1 = _win(spec)
-    return f"""WITH {osql.val_cte(spec)},
-allpx AS (
-  SELECT s, gx, gy, v FROM val
-  UNION ALL
-  SELECT 0 AS s, gx, gy, SUM(v) AS v FROM val GROUP BY gx, gy
-),
-{osql.tiles_cte(spec)}
-SELECT t.image_id AS image_id, t.s AS s,
-       CAST(MIN(p.v) AS DOUBLE) AS vmin,
-       CAST(MAX(p.v) AS DOUBLE) AS vmax,
-       CAST(SUM(p.v) AS DOUBLE) AS vsum,
-       CAST(SUM(CASE WHEN p.v > 0 THEN 1 ELSE 0 END) AS BIGINT) AS nonzero,
-       COUNT(*)::BIGINT AS npx
-FROM allpx p JOIN tiles t
-  ON p.s = t.s AND p.gx // {tw} = t.tx AND p.gy // {th} = t.ty
-WHERE t.tx BETWEEN {tx0} AND {tx1} AND t.ty BETWEEN {ty0} AND {ty1}
-GROUP BY t.image_id, t.s"""
-
-
-@q("zarr_shard_window", _o_shard_window)
-def zarr_shard_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunk-granular PARTIAL read of a sharded store
-    (zarrstore.read_shard_window): tasks seek each shard's crc32c-guarded
-    index footer, then read ONLY the byte ranges of inner chunks inside
-    the tile window — the ranged-GET access pattern that makes sharding
-    safe at 100 TB (packing chunks without losing partial reads). The
-    window slice is gated against the exact pixel oracle restricted to
-    the same tiles, AND the per-row IO accounting must total strictly
-    less than the store's payload bytes — proving bytes outside the
-    window were never read."""
-    import shutil as _sh
-
-    from .sources import sharding as _shard
-    from .sources import zarrstore
-
-    spec = spec_for_sf_dir(sf_dir)
-    tiles = tgen.ensure_tiles(spark, sf_dir)
-    store = _cache(sf_dir, "zarrwin") + ".zarr"
-    _sh.rmtree(store, ignore_errors=True)
-    n_shards = zarrstore.write_sharded_store(tiles, store, shard_tiles=(2, 2))
-    tx0, tx1, ty0, ty1 = _win(spec)
-    out = zarrstore.read_shard_window(
-        spark, store, (tx0, tx1), (ty0, ty1), include_read_bytes=True
-    )
-    rows = out.collect()
-    n_win = (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
-    assert len(rows) == len(SPECIES) * n_win, (len(rows), n_win)
-    # IO accounting: chunk payload bytes actually read + one footer per
-    # shard TOUCHED must come in under the store's total payload when the
-    # window is a proper subset of the grid
-    adir = os.path.join(store, "biomass", "c")
-    total = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(adir) for f in fs
-    )
-    idx_nb = _shard.index_nbytes(4, ("bytes", "crc32c"))
-    touched = len(SPECIES) * len(range(ty0 // 2, ty1 // 2 + 1)) * len(
-        range(tx0 // 2, tx1 // 2 + 1)
-    )
-    read_total = sum(r.read_bytes for r in rows) + touched * idx_nb
-    if n_win < spec.tiles_x * spec.tiles_y:
-        assert read_total < total, (read_total, total)
-    back = out.drop("read_bytes")
-    return decode.decode_stats(back).select(
-        "image_id", "s", "vmin", "vmax", "vsum", "nonzero", "npx"
-    )

@@ -174,12 +174,8 @@ def _write_chunks(
 def _write_array_meta(
     path: str, array: str, shape: list[int], chunks: list[int],
     level: int, zarr_format: int, root_attrs: dict, codec: str | None = None,
-    codecs_doc: list[dict] | None = None,
 ) -> None:
-    """Driver-side metadata documents for either dialect. ``codecs_doc``
-    (v3 only) overrides the codec chain verbatim — the sharding_indexed
-    path passes its shard codec document and ``chunks`` is then the OUTER
-    shard shape."""
+    """Driver-side metadata documents for either dialect."""
     codec = codec or _default_codec(zarr_format)
     adir = os.path.join(path, array)
     os.makedirs(adir, exist_ok=True)
@@ -215,8 +211,7 @@ def _write_array_meta(
                         "configuration": {"separator": "/"},
                     },
                     "fill_value": 0.0,
-                    "codecs": codecs_doc
-                    or [
+                    "codecs": [
                         {"name": "bytes", "configuration": {"endian": "little"}},
                         comp_entry,
                     ],
@@ -322,156 +317,6 @@ def write_zarr_store(
     )
 
 
-def write_sharded_store(
-    tiles: DataFrame,
-    path: str,
-    array: str = "biomass",
-    shard_tiles: tuple[int, int] = (2, 2),
-    level: int = 6,
-    codec: str | None = "gzip",
-) -> int:
-    """Write tile rows as a Zarr v3 array through the spec's
-    ``sharding_indexed`` codec: stored objects each pack a
-    ``shard_tiles = (ks_y, ks_x)`` block of chunks with a crc32c-guarded
-    binary index footer (sources/sharding.py) — ``ks_y * ks_x`` fewer
-    objects to list, open, and schedule than the flat chunk layout, the
-    difference between 10^8 and 10^6 objects at a true 100 TB cube.
-    Any v3-sharding-aware zarr reader opens the result; chunk-level
-    partial reads survive via the index (footer GET + ranged chunk GETs).
-
-    The write is ONE hash shuffle keyed by (layer, shard_y, shard_x) —
-    the minimum movement that co-locates a shard's tiles — then tasks
-    write their own shard objects; the driver writes only JSON metadata.
-    ``codec`` compresses each INNER chunk (gzip/blosc/None-raw). Returns
-    the number of shard objects written."""
-    from . import sharding as _sh
-
-    if codec not in (None, "gzip", "blosc"):
-        raise ValueError(f"unsupported inner codec {codec!r} (gzip/blosc/raw)")
-    ks_y, ks_x = int(shard_tiles[0]), int(shard_tiles[1])
-    if ks_y < 1 or ks_x < 1:
-        raise ValueError(f"shard_tiles must be >= 1, got {shard_tiles}")
-    n_layers, tw, th, gw, gh, meta = _grid_info(tiles)
-    _write_array_meta(
-        path, array, [n_layers, gh, gw], [1, th * ks_y, tw * ks_x], level, 3,
-        _root_attrs(n_layers, gw, gh), codec,
-        codecs_doc=[_sh.shard_codec_doc(tw, th, codec, level)],
-    )
-    return _sh.write_shards(
-        meta, os.path.join(path, array), tw, th, ks_y, ks_x, codec, level
-    )
-
-
-def write_multiscale_store(
-    tiles: DataFrame,
-    spec,
-    path: str,
-    n_levels: int | None = None,
-    factor: int = 2,
-    zarr_format: int = ZARR_FORMAT,
-    codec: str | None = None,
-    level: int = 6,
-) -> int:
-    """Genuine Zarr MULTISCALE group in the OME-NGFF layout pattern: level
-    arrays ``0`` (full resolution), ``1``, ``2``, ... where level k's pixel
-    is the exact int64 block sum over ``factor**k`` base pixels
-    (operators/pyramid.build_overview), plus a root ``multiscales``
-    attribute listing each dataset with its per-level scale transform —
-    any zarr reader opens each level as an ordinary array, and
-    OME-NGFF-aware tooling discovers the pyramid from the attrs.
-
-    Each level is built FROM THE PERSISTED CHUNKS of the previous one
-    (write, then ``read_zarr_store`` back), so levels are sums of sums with
-    no lazy recompute chain. ``n_levels=None`` builds until the level grid
-    collapses to a single tile. Requires grids that divide evenly by
-    ``factor`` at every level (uniform chunks). Returns total chunk count.
-    """
-    from ..operators import pyramid as _pyr
-
-    spark = tiles.sparkSession
-    total = write_zarr_store(
-        tiles, path, array="0", level=level, zarr_format=zarr_format, codec=codec
-    )
-    # base-level root attrs, captured before coarser writes overwrite them
-    attrs0 = _read_root_attrs(path, zarr_format)
-    datasets = [("0", 1)]
-    cur, cspec, k = tiles, spec, 0
-    while True:
-        if n_levels is not None and k >= n_levels:
-            break
-        if n_levels is None and cspec.tiles_x == 1 and cspec.tiles_y == 1:
-            break
-        if cspec.tile_w % factor or cspec.tile_h % factor:
-            if n_levels is not None:
-                raise ValueError(
-                    f"cannot build {n_levels} levels: tile dims stop dividing "
-                    f"by {factor} after level {k}"
-                )
-            break
-        try:
-            nspec = _pyr.overview_spec(cspec, factor)
-        except ValueError:
-            # ragged tile grid (e.g. 3x3 at factor 2): no uniform coarser
-            # level exists — a clean stop for auto-depth, an error when the
-            # caller demanded a depth we can't reach
-            if n_levels is not None:
-                raise
-            break
-        k += 1
-        lvl_df = _pyr.build_overview(cur, cspec, factor=factor, fmt="raw32")
-        total += write_zarr_store(
-            lvl_df, path, array=str(k), level=level,
-            zarr_format=zarr_format, codec=codec,
-        )
-        datasets.append((str(k), factor**k))
-        cur, cspec = read_zarr_store(spark, path, array=str(k)), nspec
-    # restore base-level root attrs and attach the multiscales document
-    attrs0["multiscales"] = [
-        {
-            "version": "0.4",
-            "name": "biomass_pyramid",
-            "axes": [
-                {"name": "species", "type": "channel"},
-                {"name": "y", "type": "space", "unit": "metre"},
-                {"name": "x", "type": "space", "unit": "metre"},
-            ],
-            "datasets": [
-                {
-                    "path": p,
-                    "coordinateTransformations": [
-                        {"type": "scale", "scale": [1.0, PIX * f, PIX * f]}
-                    ],
-                }
-                for p, f in datasets
-            ],
-            "type": "sum",
-            "metadata": {"factor": factor, "method": "exact int64 block sum"},
-        }
-    ]
-    if zarr_format == 3:
-        with open(os.path.join(path, "zarr.json"), "w") as fh:
-            json.dump(
-                {"zarr_format": 3, "node_type": "group", "attributes": attrs0},
-                fh,
-            )
-    else:
-        with open(os.path.join(path, ".zattrs"), "w") as fh:
-            json.dump(attrs0, fh)
-        # rebuild consolidated metadata over ALL level arrays (each
-        # write_zarr_store left only its own array in .zmetadata)
-        meta_doc: dict = {".zgroup": {"zarr_format": 2}, ".zattrs": attrs0}
-        for p, _ in datasets:
-            for doc_name in (".zarray", ".zattrs"):
-                fp = os.path.join(path, p, doc_name)
-                with open(fp) as fh:
-                    meta_doc[f"{p}/{doc_name}"] = json.load(fh)
-        with open(os.path.join(path, ".zmetadata"), "w") as fh:
-            json.dump(
-                {"zarr_consolidated_format": 1, "metadata": meta_doc}, fh
-            )
-    return total
-
-
 # the reference's array-locating fallbacks (forest_metrics.py:118-196:
 # "biomass", then "data", then "species")
 ARRAY_FALLBACKS = ("biomass", "data", "species")
@@ -545,17 +390,13 @@ def read_zarr_array_meta(path: str, array: str = "biomass") -> tuple[dict, dict]
 class ZarrMeta(NamedTuple):
     version: int
     shape: list[int]
-    chunks: list[int]  # INNER chunk shape (== stored-object shape if unsharded)
+    chunks: list[int]
     compressor: str | None  # "zlib" | "gzip" | "blosc" | None (raw)
     attrs: dict  # root attrs overlaid with array attrs
     # chunk-key encoding: ("v2", ".") flat i.j.k names (all v2 stores),
     # ("default", "/") nested c/i/j/k (v3 default), ("default", ".")
     # flat c.i.j.k, ("v2", "/") nested i/j/k
     key_enc: tuple[str, str] = ("v2", ".")
-    # sharding_indexed: outer shard shape (the chunk_grid shape; stored
-    # objects pack chunks//shard inner chunks each) + index codec chain
-    shard: list[int] | None = None
-    index_codecs: tuple[str, ...] = ()
 
 
 def zarr_meta(path: str, array: str | None = None) -> ZarrMeta:
@@ -597,34 +438,6 @@ def zarr_meta(path: str, array: str | None = None) -> ZarrMeta:
         )
     chain = doc.get("codecs", [])
     names = [c.get("name") for c in chain]
-    shard_shape: list[int] | None = None
-    index_codecs: tuple[str, ...] = ()
-    if names == ["sharding_indexed"]:
-        # many-chunks-per-object layout: the chunk_grid shape is the SHARD
-        # shape; the real chunk shape and codec chain live in the shard
-        # codec's configuration (sources/sharding.py holds the binary IO)
-        cfg = chain[0].get("configuration", {})
-        shard_shape = list(grid["configuration"]["chunk_shape"])
-        inner_shape = list(cfg.get("chunk_shape", ()))
-        if len(inner_shape) != 3 or any(
-            s % i for s, i in zip(shard_shape, inner_shape)
-        ):
-            raise ValueError(
-                f"sharding: inner chunk shape {inner_shape} must divide "
-                f"shard shape {shard_shape}"
-            )
-        if cfg.get("index_location", "end") != "end":
-            raise ValueError("sharding: only index_location 'end' supported")
-        index_codecs = tuple(
-            c.get("name") for c in cfg.get("index_codecs", [])
-        )
-        if index_codecs not in (("bytes",), ("bytes", "crc32c")):
-            raise ValueError(
-                f"sharding: unsupported index codecs {index_codecs!r}"
-            )
-        chain = cfg.get("codecs", [])
-        names = [c.get("name") for c in chain]
-        grid = {"name": "regular", "configuration": {"chunk_shape": inner_shape}}
     if not chain or names[0] != "bytes":
         raise ValueError("unsupported v3 codec chain (must start with 'bytes')")
     if chain[0].get("configuration", {}).get("endian", "little") != "little":
@@ -651,8 +464,6 @@ def zarr_meta(path: str, array: str | None = None) -> ZarrMeta:
         comp,
         {**root_attrs, **doc.get("attributes", {})},
         (enc_name, sep),
-        shard_shape,
-        index_codecs,
     )
 
 
@@ -742,56 +553,6 @@ def read_zarr_store(
     nested = sep == "/"
     strip_c = enc_name == "default" and not nested
 
-    if m.shard is not None:
-        # sharding_indexed objects: each stored file packs ks_y x ks_x
-        # chunks behind an index footer — parse the index, decode the
-        # present inner chunks, emit one tile row per chunk. Same scan
-        # plan as the flat layout, ks**2 fewer files.
-        from . import sharding as _sh
-
-        ks_y, ks_x = m.shard[1] // th, m.shard[2] // tw
-        index_codecs = m.index_codecs
-
-        def rds(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for r in pdf.itertuples(index=False):
-                    if nested:
-                        s, sy, sx = (int(x) for x in r.path.rsplit("/", 3)[-3:])
-                    else:
-                        parts = r.path.rsplit("/", 1)[-1].split(".")
-                        if strip_c:
-                            parts = parts[1:]
-                        s, sy, sx = (int(x) for x in parts)
-                    chunks = _sh.read_shard(
-                        bytes(r.content), ks_y, ks_x, compressor, index_codecs
-                    )
-                    code, nm = codes[s]
-                    for (cy, cx), raw in chunks.items():
-                        ty, tx = sy * ks_y + cy, sx * ks_x + cx
-                        arr = np.frombuffer(raw, dtype="<f4").reshape(th, tw)
-                        rows.append(
-                            (
-                                image_id(code, tx, ty),
-                                codecs.encode(arr, "rawz"),
-                                tw,
-                                th,
-                                "rawz",
-                                caption(code, nm, tx, ty),
-                                pxgen.phash64(arr),
-                            )
-                        )
-                if rows:
-                    yield pd.DataFrame(
-                        rows,
-                        columns=[
-                            "image_id", "bytes", "w", "h", "fmt",
-                            "caption", "phash",
-                        ],
-                    )
-
-        return files.mapInPandas(rds, TILE_SCHEMA)
-
     def rd(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -829,133 +590,9 @@ def read_zarr_store(
     return files.mapInPandas(rd, TILE_SCHEMA)
 
 
-def read_shard_window(
-    spark: SparkSession,
-    path: str,
-    tx_range: tuple[int, int],
-    ty_range: tuple[int, int],
-    array: str | None = None,
-    species: list[int] | None = None,
-    include_read_bytes: bool = False,
-) -> DataFrame:
-    """Windowed PARTIAL read of a sharded store — the object-store access
-    pattern the shard index exists for: each task seeks to its shard's
-    footer (one ranged GET), parses the crc32c-guarded index, then reads
-    ONLY the byte ranges of inner chunks inside the tile window
-    ``tx_range x ty_range`` (inclusive). Bytes outside the window are
-    never read — unlike the full ``binaryFile`` scan, a small window on
-    a huge shard touches O(window) bytes + a 16·ks²-byte footer per
-    shard. ``include_read_bytes=True`` appends a per-row ``read_bytes``
-    column (that chunk's stored byte count; add ``sharding.index_nbytes``
-    once per shard touched for the footer) so tests and gate queries can
-    assert the partial-read contract from the actual IO accounting."""
-    from ..datagen import pixels as pxgen
-    from ..datagen.tiles import TILE_SCHEMA
-    from . import sharding as _sh
-
-    if array is None:
-        array = find_array(path)
-    m = zarr_meta(path, array)
-    if m.shard is None:
-        raise ValueError("read_shard_window requires a sharding_indexed array")
-    _, th, tw = (int(c) for c in m.chunks)
-    ks_y, ks_x = m.shard[1] // th, m.shard[2] // tw
-    index_codecs = m.index_codecs
-    compressor = m.compressor
-    tx0, tx1 = int(tx_range[0]), int(tx_range[1])
-    ty0, ty1 = int(ty_range[0]), int(ty_range[1])
-    if tx0 > tx1 or ty0 > ty1:
-        raise ValueError(f"empty window {tx_range} x {ty_range}")
-    stored_codes = m.attrs.get("species_codes") or [c for c, _ in SPECIES]
-    stored_names = m.attrs.get("species_names") or [
-        dict(SPECIES).get(c, c) for c in stored_codes
-    ]
-    codes = {
-        i: (c, stored_names[i] if i < len(stored_names) else c)
-        for i, c in enumerate(stored_codes)
-    }
-    n_layers = int(m.shape[0])
-    layers = (
-        sorted({int(s) for s in species}) if species is not None
-        else list(range(n_layers))
-    )
-    adir = os.path.join(path, array)
-    items = []
-    for s in layers:
-        for sy in range(ty0 // ks_y, ty1 // ks_y + 1):
-            for sx in range(tx0 // ks_x, tx1 // ks_x + 1):
-                f = os.path.join(adir, "c", str(s), str(sy), str(sx))
-                if os.path.exists(f):
-                    items.append((f, s, sy, sx))
-    if not items:
-        return spark.createDataFrame([], TILE_SCHEMA)
-    from ..localdf import local_df
-
-    work = local_df(
-        spark, items, "path string, s int, sy int, sx int"
-    ).repartition(min(len(items), spark.sparkContext.defaultParallelism))
-    n_inner = ks_y * ks_x
-    idx_nb = _sh.index_nbytes(n_inner, index_codecs)
-    if include_read_bytes:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        schema = StructType(
-            TILE_SCHEMA.fields + [StructField("read_bytes", LongType())]
-        )
-    else:
-        schema = TILE_SCHEMA
-
-    def rdw(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for it in pdf.itertuples(index=False):
-                size = os.path.getsize(it.path)
-                with open(it.path, "rb") as fh:
-                    fh.seek(size - idx_nb)
-                    idx = _sh.parse_index_tail(
-                        fh.read(idx_nb), n_inner, index_codecs, size
-                    )
-                    code, nm = codes[it.s]
-                    for cy in range(ks_y):
-                        ty = it.sy * ks_y + cy
-                        if not ty0 <= ty <= ty1:
-                            continue
-                        for cx in range(ks_x):
-                            tx = it.sx * ks_x + cx
-                            if not tx0 <= tx <= tx1:
-                                continue
-                            off, nb = idx[cy * ks_x + cx]
-                            if off == _sh.MAX_U64:
-                                continue
-                            fh.seek(off)
-                            raw = _decode_chunk_bytes(fh.read(nb), compressor)
-                            arr = np.frombuffer(raw, dtype="<f4").reshape(th, tw)
-                            row = (
-                                image_id(code, tx, ty),
-                                codecs.encode(arr, "rawz"),
-                                tw,
-                                th,
-                                "rawz",
-                                caption(code, nm, tx, ty),
-                                pxgen.phash64(arr),
-                            )
-                            rows.append(
-                                row + (nb,) if include_read_bytes else row
-                            )
-            if rows:
-                cols = [
-                    "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-                ]
-                if include_read_bytes:
-                    cols.append("read_bytes")
-                yield pd.DataFrame(rows, columns=cols)
-
-    return work.mapInPandas(rdw, schema)
-
-
 def _decode_chunk_bytes(raw: bytes, compressor: str | None) -> bytes:
-    """Decompress one stored chunk (flat file or shard inner chunk) to its
-    raw C-order bytes; ``None`` means an uncompressed store."""
+    """Decompress one stored chunk file to its raw C-order bytes;
+    ``None`` means an uncompressed store."""
     if compressor == "zlib":
         return zlib.decompress(raw)
     if compressor == "gzip":
@@ -1014,13 +651,8 @@ def validate_store(path: str, array: str | None = None) -> dict:
     for i in range(min(info["num_species"], len(codes))):
         nm = names_l[i] if i < len(names_l) else dict(SPECIES).get(codes[i], codes[i])
         info["species"].append({"index": i, "code": str(codes[i]), "name": str(nm)})
-    # chunk-file census per layer (listing only — no chunk opened);
-    # sharded stores list SHARD objects, so expect the coarse grid
-    if m.shard is not None:
-        info["shard_chunks"] = (m.shard[1] // th, m.shard[2] // tw)
-        per_layer = (-(-gh // m.shard[1])) * (-(-gw // m.shard[2]))
-    else:
-        per_layer = (-(-gh // th)) * (-(-gw // tw))
+    # chunk-file census per layer (listing only — no chunk opened)
+    per_layer = (-(-gh // th)) * (-(-gw // tw))
     enc_name, sep = m.key_enc
     adir = os.path.join(path, array)
     found: dict[int, int] = {}
@@ -1120,7 +752,7 @@ def append_layer(
             raise ValueError(
                 f"append_layer: bounds mismatch (store {got_b}, grid {want_b})"
             )
-    if m.compressor is None and m.shard is None:
+    if m.compressor is None:
         raise ValueError(
             "append_layer: uncompressed stores are not supported for "
             "in-place append (both engine write dialects compress)"
@@ -1129,39 +761,15 @@ def append_layer(
     # possibly pre-allocated array; dense engine stores have it == shape[0]
     idx = int(m.attrs.get("num_species", n_layers))
     new_n = max(n_layers, idx + 1)
-    if m.shard is not None:
-        # sharded store: the new layer arrives as new shard objects under
-        # c/<idx>/ — existing shards untouched, same one-shuffle write
-        from . import sharding as _sh
-
-        ks_y, ks_x = m.shard[1] // th, m.shard[2] // tw
-        _sh.write_shards(
-            meta, os.path.join(path, array), tw, th, ks_y, ks_x,
-            m.compressor, level, layer=idx,
-            index_codecs=m.index_codecs or ("bytes", "crc32c"),
-        )
-    else:
-        _write_chunks(
-            meta, os.path.join(path, array), level, version, layer=idx,
-            codec=m.compressor,
-        )
+    _write_chunks(
+        meta, os.path.join(path, array), level, version, layer=idx,
+        codec=m.compressor,
+    )
     codes = list(m.attrs.get("species_codes", [c for c, _ in SPECIES[:n_layers]]))
     names = list(m.attrs.get("species_names", [n for _, n in SPECIES[:n_layers]]))
     codes, names = codes[:idx] + [species_code], names[:idx] + [species_name]
-    if m.shard is not None:
-        _write_array_meta(
-            path, array, [new_n, gh, gw], [1, m.shard[1], m.shard[2]], level,
-            version, _root_attrs(new_n, gw, gh, codes, names), m.compressor,
-            codecs_doc=[
-                _sh.shard_codec_doc(
-                    tw, th, m.compressor, level,
-                    m.index_codecs or ("bytes", "crc32c"),
-                )
-            ],
-        )
-    else:
-        _write_array_meta(
-            path, array, [new_n, gh, gw], [1, th, tw], level, version,
-            _root_attrs(new_n, gw, gh, codes, names), m.compressor,
-        )
+    _write_array_meta(
+        path, array, [new_n, gh, gw], [1, th, tw], level, version,
+        _root_attrs(new_n, gw, gh, codes, names), m.compressor,
+    )
     return idx

@@ -8,7 +8,6 @@ import os
 import subprocess
 import sys
 
-import pytest
 from pyspark.sql import functions as F
 
 from gridfia_spark.datagen import tiles as tgen
@@ -44,36 +43,22 @@ zb = zarr_blosc_roundtrip(spark, "/root/testdata/sf0.001").toPandas()
 zb = zb.sort_values("image_id", ignore_index=True)
 gs = geotiff_strip_scan(spark, "/root/testdata/sf0.001").toPandas()
 gs = gs.sort_values("strip", ignore_index=True)
-# round-5 late: the overview mosaic (quadrant grouping) must be invariant
-ov = Q.overview_stats(spark, "/root/testdata/sf0.001").toPandas()
-ov = ov.sort_values("image_id", ignore_index=True)
 # round-5 session 4: the warp gather (one shuffle whose contribution
 # grouping changes with cores) must assemble identical target tiles
 wr = Q.warp_regrid(spark, "/root/testdata/sf0.001").toPandas()
 wr = wr.sort_values("image_id", ignore_index=True)
-# round-5 session 3: shard assembly (one shuffle whose grouping changes
-# with cores) and the multiscale pyramid (levels re-read from persisted
-# chunks written at different parallelism) must be invariant
-from gridfia_spark.queries_io import zarr_sharded_roundtrip, zarr_multiscale
-zs = zarr_sharded_roundtrip(spark, "/root/testdata/sf0.001").toPandas()
-zs = zs.sort_values("image_id", ignore_index=True)
-zm = zarr_multiscale(spark, "/root/testdata/sf0.001").toPandas()
-zm = zm.sort_values(["lvl", "image_id"], ignore_index=True)
 # round-6: the sorted batch-grouping metric pass holds a tile group across
 # Arrow batch boundaries — partition layout and batch splits change with
 # cores/shuffle settings, results must not
 mx = Q.metrics_pixel(spark, "/root/testdata/sf0.001").toPandas()
 mx = mx.sort_values(["gx", "gy"], ignore_index=True)
 print("RESULT" + json.dumps({{"zonal": pdf.to_dict("records"),
-                              "sharded": zs.to_dict("records"),
-                              "multiscale": zm.to_dict("records"),
                               "pct": pct.to_dict("records"),
                               "zorder": zo.to_dict("records"),
                               "skewed": zk.to_dict("records"),
                               "webp": wb.to_dict("records"),
                               "blosc": zb.to_dict("records"),
                               "stripscan": gs.to_dict("records"),
-                              "overview": ov.to_dict("records"),
                               "warp": wr.to_dict("records"),
                               "metrics": mx.to_dict("records")}}))
 spark.stop()

@@ -4,13 +4,16 @@ Most engine modules are imported inside functions, so a dangling name
 (a deleted function, a renamed helper) otherwise surfaces only when
 someone runs that path. This walks the AST of every ``.py`` file under
 ``gridfia_spark/``, ``scripts/``, ``examples/``, ``perfbench/`` and the
-checkout root, without running any of them, and checks two things:
+checkout root, without running any of them, and checks three things:
 
 - every ``gridfia_spark`` import (absolute, relative, module-level or
   function-local) names a module or an attribute that exists;
 - every ``<name>.<attr>`` load whose ``<name>`` is bound to an imported
   ``gridfia_spark`` module in the enclosing scopes names an attribute (or
-  submodule) that exists, following chains through submodules.
+  submodule) that exists, following chains through submodules;
+- every import, of any module, binds a name the file reads somewhere
+  (an unused import survives a cut silently and misleads readers about
+  what a module depends on).
 
 Only stdlib ``ast`` and ``importlib`` are used; no Spark session starts.
 """
@@ -21,6 +24,7 @@ import ast
 import importlib
 import importlib.util
 import os
+import re
 import types
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -189,3 +193,70 @@ def test_every_engine_reference_resolves():
     assert not failures, "\n".join(failures)
     # the walk really covered the engine (guards against a vacuous pass)
     assert n_files > 60 and n_refs > 1000, (n_files, n_refs)
+
+
+_NOQA = re.compile(r"#\s*noqa:\s*([A-Z0-9, ]+)")
+
+
+def _noqa_f401(lines: list[str], node: ast.AST) -> bool:
+    """Whether the statement carries ``# noqa: F401`` (alone or in a list
+    such as ``# noqa: E402,F401``)."""
+    for line in lines[node.lineno - 1 : node.end_lineno]:
+        m = _NOQA.search(line)
+        if m and "F401" in re.split(r"[,\s]+", m.group(1)):
+            return True
+    return False
+
+
+def _bound_names(node: ast.Import | ast.ImportFrom) -> list[str]:
+    """Names an import statement binds in its scope."""
+    if isinstance(node, ast.ImportFrom):
+        return [a.asname or a.name for a in node.names if a.name != "*"]
+    return [a.asname or a.name.split(".")[0] for a in node.names]
+
+
+def _dunder_all(tree: ast.Module) -> set[str]:
+    """Names listed in a module-level ``__all__ = [...]``."""
+    out: set[str] = set()
+    for n in tree.body:
+        if isinstance(n, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in n.targets
+        ):
+            out |= {
+                c.value for c in ast.walk(n.value)
+                if isinstance(c, ast.Constant) and isinstance(c.value, str)
+            }
+    return out
+
+
+def _unused_imports(path: str) -> list[str]:
+    """``file:line: name`` for every import whose bound name is never read
+    anywhere in the file. ``__future__`` imports and lines marked
+    ``# noqa: F401`` (imports kept for their side effects) are skipped;
+    names listed in ``__all__`` count as used."""
+    with open(path, encoding="utf-8") as fh:
+        src = fh.read()
+    tree = ast.parse(src, filename=path)
+    lines = src.splitlines()
+    used = _dunder_all(tree)
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+            used.add(n.id)
+    rel = os.path.relpath(path, ROOT)
+    out = []
+    for n in ast.walk(tree):
+        if not isinstance(n, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(n, ast.ImportFrom) and n.module == "__future__":
+            continue
+        if _noqa_f401(lines, n):
+            continue
+        out += [f"{rel}:{n.lineno}: {b}" for b in _bound_names(n) if b not in used]
+    return out
+
+
+def test_every_import_is_used():
+    unused: list[str] = []
+    for path in _files():
+        unused += _unused_imports(path)
+    assert not unused, "unused imports:\n" + "\n".join(unused)

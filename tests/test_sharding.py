@@ -1,277 +1,74 @@
-"""Zarr v3 sharding_indexed: binary shard format (index + crc32c) and the
-distributed many-chunks-per-object write -> scan round trip
-(sources/sharding.py + zarrstore.write_sharded_store)."""
+"""Zarr v3 sharding_indexed arrays (many chunks per stored object): the
+engine writes and reads only the flat one-chunk-per-object layout, so every
+entry point must refuse a sharded array loudly instead of misreading its
+shard objects as chunks (sources/zarrstore.py)."""
 
 from __future__ import annotations
 
 import json
 import os
 
-import numpy as np
 import pytest
 
-from gridfia_spark import codecs
-from gridfia_spark.constants import SPECIES, GridSpec, spec_for_sf_dir
-from gridfia_spark.datagen import pixels as pxgen
+from gridfia_spark.constants import SPECIES
 from gridfia_spark.datagen import tiles as tgen
-from gridfia_spark.operators import decode
-from gridfia_spark.sources import sharding, zarrstore
+from gridfia_spark.sources import zarrstore
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-class TestShardBinaryFormat:
-    def test_crc32c_check_vector(self):
-        """The public CRC-32C (Castagnoli) check vector."""
-        assert sharding.crc32c(b"123456789") == 0xE3069283
-        assert sharding.crc32c(b"") == 0
-
-    def test_build_read_roundtrip_with_absent_chunks(self):
-        chunks = {(0, 0): b"a" * 64, (1, 1): b"b" * 64}
-        blob = sharding.build_shard(chunks, 2, 2, "gzip", 6)
-        assert sharding.read_shard(blob, 2, 2, "gzip") == chunks
-        idx = sharding.parse_index(blob, 4, ("bytes", "crc32c"))
-        assert idx[1] == (sharding.MAX_U64,) * 2
-        assert idx[2] == (sharding.MAX_U64,) * 2
-
-    def test_index_crc_mismatch_raises(self):
-        blob = sharding.build_shard({(0, 0): b"x" * 16}, 1, 1, None, 6)
-        bad = blob[:-1] + bytes([blob[-1] ^ 0xFF])
-        with pytest.raises(ValueError, match="crc32c"):
-            sharding.read_shard(bad, 1, 1, None)
-
-    def test_every_prefix_truncation_raises(self):
-        """index_location=end means ANY truncation destroys the index —
-        no prefix may decode silently."""
-        blob = sharding.build_shard(
-            {(0, 0): b"p" * 32, (0, 1): b"q" * 32}, 1, 2, "gzip", 6
-        )
-        for n in range(len(blob)):
-            with pytest.raises(ValueError):
-                sharding.read_shard(blob[:n], 1, 2, "gzip")
-
-    def test_bytes_only_index_codecs(self):
-        chunks = {(0, 0): b"z" * 64}
-        blob = sharding.build_shard(chunks, 1, 1, None, 6, ("bytes",))
-        assert sharding.read_shard(blob, 1, 1, None, ("bytes",)) == chunks
-        # 16-byte index, no checksum tail
-        assert len(blob) == 64 + 16
-
-    def test_out_of_range_entry_raises(self):
-        import struct
-
-        raw = struct.pack("<QQ", 10, 100)
-        blob = b"\x00" * 4 + raw + struct.pack("<I", sharding.crc32c(raw))
-        with pytest.raises(ValueError, match="exceeds"):
-            sharding.parse_index(blob, 1, ("bytes", "crc32c"))
+def _sharded_store(spark, tmp_path, index_location: str = "end") -> str:
+    """A flat v3 store whose array document is rewritten to the
+    sharding_indexed form: 2x2-chunk shards with bytes+gzip inner codecs."""
+    tiles = tgen.ensure_tiles(spark, SF_DIR)
+    store = str(tmp_path / f"s_{index_location}.zarr")
+    zarrstore.write_zarr_store(tiles, store, zarr_format=3)
+    p = os.path.join(store, "biomass", "zarr.json")
+    doc = json.load(open(p))
+    _, th, tw = doc["chunk_grid"]["configuration"]["chunk_shape"]
+    doc["chunk_grid"]["configuration"]["chunk_shape"] = [1, 2 * th, 2 * tw]
+    doc["codecs"] = [{
+        "name": "sharding_indexed",
+        "configuration": {
+            "chunk_shape": [1, th, tw],
+            "codecs": [
+                {"name": "bytes", "configuration": {"endian": "little"}},
+                {"name": "gzip", "configuration": {"level": 6}},
+            ],
+            "index_location": index_location,
+        },
+    }]
+    json.dump(doc, open(p, "w"))
+    return store
 
 
 class TestShardedStore:
-    def test_roundtrip_meta_and_file_count(self, spark, tmp_path):
-        """2x2-tile shards on the 2x2 grid: ONE object per species instead
-        of four, bit-identical pixels back, spec-shaped metadata."""
-        spec = spec_for_sf_dir(SF_DIR)
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        store = str(tmp_path / "s.zarr")
-        n = zarrstore.write_sharded_store(tiles, store, shard_tiles=(2, 2))
-        assert n == len(SPECIES)  # 4x fewer objects than chunks
-        doc = json.load(open(os.path.join(store, "biomass", "zarr.json")))
-        (shard_codec,) = doc["codecs"]
-        assert shard_codec["name"] == "sharding_indexed"
-        cfg = shard_codec["configuration"]
-        assert cfg["chunk_shape"] == [1, spec.tile_h, spec.tile_w]
-        assert cfg["index_location"] == "end"
-        assert [c["name"] for c in cfg["index_codecs"]] == ["bytes", "crc32c"]
-        assert doc["chunk_grid"]["configuration"]["chunk_shape"] == [
-            1, 2 * spec.tile_h, 2 * spec.tile_w,
-        ]
-        m = zarrstore.zarr_meta(store)
-        assert m.shard == [1, 2 * spec.tile_h, 2 * spec.tile_w]
-        assert m.chunks == [1, spec.tile_h, spec.tile_w]
-        assert m.compressor == "gzip"
-        back = zarrstore.read_zarr_store(spark, store)
-        orig = {
-            r.image_id: (r.vmin, r.vmax, r.vsum, r.npx)
-            for r in decode.decode_stats(tiles).collect()
-        }
-        got = {
-            r.image_id: (r.vmin, r.vmax, r.vsum, r.npx)
-            for r in decode.decode_stats(back).collect()
-        }
-        assert got == orig
-
-    def test_shard_object_readable_by_hand(self, spark, tmp_path):
-        """One shard object parsed with nothing but the spec: index footer
-        offsets -> gzip inner chunks -> exact generator pixels."""
-        import gzip
-
-        spec = spec_for_sf_dir(SF_DIR)
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        store = str(tmp_path / "h.zarr")
-        zarrstore.write_sharded_store(tiles, store, shard_tiles=(2, 2))
-        blob = open(os.path.join(store, "biomass", "c", "1", "0", "0"), "rb").read()
-        idx = sharding.parse_index(blob, 4, ("bytes", "crc32c"))
-        cube = pxgen.full_cube(spec)
-        th, tw = spec.tile_h, spec.tile_w
-        for i, (off, size) in enumerate(idx):
-            cy, cx = divmod(i, 2)
-            raw = gzip.decompress(blob[off : off + size])
-            arr = np.frombuffer(raw, dtype="<f4").reshape(th, tw)
-            ref = cube[1, cy * th : (cy + 1) * th, cx * tw : (cx + 1) * tw]
-            assert np.array_equal(arr, ref.astype(np.float32))
-
-    def test_species_pruning_lists_one_shard(self, spark, tmp_path):
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        store = str(tmp_path / "p.zarr")
-        zarrstore.write_sharded_store(tiles, store, shard_tiles=(2, 2))
-        one = zarrstore.read_zarr_store(spark, store, species=[3])
-        assert len(one.inputFiles()) == 1
-        rows = one.collect()
-        assert len(rows) == 4
-        code = SPECIES[3][0]
-        assert all(r.image_id.startswith(f"sp{code}") for r in rows)
-
-    def test_ragged_shard_grid_edge_shards_partial(self, spark, tmp_path):
-        """3x3 tile grid with 2x2 shards: 4 shard objects per species, edge
-        shards carry sentinel index entries, every tile comes back."""
-        spec = GridSpec(3, 3, 16, 16)
-        tiles = tgen.generate_tiles(spark, spec)
-        store = str(tmp_path / "r.zarr")
-        n = zarrstore.write_sharded_store(tiles, store, shard_tiles=(2, 2))
-        assert n == len(SPECIES) * 4
-        # corner shard holds only the single (2,2) tile
-        blob = open(os.path.join(store, "biomass", "c", "0", "1", "1"), "rb").read()
-        idx = sharding.parse_index(blob, 4, ("bytes", "crc32c"))
-        present = [i for i, (off, _) in enumerate(idx) if off != sharding.MAX_U64]
-        assert present == [0]
-        back = zarrstore.read_zarr_store(spark, store)
-        assert back.count() == len(SPECIES) * 9
-        orig = {
-            r.image_id: r.vsum for r in decode.decode_stats(tiles).collect()
-        }
-        got = {r.image_id: r.vsum for r in decode.decode_stats(back).collect()}
-        assert got == orig
-
-    def test_blosc_inner_codec(self, spark, tmp_path):
-        from gridfia_spark import blosc as B
-
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        store = str(tmp_path / "b.zarr")
-        zarrstore.write_sharded_store(
-            tiles, store, shard_tiles=(2, 2), codec="blosc"
-        )
-        m = zarrstore.zarr_meta(store)
-        assert m.compressor == "blosc" and m.shard is not None
-        # first inner chunk really is a c-blosc frame
-        blob = open(os.path.join(store, "biomass", "c", "0", "0", "0"), "rb").read()
-        (off, size) = sharding.parse_index(blob, 4, ("bytes", "crc32c"))[0]
-        hdr = blob[off : off + 16]
-        assert (hdr[2] >> 5) & 0x7 == B.CODEC_LZ4
-        back = zarrstore.read_zarr_store(spark, store)
-        orig = {
-            r.image_id: r.vsum for r in decode.decode_stats(tiles).collect()
-        }
-        got = {r.image_id: r.vsum for r in decode.decode_stats(back).collect()}
-        assert got == orig
-
-    def test_validate_store_sharded_census(self, spark, tmp_path):
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        store = str(tmp_path / "v.zarr")
-        zarrstore.write_sharded_store(tiles, store, shard_tiles=(2, 2))
-        info = zarrstore.validate_store(store)
-        assert info["valid"], info["errors"]
-        assert info["shard_chunks"] == (2, 2)
-        assert info["chunks_per_layer_expected"] == 1
-        assert info["chunks_per_layer_found"] == {s: 1 for s in range(len(SPECIES))}
-
-    def test_append_layer_on_sharded_store(self, spark, tmp_path):
+    def test_unsupported_layouts_refuse_loudly(self, spark, tmp_path):
+        """Metadata, scan and in-place append all refuse a sharded array,
+        whatever its index location, and the refused append writes no
+        chunk of the new layer."""
         from pyspark.sql import functions as F
 
         tiles = tgen.ensure_tiles(spark, SF_DIR)
         last_code, last_name = SPECIES[-1]
-        base = tiles.filter(~F.col("image_id").startswith(f"sp{last_code}"))
         extra = tiles.filter(F.col("image_id").startswith(f"sp{last_code}"))
-        store = str(tmp_path / "a.zarr")
-        zarrstore.write_sharded_store(base, store, shard_tiles=(2, 2))
-        idx = zarrstore.append_layer(extra, store, last_code, last_name)
-        assert idx == len(SPECIES) - 1
-        m = zarrstore.zarr_meta(store)
-        assert m.shape[0] == len(SPECIES) and m.shard is not None
-        assert m.attrs["species_codes"][-1] == last_code
-        back = zarrstore.read_zarr_store(spark, store)
-        orig = {
-            r.image_id: r.vsum for r in decode.decode_stats(tiles).collect()
-        }
-        got = {r.image_id: r.vsum for r in decode.decode_stats(back).collect()}
-        assert got == orig
+        for loc in ("end", "start"):
+            store = _sharded_store(spark, tmp_path, loc)
+            with pytest.raises(ValueError, match="must start with 'bytes'"):
+                zarrstore.zarr_meta(store)
+            with pytest.raises(ValueError, match="must start with 'bytes'"):
+                zarrstore.read_zarr_store(spark, store)
+            layers = sorted(os.listdir(os.path.join(store, "biomass", "c")))
+            with pytest.raises(ValueError, match="must start with 'bytes'"):
+                zarrstore.append_layer(extra, store, last_code, last_name)
+            assert sorted(os.listdir(os.path.join(store, "biomass", "c"))) == layers
 
-    def test_unsupported_layouts_refuse_loudly(self, spark, tmp_path):
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        with pytest.raises(ValueError, match="inner codec"):
-            zarrstore.write_sharded_store(
-                tiles, str(tmp_path / "x.zarr"), codec="zstd"
-            )
-        store = str(tmp_path / "y.zarr")
-        zarrstore.write_sharded_store(tiles, store, shard_tiles=(2, 2))
-        doc_path = os.path.join(store, "biomass", "zarr.json")
-        doc = json.load(open(doc_path))
-        doc["codecs"][0]["configuration"]["index_location"] = "start"
-        json.dump(doc, open(doc_path, "w"))
-        with pytest.raises(ValueError, match="index_location"):
-            zarrstore.zarr_meta(store)
-
-
-class TestShardWindow:
-    def test_window_partial_read_accounting(self, spark, tmp_path):
-        """A 1-tile window on a 2x2-sharded store reads exactly that
-        chunk's bytes (+footer) — never the sibling chunks."""
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        store = str(tmp_path / "w.zarr")
-        zarrstore.write_sharded_store(tiles, store, shard_tiles=(2, 2))
-        out = zarrstore.read_shard_window(
-            spark, store, (1, 1), (0, 0), include_read_bytes=True
-        )
-        rows = out.collect()
-        assert len(rows) == len(SPECIES)
-        assert all(r.image_id.endswith("tx001_ty000") for r in rows)
-        # per-row read_bytes equals the chunk's stored size from the index
-        blob = open(
-            os.path.join(store, "biomass", "c", "0", "0", "0"), "rb"
-        ).read()
-        idx = sharding.parse_index(blob, 4, ("bytes", "crc32c"))
-        row0 = next(r for r in rows if r.image_id.startswith("sp0000"))
-        assert row0.read_bytes == idx[1][1]  # inner (cy=0, cx=1)
-
-    def test_window_matches_full_scan_pixels(self, spark, tmp_path):
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        store = str(tmp_path / "w2.zarr")
-        zarrstore.write_sharded_store(tiles, store, shard_tiles=(2, 2))
-        win = zarrstore.read_shard_window(spark, store, (0, 1), (1, 1))
-        full = zarrstore.read_zarr_store(spark, store)
-        want = {
-            r.image_id: r.vsum
-            for r in decode.decode_stats(full).collect()
-            if "ty001" in r.image_id
-        }
-        got = {r.image_id: r.vsum for r in decode.decode_stats(win).collect()}
-        assert got == want and len(got) == len(SPECIES) * 2
-
-    def test_window_species_pruning_and_empty(self, spark, tmp_path):
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        store = str(tmp_path / "w3.zarr")
-        zarrstore.write_sharded_store(tiles, store, shard_tiles=(2, 2))
-        one = zarrstore.read_shard_window(
-            spark, store, (0, 0), (0, 0), species=[2]
-        )
-        rows = one.collect()
-        assert len(rows) == 1
-        assert rows[0].image_id.startswith(f"sp{SPECIES[2][0]}")
-        with pytest.raises(ValueError, match="empty window"):
-            zarrstore.read_shard_window(spark, store, (1, 0), (0, 0))
-
-    def test_window_requires_sharded_store(self, spark, tmp_path):
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        store = str(tmp_path / "flat.zarr")
-        zarrstore.write_zarr_store(tiles, store, zarr_format=3)
-        with pytest.raises(ValueError, match="sharding_indexed"):
-            zarrstore.read_shard_window(spark, store, (0, 0), (0, 0))
+    def test_validate_store_sharded_census(self, spark, tmp_path):
+        """validate_store reports a sharded array invalid with the codec
+        error and claims no chunk census for a layout it cannot read."""
+        store = _sharded_store(spark, tmp_path)
+        info = zarrstore.validate_store(store)
+        assert info["valid"] is False
+        assert any("must start with 'bytes'" in e for e in info["errors"])
+        assert "chunks_per_layer_found" not in info
+        assert "chunks_per_layer_expected" not in info

@@ -296,6 +296,26 @@ class TestZarrV3:
         json.dump(doc, open(p, "w"))
         with pytest.raises(ValueError, match="cname"):
             zarrstore.zarr_meta(store)
+        # a sharding_indexed array (many chunks per stored object) is
+        # outside the flat chunk layout the engine reads
+        _, th, tw = doc["chunk_grid"]["configuration"]["chunk_shape"]
+        doc["chunk_grid"]["configuration"]["chunk_shape"] = [1, 2 * th, 2 * tw]
+        doc["codecs"] = [{
+            "name": "sharding_indexed",
+            "configuration": {
+                "chunk_shape": [1, th, tw],
+                "codecs": [
+                    {"name": "bytes", "configuration": {"endian": "little"}},
+                    {"name": "gzip", "configuration": {"level": 6}},
+                ],
+            },
+        }]
+        json.dump(doc, open(p, "w"))
+        with pytest.raises(ValueError, match="must start with 'bytes'"):
+            zarrstore.zarr_meta(store)
+        info = zarrstore.validate_store(store)
+        assert info["valid"] is False
+        assert any("must start with 'bytes'" in e for e in info["errors"])
 
     def test_v2_consolidated_metadata(self, spark, tmp_path):
         """v2 stores carry .zmetadata (zarr_consolidated_format 1) whose
@@ -532,104 +552,3 @@ class TestLayerPruning:
             f"sp{SPECIES[2][0]}", f"sp{SPECIES[4][0]}"
         }
 
-
-class TestMultiscaleStore:
-    """write_multiscale_store: OME-NGFF-pattern pyramid group — every level
-    an ordinary Zarr array, level-k pixels exact block sums of level 0."""
-
-    @pytest.mark.parametrize("vfmt", [2, 3])
-    def test_auto_depth_roundtrip_and_attrs(self, spark, tmp_path, vfmt):
-        from gridfia_spark.constants import SPECIES, spec_for_sf_dir
-
-        spec = spec_for_sf_dir(SF_DIR)  # 2x2 tiles of 32x32
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        store = str(tmp_path / f"ms{vfmt}.zarr")
-        n = zarrstore.write_multiscale_store(
-            tiles, spec, store, zarr_format=vfmt
-        )
-        # auto depth stops at the single-tile level: levels 0 (4 chunks)
-        # and 1 (1 chunk) per species
-        assert n == len(SPECIES) * 5
-        # level 1 pixels are the exact 2x2 block sums of the full cube
-        back1 = zarrstore.read_zarr_store(spark, store, array="1")
-        got = {
-            r.image_id: codecs.decode(bytes(r.bytes), r.w, r.h, r.fmt)
-            for r in back1.collect()
-        }
-        cube = pxgen.full_cube(spec).astype(np.int64)
-        for s, (code, _) in enumerate(SPECIES):
-            a = cube[s]
-            ref = a.reshape(32, 2, 32, 2).sum(axis=(1, 3))
-            arr = got[f"sp{code}_tx000_ty000"]
-            assert arr.shape == (32, 32)
-            assert np.array_equal(arr.astype(np.int64), ref)
-        # multiscales document lives in the ROOT attrs next to the
-        # georeferencing keys, one dataset entry per level
-        attrs = zarrstore._read_root_attrs(store, vfmt)
-        assert "crs" in attrs and "transform" in attrs
-        ms = attrs["multiscales"][0]
-        assert [d["path"] for d in ms["datasets"]] == ["0", "1"]
-        scales = [
-            d["coordinateTransformations"][0]["scale"][1]
-            for d in ms["datasets"]
-        ]
-        assert scales == [30.0, 60.0]
-
-    def test_v2_consolidated_metadata_covers_all_levels(self, spark, tmp_path):
-        from gridfia_spark.constants import spec_for_sf_dir
-
-        spec = spec_for_sf_dir(SF_DIR)
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        store = str(tmp_path / "msc.zarr")
-        zarrstore.write_multiscale_store(tiles, spec, store, zarr_format=2)
-        meta = json.load(open(os.path.join(store, ".zmetadata")))["metadata"]
-        for p in ("0", "1"):
-            assert f"{p}/.zarray" in meta and f"{p}/.zattrs" in meta
-        assert "multiscales" in meta[".zattrs"]
-
-    def test_explicit_depth_shrinks_single_tile_and_apex_sum(
-        self, spark, tmp_path
-    ):
-        """n_levels past the single-tile collapse keeps halving the one
-        tile; every level's total equals the exact global sum."""
-        from gridfia_spark.constants import SPECIES, spec_for_sf_dir
-
-        spec = spec_for_sf_dir(SF_DIR)
-        tiles = tgen.ensure_tiles(spark, SF_DIR)
-        store = str(tmp_path / "msd.zarr")
-        n = zarrstore.write_multiscale_store(
-            tiles, spec, store, n_levels=3, zarr_format=2
-        )
-        assert n == len(SPECIES) * (4 + 1 + 1 + 1)
-        cube = pxgen.full_cube(spec).astype(np.int64)
-        back3 = zarrstore.read_zarr_store(spark, store, array="3")
-        rows = back3.collect()
-        assert all((r.w, r.h) == (8, 8) for r in rows)
-        for r in rows:
-            s = next(
-                i for i, (c, _) in enumerate(SPECIES)
-                if r.image_id.startswith(f"sp{c}")
-            )
-            arr = codecs.decode(bytes(r.bytes), r.w, r.h, r.fmt)
-            assert int(arr.astype(np.int64).sum()) == int(cube[s].sum())
-
-    def test_ragged_grid_stops_cleanly_and_explicit_depth_raises(
-        self, spark, tmp_path
-    ):
-        from gridfia_spark.constants import GridSpec, SPECIES
-
-        spec = GridSpec(3, 3, 32, 32)
-        tiles = tgen.generate_tiles(spark, spec)
-        store = str(tmp_path / "msr.zarr")
-        # auto depth: 3x3 has no uniform coarser level -> base level only
-        n = zarrstore.write_multiscale_store(
-            tiles, spec, store, zarr_format=2
-        )
-        assert n == len(SPECIES) * 9
-        attrs = zarrstore._read_root_attrs(store, 2)
-        assert [d["path"] for d in attrs["multiscales"][0]["datasets"]] == ["0"]
-        with pytest.raises(ValueError, match="ragged"):
-            zarrstore.write_multiscale_store(
-                tiles, spec, str(tmp_path / "msr2.zarr"), n_levels=2,
-                zarr_format=2,
-            )
