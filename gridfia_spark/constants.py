@@ -25,7 +25,6 @@ CRS = "ESRI:102039"
 X0 = -2_000_000.0  # west edge (m)
 Y0 = -900_000.0  # north edge (m)
 PIX = 30.0  # pixel size (m)
-AFFINE = (X0, PIX, 0.0, Y0, 0.0, -PIX)
 UNITS = "Mg/ha"
 
 # ---------------------------------------------------------------- species

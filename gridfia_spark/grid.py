@@ -5,8 +5,8 @@ library ships in this sandbox, so this module implements the same algorithmic
 role from scratch: a fixed global quadtree over the projected CRS plane with
 Morton (Z-order) int64 cell ids — functionally S2-style cells on a planar
 projection. Quad levels 12..18 bracket the H3 res 5..9 cell sizes
-(~9.8 km .. ~152 m edges); the engine's defaults below are chosen so a cell
-at JOIN_RES is about one tile and a cell at FINE_RES is a few pixels.
+(~9.8 km .. ~152 m edges); the engine's default JOIN_RES is chosen so a cell
+is about one tile.
 
 Cell id layout (int64): bits 58-62 = resolution (0..29), bits 0-57 = Morton
 interleave of (ix, iy), each up to 29 bits. All ops are vectorized numpy and
@@ -20,12 +20,8 @@ import numpy as np
 WORLD_X0 = -20_000_000.0  # west edge of the indexed plane (m)
 WORLD_Y0 = 20_000_000.0  # north edge (m); iy grows southward
 WORLD_SIZE = 40_000_000.0
-MAX_RES = 29
 
-# H3-analogue resolution band (quad levels; see module docstring).
-COARSE_RES = 12  # ~9.8 km cells   (≈ H3 res 5)
-JOIN_RES = 15  # ~1.2 km cells    (≈ H3 res 7) — default join resolution
-FINE_RES = 18  # ~152 m cells     (≈ H3 res 9) — pixel-block resolution
+JOIN_RES = 15  # ~1.2 km cells (≈ H3 res 7) — default join resolution
 
 
 def cell_size(res: int) -> float:

@@ -10,8 +10,9 @@ pixel mask (``geom.tile_mask``). Plans differ only in how pairs are found:
   driver, broadcast once per worker and probed inside the Arrow batch.
   ``assign_tiles_fast`` is map-only; ``zonal_stats_fast`` is one map pass of
   per-pair partials plus one tiny final aggregation (``final_zonal``).
-- the cell join ``spatial_join.join_tiles_polygons`` (large polygon side or
-  hot cells, picked by ``zonal.zonal_stats``) feeds the same kernel.
+- the in-cluster cell join ``spatial_join.join_tiles_polygons`` (more than
+  ``AUTO_DIST_THRESHOLD`` polygons, seen by ``zonal.zonal_stats`` in the
+  index's own bounded collect) feeds the same kernel.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from pyspark.sql import functions as F
 from .. import codecs, geom, grid
 from . import decode
 
-# PolygonIndex.build refuses more polygons; zonal_stats('auto') goes distributed
+# above this many polygons the spatial joins take the in-cluster cell join
 AUTO_DIST_THRESHOLD = 10_000  # driver covering is fine up to ~10^4 polygons
 
 
@@ -43,14 +44,25 @@ class PolygonIndex:
 
     @classmethod
     def build(cls, polygons: DataFrame, res: int) -> "PolygonIndex":
+        index = cls.build_bounded(polygons, res)
+        if index is None:
+            raise ValueError(
+                f"more than {AUTO_DIST_THRESHOLD} polygons for a driver index; "
+                "zonal.zonal_stats and spatial_join.join_points_polygons take "
+                "the in-cluster cell join for them"
+            )
+        return index
+
+    @classmethod
+    def build_bounded(cls, polygons: DataFrame, res: int) -> "PolygonIndex | None":
+        """The index, or None when the polygon side has more than
+        ``AUTO_DIST_THRESHOLD`` rows: one bounded collect both decides the
+        plan and feeds the index."""
         from .spatial_join import covering_at_res
 
         rows = polygons.select("poly_id", "geom_wkb").limit(AUTO_DIST_THRESHOLD + 1).collect()
         if len(rows) > AUTO_DIST_THRESHOLD:
-            raise ValueError(
-                f"more than {AUTO_DIST_THRESHOLD} polygons for a driver index; use "
-                "zonal_stats(distributed=True) or join_points_polygons(distributed=True)"
-            )
+            return None
         poly_ids, all_rings, bounds = [], [], []
         recs = []
         for pidx, r in enumerate(rows):
@@ -144,12 +156,13 @@ def assign_tiles_fast(
     return cols.mapInPandas(run, "poly_id string, image_id string")
 
 
-def _pair_values(pdf: pd.DataFrame, rows, keys, inside, rings):
-    """The pair kernel: yield ``(key, batch_row, vals)`` for the candidate
-    pairs ``zip(rows, keys, inside)`` of one Arrow batch. Sure pairs take the
-    whole tile; boundary pairs the pixels of their scanline mask over
-    ``rings[key]`` (dropped when empty). Each batch row is decoded once and
-    each (tx, ty, key) mask built once (shared by a tile's species rows)."""
+def _pair_masks(pdf: pd.DataFrame, rows, keys, inside, rings):
+    """The pair kernel: yield ``(key, batch_row, arr, mask)`` for the
+    candidate pairs ``zip(rows, keys, inside)`` of one Arrow batch. ``arr``
+    is the raveled float32 tile; ``mask`` is None for a sure pair (the whole
+    tile) and the scanline mask over ``rings[key]`` for a boundary pair
+    (dropped when empty). Each batch row is decoded once and each
+    (tx, ty, key) mask built once (shared by a tile's species rows)."""
     data = pdf["bytes"].to_numpy()
     fmts = pdf["fmt"].to_numpy()
     ws = pdf["w"].to_numpy()
@@ -165,24 +178,29 @@ def _pair_values(pdf: pd.DataFrame, rows, keys, inside, rings):
             # in float64 via dtype= (bit-identical to converting)
             arr = arrs[i] = codecs.decode(data[i], int(ws[i]), int(hs[i]), fmts[i]).ravel()
         if tile_inside:
-            vals = arr
-        else:
-            mkey = (int(txs[i]), int(tys[i]), key)
-            mask = masks.get(mkey)
-            if mask is None:
-                mask = masks[mkey] = geom.tile_mask(
-                    mkey[0], mkey[1], int(ws[i]), int(hs[i]), rings[key]
-                ).ravel()
-            if not mask.any():
-                continue
-            vals = arr[mask]
-        yield key, i, vals
+            yield key, i, arr, None
+            continue
+        mkey = (int(txs[i]), int(tys[i]), key)
+        mask = masks.get(mkey)
+        if mask is None:
+            mask = masks[mkey] = geom.tile_mask(
+                mkey[0], mkey[1], int(ws[i]), int(hs[i]), rings[key]
+            ).ravel()
+        if mask.any():
+            yield key, i, arr, mask
 
 
-def _iter_pair_values(pdf: pd.DataFrame, index: PolygonIndex):
-    """Index probe of one Arrow batch into the pair kernel (keys: ``pidx``)."""
+def _pair_values(pdf: pd.DataFrame, rows, keys, inside, rings):
+    """``(key, batch_row, vals)``: the pixels each pair of ``_pair_masks`` keeps."""
+    for key, i, arr, mask in _pair_masks(pdf, rows, keys, inside, rings):
+        yield key, i, (arr if mask is None else arr[mask])
+
+
+def _index_pairs(pdf: pd.DataFrame, index: PolygonIndex) -> tuple:
+    """Index probe of one Arrow batch: the pair kernel's arguments
+    ``(pdf, rows, keys, inside, rings)``, keyed by ``pidx``."""
     cand = index.candidates(*(pdf[c].to_numpy() for c in ("xmin", "ymin", "xmax", "ymax")))
-    return _pair_values(
+    return (
         pdf, cand["row"].tolist(), cand["pidx"].tolist(), cand["inside"].tolist(), index.rings
     )
 
@@ -227,7 +245,7 @@ def _zonal_partials(meta: DataFrame, index: PolygonIndex) -> DataFrame:
             s_col = pdf["s"].to_numpy()
             out = [
                 (index.poly_ids[pidx], int(s_col[i]), *pair_stats(vals))
-                for pidx, i, vals in _iter_pair_values(pdf, index)
+                for pidx, i, vals in _pair_values(*_index_pairs(pdf, index))
             ]
             if out:
                 yield pd.DataFrame(
@@ -258,7 +276,7 @@ def _zonal_hist_partials(meta: DataFrame, index: PolygonIndex) -> DataFrame:
                 continue
             s_col = pdf["s"].to_numpy()
             pids, ss, vv, cc = [], [], [], []
-            for pidx, i, vals in _iter_pair_values(pdf, index):
+            for pidx, i, vals in _pair_values(*_index_pairs(pdf, index)):
                 counts = np.bincount(vals.astype(np.int64))
                 nz = np.flatnonzero(counts)
                 pids.append(np.full(nz.size, index.poly_ids[pidx], dtype=object))

@@ -17,26 +17,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import codecs, grid
 from ..constants import PIX, SPECIES, X0, Y0
-
-
-def species_dim(spark: SparkSession) -> DataFrame:
-    """Species metadata dimension — the Spark analogue of the species_codes /
-    species_names sidecar arrays (zarr_utils.py:950-962). Tiny; broadcast.
-    Built as a LocalTableScan (localdf) — this dimension is broadcast-joined
-    in every tile query, so a Python-RDD-backed relation would re-run a
-    32-task wave per query just to build the 6-row broadcast."""
-    from ..localdf import local_df
-
-    return local_df(
-        spark,
-        [(i, c, n) for i, (c, n) in enumerate(SPECIES)],
-        "s int, code string, name string",
-    )
 
 
 def with_tile_meta(tiles: DataFrame) -> DataFrame:

@@ -9,7 +9,10 @@ Completeness guarantee: a ring of radius R around a point's cell contains
 every point within euclidean distance R*cell_size. The driver loop doubles R
 until the observed kth-neighbor distance of every query satisfies
 d_k < R*cell_size (usually one iteration) — so results are provably exact,
-never approximate.
+never approximate. The first R comes from the data: one aggregation over
+the targets (count and extent) gives their density; no caller passes
+statistics. Only a self-join (``queries is targets``) drops a neighbor by
+id (the point itself).
 
 Scale notes: ring explosion is (2R+1)^2 rows per query — at R=1 a 9x
 amplification of the (small) query side only; the build side shuffles once on
@@ -63,24 +66,21 @@ def knn_join(
     targets: DataFrame,
     k: int = 5,
     res: int = grid.JOIN_RES,
-    init_radius: int = 1,
     max_radius: int = 64,
-    exclude_self: bool = True,
-    target_stats: tuple | None = None,
 ) -> DataFrame:
     """Exact k-nearest-neighbors of each query point among targets.
 
     Inputs need columns (point_id, x, y). Output:
     (point_id, rank, neighbor_id, dist_sq), rank 1..k ordered by
-    (dist_sq, neighbor_id).
+    (dist_sq, neighbor_id). A self-join (``queries is targets``) excludes
+    each point itself; two distinct tables keep every target, including
+    one that shares a query's ``point_id``.
 
-    ``target_stats``: optional ``(n_targets, xmin, xmax, ymin, ymax)`` when
-    the caller already knows them (table spec, manifest) — skips the
-    aggregation job otherwise used to size the first ring radius. The stats
-    only steer the radius ESTIMATE: the query count that ends the proof loop
-    is always counted from the data, so a wrong caller stat can cost extra
-    iterations but never change the result.
+    The first ring radius is sized from one aggregation over the targets
+    (count and extent). The estimate only steers the first radius: the
+    query count that ends the proof loop is counted from the data too.
     """
+    self_join = queries is targets
     q = queries.select("point_id", "x", "y")
     t = _with_cell(targets.select("point_id", "x", "y"), res).select(
         F.col("point_id").alias("neighbor_id"),
@@ -98,35 +98,28 @@ def knn_join(
     # makes the first iteration the accepted one in practice; the
     # radius-doubling proof loop below is unchanged, so results stay exact
     # even when the estimate is off (clustered or adversarial layouts).
-    if target_stats is not None:
-        n_t, x0, x1, y0, y1 = target_stats
-        n_queries = q.count()
-    else:
-        tstats = t.agg(
-            F.count("*").alias("n"),
-            F.min("nx").alias("x0"),
-            F.max("nx").alias("x1"),
-            F.min("ny").alias("y0"),
-            F.max("ny").alias("y1"),
-        ).first()
-        n_t, x0, x1, y0, y1 = (
-            int(tstats.n), tstats.x0, tstats.x1, tstats.y0, tstats.y1
-        )
-        n_queries = n_t if queries is targets else q.count()
-    if n_t and x0 is not None:
-        area = max(x1 - x0, cs) * max(y1 - y0, cs)
+    tstats = t.agg(
+        F.count("*").alias("n"),
+        F.min("nx").alias("x0"),
+        F.max("nx").alias("x1"),
+        F.min("ny").alias("y0"),
+        F.max("ny").alias("y1"),
+    ).first()
+    n_t = int(tstats.n)
+    n_queries = n_t if self_join else q.count()
+    est = 1
+    if n_t and tstats.x0 is not None:
+        area = max(tstats.x1 - tstats.x0, cs) * max(tstats.y1 - tstats.y0, cs)
         lam = n_t / area  # targets per m^2
         d_k = math.sqrt((k + 1) / (math.pi * lam))
-        est = max(init_radius, math.ceil(2.0 * d_k / cs))
-    else:
-        est = init_radius
+        est = max(1, math.ceil(2.0 * d_k / cs))
     radius = min(est, max_radius)
     qleft = q  # queries whose top-k is not yet PROVEN complete
     n_left = n_queries
     done: list[DataFrame] = []  # proven per-query top-k pieces
     while radius <= max_radius:
         cand = _ring_explode_xy(qleft, res, radius).join(t, "probe_cell")
-        if exclude_self:
+        if self_join:
             cand = cand.filter(F.col("point_id") != F.col("neighbor_id"))
         dx = F.col("x") - F.col("nx")
         dy = F.col("y") - F.col("ny")

@@ -4,11 +4,10 @@ metadata, processed by Arrow-batched UDFs.
 The Spark-side machinery (schemas, partitioning, UDF signatures, batch
 shapes) is real and tested. PNG is a REAL codec (pure numpy+zlib,
 gridfia_spark/png.py — 8-bit gray/RGB/RGBA, all five scanline filters), and
-so are WAV (pure numpy+struct RIFF/PCM16, gridfia_spark/wav.py), baseline
-JPEG (pure numpy DCT+Huffman, gridfia_spark/jpeg.py — the lossy format
-behind the PSNR>=40dB row contract), WebP-lossless (gridfia_spark/vp8l.py)
-and GeoTIFF (gridfia_spark/tiff.py); video rows use the 'pngseq'
-intra-frame container. Formats that need an external library (mp3/h264)
+so are baseline JPEG (pure numpy DCT+Huffman, gridfia_spark/jpeg.py — the
+lossy format behind the PSNR>=40dB row contract), WebP-lossless
+(gridfia_spark/vp8l.py) and GeoTIFF (gridfia_spark/tiff.py). Formats that
+need an external library (mp3/h264)
 stay STUBBED behind ``NotImplementedError`` — plug one in with
 ``register_decoder`` and everything else works unchanged. The engine's own
 raster codecs double as the working "image" format, and a deterministic
@@ -47,18 +46,6 @@ def _png_decoder(data: bytes, w: int, h: int) -> np.ndarray:
         rgb = arr[..., :3].astype(np.float32)
         return rgb[..., 0] * 0.299 + rgb[..., 1] * 0.587 + rgb[..., 2] * 0.114
     return arr.astype(np.float32)
-
-
-def _wav_decoder(data: bytes, w: int, h: int) -> np.ndarray:
-    """Built-in pure-python WAV decode -> (1, n) float32 mono waveform
-    (multi-channel mixes down by mean; w is n_samples, h is 1 in the media
-    schema convention for audio rows)."""
-    from .. import wav
-
-    arr, _rate = wav.decode_wav(data)
-    if w and arr.shape[0] != w:
-        raise ValueError(f"WAV has {arr.shape[0]} samples != metadata w={w}")
-    return arr.astype(np.float32).mean(axis=1)[None, :]
 
 
 def _jpeg_decoder(data: bytes, w: int, h: int) -> np.ndarray:
@@ -104,7 +91,6 @@ def _tiff_decoder(data: bytes, w: int, h: int) -> np.ndarray:
 
 _DEFAULT_DECODERS: dict[str, Callable[[bytes, int, int], np.ndarray]] = {
     "png": _png_decoder,
-    "wav": _wav_decoder,
     "jpeg": _jpeg_decoder,
     "webp": _webp_decoder,
     "tiff": _tiff_decoder,
@@ -151,7 +137,7 @@ def _decode_media(
     if fmt in ("mp3", "h264"):
         # permanent documented scope boundary: perceptual audio / motion
         # video entropy stacks stay external — register a real decoder
-        # (ffmpeg et al.) via multimodal.register_decoder. png/jpeg/wav/webp
+        # (ffmpeg et al.) via multimodal.register_decoder. png/jpeg/webp/tiff
         # are built-in pure-numpy codecs.
         raise NotImplementedError(
             f"media codec {fmt!r} needs an external library (ffmpeg); "
@@ -237,92 +223,4 @@ def resize(
 
     return media.mapInPandas(
         run, "media_id string, bytes binary, w int, h int, fmt string"
-    )
-
-
-def encode_pngseq(frames: list[np.ndarray]) -> bytes:
-    """Pack uint8 frames into the 'pngseq' video container: ``b'PSEQ'`` +
-    u32 n_frames, then per frame u32 length + genuine PNG bytes
-    (gridfia_spark/png.py). The MJPEG pattern — independently-decodable
-    intra frames — which is exactly what a frame-sampling pipeline wants:
-    every k-th frame decodes without touching the others."""
-    import struct
-
-    from .. import png
-
-    payload = [b"PSEQ", struct.pack("<I", len(frames))]
-    for f in frames:
-        data = png.encode_png(np.asarray(f, dtype=np.uint8))
-        payload.append(struct.pack("<I", len(data)))
-        payload.append(data)
-    return b"".join(payload)
-
-
-def split_pngseq(data: bytes) -> list[bytes]:
-    """Split a 'pngseq' container into its per-frame PNG byte strings
-    WITHOUT decoding them — the cheap seek path frame sampling relies on."""
-    import struct
-
-    if data[:4] != b"PSEQ":
-        raise ValueError("not a pngseq container")
-    (n,) = struct.unpack("<I", data[4:8])
-    pos, out = 8, []
-    for _ in range(n):
-        if pos + 4 > len(data):
-            raise ValueError("truncated pngseq container (frame header)")
-        (size,) = struct.unpack("<I", data[pos : pos + 4])
-        if pos + 4 + size > len(data):
-            raise ValueError("truncated pngseq container (frame body)")
-        out.append(data[pos + 4 : pos + 4 + size])
-        pos += 4 + size
-    if pos != len(data):
-        raise ValueError("trailing bytes after last pngseq frame")
-    return out
-
-
-def sample_frames(media: DataFrame, every_k: int = 2, fmt: str = "raw32") -> DataFrame:
-    """Frame sampling for 'video' rows: emit every k-th frame as its own
-    image row (explode pattern). Container dispatch on the row's ``fmt``:
-    'pngseq' rows split into genuine PNG frames (decoded through the
-    registry's built-in png codec, skipping unsampled frames entirely);
-    anything else holds n_frames stacked raw32 frames."""
-    decs = dict(_MEDIA_DECODERS)  # snapshot: registrations ride the closure
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                n = int(r.n_frames)
-                w, h = int(r.w), int(r.h)
-                if r.fmt == "pngseq":
-                    raw = split_pngseq(bytes(r.bytes))
-                    if len(raw) != n:
-                        raise ValueError(
-                            f"pngseq has {len(raw)} frames != metadata {n}"
-                        )
-                    frames = None
-                else:
-                    frames = np.frombuffer(r.bytes, dtype="<f4").reshape(n, h, w)
-                for fi in range(0, n, every_k):
-                    frame = (
-                        _decode_media(raw[fi], "png", w, h, decs)
-                        if frames is None
-                        else frames[fi]
-                    )
-                    out.append(
-                        (
-                            f"{r.media_id}_f{fi:04d}",
-                            codecs.encode(frame, fmt),
-                            w,
-                            h,
-                            fmt,
-                            fi,
-                        )
-                    )
-            yield pd.DataFrame(
-                out, columns=["media_id", "bytes", "w", "h", "fmt", "frame_idx"]
-            )
-
-    return media.filter("media_type = 'video'").mapInPandas(
-        run, "media_id string, bytes binary, w int, h int, fmt string, frame_idx int"
     )

@@ -2,18 +2,25 @@
 
 Both sides are indexed into the same single-resolution cell grid (the
 H3-polyfill analogue): polygons -> covering cells ``(poly_id, cell_id,
-fully_inside)`` by one kernel (``covering_at_res``) run on the driver
-(``polygon_cells_df``) or in-cluster (``polygon_cells_dist``); probes
-(points or tiles) -> their cell id(s) at the same resolution.
+fully_inside)`` by one kernel (``covering_at_res``), run on the driver
+inside ``broadcast_join.PolygonIndex`` or in-cluster by
+``polygon_cells_dist``; probes (points or tiles) -> their cell id(s) at the
+same resolution.
 
-- ``join_points_polygons``: by default one map-only pass over a broadcast
-  ``broadcast_join.PolygonIndex`` (cell probe, fully-inside fast path,
-  vectorized ray casting); ``distributed=True`` equi-joins an in-cluster
-  covering on ``cell_id`` and ray-casts only cells not fully inside.
+The plan comes from the polygon side, never from a flag: the one bounded
+collect of ``PolygonIndex.build_bounded`` either returns at most
+``AUTO_DIST_THRESHOLD`` polygons, which become the driver index (the
+reference holds its boundaries in memory, boundaries.py:30-49), or shows
+the side is larger, which takes the in-cluster cell join.
+
+- ``join_points_polygons``: one map-only pass over the broadcast index
+  (cell probe, fully-inside fast path, vectorized ray casting), or an
+  equi-join of the in-cluster covering on ``cell_id`` that ray-casts only
+  cells not fully inside.
 - ``join_tiles_polygons``: candidate (tile, polygon) pairs with
-  ``tile_inside`` for the cell-join zonal plans (``zonal.zonal_stats`` with
-  ``distributed=True`` / ``salted=True``), whose pixels then go through the
-  one pair kernel in ``broadcast_join``.
+  ``tile_inside`` from the in-cluster covering, for
+  ``zonal.zonal_stats_dist``, whose pixels then go through the one pair
+  kernel in ``broadcast_join``; ``salted=True`` spreads hot cells.
 
 Tile assignment has one implementation: ``broadcast_join.assign_tiles_fast``.
 """
@@ -24,7 +31,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import geom, grid
@@ -61,36 +68,12 @@ def covering_at_res(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.n
     return np.concatenate(out_cells), np.concatenate(out_full)
 
 
-def polygon_cells_df(
-    spark: SparkSession, polygons: DataFrame, res: int = grid.JOIN_RES
-) -> DataFrame:
-    """Single-resolution covering cells per polygon, built on the driver.
-
-    Right plan when the polygon dimension is small (boundaries:
-    states/counties) — the same place the reference holds its GeoDataFrame
-    in memory (boundaries.py:30-49). For a LARGE polygon side use
-    ``polygon_cells_dist``: the identical kernel inside ``mapInPandas``.
-    """
-    from ..localdf import local_df
-
-    rows = []
-    for r in polygons.select("poly_id", "geom_wkb").collect():
-        rings = geom.wkb_to_polygon(bytes(r.geom_wkb))
-        cells, full = covering_at_res(rings, res)
-        rows.extend(
-            (r.poly_id, int(c), bool(f)) for c, f in zip(cells.tolist(), full.tolist())
-        )
-    return local_df(
-        spark, rows, "poly_id string, cell_id long, fully_inside boolean"
-    )
-
-
 def polygon_cells_dist(polygons: DataFrame, res: int = grid.JOIN_RES) -> DataFrame:
     """Distributed covering: the identical covering kernel runs inside
     ``mapInPandas`` over the polygon table — the scale path when the polygon
     side is itself large (millions of polygons), where a driver-side
     covering + collect would bottleneck. One row per (poly_id, cell_id);
-    tested equal to the driver-side covering."""
+    tested equal to ``PolygonIndex.cell_to_poly``."""
     cols = polygons.select("poly_id", "geom_wkb")
 
     def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -152,19 +135,20 @@ def _pip_refine(cand: DataFrame, polygons: DataFrame) -> DataFrame:
 
 
 def join_points_polygons(
-    points: DataFrame,
-    polygons: DataFrame,
-    res: int = grid.JOIN_RES,
-    distributed: bool = False,
+    points: DataFrame, polygons: DataFrame, res: int = grid.JOIN_RES
 ) -> DataFrame:
     """Inner spatial join point-in-polygon -> (point columns..., poly_id).
 
     Semantics match gpd.sjoin(..., predicate='intersects') for points
-    (parallel_processing.py:90-91). ``distributed=True`` computes the
-    polygon covering inside the cluster (polygon_cells_dist) and lets AQE
-    pick the join strategy — the plan for a large polygon side."""
-    spark = points.sparkSession
-    if distributed:
+    (parallel_processing.py:90-91). Up to ``AUTO_DIST_THRESHOLD`` polygons
+    the join is ONE map-only pass over a broadcast ``PolygonIndex``: cell
+    probe, fully-inside fast path and ray-cast refinement all happen on
+    numpy inside one batch pass. Above it the covering is computed in the
+    cluster (polygon_cells_dist) and equi-joined on ``cell_id``."""
+    from .broadcast_join import PolygonIndex
+
+    index = PolygonIndex.build_bounded(polygons, res)
+    if index is None:
         cells = polygon_cells_dist(polygons, res)
         pts = with_point_cells(points, res)
         # large-polygon-side plan: never broadcast the covering (guide §3.1)
@@ -172,15 +156,10 @@ def join_points_polygons(
         sure = cand.filter(F.col("fully_inside")).drop("fully_inside", "cell_id")
         maybe = cand.filter(~F.col("fully_inside")).drop("fully_inside", "cell_id")
         return sure.unionByName(_pip_refine(maybe, polygons))
-    # Small polygon side: ONE map-only pass over a broadcast covering index
-    # (broadcast_join.PolygonIndex): cell probe, fully-inside fast path and
-    # ray-cast refinement all happen on numpy inside one batch pass.
+
     from pyspark.sql.types import StringType, StructField, StructType
 
-    from .broadcast_join import PolygonIndex
-
-    index = PolygonIndex.build(polygons, res)
-    bc = spark.sparkContext.broadcast(index)
+    bc = points.sparkSession.sparkContext.broadcast(index)
     in_cols = [f.name for f in points.schema.fields]
     out_schema = StructType(
         points.schema.fields + [StructField("poly_id", StringType())]
@@ -224,29 +203,23 @@ def join_tiles_polygons(
     tiles_meta: DataFrame,
     polygons: DataFrame,
     res: int = grid.JOIN_RES,
-    distributed: bool = False,
     salted: bool = False,
-    salt_k: int = 8,
     salt_threshold: int = 64,
 ) -> DataFrame:
-    """Candidate tile×polygon pairs via the cell-prefix join.
+    """Candidate tile×polygon pairs via the cell-prefix join against the
+    in-cluster covering (``polygon_cells_dist``).
 
     Returns one row per (image_id, poly_id) with ``tile_inside`` = the whole
     tile is provably inside the polygon (every covering cell of the tile is a
     fully-inside polygon cell) — pairs with ``tile_inside`` skip per-pixel PIP
     in zonal aggregation. Candidate pairs where only boundary cells touch are
     a superset; exact per-pixel refinement happens downstream.
-    ``distributed=True`` builds the covering in-cluster (large polygon side).
     ``salted=True`` routes the cell equi-join through skew.salted_join: cells
     holding more than ``salt_threshold`` tile rows (dense urban clusters /
-    a polygon covering most of the raster) are spread over ``salt_k``
-    reducers — identical rows, no hot-key straggler.
+    a polygon covering most of the raster) are spread over the salts —
+    identical rows, no hot-key straggler.
     """
-    spark = tiles_meta.sparkSession
-    if distributed:
-        pcells = polygon_cells_dist(polygons, res)
-    else:
-        pcells = polygon_cells_df(spark, polygons, res)
+    pcells = polygon_cells_dist(polygons, res)
     # n_tile_cells rides along as a column (no extra shuffle for the count)
     tcells = decode.with_tile_cells(tiles_meta, res).select(
         "image_id", "cell_id", "n_tile_cells", "xmin", "ymin", "xmax", "ymax"
@@ -254,17 +227,12 @@ def join_tiles_polygons(
     if salted:
         from . import skew
 
-        j = skew.salted_join(
-            tcells, pcells, on="cell_id", k=salt_k, threshold=salt_threshold
-        )
+        j = skew.salted_join(tcells, pcells, on="cell_id", threshold=salt_threshold)
     else:
-        # distributed path: the covering frame is O(polygons x cells) — pin
-        # shuffle_hash so a small local fixture's size estimate can never
-        # flip the scale plan to a broadcast (guide §3.1)
-        j = tcells.join(
-            pcells.hint("shuffle_hash") if distributed else F.broadcast(pcells),
-            "cell_id",
-        )
+        # the covering frame is O(polygons x cells) — pin shuffle_hash so a
+        # small local fixture's size estimate can never flip the scale plan
+        # to a broadcast (guide §3.1)
+        j = tcells.join(pcells.hint("shuffle_hash"), "cell_id")
     agg = j.groupBy("image_id", "poly_id").agg(
         F.count("*").alias("n_hit"),
         F.min(F.col("fully_inside").cast("int")).alias("all_full"),

@@ -239,7 +239,7 @@ def warp_tiles_bilinear(
 
     The output tile table carries the NUMERATOR raster (lossless in
     float32 while ``num < 2^24``; the denominator is the constant
-    ``warp_bilinear_den``), which keeps the whole operator — weights,
+    ``den_x * den_y``), which keeps the whole operator — weights,
     taps, seams — bit-checkable by an integer oracle; divide by the
     constant for the conventional float raster. Taps clamp to the grid
     edge (GDAL edge convention).
@@ -383,11 +383,6 @@ def warp_tiles_bilinear(
     return packed.groupBy("s", "tty", "ttx").applyInPandas(
         phase2, TILE_SCHEMA
     )
-
-
-def warp_bilinear_den(map_x, map_y) -> int:
-    """The constant denominator of ``warp_tiles_bilinear`` numerators."""
-    return int(map_x[1]) * int(map_y[1])
 
 
 def warp_affine(

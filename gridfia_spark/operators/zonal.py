@@ -5,10 +5,13 @@ inside the polygon — the distributed recast of GridFIA's "summarize biomass by
 county" workflow (spatial join at parallel_processing.py:90 + stats like
 species_presence.py:92-125).
 
-``zonal_stats`` only picks the plan that finds candidate (tile, polygon)
-pairs: the driver index (``broadcast_join.zonal_stats_fast``) for a small
-polygon side, or the cell join (``spatial_join.join_tiles_polygons``) with
-``distributed=True`` / ``salted=True``. Every plan runs the one pair kernel
+``zonal_stats`` picks the plan that finds candidate (tile, polygon) pairs
+from the polygon side itself: the one bounded collect of
+``PolygonIndex.build_bounded`` either yields the driver index
+(``broadcast_join.zonal_stats_fast``, up to ``AUTO_DIST_THRESHOLD``
+polygons) or shows a larger side, which takes the in-cluster cell join
+(``zonal_stats_dist`` over ``spatial_join.join_tiles_polygons``; its
+``salted=True`` spreads hot cells). Every plan runs the one pair kernel
 (``broadcast_join._pair_values``) and final aggregation (``final_zonal``).
 
 Per-pair partials keep the shuffle O(pairs), not O(pixels), and make float
@@ -26,72 +29,60 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import codecs, geom
+from .. import codecs, geom, grid
 from . import broadcast_join, decode, spatial_join
 
 
 def clip_to_polygon(
-    tiles: DataFrame,
-    polygons: DataFrame,
-    poly_id: str,
-    species: int = 0,
-    res: int | None = None,
-    fmt: str = "rawz",
+    tiles: DataFrame, polygons: DataFrame, poly_id: str, species: int = 0
 ) -> DataFrame:
     """Boundary clip (SURVEY J3, boundaries.py:392-425 recast): zero out
-    pixels outside the polygon and re-encode — returns tile rows covering
-    the polygon only (tiles with no overlap are dropped)."""
-    from .. import grid as _grid
-    from ..constants import caption as mk_caption
+    pixels outside the polygon and re-encode as ``rawz`` — returns tile rows
+    covering the polygon only (tiles with no overlap are dropped).
 
-    res = res if res is not None else _grid.JOIN_RES
+    One map pass, no shuffle: each Arrow batch probes the driver index of
+    the one polygon, and boundary tiles take the pair kernel's mask."""
+    from ..constants import caption as mk_caption
+    from ..datagen import pixels as pxgen
+    from ..datagen.tiles import TILE_SCHEMA
+
     one = polygons.filter(F.col("poly_id") == poly_id)
-    meta = decode.with_tile_meta(tiles).filter(F.col("s") == species)
-    cand = spatial_join.join_tiles_polygons(meta, one, res)
-    pairs = meta.select(
-        "image_id", "bytes", "w", "h", "fmt", "code", "name", "tx", "ty"
-    ).join(F.broadcast(cand.select("image_id", "tile_inside")), "image_id").join(
-        F.broadcast(one.select("geom_wkb")),
-        F.lit(True),
+    bc = tiles.sparkSession.sparkContext.broadcast(
+        broadcast_join.PolygonIndex.build(one, grid.JOIN_RES)
+    )
+    meta = decode.with_tile_meta(tiles).filter(F.col("s") == species).select(
+        "image_id", "bytes", "w", "h", "fmt", "code", "name", "tx", "ty",
+        "xmin", "ymin", "xmax", "ymax",
     )
 
     def clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        index = bc.value
         for pdf in batches:
-            out = {k: [] for k in ("image_id", "bytes", "w", "h", "fmt", "caption", "phash")}
-            for row in pdf.itertuples(index=False):
-                arr = codecs.decode(row.bytes, row.w, row.h, row.fmt)
-                if not row.tile_inside:
-                    rings = geom.wkb_to_polygon(bytes(row.geom_wkb))
-                    mask = geom.tile_mask(row.tx, row.ty, row.w, row.h, rings)
-                    if not mask.any():
-                        continue  # cell-candidate false positive: no overlap
-                    arr = np.where(mask, arr, 0.0).astype(np.float32)
-                from ..datagen import pixels as pxgen
-
-                out["image_id"].append(row.image_id)
-                out["bytes"].append(codecs.encode(arr, fmt))
-                out["w"].append(row.w)
-                out["h"].append(row.h)
-                out["fmt"].append(fmt)
-                out["caption"].append(mk_caption(row.code, row.name, row.tx, row.ty))
-                out["phash"].append(pxgen.phash64(arr))
+            if pdf.empty:
+                continue
+            out = {k: [] for k in TILE_SCHEMA.names}
+            for _, i, arr, mask in broadcast_join._pair_masks(
+                *broadcast_join._index_pairs(pdf, index)
+            ):
+                r = pdf.iloc[i]
+                h, w = int(r.h), int(r.w)
+                px = arr if mask is None else np.where(mask, arr, np.float32(0))
+                px = px.reshape(h, w)
+                out["image_id"].append(r.image_id)
+                out["bytes"].append(codecs.encode(px, "rawz"))
+                out["w"].append(w)
+                out["h"].append(h)
+                out["fmt"].append("rawz")
+                out["caption"].append(mk_caption(r.code, r.name, int(r.tx), int(r.ty)))
+                out["phash"].append(pxgen.phash64(px))
             if out["image_id"]:
                 yield pd.DataFrame(out)
 
-    from ..datagen.tiles import TILE_SCHEMA
-
-    return pairs.mapInPandas(clip, TILE_SCHEMA)
+    return meta.mapInPandas(clip, TILE_SCHEMA)
 
 
 def zonal_stats(
-    tiles: DataFrame,
-    polygons: DataFrame,
-    species: int = 0,
-    res: int | None = None,
-    distributed: bool | str = "auto",
-    salted: bool = False,
-    salt_k: int = 8,
-    salt_threshold: int = 64,
+    tiles: DataFrame, polygons: DataFrame, species: int = 0, res: int | None = None
 ) -> DataFrame:
     """Per-polygon (poly_id) stats of one species layer:
     n_px, sum_v, mean_v, max_v, nonzero_px.
@@ -99,56 +90,50 @@ def zonal_stats(
     Pixel membership: pixel-center-in-polygon (exact; centers never sit on
     fixture boundaries). Pixels with value 0 count toward n_px but not
     nonzero_px — matching the reference's coverage stats
-    (species_presence.py:92-125). ``distributed=True`` computes the polygon
-    covering in-cluster (the large-polygon-side plan); ``'auto'`` (default)
-    counts the polygon side — one cheap job against a dimension table —
-    and picks the driver index (``broadcast_join.zonal_stats_fast``) up to
-    ``AUTO_DIST_THRESHOLD`` polygons, the in-cluster covering above it (the
-    choice Iceberg table stats would make for free on the cluster).
-    ``salted=True`` routes the candidate cell join through the explicit
-    hot-key salting path (operators/skew.py) — the plan for a polygon that
-    covers most of the raster."""
-    from .. import grid
-
+    (species_presence.py:92-125). Up to ``AUTO_DIST_THRESHOLD`` polygons
+    the driver index (``broadcast_join.zonal_stats_fast``) finds the pairs;
+    above it ``zonal_stats_dist`` computes the covering in-cluster. The
+    bounded collect that builds the index is the only job run here."""
     res = res if res is not None else grid.JOIN_RES
-    if distributed == "auto":
-        distributed = polygons.count() > broadcast_join.AUTO_DIST_THRESHOLD
-    if not (distributed or salted):
-        return broadcast_join.zonal_stats_fast(tiles, polygons, species, res)
+    index = broadcast_join.PolygonIndex.build_bounded(polygons, res)
+    if index is None:
+        return zonal_stats_dist(tiles, polygons, species, res)
+    return broadcast_join.zonal_stats_fast(tiles, polygons, species, res, index=index)
+
+
+def zonal_stats_dist(
+    tiles: DataFrame,
+    polygons: DataFrame,
+    species: int = 0,
+    res: int = grid.JOIN_RES,
+    salted: bool = False,
+    salt_threshold: int = 64,
+) -> DataFrame:
+    """``zonal_stats`` for a large polygon side: the covering is computed
+    in-cluster and equi-joined with the tile cells
+    (``spatial_join.join_tiles_polygons``; ``salted=True`` spreads cells
+    holding more than ``salt_threshold`` tile rows over salts — the plan
+    for a polygon that covers most of the raster). No frame keyed on tiles
+    or polygons is broadcast."""
     meta = decode.with_tile_meta(tiles).filter(F.col("s") == species)
     cand = spatial_join.join_tiles_polygons(
-        meta,
-        polygons,
-        res,
-        distributed=distributed,
-        salted=salted,
-        salt_k=salt_k,
-        salt_threshold=salt_threshold,
+        meta, polygons, res, salted=salted, salt_threshold=salt_threshold
     )
     meta_sel = meta.select("image_id", "bytes", "w", "h", "fmt", "tx", "ty")
-    if distributed:
-        # Large-polygon-side plan: cand is O(tiles x overlapping polys) and the
-        # WKB frame is O(polygons) — force-broadcasting either is an executor
-        # OOM at scale. Attach WKB to the candidate pairs first (a pair-sized
-        # shuffle that never touches tile bytes), then meet the tile table in
-        # ONE shuffle-hash join on image_id: the hash table is built from the
-        # pair side, the byte-carrying tile rows stream through without ever
-        # being sorted, and AQE (on in session.py) splits any skewed cell.
-        # shuffle_hash hints on BOTH joins: the O(polygons) WKB frame and
-        # the O(pairs) candidate frame must never be broadcast (executor
-        # OOM at scale) even when local fixtures make their size estimates
-        # tiny — pick the strategy deliberately (guide §3.1)
-        cand_w = cand.join(
-            polygons.select("poly_id", "geom_wkb").hint("shuffle_hash"),
-            "poly_id",
-        )
-        pairs = meta_sel.join(cand_w.hint("shuffle_hash"), "image_id")
-    else:
-        # salted driver-covering path: cand and the polygon dim are tiny —
-        # broadcast both so tile bytes never shuffle
-        pairs = meta_sel.join(F.broadcast(cand), "image_id").join(
-            F.broadcast(polygons.select("poly_id", "geom_wkb")), "poly_id"
-        )
+    # cand is O(tiles x overlapping polys) and the WKB frame is O(polygons) —
+    # force-broadcasting either is an executor OOM at scale. Attach WKB to
+    # the candidate pairs first (a pair-sized shuffle that never touches tile
+    # bytes), then meet the tile table in ONE shuffle-hash join on image_id:
+    # the hash table is built from the pair side, the byte-carrying tile rows
+    # stream through without ever being sorted, and AQE (on in session.py)
+    # splits any skewed cell. shuffle_hash hints on BOTH joins: the frames
+    # must never be broadcast even when local fixtures make their size
+    # estimates tiny — pick the strategy deliberately (guide §3.1)
+    cand_w = cand.join(
+        polygons.select("poly_id", "geom_wkb").hint("shuffle_hash"),
+        "poly_id",
+    )
+    pairs = meta_sel.join(cand_w.hint("shuffle_hash"), "image_id")
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -238,21 +238,10 @@ FROM d WHERE rank <= 5"""
 
 @q("knn_points", _o_knn)
 def knn_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN (k=5) via cell k-ring expansion + windowed top-k. Target
-    stats (count + extent) come from the fixture spec — pure metadata, so
-    the radius-sizing stats job is skipped (the estimate only seeds the
-    first ring radius; the completeness proof still gates the result)."""
-    from .constants import PIX, X0, Y0
-
-    spec = spec_for_sf_dir(sf_dir)
-    sf = sf_dir.rstrip("/").rsplit("/", 1)[-1][2:]
-    n = vectors.N_POINTS.get(sf, 200)
-    gw = spec.tiles_x * spec.tile_w * PIX
-    gh = spec.tiles_y * spec.tile_h * PIX
+    """Exact kNN (k=5) via cell k-ring expansion + windowed top-k; the
+    first ring radius is sized from the points themselves."""
     pts = tgen.points_df(spark, sf_dir)
-    out = knn.knn_join(
-        pts, pts, k=5, target_stats=(n, X0, X0 + gw, Y0 - gh, Y0)
-    )
+    out = knn.knn_join(pts, pts, k=5)
     return out.select(
         "point_id",
         F.col("rank").cast("int"),

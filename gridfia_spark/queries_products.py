@@ -151,10 +151,10 @@ GROUP BY c.poly_id"""
 @q("zonal_many_polygons", _o_zonal_many)
 def zonal_many_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zonal stats over a dense polygon grid via the FULLY distributed
-    DataFrame path: the polygon covering itself runs in-cluster
-    (spatial_join.polygon_cells_dist inside mapInPandas) — no driver-side
-    covering or collect — the plan for a large polygon side (millions of
-    polygons)."""
+    DataFrame path (zonal.zonal_stats_dist): the polygon covering itself
+    runs in-cluster (spatial_join.polygon_cells_dist inside mapInPandas) —
+    no driver-side covering or collect — the plan zonal_stats takes for a
+    large polygon side (millions of polygons)."""
     tiles = tgen.ensure_tiles(spark, sf_dir)
     rows = [
         (pid, pid.lower(), bytearray(geom.polygon_to_wkb(
@@ -168,9 +168,7 @@ def zonal_many_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
         "poly_id string, name string, geom_wkb binary, "
         "xmin double, ymin double, xmax double, ymax double, is_rect boolean",
     )
-    out = zonal.zonal_stats(
-        tiles, polys, species=0, res=_join_res(sf_dir), distributed=True
-    )
+    out = zonal.zonal_stats_dist(tiles, polys, species=0, res=_join_res(sf_dir))
     return out.select(
         "poly_id",
         F.col("n_px").cast("long"),
@@ -195,14 +193,16 @@ def _o_pip_salted(sf_dir: str) -> str:
 def pip_points_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-polygon join through the EXPLICIT salting path (north rule
     skew handling, operators/skew.py): threshold=0 forces every cell through
-    the salted k=8 join, so the whole query exercises hot-key replication +
-    probe-side salting; rows must equal the unsalted pip_points oracle."""
+    the salted k=8 join against the in-cluster covering
+    (spatial_join.polygon_cells_dist), so the whole query exercises hot-key
+    replication + probe-side salting; rows must equal the unsalted
+    pip_points oracle."""
     from .operators import skew, spatial_join
 
     pts = tgen.points_df(spark, sf_dir)
     polys = tgen.polygons_df(spark, sf_dir).filter(F.col("is_rect"))
     res = _join_res(sf_dir)
-    cells = spatial_join.polygon_cells_df(spark, polys, res)
+    cells = spatial_join.polygon_cells_dist(polys, res)
     p = spatial_join.with_point_cells(pts, res)
     cand = skew.salted_join(p, cells, on="cell_id", k=8, threshold=0)
     sure = cand.filter(F.col("fully_inside")).drop("fully_inside", "cell_id")
@@ -251,11 +251,11 @@ GROUP BY c.poly_id"""
 def zonal_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zonal stats under a deliberately hot key distribution (north rule
     skew handling on the TILE path): one polygon covers 7/8 x 7/8 of the
-    raster, so nearly every tile's covering cells hit it. The candidate
-    cell join runs through operators/skew.salted_join (threshold=0 forces
-    every cell through hot-key replication + probe salting, k=8) — rows
-    must equal the plain zonal oracle; a pytest additionally pins
-    salted == unsalted."""
+    raster, so nearly every tile's covering cells hit it. The in-cluster
+    plan (zonal.zonal_stats_dist) runs its candidate cell join through
+    operators/skew.salted_join (threshold=0 forces every cell through
+    hot-key replication + probe salting, k=8) — rows must equal the plain
+    zonal oracle; a pytest additionally pins salted == unsalted."""
     tiles = tgen.ensure_tiles(spark, sf_dir)
     rows = [
         (pid, pid.lower(), bytearray(geom.polygon_to_wkb(
@@ -269,9 +269,8 @@ def zonal_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "poly_id string, name string, geom_wkb binary, "
         "xmin double, ymin double, xmax double, ymax double, is_rect boolean",
     )
-    out = zonal.zonal_stats(
-        tiles, polys, species=0, res=_join_res(sf_dir), distributed=False,
-        salted=True, salt_threshold=0,
+    out = zonal.zonal_stats_dist(
+        tiles, polys, species=0, res=_join_res(sf_dir), salted=True, salt_threshold=0
     )
     return out.select(
         "poly_id",

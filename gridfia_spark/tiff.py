@@ -39,9 +39,8 @@ _TYPE_SIZE = {TY_ASCII: 1, TY_SHORT: 2, TY_LONG: 4, TY_DOUBLE: 8}
 
 # GeoTIFF keys
 GK_MODEL_TYPE, GK_RASTER_TYPE = 1024, 1025
-GK_CITATION, GK_PCS_CITATION, GK_PROJECTED_CS = 1026, 3073, 3072
+GK_PCS_CITATION = 3073
 MODEL_PROJECTED, RASTER_PIXEL_IS_AREA = 1, 1
-USER_DEFINED = 32767
 
 
 def encode_geotiff(

@@ -108,7 +108,7 @@ class TestCoveringEmptyGuard:
         wkb = geom.polygon_to_wkb(rings)
         polys = spark.createDataFrame([("far", bytearray(wkb))], "poly_id string, geom_wkb binary")
         assert spatial_join.polygon_cells_dist(polys, res=14).count() == 0
-        assert spatial_join.polygon_cells_df(spark, polys, res=14).count() == 0
+        assert broadcast_join.PolygonIndex.build(polys, 14).cell_to_poly.empty
 
 
 def test_approx_percentiles_rank_error_bound(spark):

@@ -112,7 +112,7 @@ class TestKnnRingExpansion:
         """At a very fine resolution the initial ring can't hold k neighbors;
         the radius-doubling loop must still return exact results."""
         pts = tgen.points_df(spark, SF_DIR)
-        fine = knn.knn_join(pts, pts, k=3, res=20, init_radius=1, max_radius=4096)
+        fine = knn.knn_join(pts, pts, k=3, res=20, max_radius=4096)
         coarse = knn.knn_join(pts, pts, k=3, res=14)
         a = {(r.point_id, r.rank): (r.neighbor_id, r.dist_sq) for r in fine.collect()}
         b = {(r.point_id, r.rank): (r.neighbor_id, r.dist_sq) for r in coarse.collect()}

@@ -8,8 +8,9 @@ determinism (sums), including on concave polygons the SQL oracle can't check.
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -114,24 +115,42 @@ class TestKnn:
             mine = got[got.point_id == qi].sort_values("rank")
             assert [(r.dist_sq, r.neighbor_id) for r in mine.itertuples()] == order
 
-    def test_wrong_target_count_equals_no_stats(self, spark):
-        """Caller stats only steer the first radius: a wrong target count
-        must neither end the proof loop early nor crash it."""
+    def test_distinct_tables_sharing_ids_vs_bruteforce(self, spark):
+        """Only a self-join drops a neighbor by id: against a second table
+        that reuses the query ids, each query's own id is a target like
+        any other (here the nearest one, shifted by (3, 4) m)."""
         pts = tgen.points_df(spark, SF_DIR)
-        _, xs, ys = vectors.points_xy(SPEC, vectors.N_POINTS["0.001"])
-        bounds = (float(xs.min()), float(xs.max()), float(ys.min()), float(ys.max()))
-        key = ["point_id", "rank"]
-        want = knn.knn_join(pts, pts, k=3).toPandas().sort_values(key, ignore_index=True)
-        for n_wrong in (len(xs) // 2, len(xs) * 2):
-            got = knn.knn_join(pts, pts, k=3, target_stats=(n_wrong, *bounds))
-            pd.testing.assert_frame_equal(
-                got.toPandas().sort_values(key, ignore_index=True), want
-            )
+        shifted = pts.select(
+            "point_id", (F.col("x") + 3.0).alias("x"), (F.col("y") + 4.0).alias("y")
+        )
+        got = knn.knn_join(pts, shifted, k=3).toPandas()
+        ids, xs, ys = vectors.points_xy(SPEC, vectors.N_POINTS["0.001"])
+        tx, ty = xs + 3.0, ys + 4.0
+        assert len(got) == 3 * len(ids)
+        for qi in range(0, len(ids), 17):
+            d = (tx - xs[qi]) ** 2 + (ty - ys[qi]) ** 2
+            order = sorted((float(d[j]), int(ids[j])) for j in range(len(ids)))[:3]
+            mine = got[got.point_id == ids[qi]].sort_values("rank")
+            assert [(r.dist_sq, r.neighbor_id) for r in mine.itertuples()] == order
+            assert order[0] == (25.0, int(ids[qi]))
+
+
+def _jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TestPolygonIndexBound:
     """The driver index collects a bounded number of polygons; above the
-    bound it refuses and ``zonal_stats('auto')`` takes the scale path."""
+    bound ``PolygonIndex.build`` refuses, and the two public spatial joins
+    take the in-cluster cell join from the same bounded collect."""
 
     def test_build_refuses_above_threshold(self, spark, tiles, polys, monkeypatch):
         def rows():
@@ -145,9 +164,28 @@ class TestPolygonIndexBound:
         assert len(broadcast_join.PolygonIndex.build(polys, grid.JOIN_RES).poly_ids) == n
         via_index = rows()
         monkeypatch.setattr(broadcast_join, "AUTO_DIST_THRESHOLD", n - 1)
-        with pytest.raises(ValueError, match=r"zonal_stats\(distributed=True\)"):
+        with pytest.raises(ValueError, match=r"more than \d+ polygons for a driver index"):
             broadcast_join.PolygonIndex.build(polys, grid.JOIN_RES)
-        assert rows() == via_index  # 'auto' routed to the distributed plan
+        assert rows() == via_index  # routed to the in-cluster plan
+
+    def test_join_points_above_threshold_routes_in_cluster(self, spark, polys, monkeypatch):
+        pts = tgen.points_df(spark, SF_DIR)
+
+        def rows():
+            out = spatial_join.join_points_polygons(pts, polys).collect()
+            return sorted((r.point_id, r.x, r.y, r.poly_id) for r in out)
+
+        n = polys.count()
+        monkeypatch.setattr(broadcast_join, "AUTO_DIST_THRESHOLD", n)
+        via_index = rows()
+        monkeypatch.setattr(broadcast_join, "AUTO_DIST_THRESHOLD", n - 1)
+        assert rows() == via_index and len(via_index) > 0
+
+    def test_zonal_small_side_runs_no_count_job(self, spark, tiles, polys):
+        """Choosing the plan costs no job beyond the index's own bounded
+        collect (the polygon side is not counted first)."""
+        build = _jobs(spark, lambda: broadcast_join.PolygonIndex.build(polys, grid.JOIN_RES))
+        assert _jobs(spark, lambda: zonal.zonal_stats(tiles, polys, species=0)) == build
 
 
 class TestMetricsPipeline:
@@ -253,14 +291,18 @@ class TestLShapePins:
 
     @pytest.mark.parametrize(
         "plan",
-        [{}, {"distributed": True}, {"salted": True, "salt_threshold": 0}],
+        [
+            zonal.zonal_stats,
+            zonal.zonal_stats_dist,
+            lambda *a, **kw: zonal.zonal_stats_dist(*a, salted=True, salt_threshold=0, **kw),
+        ],
         ids=["index", "distributed", "salted"],
     )
     def test_zonal_stats(self, spark, tiles, lshape, plan):
         want = {0: (768, 22875.0, 90.0, 709), 3: (768, 848.0, 40.0, 50)}
         poly = vectors.concave_polygons(SPEC)[0]
         for s, row in want.items():
-            (r,) = zonal.zonal_stats(tiles, lshape, species=s, **plan).collect()
+            (r,) = plan(tiles, lshape, species=s).collect()
             got = (r.n_px, r.sum_v, r.max_v, r.nonzero_px)
             assert (r.poly_id, got) == ("L01", row) and got == oracle_zonal(poly, s)
 
@@ -319,9 +361,7 @@ class TestManyPolygons:
         )
         slow = {
             r.poly_id: (r.n_px, r.sum_v)
-            for r in zonal.zonal_stats(
-                tiles, polys, species=0, res=16, distributed=True
-            ).collect()
+            for r in zonal.zonal_stats_dist(tiles, polys, species=0, res=16).collect()
         }
         fast = {
             r.poly_id: (r.n_px, r.sum_v)
@@ -368,15 +408,16 @@ class TestManyPolygons:
 
     def test_distributed_covering_equals_driver_covering(self, spark, tiles):
         """polygon_cells_dist (mapInPandas) must produce the identical
-        covering set as the driver-side polygon_cells_df, and the zonal
+        covering set as the driver index's ``cell_to_poly``, and the zonal
         result through the distributed path must match the broadcast path —
         on the 100-county dense grid plus the concave fixtures."""
         dense = self._poly_grid(spark)
         concave = tgen.polygons_df(spark, "sf0.001").filter(~F.col("is_rect"))
         polys = dense.unionByName(concave)
+        index = broadcast_join.PolygonIndex.build(polys, 16)
         drv = {
-            (r.poly_id, r.cell_id, r.fully_inside)
-            for r in spatial_join.polygon_cells_df(spark, polys, res=16).collect()
+            (index.poly_ids[int(pidx)], int(cell), bool(full))
+            for cell, pidx, full in index.cell_to_poly.itertuples(index=False)
         }
         dist = {
             (r.poly_id, r.cell_id, r.fully_inside)
@@ -386,9 +427,7 @@ class TestManyPolygons:
 
         via_dist = {
             r.poly_id: (r.n_px, r.sum_v, r.max_v, r.nonzero_px)
-            for r in zonal.zonal_stats(
-                tiles, polys, species=0, res=16, distributed=True
-            ).collect()
+            for r in zonal.zonal_stats_dist(tiles, polys, species=0, res=16).collect()
         }
         via_bcast = {
             r.poly_id: (r.n_px, r.sum_v, r.max_v, r.nonzero_px)

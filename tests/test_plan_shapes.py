@@ -50,7 +50,7 @@ class TestPlanShapes:
             assert "Exchange" not in plan, f"{name} plan shuffles: {plan[:400]}"
 
     def test_distributed_zonal_broadcasts_nothing(self, spark):
-        """PLANS.md §2 (scale path): with distributed=True the candidate-pair
+        """PLANS.md §2 (scale path): in zonal_stats_dist the candidate-pair
         frame is O(tiles × overlapping polys) and the WKB frame is
         O(polygons) — neither may be broadcast. The pair side meets the tile
         bytes in a shuffle-hash join (bytes stream, never sorted)."""

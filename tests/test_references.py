@@ -4,7 +4,7 @@ Most engine modules are imported inside functions, so a dangling name
 (a deleted function, a renamed helper) otherwise surfaces only when
 someone runs that path. This walks the AST of every ``.py`` file under
 ``gridfia_spark/``, ``scripts/``, ``examples/``, ``perfbench/`` and the
-checkout root, without running any of them, and checks three things:
+checkout root, without running any of them, and checks four things:
 
 - every ``gridfia_spark`` import (absolute, relative, module-level or
   function-local) names a module or an attribute that exists;
@@ -13,7 +13,10 @@ checkout root, without running any of them, and checks three things:
   submodule) that exists, following chains through submodules;
 - every import, of any module, binds a name the file reads somewhere
   (an unused import survives a cut silently and misleads readers about
-  what a module depends on).
+  what a module depends on);
+- every top-level ``gridfia_spark`` name is read somewhere in those files
+  or under ``tests/`` (``@q`` queries exempt): a name nothing reads is
+  dead code a cut left behind.
 
 Only stdlib ``ast`` and ``importlib`` are used; no Spark session starts.
 """
@@ -260,3 +263,70 @@ def test_every_import_is_used():
     for path in _files():
         unused += _unused_imports(path)
     assert not unused, "unused imports:\n" + "\n".join(unused)
+
+
+def _is_query(node: ast.AST) -> bool:
+    """Whether a definition carries the query registry's ``@q(...)``."""
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "q"
+        for d in getattr(node, "decorator_list", ())
+    )
+
+
+def _top_level_names(tree: ast.Module) -> dict[str, int]:
+    """``name -> line`` of every function, class and variable a module
+    defines at its top level (dunders and ``@q`` queries excluded)."""
+    out: dict[str, int] = {}
+    for n in tree.body:
+        if isinstance(n, _SCOPES):
+            if not _is_query(n):
+                out[n.name] = n.lineno
+            continue
+        targets = n.targets if isinstance(n, ast.Assign) else (
+            [n.target] if isinstance(n, ast.AnnAssign) else []
+        )
+        for t in targets:
+            for c in ast.walk(t):
+                if isinstance(c, ast.Name):
+                    out[c.id] = n.lineno
+    return {k: v for k, v in out.items() if not (k.startswith("__") and k.endswith("__"))}
+
+
+def _read_names(tree: ast.AST) -> set[str]:
+    """Identifiers a file reads: loaded names, attribute names, names it
+    imports and string constants spelled like an identifier (names looked
+    up with ``getattr``, such as the metric kernels)."""
+    out: set[str] = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            out |= {a.name for a in n.names}
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
+            out.add(n.value)
+    return out
+
+
+def test_every_engine_name_is_used():
+    """Every top-level ``gridfia_spark`` name is read somewhere in the
+    program, tests or examples: a function or constant nothing reads is
+    dead code a cut left behind. Queries registered with ``@q`` are exempt
+    (the registry reaches them by name)."""
+    read: set[str] = set()
+    defined: list[tuple[str, str, int]] = []
+    for path in _files() + [
+        os.path.join(ROOT, "tests", f)
+        for f in sorted(os.listdir(os.path.join(ROOT, "tests")))
+        if f.endswith(".py")
+    ]:
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        read |= _read_names(tree)
+        rel = os.path.relpath(path, ROOT)
+        if rel.split(os.sep)[0] == PKG:
+            defined += [(rel, name, line) for name, line in _top_level_names(tree).items()]
+    assert len(defined) > 400, len(defined)  # the walk covered the engine
+    dead = [f"{rel}:{line}: {name}" for rel, name, line in defined if name not in read]
+    assert not dead, "top-level names nothing reads:\n" + "\n".join(dead)

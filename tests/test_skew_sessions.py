@@ -28,9 +28,11 @@ class TestSaltedJoin:
         assert a == b and len(a) == 6000
 
     def test_zonal_salted_equals_unsalted(self, spark):
-        """The salted zonal tile path (zonal_stats(salted=True)) returns
-        bit-identical rows to the plain broadcast path — the hot polygon
-        covers 7/8 of the raster so every cell rides the salted join."""
+        """The salted in-cluster zonal plan
+        (zonal_stats_dist(salted=True)) returns bit-identical rows to the
+        unsalted in-cluster plan and to the driver-index plan — the hot
+        polygon covers 7/8 of the raster so every cell rides the salted
+        join."""
         from gridfia_spark import queries_products as qp
         from gridfia_spark.datagen import tiles as tgen
         from gridfia_spark.operators import zonal
@@ -51,11 +53,15 @@ class TestSaltedJoin:
             "xmin double, ymin double, xmax double, ymax double, is_rect boolean",
         )
         res = _join_res(sf)
-        kw = dict(species=0, res=res, distributed=False)
-        plain = zonal.zonal_stats(tiles, polys, **kw)
-        salted = zonal.zonal_stats(tiles, polys, salted=True, salt_threshold=0, **kw)
+        plain = zonal.zonal_stats_dist(tiles, polys, species=0, res=res)
+        salted = zonal.zonal_stats_dist(
+            tiles, polys, species=0, res=res, salted=True, salt_threshold=0
+        )
+        index = zonal.zonal_stats(tiles, polys, species=0, res=res)
         key = lambda r: (r.poly_id, r.n_px, r.sum_v, r.max_v, r.nonzero_px)
-        assert sorted(map(key, plain.collect())) == sorted(map(key, salted.collect()))
+        want = sorted(map(key, index.collect()))
+        assert sorted(map(key, plain.collect())) == want
+        assert sorted(map(key, salted.collect())) == want and len(want) == 3
 
     def test_hot_cell_detection(self, spark):
         probe = spark.range(2000).select(

@@ -130,8 +130,8 @@ class TestMultimodal:
         assert out["img2"].max_v <= 250
 
     def test_stub_raises_for_real_codecs(self, spark, media):
-        # png/wav/jpeg/webp are REAL built-in codecs now (gridfia_spark/
-        # png.py, wav.py, jpeg.py, vp8l.py); mp3/h264 are the documented
+        # png/jpeg/webp are REAL built-in codecs now (gridfia_spark/
+        # png.py, jpeg.py, vp8l.py); mp3/h264 are the documented
         # permanent stub. The built-in jpeg decoder must reject garbage
         # bytes with a codec error, not the stub message.
         with pytest.raises(Exception, match="not a JPEG|corrupt|marker"):
@@ -174,14 +174,6 @@ class TestMultimodal:
         f = SPEC.tile_w // 8
         np.testing.assert_allclose(
             small, arr.reshape(8, f, 8, f).mean(axis=(1, 3)), rtol=1e-6
-        )
-
-    def test_frame_sampling(self, spark, media):
-        out = multimodal.sample_frames(media, every_k=2).collect()
-        assert [r.frame_idx for r in sorted(out, key=lambda r: r.frame_idx)] == [0, 2, 4]
-        f2 = next(r for r in out if r.frame_idx == 2)
-        np.testing.assert_array_equal(
-            codecs.decode(bytes(f2.bytes), 8, 8, "raw32"), np.full((8, 8), 2.0)
         )
 
 
