@@ -3,9 +3,10 @@
 Each tile row carries ``bytes`` encoded per its ``fmt`` column:
 
 - ``raw32`` — float32 little-endian, row-major. Lossless.
-- ``rawz``  — zlib(level 5) over raw32.  Lossless; the default table format,
-  standing in for Blosc LZ4 chunk compression
-  (/root/reference/gridfia/utils/zarr_utils.py:934-938).
+- ``rawz``  — a zlib stream over raw32, at any level: ``decode`` is a plain
+  ``zlib.decompress``, so a zlib Zarr chunk is a ``rawz`` tile as stored.
+  ``encode`` writes level 5. Lossless; the default table format, standing
+  in for Blosc LZ4 chunk compression (the reference's zarr_utils.py:934-938).
 - ``qnt8``  — lossy 8-bit quantization over [0, vmax]; 4-byte float32 vmax
   header then uint8 payload. Quantization PSNR is ~59 dB for our value
   ranges, comfortably above the 40 dB per-row gate (BASELINE.json).

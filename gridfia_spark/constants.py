@@ -104,15 +104,21 @@ def spec_for_sf_dir(sf_dir: str) -> GridSpec:
     raise ValueError(f"unknown scale factor dir: {sf_dir!r}")
 
 
+# printf formats shared by the Python helpers below and the JVM
+# ``format_string`` columns that build the same strings in a plan
+IMAGE_ID_FMT = "sp%s_tx%03d_ty%03d"
+CAPTION_FMT = (
+    "species=%s;name=%s;tile=(%d,%d);"
+    f"crs={CRS};transform=[{X0:.1f},{PIX:.1f},0.0,{Y0:.1f},0.0,{-PIX:.1f}];"
+    f"units={UNITS}"
+)
+
+
 def image_id(code: str, tx: int, ty: int) -> str:
-    return f"sp{code}_tx{tx:03d}_ty{ty:03d}"
+    return IMAGE_ID_FMT % (code, tx, ty)
 
 
 def caption(code: str, name: str, tx: int, ty: int) -> str:
     """Per-tile metadata sidecar; caption equality is part of the exactness
     contract (mirrors zarr attrs at zarr_utils.py:964-969)."""
-    return (
-        f"species={code};name={name};tile=({tx},{ty});crs={CRS};"
-        f"transform=[{X0:.1f},{PIX:.1f},0.0,{Y0:.1f},0.0,{-PIX:.1f}];"
-        f"units={UNITS}"
-    )
+    return CAPTION_FMT % (code, name, tx, ty)

@@ -3,10 +3,12 @@
 The reference's execution loop (forest_metrics.py:316-438) — "for each chunk:
 stack species, run every enabled calculation" — becomes:
 
-1. co-locate all species layers of a tile: ``groupBy(tx, ty)`` +
-   ``applyInPandas`` (one small shuffle of encoded bytes, amortized across ALL
-   requested metrics — the shared-scan multi-output pattern);
-2. inside the UDF: stack to a (S, h, w) numpy cube, run every registered
+1. co-locate all species layers of a tile: ``repartition(n, tx, ty)`` +
+   ``sortWithinPartitions`` + a streaming ``mapInPandas`` that groups each
+   tile inside its Arrow batches (one small shuffle of encoded bytes,
+   amortized across ALL requested metrics — the shared-scan multi-output
+   pattern; over a zlib Zarr store the shuffle carries the stored chunks);
+2. per tile: stack to a (S, h, w) numpy cube, run every registered
    kernel once, emit per-pixel long rows with one column per metric;
 3. global-scope metrics (rare/common/dominance, SURVEY §3.1) get their global
    statistics from a separate tiny aggregate (partial per tile -> final

@@ -110,9 +110,12 @@ def with_point_cells(points: DataFrame, res: int = grid.JOIN_RES) -> DataFrame:
 
 def _pip_refine(cand: DataFrame, polygons: DataFrame) -> DataFrame:
     """Filter candidate rows (must have x, y, poly_id) to those whose point is
-    inside the polygon — vectorized ray casting, batched per polygon."""
+    inside the polygon — vectorized ray casting, batched per polygon. The
+    WKB frame is O(polygons) on the plan meant for the most polygons, so it
+    meets the candidates in a shuffle-hash join and is never broadcast
+    (the same rule as zonal.zonal_stats_dist)."""
     withwkb = cand.join(
-        F.broadcast(polygons.select("poly_id", "geom_wkb")), "poly_id"
+        polygons.select("poly_id", "geom_wkb").hint("shuffle_hash"), "poly_id"
     )
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in cand.schema)
     out_cols = [f.name for f in cand.schema]  # plain list: no DataFrame in closure

@@ -23,13 +23,19 @@ the public Zarr specs:
   correctness-grade: use blosc for interop with existing reference
   stores, the zlib/gzip defaults for throughput.
 
-- WRITE is fully distributed: every Spark task serializes and writes its
-  own chunk files — exactly how Zarr is written to object stores at scale,
-  no driver assembly, no shuffle; only the tiny JSON metadata is
-  driver-side.
-- READ is a distributed ``binaryFile`` scan over the chunk files: chunk
-  indices parsed from the file path (a pure projection — partition-prune
-  friendly), decoded in the task, re-encoded as engine tile rows.
+- WRITE is one distributed Spark job: every task serializes and writes its
+  own chunk files (the way Zarr is written to object stores at scale, no
+  driver assembly, no shuffle) into a hidden staging directory inside the
+  store, and returns one summary row per batch (count, largest layer/tile
+  indices, tile-size range). The driver folds those rows, validates the
+  uniform tile size and the species codes, writes the tiny JSON metadata
+  and renames the chunks into place. Any failure removes the staging
+  directory, so no chunk lands before validation passes.
+- READ is a ``binaryFile`` scan plus JVM projections: the chunk key in the
+  file path gives ``(s, ty, tx)`` (partition-prune friendly), the store's
+  species codes and names give ``image_id`` and ``caption``, and a zlib
+  chunk passes through as a ``rawz`` tile untouched. Python runs only for
+  ``phash`` (pruned when unread) and to re-encode gzip/blosc chunks.
 - Georeferencing is written to the ROOT group attributes in the
   reference's own layout (zarr_utils.py:721-726: ``crs`` string,
   ``transform`` in rasterio Affine order (a,b,c,d,e,f), ``bounds``
@@ -51,8 +57,10 @@ from __future__ import annotations
 import gzip as _gzip
 import json
 import os
+import shutil
+import uuid
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import NamedTuple
 
 import numpy as np
@@ -61,7 +69,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import codecs
-from ..constants import CRS, PIX, SPECIES, UNITS, X0, Y0, caption, image_id
+from ..constants import (
+    CAPTION_FMT, CRS, IMAGE_ID_FMT, PIX, SPECIES, UNITS, X0, Y0,
+)
 from ..operators import decode
 
 ZARR_FORMAT = 2  # default write dialect (back-compat)
@@ -95,53 +105,57 @@ def _root_attrs(n_layers: int, gw: int, gh: int, codes=None, names=None,
     }
 
 
-def _grid_info(tiles: DataFrame):
-    """(n_layers, tw, th, gw, gh, meta_df) for a uniform tile table."""
-    meta = decode.with_tile_meta(tiles)
-    info = meta.agg(
-        F.max("s").alias("smax"),
-        F.max("tx").alias("txmax"),
-        F.max("ty").alias("tymax"),
-        F.min("w").alias("w"),
-        F.min("h").alias("h"),
-        F.max("w").alias("wmax"),
-        F.max("h").alias("hmax"),
-    ).first()
-    if info.w != info.wmax or info.h != info.hmax:
-        raise ValueError("zarr chunks require uniform tile dimensions")
-    n_layers = int(info.smax) + 1
-    tw, th = int(info.w), int(info.h)
-    gw, gh = (int(info.txmax) + 1) * tw, (int(info.tymax) + 1) * th
-    return n_layers, tw, th, gw, gh, meta
-
-
 def _default_codec(zarr_format: int) -> str:
     return "gzip" if zarr_format == 3 else "zlib"
 
 
+class _Written(NamedTuple):
+    """What a chunk write put down, folded from its per-batch summaries:
+    chunk count, tiles skipped for an unknown species code, the largest
+    layer/tile indices written and the tile-size range of every row."""
+
+    n: int
+    unknown: int
+    smax: int | None
+    txmax: int | None
+    tymax: int | None
+    wmin: int
+    wmax: int
+    hmin: int
+    hmax: int
+
+
 def _write_chunks(
     meta: DataFrame,
-    adir: str,
+    out_dir: str,
     level: int,
     zarr_format: int,
     layer: int | None = None,
     codec: str | None = None,
-) -> int:
+) -> _Written:
     """Distributed chunk write: every task serializes and writes its own
-    chunk files (v2 ``s.ty.tx`` flat names; v3 ``c/s/ty/tx`` nested keys;
-    gzip written with mtime=0 so bytes are deterministic). ``codec`` is
-    ``zlib``/``gzip``/``blosc`` (default per dialect); ``layer`` overrides
-    the layer index for single-layer appends. Returns the chunk count."""
+    chunk files under ``out_dir`` (v2 ``s.ty.tx`` flat names; v3
+    ``c/s/ty/tx`` nested keys; gzip written with mtime=0 so bytes are
+    deterministic). ``codec`` is ``zlib``/``gzip``/``blosc`` (default per
+    dialect); ``layer`` overrides the layer index for single-layer appends,
+    otherwise a tile with no layer index (unknown species code) is skipped
+    and counted. Each task returns one summary row per Arrow batch and the
+    driver folds the collected rows, so the write is one job with no
+    aggregation stage."""
     v3 = zarr_format == 3
     codec = codec or _default_codec(zarr_format)
-    os.makedirs(adir, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
 
     def wchunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .. import blosc as _blosc
 
         for pdf in batches:
+            if pdf.empty:
+                continue
             out = []
             for r in pdf.itertuples(index=False):
+                if layer is None and pd.isna(r.s):
+                    continue
                 arr = codecs.decode(r.bytes, int(r.w), int(r.h), r.fmt)
                 buf = np.ascontiguousarray(arr, dtype="<f4").tobytes()
                 s = int(r.s) if layer is None else layer
@@ -152,23 +166,81 @@ def _write_chunks(
                 else:
                     blob = zlib.compress(buf, level)
                 if v3:
-                    cdir = os.path.join(adir, "c", str(s), str(int(r.ty)))
+                    cdir = os.path.join(out_dir, "c", str(s), str(int(r.ty)))
                     os.makedirs(cdir, exist_ok=True)
                     name = os.path.join(cdir, str(int(r.tx)))
                 else:
-                    name = os.path.join(adir, f"{s}.{int(r.ty)}.{int(r.tx)}")
+                    name = os.path.join(out_dir, f"{s}.{int(r.ty)}.{int(r.tx)}")
                 with open(name, "wb") as fh:
                     fh.write(blob)
-                out.append((int(s), int(r.tx), int(r.ty), int(r.w), int(r.h)))
-            if out:
-                yield pd.DataFrame(
-                    out, columns=["s", "tx", "ty", "w", "h"]
-                )
+                out.append((s, int(r.tx), int(r.ty)))
+            hi = np.array(out).max(axis=0).tolist() if out else [None] * 3
+            w, h = pdf["w"], pdf["h"]
+            yield pd.DataFrame([[
+                len(out), len(pdf) - len(out), *hi,
+                w.min(), w.max(), h.min(), h.max(),
+            ]], columns=list(_Written._fields))
 
-    manifest = meta.select("s", "tx", "ty", "bytes", "w", "h", "fmt").mapInPandas(
-        wchunks, "s int, tx int, ty int, w int, h int"
+    rows = meta.select("s", "tx", "ty", "bytes", "w", "h", "fmt").mapInPandas(
+        wchunks,
+        "n long, unknown long, smax int, txmax int, tymax int, "
+        "wmin int, wmax int, hmin int, hmax int",
+    ).collect()
+    if not rows:
+        raise ValueError("zarr store write: empty tile set")
+
+    def fold(name: str, f):
+        vals = [v for v in (getattr(r, name) for r in rows) if v is not None]
+        return f(vals) if vals else None
+
+    return _Written(
+        fold("n", sum), fold("unknown", sum),
+        fold("smax", max), fold("txmax", max), fold("tymax", max),
+        fold("wmin", min), fold("wmax", max), fold("hmin", min), fold("hmax", max),
     )
-    return int(manifest.agg(F.count("*").alias("n")).first().n)
+
+
+def _write_staged(
+    meta: DataFrame,
+    path: str,
+    array: str,
+    level: int,
+    zarr_format: int,
+    finish: Callable[[_Written], None],
+    layer: int | None = None,
+    codec: str | None = None,
+) -> _Written:
+    """Write the chunks into a hidden staging directory inside the store,
+    run ``finish`` on the driver (validation, metadata documents), then
+    move the chunks into the array directory. On any failure the staging
+    directory goes (and the store directory too when this call created
+    it), so no chunk lands before ``finish`` has passed."""
+    stage = os.path.join(path, f".staging-{uuid.uuid4().hex}")
+    fresh = not os.path.exists(path)
+    try:
+        written = _write_chunks(meta, stage, level, zarr_format, layer, codec)
+        # two rows for one chunk write one file; the summaries cannot see
+        # that across batches, the staged file count does
+        staged = sum(len(files) for _, _, files in os.walk(stage))
+        if staged != written.n:
+            raise ValueError(
+                f"{written.n - staged} duplicate (layer, ty, tx) tiles: each "
+                "chunk must come from exactly one tile row"
+            )
+        finish(written)
+        adir = os.path.join(path, array)
+        for root, _, files in os.walk(stage):
+            dst = os.path.join(adir, os.path.relpath(root, stage))
+            os.makedirs(dst, exist_ok=True)
+            for f in files:
+                os.replace(os.path.join(root, f), os.path.join(dst, f))
+    except BaseException:
+        if fresh:
+            shutil.rmtree(path, ignore_errors=True)
+        raise
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return written
 
 
 def _write_array_meta(
@@ -302,19 +374,29 @@ def write_zarr_store(
         raise ValueError(f"unsupported zarr_format {zarr_format} (2 or 3)")
     if codec not in (None, "zlib", "gzip", "blosc"):
         raise ValueError(f"unsupported codec {codec!r} (zlib/gzip/blosc)")
-    # Validation (uniform dims, known species) must precede any chunk file
-    # landing on disk — the error contract pinned by
-    # test_non_uniform_tiles_rejected — so the grid-info scan stays a
-    # separate (cheap, bytes-pruned) job; the chunk write then aggregates
-    # its count in the same action instead of a second pass.
-    n_layers, tw, th, gw, gh, meta = _grid_info(tiles)
-    _write_array_meta(
-        path, array, [n_layers, gh, gw], [1, th, tw], level, zarr_format,
-        _root_attrs(n_layers, gw, gh, transform=transform), codec,
-    )
-    return _write_chunks(
-        meta, os.path.join(path, array), level, zarr_format, codec=codec
-    )
+    # validation (uniform dims, known species) runs on the staged write's
+    # summary, before any chunk lands in the array directory — the error
+    # contract pinned by test_non_uniform_tiles_rejected
+
+    def finish(wr: _Written) -> None:
+        if wr.wmin != wr.wmax or wr.hmin != wr.hmax:
+            raise ValueError("zarr chunks require uniform tile dimensions")
+        if wr.unknown:
+            raise ValueError(
+                f"{wr.unknown} tiles carry a species code outside the engine's "
+                f"species list {[c for c, _ in SPECIES]}"
+            )
+        n_layers, tw, th = wr.smax + 1, wr.wmin, wr.hmin
+        gw, gh = (wr.txmax + 1) * tw, (wr.tymax + 1) * th
+        _write_array_meta(
+            path, array, [n_layers, gh, gw], [1, th, tw], level, zarr_format,
+            _root_attrs(n_layers, gw, gh, transform=transform), codec,
+        )
+
+    return _write_staged(
+        decode.with_tile_meta(tiles), path, array, level, zarr_format, finish,
+        codec=codec,
+    ).n
 
 
 # the reference's array-locating fallbacks (forest_metrics.py:118-196:
@@ -487,37 +569,46 @@ def read_zarr_store(
     species: list[int] | None = None,
 ) -> DataFrame:
     """Distributed Zarr scan (v2 or v3, auto-detected) -> engine tile rows
-    (image_id, bytes, w, h, fmt, caption, phash). Chunk indices come from
-    the file PATH (a pure projection; an object-store listing prunes the
-    same way). ``array=None`` locates the data array via the reference's
-    fallback order (biomass -> data -> species). ``species=[...]`` prunes
-    at the LISTING level — v2 via a chunk-name glob, v3 via the ``c/<s>/``
-    key-prefix DIRECTORIES (the Zarr analogue of partition pruning:
-    non-matching chunk files are never opened, the P1/P2 layer slice for
-    free)."""
-    from ..datagen import pixels as pxgen
-    from ..datagen.tiles import TILE_SCHEMA
+    (image_id, bytes, w, h, fmt, caption, phash). ``array=None`` locates
+    the data array via the reference's fallback order (biomass -> data ->
+    species). ``species=[...]`` prunes at the LISTING level — v2 via a
+    chunk-name glob, v3 via the ``c/<s>/`` key-prefix DIRECTORIES (the
+    Zarr analogue of partition pruning: non-matching chunk files are never
+    opened, the P1/P2 layer slice for free).
 
+    Every column but ``phash`` is a JVM projection of the ``binaryFile``
+    scan: ``(s, ty, tx)`` from the chunk key (``regexp_extract``),
+    ``image_id``/``caption`` from the store's species codes and names
+    (``format_string``), and ``bytes`` is the stored chunk itself — a zlib
+    chunk IS a ``rawz`` tile (``codecs.decode`` inflates any level), an
+    uncompressed one a ``raw32`` tile; ``phash`` is a pandas-UDF column
+    Catalyst prunes when no consumer reads it, so a zlib store feeds
+    ``metrics.metric_layers`` with no Python before its exchange. Gzip and
+    blosc chunks pass one ``mapInPandas`` that re-encodes them to ``rawz``
+    and computes ``phash`` from the same decode.
+
+    A layer whose species code is outside ``constants.SPECIES`` raises
+    ``ValueError`` here (the tile operators place layers by that list), and
+    a chunk whose layer index is beyond the store's code list fails the
+    scan."""
     if array is None:
         array = find_array(path)
     m = zarr_meta(path, array)
     _, th, tw = (int(c) for c in m.chunks)
-    compressor = m.compressor
-    stored_codes = m.attrs.get("species_codes")
-    stored_names = m.attrs.get("species_names")
-    names = dict(SPECIES)
-    codes = {}
-    for i, c in enumerate(stored_codes or [c for c, _ in SPECIES]):
-        nm = (
-            stored_names[i]
-            if stored_names and i < len(stored_names)
-            else names.get(c, c)
-        )
-        codes[i] = (c, nm)
+    known = dict(SPECIES)
+    codes = [str(c) for c in m.attrs.get("species_codes") or known]
+    names = list(m.attrs.get("species_names") or [])
+    names = [names[i] if i < len(names) else known.get(c, c) for i, c in enumerate(codes)]
+    wanted = sorted({int(s) for s in species}) if species is not None else None
+    for i in wanted if wanted is not None else range(len(codes)):
+        if i < len(codes) and codes[i] not in known:
+            raise ValueError(
+                f"species code {codes[i]!r} (layer {i} of {path}) is not in "
+                f"the engine's species list {list(known)}"
+            )
     reader = spark.read.format("binaryFile")
     enc_name, sep = m.key_enc
     adir = os.path.join(path, array)
-    wanted = sorted({int(s) for s in species}) if species is not None else None
     if sep == ".":
         # flat names in the array dir: i.j.k (v2 encoding) or c.i.j.k
         pre = "c." if enc_name == "default" else ""
@@ -528,6 +619,7 @@ def read_zarr_store(
         else:
             glob = pre + "{" + ",".join(str(s) for s in wanted) + "}.*"
         files = reader.option("pathGlobFilter", glob).load(adir)
+        key = "/" + pre.replace(".", r"\.") + r"(\d+)\.(\d+)\.(\d+)$"
     else:
         # nested keys: c/i/j/k (v3 default) or i/j/k (v2 encoding) —
         # species pruning happens at the DIRECTORY listing level
@@ -539,55 +631,63 @@ def read_zarr_store(
             files = reader.load(base)
         else:
             files = reader.load([os.path.join(base, str(s)) for s in wanted])
-    files = files.select("path", "content")
+        key = r"/(\d+)/(\d+)/(\d+)$"
     # chunk files are tiny (a compressed tile each) but the default
-    # open-cost packing schedules ~one file per task. Each of those tasks
-    # is a Python task, and every Python task pays ~0.2-0.3 s of worker
-    # set-up before the UDF runs, so the task count, not the compressed
-    # bytes, is the cost. A NARROW coalesce (no shuffle, plan stays
-    # map-only) to one partition per core packs many chunks per task.
-    # coalesce() never INCREASES partition count, so no need to probe the
-    # current count first (the .rdd round-trip built a full RDD conversion
-    # plan just to ask); a no-op coalesce costs nothing
-    files = files.coalesce(spark.sparkContext.defaultParallelism)
-    nested = sep == "/"
-    strip_c = enc_name == "default" and not nested
+    # open-cost packing schedules ~one file per task; a consumer's Python
+    # stage over those partitions pays ~0.2-0.3 s of worker set-up per
+    # task. A NARROW coalesce (no shuffle, plan stays map-only) to one
+    # partition per core packs many chunks per task; it never increases
+    # the partition count, so a small store is left as it is
+    files = files.select("path", "content").coalesce(
+        spark.sparkContext.defaultParallelism
+    )
+    s, ty, tx = (F.regexp_extract("path", key, i).cast("int") for i in (1, 2, 3))
+    code = F.coalesce(
+        F.try_element_at(F.array(*map(F.lit, codes)), s + 1),
+        F.raise_error(F.format_string(
+            "zarr chunk %s: layer %d is beyond the "
+            f"{len(codes)} species codes of the store", "path", s,
+        )),
+    )
+    name = F.try_element_at(F.array(*map(F.lit, names)), s + 1)
+    compressor = m.compressor
 
-    def rd(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if nested:
-                    s, cy, cx = (int(x) for x in r.path.rsplit("/", 3)[-3:])
-                else:
-                    name = r.path.rsplit("/", 1)[-1]
-                    parts = name.split(".")
-                    if strip_c:
-                        parts = parts[1:]
-                    s, cy, cx = (int(x) for x in parts)
-                raw = _decode_chunk_bytes(bytes(r.content), compressor)
-                arr = np.frombuffer(raw, dtype="<f4").reshape(th, tw)
-                code, nm = codes[s]
-                rows.append(
-                    (
-                        image_id(code, cx, cy),
-                        codecs.encode(arr, "rawz"),
-                        tw,
-                        th,
-                        "rawz",
-                        caption(code, nm, cx, cy),
-                        pxgen.phash64(arr),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-                    ],
-                )
+    def phash64(raw: bytes) -> int:
+        from ..datagen import pixels as pxgen
 
-    return files.mapInPandas(rd, TILE_SCHEMA)
+        return pxgen.phash64(np.frombuffer(raw, "<f4").reshape(th, tw))
+
+    if compressor in ("gzip", "blosc"):
+        # Python must touch every chunk to re-encode it as rawz, so phash
+        # rides the same pass and each chunk is decoded once
+        def to_rawz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                raws = [_decode_chunk_bytes(bytes(c), compressor) for c in pdf["content"]]
+                yield pd.DataFrame({
+                    "path": pdf["path"],
+                    "content": [zlib.compress(r, 5) for r in raws],
+                    "phash": [phash64(r) for r in raws],
+                })
+
+        files = files.mapInPandas(to_rawz, "path string, content binary, phash long")
+        phash = F.col("phash")
+    else:
+
+        @F.pandas_udf("long")
+        def phash_udf(content: pd.Series) -> pd.Series:
+            return content.map(lambda c: phash64(_decode_chunk_bytes(bytes(c), compressor)))
+
+        phash = phash_udf("content")
+
+    return files.select(
+        F.format_string(IMAGE_ID_FMT, code, tx, ty).alias("image_id"),
+        F.col("content").alias("bytes"),
+        F.lit(tw).alias("w"),
+        F.lit(th).alias("h"),
+        F.lit("raw32" if compressor is None else "rawz").alias("fmt"),
+        F.format_string(CAPTION_FMT, code, name, tx, ty).alias("caption"),
+        phash.alias("phash"),
+    )
 
 
 def _decode_chunk_bytes(raw: bytes, compressor: str | None) -> bytes:
@@ -716,7 +816,6 @@ def append_layer(
         F.min("h").alias("h"), F.max("h").alias("hmax"),
         F.max("tx").alias("txmax"), F.max("ty").alias("tymax"),
         F.count("*").alias("n"),
-        F.count_distinct("tx", "ty").alias("nxy"),
     ).first()
     if info.n == 0:
         raise ValueError("append_layer: empty tile set")
@@ -729,8 +828,6 @@ def append_layer(
         )
     if (int(info.txmax) + 1) * tw > gw or (int(info.tymax) + 1) * th > gh:
         raise ValueError("append_layer: tile extent exceeds the store grid")
-    if info.nxy != info.n:
-        raise ValueError("append_layer: duplicate (tx, ty) tiles in append set")
     if validate_alignment:
         # the reference rejects stores whose georeferencing doesn't match
         # the incoming raster (allclose, rtol=1e-5); the engine's rasters
@@ -761,15 +858,15 @@ def append_layer(
     # possibly pre-allocated array; dense engine stores have it == shape[0]
     idx = int(m.attrs.get("num_species", n_layers))
     new_n = max(n_layers, idx + 1)
-    _write_chunks(
-        meta, os.path.join(path, array), level, version, layer=idx,
-        codec=m.compressor,
-    )
     codes = list(m.attrs.get("species_codes", [c for c, _ in SPECIES[:n_layers]]))
     names = list(m.attrs.get("species_names", [n for _, n in SPECIES[:n_layers]]))
     codes, names = codes[:idx] + [species_code], names[:idx] + [species_name]
-    _write_array_meta(
-        path, array, [new_n, gh, gw], [1, th, tw], level, version,
-        _root_attrs(new_n, gw, gh, codes, names), m.compressor,
+    _write_staged(
+        meta, path, array, level, version,
+        lambda _: _write_array_meta(
+            path, array, [new_n, gh, gw], [1, th, tw], level, version,
+            _root_attrs(new_n, gw, gh, codes, names), m.compressor,
+        ),
+        layer=idx, codec=m.compressor,
     )
     return idx

@@ -45,6 +45,20 @@ def main() -> None:
     warp.warp_tiles_bilinear(
         tiles, spec, (3, 2, 1), (2, 3, 1)
     ).explain("formatted")
+    # PLANS §22: store scan -> metric kernels, one Python node
+    import tempfile
+
+    from gridfia_spark.operators import metrics
+    from gridfia_spark.sources import zarrstore
+
+    with tempfile.TemporaryDirectory() as tmp:
+        store = os.path.join(tmp, "cube.zarr")
+        zarrstore.write_zarr_store(tiles, store)
+        print("===== read_zarr_store -> metric_layers (one Python node) =====")
+        metrics.metric_layers(
+            zarrstore.read_zarr_store(spark, store),
+            [metrics.MetricSpec("richness", "species_richness", {}, "long")],
+        ).explain("formatted")
     spark.stop()
 
 

@@ -8,6 +8,7 @@ determinism (sums), including on concave polygons the SQL oracle can't check.
 
 from __future__ import annotations
 
+import re
 import uuid
 
 import numpy as np
@@ -180,6 +181,18 @@ class TestPolygonIndexBound:
         via_index = rows()
         monkeypatch.setattr(broadcast_join, "AUTO_DIST_THRESHOLD", n - 1)
         assert rows() == via_index and len(via_index) > 0
+
+    def test_in_cluster_point_join_broadcasts_nothing(self, spark, polys, monkeypatch):
+        """The plan for more polygons than a driver index holds ships no
+        O(polygons) frame to every executor: the WKB frame meets the
+        candidates in a shuffle-hash join (mirrors
+        test_plan_shapes::test_distributed_zonal_broadcasts_nothing)."""
+        pts = tgen.points_df(spark, SF_DIR)
+        monkeypatch.setattr(broadcast_join, "AUTO_DIST_THRESHOLD", polys.count() - 1)
+        df = spatial_join.join_points_polygons(pts, polys)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not re.findall(r"BroadcastHashJoin \[(?:poly_id|cell_id)", plan), plan
+        assert re.search(r"ShuffledHashJoin \[poly_id", plan), plan
 
     def test_zonal_small_side_runs_no_count_job(self, spark, tiles, polys):
         """Choosing the plan costs no job beyond the index's own bounded

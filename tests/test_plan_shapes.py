@@ -82,6 +82,30 @@ class TestPlanShapes:
             plan = _plan(spark, name)
             assert _hash_exchanges(plan) == 0, name
 
+    def test_store_metric_pass_has_one_python_node(self, spark, tmp_path):
+        """PLANS.md §22: metric_layers over a zlib store scan runs ONE
+        Python node (the kernel pass) and one exchange, and the exchange
+        moves the stored chunk bytes: nothing but JVM projections sits
+        between the binaryFile scan and the kernel's shuffle."""
+        from gridfia_spark.datagen import tiles as tgen
+        from gridfia_spark.operators import metrics
+        from gridfia_spark.sources import zarrstore
+
+        store = str(tmp_path / "m.zarr")
+        zarrstore.write_zarr_store(tgen.ensure_tiles(spark, SF_DIR), store)
+        df = metrics.metric_layers(
+            zarrstore.read_zarr_store(spark, store),
+            [metrics.MetricSpec("richness", "species_richness", {}, "long")],
+        )
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        python = re.findall(
+            r"\b(MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython"
+            r"|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas)\b", plan
+        )
+        assert python == ["MapInPandas"], plan
+        assert plan.count("Exchange") == 1, plan
+        assert "FileScan binaryFile" in plan.split("Exchange", 1)[1]
+
     def test_zonal_percentiles_has_no_buffering_aggregate(self, spark):
         """PLANS.md §11: histogram percentiles — no `percentile(` aggregate
         (which buffers a group's value population) anywhere in the plan."""

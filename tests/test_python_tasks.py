@@ -2,9 +2,10 @@
 tile manifest that feeds the generator without a driver row list.
 
 Every PySpark task pays a fixed Python worker set-up before its UDF runs,
-so the two Python stages of the cube path (Zarr chunk scan, metric kernel
-pass) ask for exactly one task per core: neither AQE's byte-based
-coalescing nor the file-split packing decides how many there are."""
+so the Python stages of the cube path (the metric kernel pass, and the
+Zarr chunk scan's phash/re-encode columns when a consumer reads them) ask
+for exactly one task per core: neither AQE's byte-based coalescing nor the
+file-split packing decides how many there are."""
 
 from __future__ import annotations
 
