@@ -1,27 +1,34 @@
 """kNN join via cell k-ring expansion (north rule; SURVEY §2.3 kNN row).
 
 The H3 k-ring pattern on the quad grid: index both point sets at a resolution
-``res``, explode each query point's Chebyshev-k ring of cells, equi-join on
-cell id (a plain shuffle/broadcast hash join), then a distance-bounded
-windowed top-k.
+``res``, explode each query point's Chebyshev-R ring of cells, equi-join on
+the integer cell index pair ``(cx, cy)`` (a plain shuffle/broadcast hash
+join), then a windowed top-k. The pair is equal exactly when the Morton cell
+id is equal, and costs no bit interleaving to build or to analyse.
 
 Completeness guarantee: a ring of radius R around a point's cell contains
-every point within euclidean distance R*cell_size. The driver loop doubles R
-until the observed kth-neighbor distance of every query satisfies
-d_k < R*cell_size (usually one iteration) — so results are provably exact,
-never approximate. The first R comes from the data: one aggregation over
-the targets (count and extent) gives their density; no caller passes
-statistics. Only a self-join (``queries is targets``) drops a neighbor by
-id (the point itself).
+every point within euclidean distance R*cell_size. So each round keeps only
+the candidates inside that disc (``dist_sq < (R*cell_size)^2``, which Spark
+folds into the join condition) before the window. A query is then proven
+exactly when it has a rank-k row: its k nearest inside the disc are its k
+nearest overall, since every target outside the disc is farther. One count
+of the rank-k rows is the round's proof. The driver loop doubles R and
+re-runs only the unproven queries (including those with no candidate yet),
+so results are provably exact, never approximate. The first R comes from the
+data: one aggregation (target count and extent, and the query count of a
+join of two tables) gives the target density; no caller passes statistics.
+Too few targets to ever prove a query fails fast, before any join. Only a
+self-join (``queries is targets``) drops a neighbor by id (the point itself).
 
-Scale notes: ring explosion is (2R+1)^2 rows per query — at R=1 a 9x
-amplification of the (small) query side only; the build side shuffles once on
-cell_id; AQE skew-join splits hot cells. Distances use exact arithmetic on
-coordinates (dist_sq), ties broken by neighbor id for determinism.
+Scale notes: ring explosion is (2R+1)^2 rows per query, on the (small) query
+side only; the build side shuffles once on (cx, cy); AQE skew-join splits hot
+cells. Distances use exact arithmetic on coordinates (dist_sq), ties broken
+by neighbor id for determinism.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import DataFrame
@@ -31,34 +38,42 @@ from pyspark.sql.window import Window
 from .. import grid
 
 
-def _with_cell(df: DataFrame, res: int, col: str = "cell_id") -> DataFrame:
-    """Cell id as a pure JVM column expression (grid.cell_of_xy_col) —
-    bit-identical to the numpy encode, whole-stage-codegen, and immune to
-    the optimizer's UDF-duplicating null-filter pushdown (guide §4.4)."""
-    return df.withColumn(col, grid.cell_of_xy_col(F.col("x"), F.col("y"), res))
-
-
-def _ring_explode_xy(df: DataFrame, res: int, radius: int) -> DataFrame:
-    """Chebyshev-``radius`` ring cells from (x, y) entirely JVM-side: two
-    offset explodes + the Morton encode expression. The previous pandas-UDF
-    ring paid an ArrowEvalPython round-trip (a JVM→Python→JVM transpose of
-    every candidate row) per radius iteration; this form leaves the whole
-    candidate side inside WholeStageCodegen. Clipping at the world-grid
-    border matches numpy k_ring (duplicates possible only there)."""
+def _ring_cells(df: DataFrame, res: int, radius: int) -> DataFrame:
+    """Each (x, y) row once per cell ``(cx, cy)`` of its Chebyshev-``radius``
+    ring, entirely JVM-side: two explodes over integer cell-index ranges.
+    The ranges stop at the world-grid border, so a ring names each cell
+    once (a point outside the world sits in a border cell, and every ring
+    reaching past the border holds that cell)."""
     n = (1 << res) - 1
-    seq = F.sequence(F.lit(-radius), F.lit(radius))
     ix, iy = grid.cell_index_cols(F.col("x"), F.col("y"), res)
-    clip = lambda c: F.greatest(F.lit(0), F.least(c, F.lit(n)))  # noqa: E731
-    d = (
-        df.withColumn("_ix", ix)
-        .withColumn("_iy", iy)
-        .withColumn("_dx", F.explode(seq))
-        .withColumn("_dy", F.explode(seq))
+    span = lambda c: F.sequence(  # noqa: E731
+        F.greatest(c - radius, F.lit(0)), F.least(c + radius, F.lit(n))
     )
-    probe = grid.encode_cell_col(
-        clip(d["_ix"] + d["_dx"]), clip(d["_iy"] + d["_dy"]), res
+    return df.withColumn("cx", F.explode(span(ix))).withColumn(
+        "cy", F.explode(span(iy))
     )
-    return d.withColumn("probe_cell", probe).drop("_ix", "_iy", "_dx", "_dy")
+
+
+def _round(
+    qleft: DataFrame, t: DataFrame, k: int, res: int, radius: int, self_join: bool
+) -> DataFrame:
+    """One proof round: each query's top-k among the targets inside its
+    radius-``radius`` disc, as (point_id, rank, neighbor_id, dist_sq)."""
+    cand = _ring_cells(qleft, res, radius).join(t, ["cx", "cy"])
+    if self_join:
+        cand = cand.filter(F.col("point_id") != F.col("neighbor_id"))
+    dx = F.col("x") - F.col("nx")
+    dy = F.col("y") - F.col("ny")
+    # plain multiplication (not pow) keeps integer-valued doubles exact
+    d = cand.withColumn("dist_sq", dx * dx + dy * dy).filter(
+        F.col("dist_sq") < F.lit((radius * grid.cell_size(res)) ** 2)
+    )
+    win = Window.partitionBy("point_id").orderBy("dist_sq", "neighbor_id")
+    return (
+        d.withColumn("rank", F.row_number().over(win))
+        .filter(F.col("rank") <= k)
+        .select("point_id", "rank", "neighbor_id", "dist_sq")
+    )
 
 
 def knn_join(
@@ -77,96 +92,88 @@ def knn_join(
     one that shares a query's ``point_id``.
 
     The first ring radius is sized from one aggregation over the targets
-    (count and extent). The estimate only steers the first radius: the
-    query count that ends the proof loop is counted from the data too.
+    (count and extent; in a join of two tables it counts the queries in the
+    same pass). Fewer than k targets (k+1 in a self-join) raise
+    ``ValueError`` before any join; a query still unproven at
+    ``max_radius`` raises ``RuntimeError`` and leaves nothing cached.
     """
     self_join = queries is targets
     q = queries.select("point_id", "x", "y")
-    t = _with_cell(targets.select("point_id", "x", "y"), res).select(
+    ix, iy = grid.cell_index_cols(F.col("x"), F.col("y"), res)
+    t = targets.select(
         F.col("point_id").alias("neighbor_id"),
         F.col("x").alias("nx"),
         F.col("y").alias("ny"),
-        F.col("cell_id").alias("probe_cell"),
+        ix.alias("cx"),
+        iy.alias("cy"),
     )
 
-    cs = grid.cell_size(res)
     # Size the FIRST ring radius from target density: for k neighbors at
     # uniform density lam, d_k ~ sqrt(k/(pi*lam)), and the completeness
     # proof needs d_k < R*cell_size — starting at R=1 in a sparse grid
     # re-runs the whole join+window for R=1,2,4,... and every failed
     # iteration is a full re-computation. A 2x-margin density estimate
     # makes the first iteration the accepted one in practice; the
-    # radius-doubling proof loop below is unchanged, so results stay exact
-    # even when the estimate is off (clustered or adversarial layouts).
-    tstats = t.agg(
-        F.count("*").alias("n"),
-        F.min("nx").alias("x0"),
-        F.max("nx").alias("x1"),
-        F.min("ny").alias("y0"),
-        F.max("ny").alias("y1"),
+    # radius-doubling proof loop below keeps results exact even when the
+    # estimate is off (clustered or adversarial layouts). A join of two
+    # tables counts its queries in the same aggregation.
+    side = targets.select(F.lit(True).alias("is_t"), "x", "y")
+    if not self_join:
+        side = side.unionByName(q.select(F.lit(False).alias("is_t"), "x", "y"))
+    is_t = F.col("is_t")
+    on_t = lambda c: F.when(is_t, F.col(c))  # noqa: E731
+    stats = side.agg(
+        F.count(F.when(is_t, 1)).alias("n_t"),
+        F.count(F.when(~is_t, 1)).alias("n_q"),
+        F.min(on_t("x")).alias("x0"),
+        F.max(on_t("x")).alias("x1"),
+        F.min(on_t("y")).alias("y0"),
+        F.max(on_t("y")).alias("y1"),
     ).first()
-    n_t = int(tstats.n)
-    n_queries = n_t if self_join else q.count()
+    n_t = int(stats.n_t)
+    n_left = n_t if self_join else int(stats.n_q)  # queries not yet PROVEN
+    need = k + 1 if self_join else k
+    if n_left and n_t < need:
+        raise ValueError(
+            f"knn_join needs at least {need} target points for k={k}, got {n_t}"
+        )
+    cs = grid.cell_size(res)
     est = 1
-    if n_t and tstats.x0 is not None:
-        area = max(tstats.x1 - tstats.x0, cs) * max(tstats.y1 - tstats.y0, cs)
+    if n_t:
+        area = max(stats.x1 - stats.x0, cs) * max(stats.y1 - stats.y0, cs)
         lam = n_t / area  # targets per m^2
         d_k = math.sqrt((k + 1) / (math.pi * lam))
         est = max(1, math.ceil(2.0 * d_k / cs))
     radius = min(est, max_radius)
-    qleft = q  # queries whose top-k is not yet PROVEN complete
-    n_left = n_queries
+    qleft = q
     done: list[DataFrame] = []  # proven per-query top-k pieces
-    while radius <= max_radius:
-        cand = _ring_explode_xy(qleft, res, radius).join(t, "probe_cell")
-        if self_join:
-            cand = cand.filter(F.col("point_id") != F.col("neighbor_id"))
-        dx = F.col("x") - F.col("nx")
-        dy = F.col("y") - F.col("ny")
-        # plain multiplication (not pow) keeps integer-valued doubles exact
-        d = cand.withColumn("dist_sq", dx * dx + dy * dy)
-        win = Window.partitionBy("point_id").orderBy("dist_sq", "neighbor_id")
-        topk = (
-            d.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k)
-            .select("point_id", "rank", "neighbor_id", "dist_sq")
-        ).persist()
-        # completeness per query: k neighbors found, all within R*cell_size
-        # (true d_k <= observed d_k, so a passing query's top-k is exact) —
-        # one aggregation job over the per-query stats
-        per = topk.groupBy("point_id").agg(
-            F.count("*").alias("n"), F.max("dist_sq").alias("dk")
-        )
-        ok_expr = (F.col("n") >= k) & (F.col("dk") < F.lit((radius * cs) ** 2))
-        chk = per.agg(
-            F.count("*").alias("n_q"),
-            F.sum((~ok_expr).cast("int")).alias("bad"),
-        ).first()
-        n_ok = int(chk.n_q) - int(chk.bad)
-        if chk.bad == 0 and chk.n_q == n_left:
-            if not done:
-                return topk
-            out = done[0]
-            for piece in done[1:] + [topk]:
-                out = out.unionByName(piece)
-            return out
-        if radius >= max_radius:
-            break
+    kept: list[DataFrame] = []  # the persisted rounds those pieces read
+    while True:
+        topk = _round(qleft, t, k, res, radius, self_join).persist()
+        # a rank-k row inside the disc is the whole proof of a query
+        proven = topk.filter(F.col("rank") == k)
+        n_ok = proven.count()
+        if n_ok == n_left:
+            return functools.reduce(DataFrame.unionByName, done + [topk])
         # Only the UNPROVEN queries escalate (guide §2.3 — shuffle fewer
         # bytes): the candidate explosion grows with R^2, so re-running the
         # satisfied majority at the doubled radius would dominate the job.
-        # Keep this round's proven top-k rows, anti-join the satisfied ids
-        # out of the query side, and expand the ring only for the rest
-        # (including queries with zero candidates so far).
-        if n_ok > 0:
-            # id-only exchanges: the semi/anti joins move point ids, never
-            # candidate rows (broadcast left to the planner — at real scale
-            # ok_ids is O(queries) and must be allowed to shuffle)
-            ok_ids = per.filter(ok_expr).select("point_id")
+        # Keep this round's proven top-k rows, anti-join the proven ids out
+        # of the query side (queries with no candidate stay), and expand
+        # the ring only for the rest. The semi/anti joins move point ids,
+        # never candidate rows (broadcast left to the planner — at real
+        # scale the ids are O(queries) and must be allowed to shuffle).
+        if n_ok:
+            ok_ids = proven.select("point_id")
             done.append(topk.join(ok_ids, "point_id", "semi"))
+            kept.append(topk)
             qleft = qleft.join(ok_ids, "point_id", "anti")
             n_left -= n_ok
         else:
             topk.unpersist()
+        if radius >= max_radius:
+            break
         radius = min(radius * 2, max_radius)
+    for df in kept:
+        df.unpersist()
     raise RuntimeError(f"knn_join did not converge within radius {max_radius}")

@@ -8,6 +8,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F
+
+from gridfia_spark import grid
 from gridfia_spark.datagen import tiles as tgen
 from gridfia_spark.operators import broadcast_join, decode, knn
 from gridfia_spark.session import get_spark
@@ -26,13 +29,18 @@ def main() -> None:
     broadcast_join.assign_tiles_fast(meta, polys, res=15).explain("formatted")
     print("===== zonal_stats_fast (map + one partial/final agg) =====")
     broadcast_join.zonal_stats_fast(tiles, polys, species=0, res=15).explain("formatted")
-    print("===== knn ring join =====")
-    # one ring iteration's plan (the loop reuses it)
+    print("===== knn proof round (ring join on (cx, cy), disc, top-k) =====")
+    # one round's plan (the loop reuses it for the unproven queries)
     q = pts.select("point_id", "x", "y")
-    t = knn._with_cell(q, 15).selectExpr(
-        "point_id as neighbor_id", "x as nx", "y as ny", "cell_id as probe_cell"
+    cx, cy = grid.cell_index_cols(F.col("x"), F.col("y"), 15)
+    t = q.select(
+        F.col("point_id").alias("neighbor_id"),
+        F.col("x").alias("nx"),
+        F.col("y").alias("ny"),
+        cx.alias("cx"),
+        cy.alias("cy"),
     )
-    knn._ring_explode_xy(q, 15, 1).join(t, "probe_cell").explain("formatted")
+    knn._round(q, t, 5, 15, 1, True).explain("formatted")
 
     # round-5 warp operators (PLANS §31, §37)
     from gridfia_spark.constants import spec_for_sf_dir

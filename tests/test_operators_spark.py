@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from gridfia_spark import geom, grid
 from gridfia_spark.constants import PIX, SF_SPECS, X0, Y0
 from gridfia_spark.datagen import pixels, tiles as tgen, vectors
+from gridfia_spark.localdf import local_df
 from gridfia_spark.operators import (
     broadcast_join, decode, knn, metrics, spatial_join, zonal,
 )
@@ -134,6 +135,109 @@ class TestKnn:
             mine = got[got.point_id == ids[qi]].sort_values("rank")
             assert [(r.dist_sq, r.neighbor_id) for r in mine.itertuples()] == order
             assert order[0] == (25.0, int(ids[qi]))
+
+    # An escalation layout at res 12 (~9.8 km cells): a dense 2 km cluster
+    # and four outliers 60 km out, one per side. The extent-based first
+    # radius (3 cells) proves every cluster point; an outlier's nearest
+    # targets are ~60 km off, so it is proven only after the ring doubles.
+    RES = 12
+    CX, CY = -1_999_000.0, -901_000.0
+
+    @classmethod
+    def _layout(cls, n, seed):
+        rng = np.random.default_rng(seed)
+        xy = np.round(rng.uniform(-1000.0, 1000.0, (n, 2))) + 0.5
+        far = np.array([[60e3, 0.0], [-60e3, 0.0], [0.0, 60e3], [0.0, -60e3]])
+        return np.vstack([xy, far]) + (cls.CX, cls.CY)
+
+    @staticmethod
+    def _df(spark, ids, xy):
+        rows = [(int(i), float(x), float(y)) for i, (x, y) in zip(ids, xy)]
+        return local_df(spark, rows, "point_id long, x double, y double")
+
+    @staticmethod
+    def _brute(q_ids, q_xy, t_ids, t_xy, k, self_join):
+        want = set()
+        for i, (x, y) in zip(q_ids, q_xy):
+            d = (t_xy[:, 0] - x) * (t_xy[:, 0] - x) + (t_xy[:, 1] - y) * (t_xy[:, 1] - y)
+            near = sorted(
+                (float(dj), int(j)) for dj, j in zip(d, t_ids) if not (self_join and j == i)
+            )[:k]
+            want |= {(int(i), r + 1, j, dj) for r, (dj, j) in enumerate(near)}
+        return want
+
+    def _radii(self, monkeypatch):
+        """Record the radius of every proof round ``knn_join`` runs."""
+        radii = []
+        inner = knn._round
+
+        def spy(qleft, t, k, res, radius, self_join):
+            radii.append(radius)
+            return inner(qleft, t, k, res, radius, self_join)
+
+        monkeypatch.setattr(knn, "_round", spy)
+        return radii
+
+    def test_escalation_self_join_vs_bruteforce(self, spark, monkeypatch):
+        xy = self._layout(150, seed=12)
+        ids = np.arange(len(xy)) * 7 + 3
+        pts = self._df(spark, ids, xy)
+        radii = self._radii(monkeypatch)
+        got = {tuple(r) for r in knn.knn_join(pts, pts, k=4, res=self.RES).collect()}
+        assert len(radii) >= 2 and radii == sorted(set(radii)), radii
+        assert got == self._brute(ids, xy, ids, xy, 4, self_join=True)
+
+    def test_escalation_zero_candidate_query_vs_bruteforce(self, spark, monkeypatch):
+        """A join of two tables: one query sits 80 km east and 80 km north
+        of the cluster, beyond every ring cell of the first two rounds. The
+        second round therefore runs with no candidate row at all, and the
+        query must still escalate to its top-k."""
+        t_xy = self._layout(150, seed=13)
+        t_ids = np.arange(len(t_xy))
+        q_xy = np.vstack([self._layout(40, seed=14)[:40], [[self.CX + 80e3, self.CY + 80e3]]])
+        q_ids = np.arange(len(q_xy)) + 1000
+        radii = self._radii(monkeypatch)
+        got = knn.knn_join(
+            self._df(spark, q_ids, q_xy), self._df(spark, t_ids, t_xy), k=4, res=self.RES
+        )
+        assert len(radii) >= 2, radii
+        assert {tuple(r) for r in got.collect()} == self._brute(
+            q_ids, q_xy, t_ids, t_xy, 4, self_join=False
+        )
+
+    def test_unconverged_leaves_no_cache(self, spark):
+        """Round one proves the cluster and keeps its rows; the outliers
+        never prove within ``max_radius``. The error path unpersists the
+        proven pieces and the last round alike."""
+        xy = self._layout(150, seed=12)
+        pts = self._df(spark, np.arange(len(xy)), xy)
+        persisted = spark.sparkContext._jsc.getPersistentRDDs
+        before = persisted().size()
+        with pytest.raises(RuntimeError, match="did not converge within radius 4"):
+            knn.knn_join(pts, pts, k=4, res=self.RES, max_radius=4)
+        assert persisted().size() == before
+
+    def test_too_few_targets_fails_fast(self, spark):
+        """No query can be proven with fewer than k targets (k+1 in a
+        self-join): the stats pass refuses before any join runs."""
+        pts = self._df(spark, [1, 2, 3], [(0.5, 0.5), (10.5, 0.5), (0.5, 20.5)])
+        with pytest.raises(ValueError, match="at least 6 target points for k=5, got 3"):
+            knn.knn_join(pts, pts, k=5)
+        with pytest.raises(ValueError, match="at least 4 target points for k=4, got 3"):
+            knn.knn_join(self._df(spark, [9], [(5.5, 5.5)]), pts, k=4)
+        # exactly k targets of another table prove every query
+        got = knn.knn_join(self._df(spark, [9], [(5.5, 5.5)]), pts, k=3).collect()
+        assert [r.neighbor_id for r in sorted(got, key=lambda r: r.rank)] == [1, 2, 3]
+
+    def test_distinct_tables_run_no_query_count_job(self, spark):
+        """The query count of a join of two tables rides the target-stats
+        aggregation: it runs exactly the jobs of the self-join."""
+        pts = tgen.points_df(spark, SF_DIR)
+        shifted = pts.select(
+            "point_id", (F.col("x") + 3.0).alias("x"), (F.col("y") + 4.0).alias("y")
+        )
+        self_jobs = _jobs(spark, lambda: knn.knn_join(pts, pts, k=3))
+        assert _jobs(spark, lambda: knn.knn_join(pts, shifted, k=3)) == self_jobs
 
 
 def _jobs(spark, fn) -> int:
