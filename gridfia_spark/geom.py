@@ -150,6 +150,22 @@ def rect_relation(
     return ("outside", "partial", "inside")[rel]
 
 
+_EDGE_BLOCK = 1 << 18  # elements per (rects x edges) temporary
+
+
+def _slab(o, d, lo, hi):
+    """One axis of Liang-Barsky over (rects x edges): each edge's entry and
+    exit parameters, and whether an axis-parallel edge lies in the slab."""
+    flat = d == 0.0
+    safe = np.where(flat, 1.0, d)
+    ta = (lo[:, None] - o) / safe
+    tb = (hi[:, None] - o) / safe
+    t_in = np.where(flat, -np.inf, np.minimum(ta, tb))
+    t_out = np.where(flat, np.inf, np.maximum(ta, tb))
+    ok = ~flat | ((o >= lo[:, None]) & (o <= hi[:, None]))
+    return t_in, t_out, ok
+
+
 def _edges_hit_rects(
     rings: list[np.ndarray],
     xmin: np.ndarray,
@@ -158,32 +174,24 @@ def _edges_hit_rects(
     ymax: np.ndarray,
 ) -> np.ndarray:
     """Vectorized Liang-Barsky: for N rects, does ANY polygon edge intersect?
-    Loops over edges (few), vectorized over rects (many)."""
-    n = xmin.shape[0]
-    hit = np.zeros(n, dtype=bool)
-    for ring in rings:
-        for (px, py), (qx, qy) in zip(ring[:-1], ring[1:]):
-            todo = ~hit
-            if not todo.any():
-                return hit
-            t0 = np.zeros(n)
-            t1 = np.ones(n)
-            ok = todo.copy()
-            for delta, lo, hi, o in (
-                (qx - px, xmin, xmax, px),
-                (qy - py, ymin, ymax, py),
-            ):
-                if delta == 0.0:
-                    ok &= (o >= lo) & (o <= hi)
-                else:
-                    ta = (lo - o) / delta
-                    tb = (hi - o) / delta
-                    lo_t = np.minimum(ta, tb)
-                    hi_t = np.maximum(ta, tb)
-                    t0 = np.maximum(t0, lo_t)
-                    t1 = np.minimum(t1, hi_t)
-            ok &= t0 <= t1
-            hit |= ok
+    Evaluated over (rects x edge-block) arrays of at most ``_EDGE_BLOCK``
+    elements, with the float operations of the per-(rect, edge) clip."""
+    px = np.concatenate([r[:-1, 0] for r in rings])
+    py = np.concatenate([r[:-1, 1] for r in rings])
+    dx = np.concatenate([r[1:, 0] for r in rings]) - px
+    dy = np.concatenate([r[1:, 1] for r in rings]) - py
+    hit = np.zeros(xmin.shape[0], dtype=bool)
+    block = max(1, _EDGE_BLOCK // max(xmin.shape[0], 1))
+    for s in range(0, px.shape[0], block):
+        todo = np.flatnonzero(~hit)
+        if not todo.size:
+            break
+        e = slice(s, s + block)
+        x_in, x_out, x_ok = _slab(px[e], dx[e], xmin[todo], xmax[todo])
+        y_in, y_out, y_ok = _slab(py[e], dy[e], ymin[todo], ymax[todo])
+        t0 = np.maximum(np.maximum(0.0, x_in), y_in)
+        t1 = np.minimum(np.minimum(1.0, x_out), y_out)
+        hit[todo] = (x_ok & y_ok & (t0 <= t1)).any(axis=1)
     return hit
 
 

@@ -118,8 +118,9 @@ def metric_layers(
     shuffle bytes, and the encoded tiles are small next to the work they
     carry (~1.4 MB for 4.8 Mpx of decode + kernels + per-pixel rows), so
     AQE packed the whole pass into ONE task on one core. More tasks than
-    cores would not help either: every PySpark task pays ~0.2-0.3 s of
-    worker set-up before the UDF runs. A REPARTITION_BY_NUM exchange is
+    cores would not help either: every PySpark task pays a fixed worker
+    set-up before the UDF runs (see ``gridfia_spark.zipcache`` for the
+    part of it that was zip re-reads). A REPARTITION_BY_NUM exchange is
     never coalesced, and the plan keeps its single hash exchange."""
     meta = decode.with_tile_meta(tiles).select(
         "tx", "ty", "s", "bytes", "w", "h", "fmt"

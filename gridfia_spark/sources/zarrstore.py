@@ -634,10 +634,12 @@ def read_zarr_store(
         key = r"/(\d+)/(\d+)/(\d+)$"
     # chunk files are tiny (a compressed tile each) but the default
     # open-cost packing schedules ~one file per task; a consumer's Python
-    # stage over those partitions pays ~0.2-0.3 s of worker set-up per
-    # task. A NARROW coalesce (no shuffle, plan stays map-only) to one
-    # partition per core packs many chunks per task; it never increases
-    # the partition count, so a small store is left as it is
+    # stage over those partitions pays a fixed worker set-up per task (an
+    # identity 4-task stage takes ~0.2 s on 4 cores once the zipcache
+    # guard drops PySpark's per-task zip re-reads, 0.12-0.30 s). A NARROW
+    # coalesce (no shuffle, plan stays map-only) to one partition per
+    # core packs many chunks per task; it never increases the partition
+    # count, so a small store is left as it is
     files = files.select("path", "content").coalesce(
         spark.sparkContext.defaultParallelism
     )

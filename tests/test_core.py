@@ -140,6 +140,64 @@ class TestGeom:
             assert covered[inside].all()
 
 
+def _clip_hits(px, py, qx, qy, x0, y0, x1, y1) -> bool:
+    """Reference: scalar Liang-Barsky clip of one edge against one rect."""
+    t0, t1 = 0.0, 1.0
+    for o, d, lo, hi in ((px, qx - px, x0, x1), (py, qy - py, y0, y1)):
+        if d == 0.0:
+            if not lo <= o <= hi:
+                return False
+        else:
+            ta, tb = (lo - o) / d, (hi - o) / d
+            t0, t1 = max(t0, min(ta, tb)), min(t1, max(ta, tb))
+    return t0 <= t1
+
+
+class TestEdgesHitRects:
+    @pytest.mark.parametrize("seed", range(6))
+    @pytest.mark.parametrize("block", [7, 1 << 18])
+    def test_vs_scalar_clip(self, seed, block, monkeypatch):
+        """Equal, rect by rect, to any-edge-of-the-polygon under the scalar
+        clip: rings with horizontal and vertical runs and hole rings, rects
+        with zero width or height and rects whose corner is a ring vertex,
+        on the integer lattice and at world coordinates; a 7-element block
+        runs the multi-block and all-hit early-exit paths."""
+        monkeypatch.setattr(geom, "_EDGE_BLOCK", block)
+        rng = np.random.default_rng(seed)
+        scale, x_off, y_off = ((1.0, 0.0, 0.0), (PIX / 2, X0, Y0 - 20 * PIX))[seed % 2]
+        rings = []
+        for _ in range(1 + seed % 3):
+            n = int(rng.integers(3, 12))
+            v = rng.integers(0, 21, size=(n, 2)).astype(np.float64)
+            v[1::3, 0] = v[0:-1:3, 0][: len(v[1::3])]  # vertical edges
+            v[2::3, 1] = v[1:-1:3, 1][: len(v[2::3])]  # horizontal edges
+            v = np.vstack([v, v[:1]])
+            rings.append(np.column_stack([x_off + scale * v[:, 0], y_off + scale * v[:, 1]]))
+        n = 400
+        lo = rng.integers(-2, 23, size=(n, 2)).astype(np.float64)
+        size = rng.integers(0, 6, size=(n, 2)).astype(np.float64)
+        size[rng.random(n) < 0.25, 0] = 0.0  # zero width
+        size[rng.random(n) < 0.25, 1] = 0.0  # zero height
+        verts = np.vstack([r[:-1] for r in rings])
+        at_vertex = rng.random(n) < 0.3  # the rect's lower-left is a vertex
+        xmin = np.where(at_vertex, 0.0, x_off + scale * lo[:, 0])
+        ymin = np.where(at_vertex, 0.0, y_off + scale * lo[:, 1])
+        pick = verts[rng.integers(0, len(verts), size=n)]
+        xmin[at_vertex], ymin[at_vertex] = pick[at_vertex, 0], pick[at_vertex, 1]
+        xmax, ymax = xmin + scale * size[:, 0], ymin + scale * size[:, 1]
+        got = geom._edges_hit_rects(rings, xmin, ymin, xmax, ymax)
+        want = np.array([
+            any(
+                _clip_hits(*p, *q, xmin[i], ymin[i], xmax[i], ymax[i])
+                for r in rings
+                for p, q in zip(r[:-1].tolist(), r[1:].tolist())
+            )
+            for i in range(n)
+        ])
+        np.testing.assert_array_equal(got, want)
+        assert 0 < want.sum() < n
+
+
 def _meshgrid_mask(tx, ty, w, h, rings):
     """Reference: ray-cast every pixel centre of the tile."""
     cx = X0 + (tx * w + np.arange(w)) * PIX + PIX / 2
