@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from . import grid
 from .constants import PIX
 from .functions import kernels
-from .operators import broadcast_join, decode, knn as knn_op, metrics, spatial_join
+from .operators import broadcast_join, decode, knn as knn_op, metrics, spatial_join, zonal
 
 # reference registry name -> (kernel, default output column, sql type)
 _CALC_TABLE: dict[str, tuple[str, str]] = {
@@ -200,9 +200,7 @@ class GridFIASpark:
     def zonal_stats(
         self, tiles: DataFrame, polygons: DataFrame, species: int | None = 0
     ) -> DataFrame:
-        return broadcast_join.zonal_stats_fast(
-            tiles, polygons, species=species, res=self._res(tiles)
-        )
+        return zonal.zonal_stats(tiles, polygons, species=species, res=self._res(tiles))
 
     def assign_tiles(self, tiles: DataFrame, polygons: DataFrame) -> DataFrame:
         meta = decode.with_tile_meta(tiles)

@@ -228,6 +228,9 @@ def rect_relation_batch(
 
 # ------------------------------------------------------------ covering
 
+_CHILD_DX = np.array([0, 1, 0, 1], dtype=np.int64)
+_CHILD_DY = np.array([0, 0, 1, 1], dtype=np.int64)
+
 
 def polygon_covering(
     rings: list[np.ndarray], res_min: int, res_max: int
@@ -238,34 +241,28 @@ def polygon_covering(
     partial cells at res_max are a superset filter refined by PIP. This is the
     H3 polyfill analogue the broadcast side of the join is built from
     (FIXTURES.md §2 ``polygon_cells``).
+
+    The quadtree descends on integer index pairs ``(ix, iy)``; cell ids are
+    encoded once per emitted level.
     """
-    xmin, ymin, xmax, ymax = polygon_bounds(rings)
-    frontier = grid.cells_in_bbox(xmin, ymin, xmax, ymax, res_min)
+    ix, iy = grid.bbox_indices(*polygon_bounds(rings), res_min)
     out_cells: list[np.ndarray] = []
     out_full: list[np.ndarray] = []
     res = res_min
-    while frontier.size:
-        cxmin, cymin, cxmax, cymax = grid.cell_bounds(frontier)
-        rel = rect_relation_batch(rings, cxmin, cymin, cxmax, cymax)
-        inside = frontier[rel == 2]
-        if inside.size:
-            out_cells.append(inside)
-            out_full.append(np.ones(inside.size, dtype=bool))
-        partial = frontier[rel == 1]
-        if res >= res_max:
-            if partial.size:
-                out_cells.append(partial)
-                out_full.append(np.zeros(partial.size, dtype=bool))
+    while ix.size:
+        rel = rect_relation_batch(rings, *grid.index_bounds(ix, iy, res))
+        last = res >= res_max
+        for code in (2, 1) if last else (2,):
+            sel = rel == code
+            if sel.any():
+                out_cells.append(grid.encode_cell(ix[sel], iy[sel], res))
+                out_full.append(np.full(int(sel.sum()), code == 2))
+        if last:
             break
         # descend: 4 children per partial cell, all vectorized
-        ix, iy, _ = grid.decode_cell(partial)
-        dx = np.array([0, 1, 0, 1], dtype=np.int64)
-        dy = np.array([0, 0, 1, 1], dtype=np.int64)
-        frontier = grid.encode_cell(
-            (2 * ix[:, None] + dx[None, :]).ravel(),
-            (2 * iy[:, None] + dy[None, :]).ravel(),
-            res + 1,
-        )
+        part = rel == 1
+        ix = (2 * ix[part][:, None] + _CHILD_DX).ravel()
+        iy = (2 * iy[part][:, None] + _CHILD_DY).ravel()
         res += 1
     if not out_cells:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=bool)

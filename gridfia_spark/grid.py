@@ -92,7 +92,13 @@ def cell_of_xy(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
 
 def cell_bounds(cell: np.ndarray) -> tuple[np.ndarray, ...]:
     """(xmin, ymin, xmax, ymax) of cell(s). Vectorized."""
-    ix, iy, res = decode_cell(cell)
+    return index_bounds(*decode_cell(cell))
+
+
+def index_bounds(
+    ix: np.ndarray, iy: np.ndarray, res: int | np.ndarray
+) -> tuple[np.ndarray, ...]:
+    """(xmin, ymin, xmax, ymax) of the cells at index pairs (ix, iy)."""
     size = WORLD_SIZE / np.power(2.0, res)
     xmin = WORLD_X0 + ix * size
     ymax = WORLD_Y0 - iy * size
@@ -212,10 +218,11 @@ def bbox_cells_batch(
     return row_idx, encode_cell(ix, iy, res)
 
 
-def cells_in_bbox(
+def bbox_indices(
     xmin: float, ymin: float, xmax: float, ymax: float, res: int
-) -> np.ndarray:
-    """All cells at ``res`` whose squares overlap the (closed) bbox."""
+) -> tuple[np.ndarray, np.ndarray]:
+    """Index pairs (ix, iy) of all cells at ``res`` whose squares overlap
+    the (closed) bbox, row by row."""
     size = cell_size(res)
     ix0 = int(np.floor((xmin - WORLD_X0) / size))
     ix1 = int(np.floor((xmax - WORLD_X0) / size))
@@ -225,9 +232,9 @@ def cells_in_bbox(
     ix0, ix1 = max(ix0, 0), min(ix1, n)
     iy0, iy1 = max(iy0, 0), min(iy1, n)
     if ix1 < ix0 or iy1 < iy0:
-        return np.empty(0, dtype=np.int64)
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
     gx, gy = np.meshgrid(
         np.arange(ix0, ix1 + 1, dtype=np.int64),
         np.arange(iy0, iy1 + 1, dtype=np.int64),
     )
-    return encode_cell(gx.ravel(), gy.ravel(), res)
+    return gx.ravel(), gy.ravel()

@@ -1,18 +1,18 @@
-"""The spatial-join core: one pair kernel for every zonal plan.
+"""The spatial-join core: one pair source, one pair kernel and one partials
+stage for every zonal plan.
 
-Every candidate (tile, polygon) pair runs one kernel, ``_pair_values``:
-candidates -> sure/maybe -> mask -> partials. A sure pair (tile provably
-inside the polygon) skips the mask; a boundary pair gets an exact scanline
-pixel mask (``geom.tile_mask``). Plans differ only in how pairs are found:
-
-- ``PolygonIndex`` (small polygon side, like the reference's in-memory
-  GeoDataFrame, boundaries.py:30-49): a covering-cell index built on the
-  driver, broadcast once per worker and probed inside the Arrow batch.
-  ``assign_tiles_fast`` is map-only; ``zonal_stats_fast`` is one map pass of
-  per-pair partials plus one tiny final aggregation (``final_zonal``).
-- the in-cluster cell join ``spatial_join.join_tiles_polygons`` (more than
-  ``AUTO_DIST_THRESHOLD`` polygons, seen by ``zonal.zonal_stats`` in the
-  index's own bounded collect) feeds the same kernel.
+- ``_pair_source`` finds candidate (tile, polygon) pairs. The bounded
+  collect of ``PolygonIndex.build_bounded`` decides how: up to
+  ``AUTO_DIST_THRESHOLD`` polygons a covering-cell index built on the driver
+  (like the reference's in-memory GeoDataFrame, boundaries.py:30-49),
+  broadcast once per worker and probed inside the Arrow batch; above it the
+  in-cluster cell join ``spatial_join.join_tiles_polygons``, once per tile
+  position ``(tx, ty)`` for every layer.
+- ``_pair_values``: candidates -> sure/maybe -> mask -> pixels. A sure pair
+  skips the mask; a boundary pair gets an exact scanline mask.
+- ``zonal_partials``: one ``mapInPandas`` body reduces each pair's pixels to
+  per-(tile, polygon, s) rows (``pair_stats`` or the value bincount) for
+  one final aggregation. ``zonal_stats_fast`` pins the driver index.
 """
 
 from __future__ import annotations
@@ -205,10 +205,40 @@ def _index_pairs(pdf: pd.DataFrame, index: PolygonIndex) -> tuple:
     )
 
 
-def pair_stats(vals: np.ndarray) -> tuple[int, float, float, int]:
-    """Zonal partials of one pair's pixels: (n_px, sum_v, max_v, nonzero_px)."""
-    return (int(vals.size), float(vals.sum(dtype=np.float64)), float(vals.max()),
-            int((vals > 0).sum()))
+def _cand_pairs(pdf: pd.DataFrame) -> tuple:
+    """Cell-join probe of one Arrow batch: every row is one candidate pair,
+    keyed by its polygon's position among the batch's distinct polygons.
+    Returns the pair kernel's arguments and the key -> poly_id list."""
+    keys, ids = pd.factorize(pdf["poly_id"])
+    _, first = np.unique(keys, return_index=True)
+    rings = [geom.wkb_to_polygon(bytes(w)) for w in pdf["geom_wkb"].to_numpy()[first]]
+    return (
+        (pdf, range(len(pdf)), keys.tolist(), pdf["tile_inside"].tolist(), rings),
+        ids.tolist(),
+    )
+
+
+def pair_stats(vals: np.ndarray) -> list[tuple[int, float, float, int]]:
+    """Zonal partials of one pair's pixels: one (n_px, sum_v, max_v,
+    nonzero_px) row."""
+    return [(int(vals.size), float(vals.sum(dtype=np.float64)), float(vals.max()),
+             int((vals > 0).sum()))]
+
+
+def _value_counts(vals: np.ndarray):
+    """Histogram partials of one pair's integer-valued pixels (the u8z data
+    contract): a ``(v, cnt)`` row per value present, so no reducer ever
+    buffers a zone's pixel population."""
+    counts = np.bincount(vals.astype(np.int64))
+    nz = np.flatnonzero(counts)
+    return zip(nz.tolist(), counts[nz].tolist())
+
+
+# the partials stage's reducers: one pair's pixels -> rows, and their columns
+_REDUCERS = {
+    "stats": (pair_stats, "n_px long, sum_v double, max_v double, nonzero_px long"),
+    "hist": (_value_counts, "v int, cnt long"),
+}
 
 
 def final_zonal(part: DataFrame, keys: list[str]) -> DataFrame:
@@ -225,90 +255,91 @@ def final_zonal(part: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-_ZONAL_META_COLS = (
-    "bytes", "w", "h", "fmt", "s", "tx", "ty", "xmin", "ymin", "xmax", "ymax"
-)
+def layer_meta(tiles: DataFrame, species: int | None) -> DataFrame:
+    """Tile metadata of one species layer, or of every layer for ``None``."""
+    meta = decode.with_tile_meta(tiles)
+    return meta if species is None else meta.filter(F.col("s") == species)
 
 
-def _zonal_partials(meta: DataFrame, index: PolygonIndex) -> DataFrame:
-    """Per-(tile, poly, species) zonal partial aggregates — the map stage
-    shared by the batch path (zonal_stats_fast) and the streaming path
-    (streaming/incremental.py)."""
-    cols = meta.select(*_ZONAL_META_COLS)
-    bc = meta.sparkSession.sparkContext.broadcast(index)
+_KERNEL_COLS = ("bytes", "w", "h", "fmt", "s", "tx", "ty")  # what the kernel reads
+
+
+def _pair_source(meta: DataFrame, polygons: DataFrame, res: int, plan) -> tuple:
+    """The frame the partials stage maps over and its per-batch probe
+    ``pdf -> (kernel arguments, key -> poly_id)``. ``plan`` is a driver
+    ``PolygonIndex``, a candidate frame of ``spatial_join.
+    join_tiles_polygons``, or None: the bounded collect picks one."""
+    if plan is None:
+        plan = PolygonIndex.build_bounded(polygons, res)
+    if plan is None:
+        from .spatial_join import join_tiles_polygons
+
+        plan = join_tiles_polygons(meta, polygons, res)
+    if isinstance(plan, PolygonIndex):
+        # real Spark broadcast: the index ships once per worker, not once
+        # per task closure; the probe runs inside the Arrow batch
+        bc = meta.sparkSession.sparkContext.broadcast(plan)
+
+        def probe(pdf: pd.DataFrame) -> tuple:
+            index = bc.value
+            return _index_pairs(pdf, index), index.poly_ids
+
+        return meta.select(*_KERNEL_COLS, "xmin", "ymin", "xmax", "ymax"), probe
+    # The pairs are O(tile positions x overlapping polygons) and the WKB frame
+    # O(polygons): broadcasting either is an executor OOM at scale. WKB meets
+    # the pairs first (a shuffle that never touches tile bytes), then every
+    # layer's tile rows meet them in ONE shuffle-hash join on (tx, ty): the
+    # hash table is the pair side, tile bytes stream and are never sorted.
+    # The hints keep tiny fixture estimates from picking a broadcast (§3.1).
+    cand = plan.join(polygons.select("poly_id", "geom_wkb").hint("shuffle_hash"), "poly_id")
+    frame = meta.select(*_KERNEL_COLS).join(cand.hint("shuffle_hash"), ["tx", "ty"])
+    return frame, _cand_pairs
+
+
+def zonal_partials(
+    meta: DataFrame, polygons: DataFrame, res: int, reduce: str, plan=None
+) -> DataFrame:
+    """The one partials stage of every zonal plan: per-(tile, polygon, s)
+    rows of ``_REDUCERS[reduce]`` over the pixels the pair kernel keeps for
+    the pairs of ``_pair_source``; shared with streaming/incremental.py."""
+    frame, probe = _pair_source(meta, polygons, res, plan)
+    fn, cols = _REDUCERS[reduce]
+    names = ["poly_id", "s", *(c.split()[0] for c in cols.split(", "))]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        index = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
+            args, ids = probe(pdf)
             s_col = pdf["s"].to_numpy()
             out = [
-                (index.poly_ids[pidx], int(s_col[i]), *pair_stats(vals))
-                for pidx, i, vals in _pair_values(*_index_pairs(pdf, index))
+                (ids[key], int(s_col[i]), *row)
+                for key, i, vals in _pair_values(*args)
+                for row in fn(vals)
             ]
             if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=["poly_id", "s", "n_px", "sum_v", "max_v", "nonzero_px"],
-                )
+                yield pd.DataFrame(out, columns=names)
 
-    return cols.mapInPandas(
-        run,
-        "poly_id string, s int, n_px long, sum_v double, max_v double, nonzero_px long",
-    )
+    return frame.mapInPandas(run, f"poly_id string, s int, {cols}")
 
 
-def _zonal_hist_partials(meta: DataFrame, index: PolygonIndex) -> DataFrame:
-    """Per-(tile, poly, species) VALUE-HISTOGRAM partials: ``np.bincount``
-    inside the map stage collapses each pair's pixels to <= |value domain|
-    ``(v, cnt)`` rows before anything is shuffled. This is the scale-safe
-    percentile plan — no reducer ever buffers a zone's pixel population
-    (vs an exact ``percentile`` aggregate, which OOMs on one CONUS-scale
-    county at 100x). Integer-valued pixels only (the u8z data contract)."""
-    cols = meta.select(*_ZONAL_META_COLS)
-    bc = meta.sparkSession.sparkContext.broadcast(index)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        index = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            s_col = pdf["s"].to_numpy()
-            pids, ss, vv, cc = [], [], [], []
-            for pidx, i, vals in _pair_values(*_index_pairs(pdf, index)):
-                counts = np.bincount(vals.astype(np.int64))
-                nz = np.flatnonzero(counts)
-                pids.append(np.full(nz.size, index.poly_ids[pidx], dtype=object))
-                ss.append(np.full(nz.size, int(s_col[i]), dtype=np.int32))
-                vv.append(nz.astype(np.int32))
-                cc.append(counts[nz])
-            if pids:
-                yield pd.DataFrame(
-                    {
-                        "poly_id": np.concatenate(pids),
-                        "s": np.concatenate(ss),
-                        "v": np.concatenate(vv),
-                        "cnt": np.concatenate(cc),
-                    }
-                )
-
-    return cols.mapInPandas(run, "poly_id string, s int, v int, cnt long")
+def zonal_stats_plan(
+    tiles: DataFrame, polygons: DataFrame, species: int | None, res: int, plan=None
+) -> DataFrame:
+    """Per-polygon stats of one layer over the pairs ``plan`` finds (see
+    ``_pair_source``); ``species=None`` aggregates every layer, grouped by
+    (poly_id, s)."""
+    part = zonal_partials(layer_meta(tiles, species), polygons, res, "stats", plan)
+    return final_zonal(part, ["poly_id", "s"] if species is None else ["poly_id"])
 
 
 def zonal_value_hist(
-    tiles: DataFrame, polygons: DataFrame, species: int | None, res: int,
-    index: PolygonIndex | None = None,
+    tiles: DataFrame, polygons: DataFrame, species: int | None, res: int
 ) -> DataFrame:
-    """Per-(poly, [s]) exact value histogram ``(v, cnt)`` of the pixel
-    distribution: map-side bincount partials + one tiny groupBy (the shuffle
-    carries at most |polys| * |species| * |domain| rows). Feed the result to
-    ``functions.histpct.hist_percentiles`` for exact percentiles."""
-    index = index or PolygonIndex.build(polygons, res)
-    meta = decode.with_tile_meta(tiles)
-    if species is not None:
-        meta = meta.filter(F.col("s") == species)
-    part = _zonal_hist_partials(meta, index)
+    """Per-(poly, [s]) exact value histogram ``(v, cnt)``, on the plan the
+    polygon side picks: the shuffle carries at most |polys| * |species| *
+    |domain| rows. ``functions.histpct.hist_percentiles`` reads it."""
+    part = zonal_partials(layer_meta(tiles, species), polygons, res, "hist")
     keys = ["poly_id", "s", "v"] if species is None else ["poly_id", "v"]
     return part.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
 
@@ -317,14 +348,7 @@ def zonal_stats_fast(
     tiles: DataFrame, polygons: DataFrame, species: int | None, res: int,
     index: PolygonIndex | None = None,
 ) -> DataFrame:
-    """Zonal aggregation with a map-side join: decode each tile once, probe
-    the broadcast covering index, PIP only boundary (tile, poly) pairs, emit
-    per-pair partials; one final groupBy.
-
-    ``species=None`` aggregates every layer, grouped by (poly_id, s)."""
+    """``zonal.zonal_stats`` pinned to the driver index; pass a prebuilt
+    ``index`` to share one covering across several operators."""
     index = index or PolygonIndex.build(polygons, res)
-    meta = decode.with_tile_meta(tiles)
-    if species is not None:
-        meta = meta.filter(F.col("s") == species)
-    part = _zonal_partials(meta, index)
-    return final_zonal(part, ["poly_id", "s"] if species is None else ["poly_id"])
+    return zonal_stats_plan(tiles, polygons, species, res, index)

@@ -59,7 +59,7 @@ def with_tile_cells(tiles_meta: DataFrame, res: int = grid.JOIN_RES) -> DataFram
 
     Entirely JVM-side: clipped index ranges + two sequence explodes + the
     Morton encode expression (grid.encode_cell_col), the same float math in
-    the same IEEE order as grid.cells_in_bbox, so cell ids are bit-identical
+    the same IEEE order as grid.bbox_indices, so cell ids are bit-identical
     to the old pandas-UDF form without the ArrowEvalPython round-trip
     (guide §4.1). eps treats the tile as half-open [xmin,xmax) x (ymin,ymax]."""
     eps = 1e-6
@@ -71,7 +71,7 @@ def with_tile_cells(tiles_meta: DataFrame, res: int = grid.JOIN_RES) -> DataFram
             return F.floor((coord - F.lit(grid.WORLD_X0)) / F.lit(size))
         return F.floor((F.lit(grid.WORLD_Y0) - coord) / F.lit(size))
 
-    # one-sided clips, exactly like grid.cells_in_bbox: lower bounds only
+    # one-sided clips, exactly like grid.bbox_indices: lower bounds only
     # floored at 0, upper bounds only capped at n — a bbox entirely outside
     # the world keeps an inverted range and yields an EMPTY covering
     ix0 = F.greatest(F.lit(0), idx(F.col("xmin") + F.lit(eps), True))

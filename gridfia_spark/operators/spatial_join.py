@@ -17,10 +17,12 @@ the side is larger, which takes the in-cluster cell join.
   (cell probe, fully-inside fast path, vectorized ray casting), or an
   equi-join of the in-cluster covering on ``cell_id`` that ray-casts only
   cells not fully inside.
-- ``join_tiles_polygons``: candidate (tile, polygon) pairs with
-  ``tile_inside`` from the in-cluster covering, for
-  ``zonal.zonal_stats_dist``, whose pixels then go through the one pair
-  kernel in ``broadcast_join``; ``salted=True`` spreads hot cells.
+- ``join_tiles_polygons``: candidate (tile position, polygon) pairs with
+  ``tile_inside`` from the in-cluster covering, found once per ``(tx, ty)``
+  for every layer; ``broadcast_join._pair_source`` feeds them to the one
+  pair kernel and partials stage when the polygon side is above the
+  threshold (or ``zonal.zonal_stats_dist`` pins them); ``salted=True``
+  spreads hot cells.
 
 Tile assignment has one implementation: ``broadcast_join.assign_tiles_fast``.
 """
@@ -113,7 +115,7 @@ def _pip_refine(cand: DataFrame, polygons: DataFrame) -> DataFrame:
     inside the polygon — vectorized ray casting, batched per polygon. The
     WKB frame is O(polygons) on the plan meant for the most polygons, so it
     meets the candidates in a shuffle-hash join and is never broadcast
-    (the same rule as zonal.zonal_stats_dist)."""
+    (the same rule as the in-cluster zonal pair source)."""
     withwkb = cand.join(
         polygons.select("poly_id", "geom_wkb").hint("shuffle_hash"), "poly_id"
     )
@@ -209,24 +211,26 @@ def join_tiles_polygons(
     salted: bool = False,
     salt_threshold: int = 64,
 ) -> DataFrame:
-    """Candidate tile×polygon pairs via the cell-prefix join against the
-    in-cluster covering (``polygon_cells_dist``).
+    """Candidate (tile position, polygon) pairs via the cell-prefix join
+    against the in-cluster covering (``polygon_cells_dist``).
 
-    Returns one row per (image_id, poly_id) with ``tile_inside`` = the whole
+    Returns one row per (tx, ty, poly_id) with ``tile_inside`` = the whole
     tile is provably inside the polygon (every covering cell of the tile is a
     fully-inside polygon cell) — pairs with ``tile_inside`` skip per-pixel PIP
     in zonal aggregation. Candidate pairs where only boundary cells touch are
-    a superset; exact per-pixel refinement happens downstream.
+    a superset; exact per-pixel refinement happens downstream. Pairs are
+    found once per tile position, not once per layer row: every layer at
+    (tx, ty) shares the tile's bbox, so the cell join does not grow with the
+    layer count, and the tile rows meet the pairs on (tx, ty).
     ``salted=True`` routes the cell equi-join through skew.salted_join: cells
-    holding more than ``salt_threshold`` tile rows (dense urban clusters /
-    a polygon covering most of the raster) are spread over the salts —
-    identical rows, no hot-key straggler.
+    holding more than ``salt_threshold`` tile positions (dense urban
+    clusters / a polygon covering most of the raster) are spread over the
+    salts — identical rows, no hot-key straggler.
     """
     pcells = polygon_cells_dist(polygons, res)
+    pos = tiles_meta.select("tx", "ty", "xmin", "ymin", "xmax", "ymax").distinct()
     # n_tile_cells rides along as a column (no extra shuffle for the count)
-    tcells = decode.with_tile_cells(tiles_meta, res).select(
-        "image_id", "cell_id", "n_tile_cells", "xmin", "ymin", "xmax", "ymax"
-    )
+    tcells = decode.with_tile_cells(pos, res).select("tx", "ty", "n_tile_cells", "cell_id")
     if salted:
         from . import skew
 
@@ -236,19 +240,9 @@ def join_tiles_polygons(
         # small local fixture's size estimate can never flip the scale plan
         # to a broadcast (guide §3.1)
         j = tcells.join(pcells.hint("shuffle_hash"), "cell_id")
-    agg = j.groupBy("image_id", "poly_id").agg(
+    agg = j.groupBy("tx", "ty", "n_tile_cells", "poly_id").agg(
         F.count("*").alias("n_hit"),
         F.min(F.col("fully_inside").cast("int")).alias("all_full"),
-        F.first("n_tile_cells").alias("n_tile_cells"),
-        F.first("xmin").alias("xmin"),
-        F.first("ymin").alias("ymin"),
-        F.first("xmax").alias("xmax"),
-        F.first("ymax").alias("ymax"),
     )
-    out = agg.withColumn(
-        "tile_inside",
-        (F.col("n_hit") == F.col("n_tile_cells")) & (F.col("all_full") == 1),
-    )
-    return out.select(
-        "image_id", "poly_id", "tile_inside", "xmin", "ymin", "xmax", "ymax"
-    )
+    inside = (F.col("n_hit") == F.col("n_tile_cells")) & (F.col("all_full") == 1)
+    return agg.select("tx", "ty", "poly_id", inside.alias("tile_inside"))

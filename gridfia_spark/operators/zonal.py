@@ -1,23 +1,20 @@
 """Raster→vector zonal aggregation (north rule core; SURVEY §2.4 A19).
 
-Per-polygon statistics of a species layer over all pixels whose center falls
-inside the polygon — the distributed recast of GridFIA's "summarize biomass by
-county" workflow (spatial join at parallel_processing.py:90 + stats like
-species_presence.py:92-125).
+Per-polygon statistics of one species layer, or of every layer, over all
+pixels whose center falls inside the polygon — the distributed recast of
+GridFIA's "summarize biomass by county" workflow (spatial join at
+parallel_processing.py:90 + stats like species_presence.py:92-125).
 
-``zonal_stats`` picks the plan that finds candidate (tile, polygon) pairs
-from the polygon side itself: the one bounded collect of
-``PolygonIndex.build_bounded`` either yields the driver index
-(``broadcast_join.zonal_stats_fast``, up to ``AUTO_DIST_THRESHOLD``
-polygons) or shows a larger side, which takes the in-cluster cell join
-(``zonal_stats_dist`` over ``spatial_join.join_tiles_polygons``; its
-``salted=True`` spreads hot cells). Every plan runs the one pair kernel
-(``broadcast_join._pair_values``) and final aggregation (``final_zonal``).
+``zonal_stats`` is the one public zonal entry: the polygon side picks the
+pair source (the driver index up to ``AUTO_DIST_THRESHOLD`` polygons, the
+in-cluster cell join above it), and every plan runs the one partials stage
+and final aggregation of ``broadcast_join``. ``zonal_stats_dist`` pins the
+in-cluster plan (``salted=True`` spreads hot cells).
 
 Per-pair partials keep the shuffle O(pairs), not O(pixels), and make float
-sums deterministic across parallelism levels: pixel values are integer-valued
-float32, partial sums are exact in float64, and the final combine sums a few
-hundred exact values — bit-equal at local[1] and local[32].
+sums deterministic: pixel values are integer-valued float32, partial sums
+are exact in float64, so the final combine is bit-equal at local[1] and
+local[32] and on every plan.
 """
 
 from __future__ import annotations
@@ -29,8 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import codecs, geom, grid
-from . import broadcast_join, decode, spatial_join
+from .. import codecs, grid
+from . import broadcast_join, spatial_join
 
 
 def clip_to_polygon(
@@ -50,7 +47,7 @@ def clip_to_polygon(
     bc = tiles.sparkSession.sparkContext.broadcast(
         broadcast_join.PolygonIndex.build(one, grid.JOIN_RES)
     )
-    meta = decode.with_tile_meta(tiles).filter(F.col("s") == species).select(
+    meta = broadcast_join.layer_meta(tiles, species).select(
         "image_id", "bytes", "w", "h", "fmt", "code", "name", "tx", "ty",
         "xmin", "ymin", "xmax", "ymax",
     )
@@ -82,79 +79,38 @@ def clip_to_polygon(
 
 
 def zonal_stats(
-    tiles: DataFrame, polygons: DataFrame, species: int = 0, res: int | None = None
+    tiles: DataFrame, polygons: DataFrame, species: int | None = 0, res: int | None = None
 ) -> DataFrame:
     """Per-polygon (poly_id) stats of one species layer:
-    n_px, sum_v, mean_v, max_v, nonzero_px.
+    n_px, sum_v, mean_v, max_v, nonzero_px; ``species=None`` aggregates
+    every layer, grouped by (poly_id, s).
 
     Pixel membership: pixel-center-in-polygon (exact; centers never sit on
     fixture boundaries). Pixels with value 0 count toward n_px but not
     nonzero_px — matching the reference's coverage stats
     (species_presence.py:92-125). Up to ``AUTO_DIST_THRESHOLD`` polygons
-    the driver index (``broadcast_join.zonal_stats_fast``) finds the pairs;
-    above it ``zonal_stats_dist`` computes the covering in-cluster. The
-    bounded collect that builds the index is the only job run here."""
+    the driver index finds the pairs; above it the in-cluster cell join
+    does. The bounded collect that builds the index is the only job run
+    here."""
     res = res if res is not None else grid.JOIN_RES
-    index = broadcast_join.PolygonIndex.build_bounded(polygons, res)
-    if index is None:
-        return zonal_stats_dist(tiles, polygons, species, res)
-    return broadcast_join.zonal_stats_fast(tiles, polygons, species, res, index=index)
+    return broadcast_join.zonal_stats_plan(tiles, polygons, species, res)
 
 
 def zonal_stats_dist(
     tiles: DataFrame,
     polygons: DataFrame,
-    species: int = 0,
+    species: int | None = 0,
     res: int = grid.JOIN_RES,
     salted: bool = False,
     salt_threshold: int = 64,
 ) -> DataFrame:
-    """``zonal_stats`` for a large polygon side: the covering is computed
-    in-cluster and equi-joined with the tile cells
+    """``zonal_stats`` pinned to the in-cluster cell join
     (``spatial_join.join_tiles_polygons``; ``salted=True`` spreads cells
-    holding more than ``salt_threshold`` tile rows over salts — the plan
-    for a polygon that covers most of the raster). No frame keyed on tiles
-    or polygons is broadcast."""
-    meta = decode.with_tile_meta(tiles).filter(F.col("s") == species)
+    holding more than ``salt_threshold`` tile positions over salts — the
+    plan for a polygon that covers most of the raster). No frame keyed on
+    tiles or polygons is broadcast."""
+    meta = broadcast_join.layer_meta(tiles, species)
     cand = spatial_join.join_tiles_polygons(
         meta, polygons, res, salted=salted, salt_threshold=salt_threshold
     )
-    meta_sel = meta.select("image_id", "bytes", "w", "h", "fmt", "tx", "ty")
-    # cand is O(tiles x overlapping polys) and the WKB frame is O(polygons) —
-    # force-broadcasting either is an executor OOM at scale. Attach WKB to
-    # the candidate pairs first (a pair-sized shuffle that never touches tile
-    # bytes), then meet the tile table in ONE shuffle-hash join on image_id:
-    # the hash table is built from the pair side, the byte-carrying tile rows
-    # stream through without ever being sorted, and AQE (on in session.py)
-    # splits any skewed cell. shuffle_hash hints on BOTH joins: the frames
-    # must never be broadcast even when local fixtures make their size
-    # estimates tiny — pick the strategy deliberately (guide §3.1)
-    cand_w = cand.join(
-        polygons.select("poly_id", "geom_wkb").hint("shuffle_hash"),
-        "poly_id",
-    )
-    pairs = meta_sel.join(cand_w.hint("shuffle_hash"), "image_id")
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            wkbs = pdf.drop_duplicates("poly_id").set_index("poly_id")["geom_wkb"]
-            rings = {pid: geom.wkb_to_polygon(bytes(w)) for pid, w in wkbs.items()}
-            out = [
-                (pid, *broadcast_join.pair_stats(vals))
-                for pid, _, vals in broadcast_join._pair_values(
-                    pdf, range(len(pdf)), pdf["poly_id"].tolist(),
-                    pdf["tile_inside"].tolist(), rings,
-                )
-            ]
-            if out:
-                yield pd.DataFrame(
-                    out, columns=["poly_id", "n_px", "sum_v", "max_v", "nonzero_px"]
-                )
-
-    part = pairs.mapInPandas(
-        partials,
-        "poly_id string, n_px long, sum_v double, max_v double, nonzero_px long",
-    )
-    return broadcast_join.final_zonal(part, ["poly_id"])
+    return broadcast_join.zonal_stats_plan(tiles, polygons, species, res, cand)

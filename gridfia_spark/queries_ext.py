@@ -657,7 +657,7 @@ FROM joined GROUP BY ROLLUP (poly_id, s)"""
 def zonal_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-level zonal aggregation via ROLLUP: per (county, species),
     per-county subtotals, and the grand total in one pass."""
-    from .operators import broadcast_join
+    from .operators import zonal
 
     tiles = tgen.ensure_tiles(spark, sf_dir)
     polys = tgen.polygons_df(spark, sf_dir).filter(F.col("is_rect"))
@@ -667,7 +667,7 @@ def zonal_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = grid.res_for_size(spec_for_sf_dir(sf_dir).tile_w * PIX * 2)
     # species layers 1..5 only (exclude the precomputed total layer)
     species_tiles = tiles.filter(~F.col("image_id").startswith("sp0000"))
-    part = broadcast_join.zonal_stats_fast(species_tiles, polys, species=None, res=res)
+    part = zonal.zonal_stats(species_tiles, polys, species=None, res=res)
     return (
         part.rollup("poly_id", "s")
         .agg(F.sum("sum_v").alias("sum_v"), F.sum("n_px").alias("n_px"))
@@ -707,13 +707,13 @@ def zonal_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     species biomass sums)."""
     from . import grid
     from .constants import PIX
-    from .operators import broadcast_join
+    from .operators import zonal
 
     tiles = tgen.ensure_tiles(spark, sf_dir)
     polys = tgen.polygons_df(spark, sf_dir).filter(F.col("is_rect"))
     res = grid.res_for_size(spec_for_sf_dir(sf_dir).tile_w * PIX * 2)
     species_tiles = tiles.filter(~F.col("image_id").startswith("sp0000"))
-    part = broadcast_join.zonal_stats_fast(species_tiles, polys, species=None, res=res)
+    part = zonal.zonal_stats(species_tiles, polys, species=None, res=res)
     return (
         part.groupBy("poly_id")
         .pivot("s", [1, 2, 3, 4, 5])

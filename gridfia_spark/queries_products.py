@@ -362,13 +362,12 @@ def zonal_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     total — one pass over the map-side zonal partials."""
     from . import grid
     from .constants import PIX
-    from .operators import broadcast_join
 
     tiles = tgen.ensure_tiles(spark, sf_dir)
     polys = tgen.polygons_df(spark, sf_dir).filter(F.col("is_rect"))
     res = grid.res_for_size(spec_for_sf_dir(sf_dir).tile_w * PIX * 2)
     species_tiles = tiles.filter(~F.col("image_id").startswith("sp0000"))
-    part = broadcast_join.zonal_stats_fast(species_tiles, polys, species=None, res=res)
+    part = zonal.zonal_stats(species_tiles, polys, species=None, res=res)
     return (
         part.cube("poly_id", "s")
         .agg(F.sum("sum_v").alias("sum_v"), F.sum("n_px").alias("n_px"))

@@ -5,7 +5,10 @@ native incremental path: Structured Streaming over the tile directory with
 ``Trigger.AvailableNow`` + checkpointing. Each restart processes only files
 not yet seen (the file-source log is the checkpoint), appends per-(poly,
 tile) zonal *partials*, and the final answer is a grouped read of the
-partials — so ingesting new tiles never recomputes old ones.
+partials — so ingesting new tiles never recomputes old ones. Each batch
+runs the batch path's one partials stage (``broadcast_join.zonal_partials``)
+pinned to one driver index built when the stream starts, so the stream
+serves polygon sides up to ``AUTO_DIST_THRESHOLD``.
 
 This is the streaming complement of plans/lineage.py: lineage restarts at
 work-partition granularity, the stream restarts at file granularity.
@@ -16,10 +19,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..datagen.tiles import TILE_SCHEMA
-from ..operators import broadcast_join, decode
+from ..operators import broadcast_join
 
 
 def incremental_zonal(
@@ -42,10 +44,8 @@ def incremental_zonal(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        meta = decode.with_tile_meta(batch_df)
-        if species is not None:
-            meta = meta.filter(F.col("s") == species)
-        part = broadcast_join._zonal_partials(meta, index)
+        meta = broadcast_join.layer_meta(batch_df, species)
+        part = broadcast_join.zonal_partials(meta, polygons, res, "stats", index)
         # foreachBatch is at-least-once: a crash between write and checkpoint
         # commit replays the batch. Writing each batch to its own
         # batch=<id> partition with overwrite makes the replay IDEMPOTENT —
@@ -65,6 +65,6 @@ def incremental_zonal(
 
 def zonal_result(spark: SparkSession, work_dir: str) -> DataFrame:
     """Final zonal stats from accumulated partials (same shape as
-    broadcast_join.zonal_stats_fast output, per (poly_id, s))."""
+    ``zonal.zonal_stats(species=None)`` output, per (poly_id, s))."""
     part = spark.read.parquet(os.path.join(work_dir, "partials"))
     return broadcast_join.final_zonal(part, ["poly_id", "s"])

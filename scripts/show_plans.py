@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from gridfia_spark import grid
 from gridfia_spark.datagen import tiles as tgen
-from gridfia_spark.operators import broadcast_join, decode, knn
+from gridfia_spark.operators import broadcast_join, decode, knn, zonal
 from gridfia_spark.session import get_spark
 
 SF = "/root/testdata/sf0.01"
@@ -29,6 +29,8 @@ def main() -> None:
     broadcast_join.assign_tiles_fast(meta, polys, res=15).explain("formatted")
     print("===== zonal_stats_fast (map + one partial/final agg) =====")
     broadcast_join.zonal_stats_fast(tiles, polys, species=0, res=15).explain("formatted")
+    print("===== zonal_stats_dist, species=None (in-cluster pairs per (tx, ty)) =====")
+    zonal.zonal_stats_dist(tiles, polys, species=None, res=15).explain("formatted")
     print("===== knn proof round (ring join on (cx, cy), disc, top-k) =====")
     # one round's plan (the loop reuses it for the unproven queries)
     q = pts.select("point_id", "x", "y")

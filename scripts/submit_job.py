@@ -34,7 +34,7 @@ def main() -> None:
     from gridfia_spark import grid
     from gridfia_spark.constants import PIX, spec_for_sf_dir
     from gridfia_spark.datagen import tiles as tgen
-    from gridfia_spark.operators import broadcast_join, decode, knn
+    from gridfia_spark.operators import broadcast_join, decode, knn, zonal
     from gridfia_spark.sources import ingest
 
     res = grid.res_for_size(spec_for_sf_dir(args.sf_dir).tile_w * PIX * 2)
@@ -45,10 +45,10 @@ def main() -> None:
     if args.job == "flagship":
         meta = decode.with_tile_meta(tiles)
         n = broadcast_join.assign_tiles_fast(meta, polys, res=res).count()
-        broadcast_join.zonal_stats_fast(tiles, polys, species=None, res=res).collect()
+        zonal.zonal_stats(tiles, polys, species=None, res=res).collect()
         result = {"assignments": n, "images": tiles.count()}
     elif args.job == "zonal":
-        df = broadcast_join.zonal_stats_fast(tiles, polys, species=0, res=res)
+        df = zonal.zonal_stats(tiles, polys, species=0, res=res)
         if args.out:
             df.write.mode("overwrite").parquet(args.out)
         result = {"rows": df.count()}

@@ -300,9 +300,42 @@ class TestPolygonIndexBound:
 
     def test_zonal_small_side_runs_no_count_job(self, spark, tiles, polys):
         """Choosing the plan costs no job beyond the index's own bounded
-        collect (the polygon side is not counted first)."""
+        collect (the polygon side is not counted first), for one layer and
+        for every layer."""
         build = _jobs(spark, lambda: broadcast_join.PolygonIndex.build(polys, grid.JOIN_RES))
-        assert _jobs(spark, lambda: zonal.zonal_stats(tiles, polys, species=0)) == build
+        for species in (0, None):
+            assert _jobs(spark, lambda: zonal.zonal_stats(tiles, polys, species=species)) == build
+
+    @pytest.mark.parametrize("species", [None, 0], ids=["all-layers", "one-layer"])
+    def test_zonal_entries_route_above_threshold(self, spark, tiles, polys, species, monkeypatch):
+        """The facade, ``zonal.zonal_stats`` and ``zonal_value_hist`` return
+        at n-1 the rows they return at n: above the threshold they take the
+        in-cluster cell join instead of refusing or dropping layers."""
+        from gridfia_spark.api import GridFIASpark
+
+        facade = GridFIASpark(spark)
+        res = facade._res(tiles)
+
+        def rows():
+            stats = lambda df: sorted(  # noqa: E731
+                (r.poly_id, r["s"] if species is None else None, r.n_px, r.sum_v,
+                 r.max_v, r.nonzero_px) for r in df.collect()
+            )
+            return (
+                stats(facade.zonal_stats(tiles, polys, species=species)),
+                stats(zonal.zonal_stats(tiles, polys, species=species, res=res)),
+                sorted(map(tuple, broadcast_join.zonal_value_hist(
+                    tiles, polys, species=species, res=res).collect())),
+            )
+
+        n = polys.count()
+        monkeypatch.setattr(broadcast_join, "AUTO_DIST_THRESHOLD", n)
+        via_index = rows()
+        assert all(via_index)
+        if species is None:  # every layer of every zone
+            assert {r[1] for r in via_index[0]} == set(range(6))
+        monkeypatch.setattr(broadcast_join, "AUTO_DIST_THRESHOLD", n - 1)
+        assert rows() == via_index
 
 
 class TestMetricsPipeline:
@@ -424,13 +457,8 @@ class TestLShapePins:
             assert (r.poly_id, got) == ("L01", row) and got == oracle_zonal(poly, s)
 
     def test_zonal_stats_fast(self, spark, tiles, lshape):
-        got = {
-            r.s: (r.n_px, r.sum_v, r.max_v, r.nonzero_px)
-            for r in broadcast_join.zonal_stats_fast(
-                tiles, lshape, species=None, res=14
-            ).collect()
-        }
-        assert got == {
+        """The all-layer rows, on the index, distributed and salted plans."""
+        want = {
             0: (768, 22875.0, 90.0, 709),
             1: (768, 15719.0, 49.0, 629),
             2: (768, 5472.0, 30.0, 370),
@@ -438,6 +466,14 @@ class TestLShapePins:
             4: (768, 0.0, 0.0, 0),
             5: (768, 836.0, 15.0, 105),
         }
+        for plan in (
+            broadcast_join.zonal_stats_fast,
+            zonal.zonal_stats_dist,
+            lambda *a, **kw: zonal.zonal_stats_dist(*a, salted=True, salt_threshold=0, **kw),
+        ):
+            rows = plan(tiles, lshape, species=None, res=14).collect()
+            got = {r.s: (r.n_px, r.sum_v, r.max_v, r.nonzero_px) for r in rows}
+            assert got == want and len(rows) == len(want)
 
     def test_clip_to_polygon(self, spark, tiles, polys):
         from gridfia_spark import codecs
@@ -502,6 +538,27 @@ class TestManyPolygons:
             )
             vals = cube[0][inside].astype(np.float64)
             assert fast[pid] == (int(vals.size), float(vals.sum()))
+
+    def test_all_layers_in_cluster_equals_index(self, spark, tiles, polys):
+        """``species=None`` on the in-cluster plan: the rows of every layer,
+        bit-identical to the driver index's."""
+        key = lambda r: (r.poly_id, r.s, r.n_px, r.sum_v, r.max_v, r.nonzero_px, r.mean_v)  # noqa: E731
+        res = grid.JOIN_RES
+        dist = sorted(map(key, zonal.zonal_stats_dist(tiles, polys, species=None, res=res).collect()))
+        fast = sorted(map(key, broadcast_join.zonal_stats_fast(
+            tiles, polys, species=None, res=res).collect()))
+        assert dist == fast and {r[1] for r in fast} == set(range(6))
+
+    def test_in_cluster_candidates_per_tile_position(self, spark, tiles, polys):
+        """The in-cluster candidate frame is keyed on the tile position: it
+        has as many rows for every layer as for one layer."""
+        meta = decode.with_tile_meta(tiles)
+
+        def n_pairs(layers):
+            return spatial_join.join_tiles_polygons(layers, polys, grid.JOIN_RES).count()
+
+        one = n_pairs(meta.filter(F.col("s") == 0))
+        assert n_pairs(meta) == one and one > 0
 
     def _poly_grid(self, spark, n=10):
         w_m, h_m = SPEC.gw * PIX, SPEC.gh * PIX

@@ -51,16 +51,17 @@ class TestPlanShapes:
 
     def test_distributed_zonal_broadcasts_nothing(self, spark):
         """PLANS.md §2 (scale path): in zonal_stats_dist the candidate-pair
-        frame is O(tiles × overlapping polys) and the WKB frame is
+        frame is O(tile positions × overlapping polys) and the WKB frame is
         O(polygons) — neither may be broadcast. The pair side meets the tile
-        bytes in a shuffle-hash join (bytes stream, never sorted)."""
+        bytes in a shuffle-hash join on the tile position (bytes stream,
+        never sorted)."""
         plan = _plan(spark, "zonal_many_polygons")
         # the only broadcasts allowed are the O(n_species) code-dimension
         # zip-join inside with_tile_meta — never a join keyed on
-        # image_id / poly_id / cell_id (the O(tiles)/O(polygons) frames)
-        bad = re.findall(r"BroadcastHashJoin \[(?:image_id|poly_id|cell_id)", plan)
+        # image_id / poly_id / cell_id / tx (the O(tiles)/O(polygons) frames)
+        bad = re.findall(r"BroadcastHashJoin \[(?:image_id|poly_id|cell_id|tx)", plan)
         assert not bad, plan[:600]
-        assert re.search(r"ShuffledHashJoin \[image_id", plan)
+        assert re.search(r"ShuffledHashJoin \[tx#\d+, ty#\d+\]", plan), plan[:600]
 
     def test_driver_zonal_still_map_side(self, spark):
         """The small-polygon driver-covering path stays map-side: tile
