@@ -10,9 +10,18 @@ Each tile row carries ``bytes`` encoded per its ``fmt`` column:
 - ``qnt8``  — lossy 8-bit quantization over [0, vmax]; 4-byte float32 vmax
   header then uint8 payload. Quantization PSNR is ~59 dB for our value
   ranges, comfortably above the 40 dB per-row gate (BASELINE.json).
+- ``png``, ``jpeg``, ``tiff`` — genuine image containers, decode only
+  (pure-python codecs: png.py, jpeg.py, tiff.py; the caller encodes with
+  ``encode_png`` / ``encode_jpeg`` / ``encode_geotiff``). PNG and GeoTIFF
+  are lossless for 8-bit data; baseline JPEG is the lossy format behind the
+  PSNR>=40 dB row contract. RGB(A) collapses to ITU-R 601 luma. Their
+  modules import on first use, so a worker decoding only the raw formats
+  never loads them.
 
-Decoding happens only inside vectorized pandas/Arrow UDFs — never per-row
-Python in the hot path.
+``decode`` is the one function that turns ``(bytes, fmt)`` into pixels:
+every operator (zonal, the metric cube, decode_stats, sinks, ingest) reads
+any of these formats. Decoding happens only inside vectorized pandas/Arrow
+UDFs — never per-row Python in the hot path.
 """
 
 from __future__ import annotations
@@ -23,8 +32,6 @@ import zlib
 import numpy as np
 
 LOSSLESS_FMTS = ("raw32", "rawz", "u8z")
-LOSSY_FMTS = ("qnt8",)
-ALL_FMTS = LOSSLESS_FMTS + LOSSY_FMTS
 
 
 def encode(pixels: np.ndarray, fmt: str) -> bytes:
@@ -70,10 +77,35 @@ def decode(data: bytes, w: int, h: int, fmt: str) -> np.ndarray:
         q = np.frombuffer(data, dtype=np.uint8, offset=4)
         arr = q.astype(np.float32) * (vmax / 255.0 if vmax > 0 else 0.0)
     else:
-        raise ValueError(f"unknown fmt {fmt!r}")
+        return _decode_image(data, w, h, fmt)
     if arr.size != w * h:
         raise ValueError(f"payload has {arr.size} px, expected {w}x{h}")
     return arr.reshape(h, w).astype(np.float32, copy=False)
+
+
+def _decode_image(data: bytes, w: int, h: int, fmt: str) -> np.ndarray:
+    """Decode a png/jpeg/tiff container. The check is on the (h, w) shape,
+    not the pixel count, so transposed metadata fails too."""
+    if fmt == "png":
+        from . import png
+
+        arr = png.decode_png(data)
+    elif fmt == "jpeg":
+        from . import jpeg
+
+        arr = jpeg.decode_jpeg(data)
+    elif fmt == "tiff":
+        from . import tiff
+
+        arr, _meta = tiff.decode_geotiff(data)
+    else:
+        raise ValueError(f"unknown fmt {fmt!r}")
+    if arr.shape[:2] != (h, w):
+        raise ValueError(f"{fmt} dims {arr.shape[:2]} != metadata ({h}, {w})")
+    if arr.ndim == 3:
+        rgb = arr[..., :3].astype(np.float32)
+        return rgb[..., 0] * 0.299 + rgb[..., 1] * 0.587 + rgb[..., 2] * 0.114
+    return arr.astype(np.float32)
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

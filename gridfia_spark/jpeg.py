@@ -20,8 +20,8 @@ contract at quality 90 (BASELINE.json input_hint: "decoded pixels
 allclose (PSNR>=40dB for lossy fmt)") — verified in tests/test_jpeg.py
 and gated by the jpeg_tile_stats driver query.
 
-This un-stubs 'jpeg' in operators/multimodal.py the same way png.py
-un-stubbed 'png'.
+``codecs.decode(..., "jpeg")`` is backed by this module, the same way
+png.py backs ``fmt='png'``.
 """
 
 from __future__ import annotations

@@ -257,7 +257,9 @@ def decode_stats(tiles: DataFrame, threshold: float = 0.0) -> DataFrame:
                         int(row.s) if pd.notna(row.s) else -1,
                         float(arr.min()),
                         float(arr.max()),
-                        float(arr.sum()),
+                        # float64 accumulator: a float32 sum drifts once
+                        # a tile's total passes 2^24 (512x512 of 0..255)
+                        float(arr.sum(dtype=np.float64)),
                         int((arr > threshold).sum()),
                         arr.size,
                     )

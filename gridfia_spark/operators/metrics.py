@@ -128,7 +128,7 @@ def metric_layers(
     # resolve kernels AT PLAN TIME: registrations made on the driver (incl.
     # user plugins defined in closures) ride the pickled task closure —
     # module-level registry state alone would not survive the worker's
-    # fresh import (the same snapshot rule as multimodal._MEDIA_DECODERS)
+    # fresh import
     fns = {m.kernel: kernels.get(m.kernel) for m in specs}
     schema = "gx long, gy long, " + ", ".join(f"{m.out} {m.sql_type}" for m in specs)
     n = tiles.sparkSession.sparkContext.defaultParallelism

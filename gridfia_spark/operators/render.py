@@ -8,7 +8,8 @@ LUT turns an index tile into RGBA — no plotting library in the data path.
 
 Plan shape: the stretch-bounds aggregate is one global percentile per
 species (tiny result, broadcast); the render pass is map-only
-(decode -> numpy -> re-encode), no shuffle.
+(decode -> numpy -> re-encode), no shuffle. ``resize`` (the thumbnail
+product) is a map-only block mean.
 """
 
 from __future__ import annotations
@@ -90,4 +91,30 @@ def render_layers(
     return cols.mapInPandas(
         render,
         "image_id string, bytes binary, w int, h int, fmt string, caption string",
+    )
+
+
+def resize(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
+    """Block-mean downsample of each ``(media_id, bytes, w, h, fmt)`` row by
+    integer factors, re-encoded as ``raw32`` — the thumbnailing stage of an
+    image pipeline. Map-only; any ``codecs.decode`` fmt reads."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for r in pdf.itertuples(index=False):
+                arr = codecs.decode(r.bytes, int(r.w), int(r.h), r.fmt)
+                fy, fx = max(arr.shape[0] // out_h, 1), max(arr.shape[1] // out_w, 1)
+                small = (
+                    arr[: out_h * fy, : out_w * fx]
+                    .reshape(out_h, fy, out_w, fx)
+                    .mean(axis=(1, 3))
+                )
+                out.append(
+                    (r.media_id, codecs.encode(small, "raw32"), out_w, out_h, "raw32")
+                )
+            yield pd.DataFrame(out, columns=["media_id", "bytes", "w", "h", "fmt"])
+
+    return media.mapInPandas(
+        run, "media_id string, bytes binary, w int, h int, fmt string"
     )

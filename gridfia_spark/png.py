@@ -3,9 +3,9 @@
 Legitimate, spec-complete support for the formats a tile pipeline meets:
 8-bit grayscale / RGB / RGBA, non-interlaced, all five scanline filters on
 decode (None/Sub/Up/Average/Paeth, PNG spec §6), filter-0 + zlib on encode.
-This un-stubs the most common media format in operators/multimodal.py — the
-registry decoder `png` is backed by this module, so `extract_features`,
-`resize` and friends run on genuine PNG bytes.
+``codecs.decode(..., "png")`` is backed by this module, so a tile row with
+``fmt='png'`` runs through every operator (decode_stats, zonal, the metric
+cube, ``render.resize``) on genuine PNG bytes.
 
 Reference behavior analogue: GeoTIFF single-band ingest/export
 (zarr_utils.py:684-694, forest_metrics.py:547-567) — an interchange raster

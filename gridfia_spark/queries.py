@@ -35,7 +35,7 @@ def q(name: str, oracle: Callable[[str], str] | None):
 
 # Driver-facing ordering: the driver's correctness snapshot samples the
 # FIRST 50 registry entries, so the head rotates to the queries with the
-# oldest driver evidence: first the 39 queries absent from the
+# oldest driver evidence: first the 38 queries absent from the
 # CORRECTNESS_r06.json sample, then the 25 that r06 sampled. Every query
 # has an oracle. scripts/check_correctness.py always runs the full
 # registry, so nothing is ever dropped from the local gate.
@@ -58,7 +58,6 @@ DRIVER_PRIORITY: list[str] = [
     "config_run",
     "netcdf_container",
     "jpeg_tile_stats",
-    "webp_tile_stats",
     "png_tile_stats",
     "thumbnail_stats",
     "phash_near_dup",
@@ -80,7 +79,7 @@ DRIVER_PRIORITY: list[str] = [
     "bootstrap_ci",
     "approx_percentile_contract",
     # --- r06-sampled queries below; the 50-sample boundary falls
-    # after the first 11 of them ---
+    # after the first 12 of them ---
     "zarr_v3_roundtrip",
     "zarr_append_layer",
     "zarr_blosc_roundtrip",

@@ -489,7 +489,7 @@ def bootstrap_ci_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===================================================================
-# Genuine-PNG multimodal path (un-stubbed media codec, png.py)
+# Genuine image containers (PNG, JPEG) through codecs.decode
 # ===================================================================
 
 
@@ -513,18 +513,18 @@ GROUP BY t.image_id"""
 @q("png_tile_stats", _o_png_stats)
 def png_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tile stats through GENUINE PNG bytes: transcode each raster tile to a
-    real 8-bit grayscale PNG (pure numpy+zlib codec, gridfia_spark/png.py),
-    then decode through the multimodal registry ('png' is a built-in
-    decoder, not a stub) and aggregate per tile. Two chained map-only
-    stages, no shuffle — proves the image-pipeline plumbing end-to-end on
-    an actual media container format."""
+    real 8-bit grayscale PNG (pure numpy+zlib codec, gridfia_spark/png.py)
+    as a tile row with ``fmt='png'``, then run the engine's own
+    ``decode.decode_stats`` over those rows — the same decode path every
+    operator uses. Two chained map-only stages, no shuffle — proves the
+    image-pipeline plumbing end-to-end on an actual media container
+    format."""
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
     from . import codecs, png
-    from .operators import multimodal
 
     tiles = tgen.ensure_tiles(spark, sf_dir)
     meta = decode.with_tile_meta(tiles).filter(F.col("s").isin([1, 3]))
@@ -537,98 +537,15 @@ def png_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 arr = codecs.decode(r.bytes, int(r.w), int(r.h), r.fmt)
                 out.append(
                     (r.image_id, png.encode_png(arr.astype(np.uint8)),
-                     int(r.w), int(r.h))
+                     int(r.w), int(r.h), "png")
                 )
-            yield pd.DataFrame(out, columns=["media_id", "bytes", "w", "h"])
+            yield pd.DataFrame(out, columns=["image_id", "bytes", "w", "h", "fmt"])
 
-    media = cols.mapInPandas(
-        transcode, "media_id string, bytes binary, w int, h int"
+    pngs = cols.mapInPandas(
+        transcode, "image_id string, bytes binary, w int, h int, fmt string"
     )
-    decs = dict(multimodal._MEDIA_DECODERS)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = multimodal._decode_media(
-                    bytes(r.bytes), "png", int(r.w), int(r.h), decs
-                ).astype(np.float64)
-                out.append(
-                    (r.media_id, float(arr.min()), float(arr.max()),
-                     float(arr.sum()), int((arr > 0).sum()), arr.size)
-                )
-            yield pd.DataFrame(
-                out, columns=["image_id", "vmin", "vmax", "vsum", "nonzero", "npx"]
-            )
-
-    return media.mapInPandas(
-        stats,
-        "image_id string, vmin double, vmax double, vsum double, "
-        "nonzero long, npx long",
-    )
-
-
-def _o_webp_stats(sf_dir: str) -> str:
-    return _o_png_stats(sf_dir)
-
-
-@q("webp_tile_stats", _o_webp_stats)
-def webp_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tile stats through GENUINE WebP bytes: transcode each raster tile to
-    a real lossless RIFF/WEBP/VP8L file (pure-python codec,
-    gridfia_spark/vp8l.py — no transforms, literal + run-length LZ77,
-    canonical limited Huffman), then decode through the multimodal registry
-    ('webp' is a built-in decoder, not a stub) and aggregate per tile.
-    Lossless, so the oracle is the exact pixel math — the same contract as
-    png_tile_stats, on a second real container format. Two chained
-    map-only stages, no shuffle."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from . import codecs, vp8l
-    from .operators import multimodal
-
-    tiles = tgen.ensure_tiles(spark, sf_dir)
-    meta = decode.with_tile_meta(tiles).filter(F.col("s").isin([1, 3]))
-    cols = meta.select("image_id", "bytes", "w", "h", "fmt")
-
-    def transcode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode(r.bytes, int(r.w), int(r.h), r.fmt)
-                out.append(
-                    (r.image_id, vp8l.encode_gray(arr.astype(np.uint8)),
-                     int(r.w), int(r.h))
-                )
-            yield pd.DataFrame(out, columns=["media_id", "bytes", "w", "h"])
-
-    media = cols.mapInPandas(
-        transcode, "media_id string, bytes binary, w int, h int"
-    )
-    decs = dict(multimodal._MEDIA_DECODERS)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = multimodal._decode_media(
-                    bytes(r.bytes), "webp", int(r.w), int(r.h), decs
-                ).astype(np.float64)
-                out.append(
-                    (r.media_id, float(arr.min()), float(arr.max()),
-                     float(arr.sum()), int((arr > 0).sum()), arr.size)
-                )
-            yield pd.DataFrame(
-                out, columns=["image_id", "vmin", "vmax", "vsum", "nonzero", "npx"]
-            )
-
-    return media.mapInPandas(
-        stats,
-        "image_id string, vmin double, vmax double, vsum double, "
-        "nonzero long, npx long",
+    return decode.decode_stats(pngs).select(
+        "image_id", "vmin", "vmax", "vsum", "nonzero", "npx"
     )
 
 
@@ -911,7 +828,7 @@ GROUP BY n.code, b.tx, b.ty"""
 
 @q("thumbnail_stats", _o_thumb)
 def thumbnail_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The thumbnailing stage (multimodal.resize, block-mean 8x8) gated
+    """The thumbnailing stage (render.resize, block-mean 8x8) gated
     integer-exactly: each thumbnail pixel is a block mean whose scaled-back
     value round(mean * fy * fx) recovers the exact int64 block sum (block
     sums are exact in float32 — integer partials < 2^24 — so the rounding
@@ -930,7 +847,7 @@ def thumbnail_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = meta.select(
         F.col("image_id").alias("media_id"), "bytes", "w", "h", "fmt"
     )
-    thumbs = multimodal_resize(media, 8, 8)
+    thumbs = render.resize(media, 8, 8)
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from . import codecs as cdx
@@ -957,12 +874,6 @@ def thumbnail_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def multimodal_resize(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    from .operators import multimodal
-
-    return multimodal.resize(media, out_w, out_h)
-
-
 def _o_jpeg_stats(sf_dir: str) -> str:
     spec = spec_for_sf_dir(sf_dir)
     npx = spec.tile_w * spec.tile_h
@@ -976,11 +887,11 @@ def jpeg_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The input_hint's lossy-format contract ("decoded pixels allclose,
     PSNR>=40dB for lossy fmt"), executed on a GENUINE lossy codec: each
     raster tile is transcoded to baseline JPEG (pure numpy DCT+Huffman,
-    gridfia_spark/jpeg.py, quality 95), decoded back through the
-    multimodal registry ('jpeg' is a built-in decoder, not a stub), and
-    its PSNR against the original pixels must clear 40 dB. The oracle pins
-    the contract flag per tile; the engine emits the measurement. Two
-    chained map-only Arrow stages, zero shuffle."""
+    gridfia_spark/jpeg.py, quality 95), decoded back through
+    ``codecs.decode(..., 'jpeg')``, and its PSNR against the original
+    pixels must clear 40 dB. The oracle pins the contract flag per tile;
+    the engine emits the measurement. Two chained map-only Arrow stages,
+    zero shuffle."""
     from collections.abc import Iterator
 
     import numpy as np
@@ -988,12 +899,10 @@ def jpeg_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import codecs as cdx
     from . import jpeg
-    from .operators import multimodal
 
     tiles = tgen.ensure_tiles(spark, sf_dir)
     meta = decode.with_tile_meta(tiles).filter(F.col("s").isin([1, 2]))
     cols = meta.select("image_id", "bytes", "w", "h", "fmt")
-    decs = dict(multimodal._MEDIA_DECODERS)
 
     def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1002,9 +911,7 @@ def jpeg_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 orig = cdx.decode(bytes(r.bytes), int(r.w), int(r.h), r.fmt)
                 u8 = orig.astype(np.uint8)  # u8z contract: int-valued <=255
                 data = jpeg.encode_jpeg(u8, quality=95)
-                dec = multimodal._decode_media(
-                    data, "jpeg", int(r.w), int(r.h), decs
-                ).astype(np.uint8)
+                dec = cdx.decode(data, int(r.w), int(r.h), "jpeg").astype(np.uint8)
                 p = jpeg.psnr(u8, dec)
                 out.append((r.image_id, u8.size, int(p >= 40.0)))
             yield pd.DataFrame(out, columns=["image_id", "npx", "psnr_ge_40"])

@@ -7,9 +7,9 @@ union-aggregate across species rows — exactly the accumulation at
 zarr_utils.py:1003-1019.
 
 The scan ingests BOTH the engine's own codec files (``.bin``, raw32/rawz)
-and genuine GeoTIFF files (``.tif``) — the latter decoded by the
-pure-python GeoTIFF codec (gridfia_spark/tiff.py), so the reference's
-actual interchange format needs no external library.
+and genuine GeoTIFF files (``.tif``) — both through ``codecs.decode``
+(fmt ``tiff`` is the pure-python GeoTIFF codec, gridfia_spark/tiff.py), so
+the reference's actual interchange format needs no external library.
 """
 
 from __future__ import annotations
@@ -35,8 +35,8 @@ def ingest_raster_dir(
     Mirrors the filename→species matching of batch_append_species_from_dir
     (zarr_utils.py:821-882) and api.py:370-389: regexp on input_file_name,
     decode + dimension validation in one vectorized pass. ``.tif`` files
-    are genuine GeoTIFFs decoded via gridfia_spark/tiff.py (S1 literal);
-    ``.bin`` files use the engine codec ``fmt``."""
+    are genuine GeoTIFFs (codec fmt ``tiff``, S1 literal); ``.bin`` files
+    use the engine codec ``fmt``."""
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.{bin,tif}")
@@ -59,20 +59,11 @@ def ingest_raster_dir(
     code_to_name = dict(SPECIES)
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .. import tiff
-
         for pdf in batches:
             out = {k: [] for k in ("image_id", "bytes", "w", "h", "fmt", "caption", "phash")}
             for r in pdf.itertuples(index=False):
-                if r.path.endswith(".tif"):
-                    arr, _meta = tiff.decode_geotiff(bytes(r.content))
-                    if arr.shape != (tile_h, tile_w):
-                        raise ValueError(
-                            f"GeoTIFF dims {arr.shape} != ({tile_h}, {tile_w})"
-                        )
-                    arr = arr.astype(np.float32)
-                else:
-                    arr = codecs.decode(r.content, tile_w, tile_h, fmt)  # validates dims
+                src = "tiff" if r.path.endswith(".tif") else fmt
+                arr = codecs.decode(r.content, tile_w, tile_h, src)  # validates dims
                 name = code_to_name.get(r.code, "Unknown")
                 out["image_id"].append(f"sp{r.code}_tx{int(r.tx):03d}_ty{int(r.ty):03d}")
                 out["bytes"].append(codecs.encode(arr, fmt))

@@ -2,7 +2,7 @@
 
 The reference's raster interchange format is GeoTIFF (forest_metrics.py:
 547-601 exports one per metric; fia_client.py ingests them). The sandbox
-ships no rasterio/PIL, so — same precedent as png/jpeg/wav/netcdf3/vp8l —
+ships no rasterio/PIL, so — same precedent as png/jpeg/netcdf3 —
 the container is written from the public specs:
 
 - TIFF 6.0: little- or big-endian header, single IFD of
@@ -16,7 +16,8 @@ the container is written from the public specs:
   round-trips through rasterio.
 
 ``decode_geotiff`` is the exact inverse for the written subset (and reads
-either byte order, multi-strip layouts, and uncompressed files).
+either byte order, multi-strip layouts, and uncompressed files); it backs
+``codecs.decode(..., "tiff")``, which ingest uses for ``.tif`` files.
 """
 
 from __future__ import annotations

@@ -37,6 +37,8 @@ class TestCodecs:
     def test_unknown_fmt(self):
         with pytest.raises(ValueError):
             codecs.encode(np.zeros((2, 2)), "png")
+        with pytest.raises(ValueError, match="unknown fmt 'webp'"):
+            codecs.decode(b"RIFF", 1, 1, "webp")
 
 
 class TestGrid:

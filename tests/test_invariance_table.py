@@ -22,7 +22,7 @@ import sys, json; sys.path.insert(0, {root!r})
 from gridfia_spark.session import get_spark
 from gridfia_spark import queries as Q
 from gridfia_spark.queries_products import (
-    zonal_percentiles, zorder_layout, zonal_skewed, webp_tile_stats)
+    zonal_percentiles, zorder_layout, zonal_skewed, png_tile_stats)
 spark = get_spark(cores={cores}, shuffle_partitions={sh})
 pdf = Q.zonal_total_biomass(spark, "/root/testdata/sf0.001").toPandas()
 pdf = pdf.sort_values("poly_id", ignore_index=True)
@@ -30,11 +30,11 @@ pct = zonal_percentiles(spark, "/root/testdata/sf0.001").toPandas()
 pct = pct.sort_values("poly_id", ignore_index=True)
 zo = zorder_layout(spark, "/root/testdata/sf0.001").toPandas()
 zo = zo.sort_values("bucket", ignore_index=True)
-# round-4: salted zonal and the VP8L transcode chain must be invariant
+# salted zonal and the PNG transcode chain must be invariant
 zk = zonal_skewed(spark, "/root/testdata/sf0.001").toPandas()
 zk = zk.sort_values("poly_id", ignore_index=True)
-wb = webp_tile_stats(spark, "/root/testdata/sf0.001").toPandas()
-wb = wb.sort_values("image_id", ignore_index=True)
+pn = png_tile_stats(spark, "/root/testdata/sf0.001").toPandas()
+pn = pn.sort_values("image_id", ignore_index=True)
 # round-5: blosc store roundtrip (pure-python LZ4 chunks written by many
 # tasks) and the COG strip scan (range-read partitioning changes with
 # cores) must both be invariant
@@ -56,7 +56,7 @@ print("RESULT" + json.dumps({{"zonal": pdf.to_dict("records"),
                               "pct": pct.to_dict("records"),
                               "zorder": zo.to_dict("records"),
                               "skewed": zk.to_dict("records"),
-                              "webp": wb.to_dict("records"),
+                              "png": pn.to_dict("records"),
                               "blosc": zb.to_dict("records"),
                               "stripscan": gs.to_dict("records"),
                               "warp": wr.to_dict("records"),

@@ -1,13 +1,12 @@
 """Pure-python baseline JPEG codec: round-trips, PSNR contract, marker
-robustness, and the multimodal registry decoding genuine JPEG bytes."""
+robustness, and codecs.decode reading genuine JPEG bytes."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from gridfia_spark import jpeg
-from gridfia_spark.operators import multimodal
+from gridfia_spark import codecs, jpeg
 
 
 def _test_image(h=48, w=64, seed=1):
@@ -73,15 +72,14 @@ def test_error_paths():
 
 
 def test_registry_decodes_jpeg():
-    """'jpeg' is a built-in decoder — no longer a stub — with the metadata
-    dim check."""
+    """'jpeg' is a codecs.decode fmt, with the metadata dim check."""
     img = _test_image(24, 32, seed=3)
     data = jpeg.encode_jpeg(img, 95)
-    arr = multimodal._decode_media(data, "jpeg", 32, 24)
+    arr = codecs.decode(data, 32, 24, "jpeg")
     assert arr.shape == (24, 32)
     assert jpeg.psnr(img, arr.astype(np.uint8)) >= 40
     with pytest.raises(ValueError, match="!= metadata"):
-        multimodal._decode_media(data, "jpeg", 31, 24)
+        codecs.decode(data, 31, 24, "jpeg")
 
 
 try:

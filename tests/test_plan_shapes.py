@@ -44,7 +44,7 @@ class TestPlanShapes:
         """PLANS.md §14: container pipelines are fused map-only chains —
         media bytes never cross the network."""
         for name in (
-            "png_tile_stats", "jpeg_tile_stats", "webp_tile_stats", "thumbnail_stats"
+            "png_tile_stats", "jpeg_tile_stats", "thumbnail_stats"
         ):
             plan = _plan(spark, name)
             assert "Exchange" not in plan, f"{name} plan shuffles: {plan[:400]}"

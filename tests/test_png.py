@@ -1,5 +1,5 @@
 """Pure-python PNG codec: round-trips, all five scanline filters, and the
-multimodal pipeline running on genuine PNG bytes."""
+engine operators running on genuine PNG bytes."""
 
 from __future__ import annotations
 
@@ -93,30 +93,33 @@ class TestAllFilters:
 
 class TestMultimodalOnPng:
     def test_extract_features_on_real_png_rows(self, spark):
-        from gridfia_spark.operators import multimodal
+        from gridfia_spark.operators import decode
 
         rng = np.random.default_rng(5)
         arrs = {f"img{i}": rng.integers(0, 200, (16, 12), dtype=np.uint8) for i in range(4)}
         rows = [
-            (mid, bytearray(png.encode_png(a)), "image", "png",
-             a.shape[1], a.shape[0], 1, 0, f"cap {mid}")
+            (mid, bytearray(png.encode_png(a)), a.shape[1], a.shape[0], "png")
             for mid, a in arrs.items()
         ]
-        media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-        got = {r.media_id: r for r in multimodal.extract_features(media).collect()}
+        tiles = spark.createDataFrame(
+            rows, "image_id string, bytes binary, w int, h int, fmt string"
+        )
+        got = {r.image_id: r for r in decode.decode_stats(tiles).collect()}
         for mid, a in arrs.items():
             f = a.astype(np.float32)
-            assert got[mid].mean_v == pytest.approx(float(f.mean()))
-            assert got[mid].min_v == float(f.min()) and got[mid].max_v == float(f.max())
+            assert got[mid].vsum / got[mid].npx == pytest.approx(float(f.mean()))
+            assert got[mid].vmin == float(f.min()) and got[mid].vmax == float(f.max())
 
     def test_resize_on_png(self, spark):
         from gridfia_spark import codecs
-        from gridfia_spark.operators import multimodal
+        from gridfia_spark.operators import render
 
         a = np.arange(64, dtype=np.uint8).reshape(8, 8)
-        rows = [("m0", bytearray(png.encode_png(a)), "image", "png", 8, 8, 1, 0, "c")]
-        media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-        out = multimodal.resize(media, 4, 4).collect()[0]
+        rows = [("m0", bytearray(png.encode_png(a)), 8, 8, "png")]
+        media = spark.createDataFrame(
+            rows, "media_id string, bytes binary, w int, h int, fmt string"
+        )
+        out = render.resize(media, 4, 4).collect()[0]
         got = codecs.decode(bytes(out.bytes), 4, 4, out.fmt)
         want = a.astype(np.float32).reshape(4, 2, 4, 2).mean(axis=(1, 3))
         assert np.allclose(got, want)

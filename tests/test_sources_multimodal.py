@@ -1,4 +1,4 @@
-"""Tests: ingestion sources, sinks, validation, multimodal plumbing."""
+"""Tests: ingestion sources, sinks, validation, media-row plumbing."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from gridfia_spark import codecs
 from gridfia_spark.constants import SF_SPECS, SPECIES
 from gridfia_spark.datagen import pixels, tiles as tgen
-from gridfia_spark.operators import metrics, multimodal
+from gridfia_spark.operators import metrics, render
 from gridfia_spark.sources import ingest, sinks
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -109,97 +109,22 @@ class TestSinks:
 
 
 class TestMultimodal:
-    @pytest.fixture(scope="class")
-    def media(self, spark):
-        rows = []
-        arr = pixels.tile_pixels(1, 0, 0, SPEC)
-        rows.append(("img1", bytearray(codecs.encode(arr, "rawz")), "image", "rawz",
-                     SPEC.tile_w, SPEC.tile_h, 1, 0, "a raster image"))
-        rows.append(("img2", bytearray(b"\x07\x00\x00\x00deadbeef"), "image", "fake64",
-                     16, 16, 1, 0, "a fake image"))
-        frames = np.stack([np.full((8, 8), i, dtype="<f4") for i in range(6)])
-        rows.append(("vid1", bytearray(frames.tobytes()), "video", "raw32", 8, 8, 6, 0, "a clip"))
-        rows.append(("img3", bytearray(b"\xff\xd8jpegbytes"), "image", "jpeg", 4, 4, 1, 0, "a jpeg"))
-        return spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-
-    def test_feature_extract(self, spark, media):
-        ok = media.filter(F.col("fmt") != "jpeg")
-        out = {r.media_id: r for r in multimodal.extract_features(ok).collect()}
-        arr = pixels.tile_pixels(1, 0, 0, SPEC)
-        assert out["img1"].mean_v == pytest.approx(float(arr.mean()))
-        assert out["img2"].max_v <= 250
-
-    def test_stub_raises_for_real_codecs(self, spark, media):
-        # png/jpeg/webp are REAL built-in codecs now (gridfia_spark/
-        # png.py, jpeg.py, vp8l.py); mp3/h264 are the documented
-        # permanent stub. The built-in jpeg decoder must reject garbage
-        # bytes with a codec error, not the stub message.
+    def test_stub_raises_for_real_codecs(self):
+        # jpeg is a real codec behind codecs.decode: garbage bytes raise a
+        # codec error, never a fabricated raster
         with pytest.raises(Exception, match="not a JPEG|corrupt|marker"):
-            multimodal.extract_features(media.filter(F.col("fmt") == "jpeg")).collect()
-        with pytest.raises(NotImplementedError, match="register_decoder"):
-            multimodal._decode_media(b"\x00" * 8, "mp3", 4, 1)
+            codecs.decode(b"\xff\xd8jpegbytes", 4, 4, "jpeg")
 
-    def test_decoder_registration(self, spark, media):
-        """Registering a codec makes every operator decode that format —
-        including inside Spark tasks (the registry snapshot must ride the
-        UDF closure into the worker processes)."""
-
-        def fake_jpeg(data: bytes, w: int, h: int):
-            return np.full((h, w), float(len(data)), dtype=np.float32)
-
-        multimodal.register_decoder("jpeg", fake_jpeg)
-        try:
-            out = multimodal.extract_features(
-                media.filter(F.col("fmt") == "jpeg")
-            ).collect()
-            assert len(out) == 1 and out[0].mean_v == pytest.approx(11.0)  # len(b"\xff\xd8jpegbytes")
-            rs = multimodal.resize(media.filter(F.col("fmt") == "jpeg"), 2, 2).first()
-            assert (rs.w, rs.h) == (2, 2)
-        finally:
-            multimodal.unregister_decoder("jpeg")
-        # unregistering the override restores the BUILT-IN jpeg codec,
-        # which rejects the fixture's garbage bytes with a codec error
-        with pytest.raises(Exception, match="not a JPEG|corrupt|marker"):
-            multimodal.extract_features(media.filter(F.col("fmt") == "jpeg")).collect()
-        # same restore contract for png
-        multimodal.register_decoder("png", fake_jpeg)
-        multimodal.unregister_decoder("png")
-        assert "png" in multimodal._MEDIA_DECODERS
-
-    def test_resize(self, spark, media):
-        out = multimodal.resize(media.filter(F.col("media_id") == "img1"), 8, 8).first()
+    def test_resize(self, spark):
+        arr = pixels.tile_pixels(1, 0, 0, SPEC)
+        media = spark.createDataFrame(
+            [("img1", bytearray(codecs.encode(arr, "rawz")), SPEC.tile_w, SPEC.tile_h, "rawz")],
+            "media_id string, bytes binary, w int, h int, fmt string",
+        )
+        out = render.resize(media, 8, 8).first()
         assert (out.w, out.h) == (8, 8)
         small = codecs.decode(bytes(out.bytes), 8, 8, out.fmt)
-        arr = pixels.tile_pixels(1, 0, 0, SPEC)
         f = SPEC.tile_w // 8
         np.testing.assert_allclose(
             small, arr.reshape(8, f, 8, f).mean(axis=(1, 3)), rtol=1e-6
         )
-
-
-def test_resize_stride_method(spark):
-    """Stride downsample picks exact source pixels (the reference's
-    examples/utils.py:243 slicing), unlike the antialiased block mean."""
-    import numpy as np
-
-    from gridfia_spark import codecs
-    from gridfia_spark.operators import multimodal
-
-    h, w = 8, 8
-    arr = np.arange(h * w, dtype=np.float32).reshape(h, w)
-    media = spark.createDataFrame(
-        [("m", bytearray(codecs.encode(arr, "raw32")), "image", "raw32",
-          w, h, 1, 0, "")],
-        multimodal.MEDIA_SCHEMA,
-    )
-    r = multimodal.resize(media, 4, 4, method="stride").first()
-    got = codecs.decode(bytes(r.bytes), 4, 4, "raw32")
-    np.testing.assert_array_equal(got, arr[::2, ::2])
-    r2 = multimodal.resize(media, 4, 4).first()
-    got2 = codecs.decode(bytes(r2.bytes), 4, 4, "raw32")
-    np.testing.assert_allclose(
-        got2, arr.reshape(4, 2, 4, 2).mean(axis=(1, 3))
-    )
-    import pytest as _pt
-    with _pt.raises(ValueError, match="unknown resize method"):
-        multimodal.resize(media, 4, 4, method="nearest")

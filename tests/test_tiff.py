@@ -65,10 +65,10 @@ class TestGeoTiff:
             )
 
     def test_media_registry_tiff_builtin(self):
-        from gridfia_spark.operators import multimodal
+        from gridfia_spark import codecs
 
         arr = np.arange(16, dtype=np.float32).reshape(4, 4)
-        got = multimodal._decode_media(_enc(arr), "tiff", 4, 4)
+        got = codecs.decode(_enc(arr), 4, 4, "tiff")
         np.testing.assert_array_equal(got, arr)
 
     @settings(max_examples=20, deadline=None)
