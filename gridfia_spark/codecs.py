@@ -109,13 +109,15 @@ def _decode_image(data: bytes, w: int, h: int, fmt: str) -> np.ndarray:
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak signal-to-noise ratio in dB (peak = max of reference array)."""
+    """Peak signal-to-noise ratio in dB of ``b`` against the reference
+    ``a``. The peak follows ``a``'s dtype: 255 for ``uint8`` (an 8-bit
+    image), else the max of ``|a|`` (a float tile)."""
     a64 = a.astype(np.float64)
     b64 = b.astype(np.float64)
     mse = float(np.mean((a64 - b64) ** 2))
     if mse == 0.0:
         return float("inf")
-    peak = float(np.max(np.abs(a64)))
+    peak = 255.0 if a.dtype == np.uint8 else float(np.max(np.abs(a64)))
     if peak == 0.0:
         return float("inf")
     return 10.0 * np.log10(peak * peak / mse)

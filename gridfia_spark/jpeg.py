@@ -476,11 +476,3 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
     b = y + 1.772 * (cb - 128.0)
     out = np.stack([r, g, b], axis=-1)
     return np.clip(np.round(out), 0, 255).astype(np.uint8)
-
-
-def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak signal-to-noise ratio in dB between two uint8 arrays."""
-    mse = float(np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2))
-    if mse == 0:
-        return float("inf")
-    return 10.0 * np.log10(255.0 * 255.0 / mse)

@@ -912,7 +912,7 @@ def jpeg_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 u8 = orig.astype(np.uint8)  # u8z contract: int-valued <=255
                 data = jpeg.encode_jpeg(u8, quality=95)
                 dec = cdx.decode(data, int(r.w), int(r.h), "jpeg").astype(np.uint8)
-                p = jpeg.psnr(u8, dec)
+                p = cdx.psnr(u8, dec)
                 out.append((r.image_id, u8.size, int(p >= 40.0)))
             yield pd.DataFrame(out, columns=["image_id", "npx", "psnr_ge_40"])
 

@@ -77,25 +77,17 @@ from ..operators import decode
 ZARR_FORMAT = 2  # default write dialect (back-compat)
 
 
-def _root_attrs(n_layers: int, gw: int, gh: int, codes=None, names=None,
-                transform: list | None = None) -> dict:
+def _root_attrs(n_layers: int, gw: int, gh: int, codes=None, names=None) -> dict:
     """Root-group attributes in the REFERENCE's layout (zarr_utils.py:
     721-726): transform is rasterio Affine order (a,b,c,d,e,f) =
     (PIX, 0, X0, 0, -PIX, Y0) — NOT the GDAL-style order the engine uses
-    in captions; bounds are (left, bottom, right, top). ``transform``
-    overrides the canonical affine (derived products on a DIFFERENT
-    grid — e.g. a warped cube — must not claim the source grid's
-    georeferencing); bounds follow from it."""
+    in captions; bounds are (left, bottom, right, top)."""
     codes = codes if codes is not None else [c for c, _ in SPECIES[:n_layers]]
     names = names if names is not None else [n for _, n in SPECIES[:n_layers]]
-    t = list(transform) if transform is not None else [
-        PIX, 0.0, X0, 0.0, -PIX, Y0
-    ]
-    a, _, c, _, e, f = t
     return {
         "crs": CRS,
-        "transform": t,
-        "bounds": [c, f + gh * e, c + gw * a, f],
+        "transform": [PIX, 0.0, X0, 0.0, -PIX, Y0],
+        "bounds": [X0, Y0 - gh * PIX, X0 + gw * PIX, Y0],
         "width": gw,
         "height": gh,
         "num_species": n_layers,
@@ -316,13 +308,11 @@ def _write_array_meta(
             fh,
         )
     # array-level transform stays in the GDAL-style order documented in
-    # the module docstring — DERIVED from the root affine so stores on a
-    # non-canonical grid (warped cubes) stay self-consistent
-    ra, _, rc, _, re_, rf = root_attrs["transform"]
+    # the module docstring
     array_attrs = {
         "crs": CRS,
         "units": UNITS,
-        "transform": [rc, ra, 0.0, rf, 0.0, re_],
+        "transform": [X0, PIX, 0.0, Y0, 0.0, -PIX],
         "species_codes": root_attrs["species_codes"],
         "_ARRAY_DIMENSIONS": ["species", "y", "x"],
     }
@@ -355,7 +345,6 @@ def write_zarr_store(
     level: int = 6,
     zarr_format: int = ZARR_FORMAT,
     codec: str | None = None,
-    transform: list | None = None,
 ) -> int:
     """Write engine tile rows as a genuine Zarr group ``path`` holding one
     float32 array ``array`` of shape (n_layers, gh, gw), chunked
@@ -367,9 +356,11 @@ def write_zarr_store(
     (either dialect) writes Blosc1-LZ4 chunks — the reference's own
     compressor (zarr_utils.py:702-705), readable by any c-blosc build;
     the pure-python LZ4 is correctness-grade, so keep the zlib/gzip
-    defaults on throughput paths. Chunk files are written BY THE TASKS
-    (one file per tile row, no driver assembly); returns the number of
-    chunks."""
+    defaults on throughput paths. The root attrs carry the canonical
+    grid's ``crs``, ``transform`` and ``bounds`` (``_root_attrs``), the
+    grid every tile operator places tiles on. Chunk files are written BY
+    THE TASKS (one file per tile row, no driver assembly); returns the
+    number of chunks."""
     if zarr_format not in (2, 3):
         raise ValueError(f"unsupported zarr_format {zarr_format} (2 or 3)")
     if codec not in (None, "zlib", "gzip", "blosc"):
@@ -390,7 +381,7 @@ def write_zarr_store(
         gw, gh = (wr.txmax + 1) * tw, (wr.tymax + 1) * th
         _write_array_meta(
             path, array, [n_layers, gh, gw], [1, th, tw], level, zarr_format,
-            _root_attrs(n_layers, gw, gh, transform=transform), codec,
+            _root_attrs(n_layers, gw, gh), codec,
         )
 
     return _write_staged(
@@ -475,6 +466,7 @@ class ZarrMeta(NamedTuple):
     chunks: list[int]
     compressor: str | None  # "zlib" | "gzip" | "blosc" | None (raw)
     attrs: dict  # root attrs overlaid with array attrs
+    root: dict  # root-group attrs alone (the reference's georeference)
     # chunk-key encoding: ("v2", ".") flat i.j.k names (all v2 stores),
     # ("default", "/") nested c/i/j/k (v3 default), ("default", ".")
     # flat c.i.j.k, ("v2", "/") nested i/j/k
@@ -499,6 +491,7 @@ def zarr_meta(path: str, array: str | None = None) -> ZarrMeta:
         return ZarrMeta(
             2, list(zarray["shape"]), list(zarray["chunks"]),
             comp.get("id") if comp else None, {**root_attrs, **attrs},
+            root_attrs,
         )
     with open(os.path.join(path, array, "zarr.json")) as fh:
         doc = json.load(fh)
@@ -545,21 +538,40 @@ def zarr_meta(path: str, array: str | None = None) -> ZarrMeta:
         3, list(doc["shape"]), list(grid["configuration"]["chunk_shape"]),
         comp,
         {**root_attrs, **doc.get("attributes", {})},
+        root_attrs,
         (enc_name, sep),
     )
 
 
-def _read_root_attrs(path: str, version: int) -> dict:
-    """Root-GROUP attributes only (what the reference's ZarrStore reads
-    for georeferencing, zarr_utils.py:721-726) — no array-level overlay."""
-    if version == 3:
-        with open(os.path.join(path, "zarr.json")) as fh:
-            return json.load(fh).get("attributes", {})
-    rz = os.path.join(path, ".zattrs")
-    if os.path.exists(rz):
-        with open(rz) as fh:
-            return json.load(fh)
-    return {}
+def _check_grid(m: ZarrMeta, where: str) -> None:
+    """Refuse a store the engine would place on the wrong ground: the tile
+    operators put every chunk on the canonical grid (``constants.CRS``,
+    ``X0``/``Y0``/``PIX``), so a root or array-level ``crs``, ``transform``
+    (allclose, rtol=1e-5, in the root's Affine or the array's GDAL order)
+    or ``bounds`` that says otherwise raises ``ValueError``. The
+    reference makes the same allclose checks before an append
+    (zarr_utils.py:792-806). A missing attr passes."""
+    _, gh, gw = (int(x) for x in m.shape)
+    affine_t = [PIX, 0.0, X0, 0.0, -PIX, Y0]
+    gdal_t = [X0, PIX, 0.0, Y0, 0.0, -PIX]
+    want_b = [X0, Y0 - gh * PIX, X0 + gw * PIX, Y0]
+    for attrs in (m.root, m.attrs):
+        crs = attrs.get("crs", CRS)
+        if crs != CRS:
+            raise ValueError(f"{where}: crs mismatch (store {crs!r}, grid {CRS!r})")
+        got_t = attrs.get("transform", affine_t)
+        if len(got_t) != 6 or not (
+            np.allclose(got_t, affine_t, rtol=1e-5)
+            or np.allclose(got_t, gdal_t, rtol=1e-5)
+        ):
+            raise ValueError(
+                f"{where}: transform mismatch (store {got_t}, grid {affine_t})"
+            )
+        got_b = attrs.get("bounds", want_b)
+        if len(got_b) != 4 or not np.allclose(got_b, want_b, rtol=1e-5):
+            raise ValueError(
+                f"{where}: bounds mismatch (store {got_b}, grid {want_b})"
+            )
 
 
 def read_zarr_store(
@@ -587,13 +599,16 @@ def read_zarr_store(
     blosc chunks pass one ``mapInPandas`` that re-encodes them to ``rawz``
     and computes ``phash`` from the same decode.
 
-    A layer whose species code is outside ``constants.SPECIES`` raises
-    ``ValueError`` here (the tile operators place layers by that list), and
-    a chunk whose layer index is beyond the store's code list fails the
+    A store whose ``crs``, ``transform`` or ``bounds`` attr is off the
+    canonical grid raises ``ValueError`` here (``_check_grid``), and so
+    does a layer whose species code is outside ``constants.SPECIES`` (the
+    tile operators place tiles by that grid and layers by that list); a
+    chunk whose layer index is beyond the store's code list fails the
     scan."""
     if array is None:
         array = find_array(path)
     m = zarr_meta(path, array)
+    _check_grid(m, "read_zarr_store")
     _, th, tw = (int(c) for c in m.chunks)
     known = dict(SPECIES)
     codes = [str(c) for c in m.attrs.get("species_codes") or known]
@@ -706,18 +721,6 @@ def _decode_chunk_bytes(raw: bytes, compressor: str | None) -> bytes:
     return raw
 
 
-def _affine_order(t: list | None) -> list | None:
-    """Normalize a 6-element transform to rasterio Affine order
-    (a,b,c,d,e,f): v2 array-level .zattrs carry the GDAL order
-    [X0, PIX, 0, Y0, 0, -PIX]; v3/root attrs carry Affine
-    [PIX, 0, X0, 0, -PIX, Y0] (same dual layout append_layer accepts)."""
-    if t is None or len(t) != 6:
-        return t
-    if t[2] == 0 and t[1] != 0:  # GDAL order
-        return [t[1], 0.0, t[0], 0.0, t[5], t[3]]
-    return list(t)
-
-
 def validate_store(path: str, array: str | None = None) -> dict:
     """Validate and summarize an on-disk store, either dialect — the
     engine form of the reference's ``validate_zarr_store``
@@ -727,7 +730,6 @@ def validate_store(path: str, array: str | None = None) -> dict:
     driver-side metadata + listing work, no chunk is opened."""
     info: dict = {"path": path, "errors": []}
     try:
-        version = detect_zarr_format(path)
         if array is None:
             array = find_array(path)
         m = zarr_meta(path, array)
@@ -737,15 +739,14 @@ def validate_store(path: str, array: str | None = None) -> dict:
         return info
     n_layers, gh, gw = (int(x) for x in m.shape)
     _, th, tw = (int(c) for c in m.chunks)
-    root = _read_root_attrs(path, version)
     info.update(
         shape=tuple(m.shape),
         chunks=tuple(m.chunks),
         dtype="float32",
         compression=m.compressor,
         num_species=int(m.attrs.get("num_species", n_layers)),
-        crs=root.get("crs"),
-        bounds=root.get("bounds"),
+        crs=m.root.get("crs"),
+        bounds=m.root.get("bounds"),
         species=[],
     )
     codes = m.attrs.get("species_codes", [])
@@ -802,14 +803,16 @@ def append_layer(
     (zarr_utils.py:754-818): chunk writes for the new layer are fully
     distributed (tasks write only the new layer's chunk files; existing
     chunks are untouched), the driver updates only the JSON metadata, and
-    ``validate_alignment`` mirrors the reference's ``np.allclose`` checks
-    on transform/bounds (:792-806) plus the chunk-dimension contract.
-    Works on both v2 and v3 stores (auto-detected). Returns the layer
-    index the species was written at."""
-    version = detect_zarr_format(path)
+    ``validate_alignment`` runs the store's grid check (``_check_grid``:
+    the reference's ``np.allclose`` checks on transform/bounds, :792-806,
+    and the CRS) before the chunk-dimension contract. Works on both v2 and
+    v3 stores (auto-detected). Returns the layer index the species was
+    written at."""
     if array is None:
         array = find_array(path)
     m = zarr_meta(path, array)
+    if validate_alignment:
+        _check_grid(m, "append_layer")
     n_layers, gh, gw = (int(x) for x in m.shape)
     _, th, tw = (int(c) for c in m.chunks)
     meta = decode.with_tile_meta(tiles)
@@ -830,27 +833,6 @@ def append_layer(
         )
     if (int(info.txmax) + 1) * tw > gw or (int(info.tymax) + 1) * th > gh:
         raise ValueError("append_layer: tile extent exceeds the store grid")
-    if validate_alignment:
-        # the reference rejects stores whose georeferencing doesn't match
-        # the incoming raster (allclose, rtol=1e-5); the engine's rasters
-        # live on the canonical grid, so the check runs against it
-        affine_t = [PIX, 0.0, X0, 0.0, -PIX, Y0]  # root attrs (ref layout)
-        gdal_t = [X0, PIX, 0.0, Y0, 0.0, -PIX]  # array-level .zattrs layout
-        want_b = [X0, Y0 - gh * PIX, X0 + gw * PIX, Y0]
-        root = _read_root_attrs(path, version)
-        got_t = root.get("transform", m.attrs.get("transform", affine_t))
-        got_b = root.get("bounds", m.attrs.get("bounds", want_b))
-        if len(got_t) != 6 or not (
-            np.allclose(got_t, affine_t, rtol=1e-5)
-            or np.allclose(got_t, gdal_t, rtol=1e-5)
-        ):
-            raise ValueError(
-                f"append_layer: transform mismatch (store {got_t}, grid {affine_t})"
-            )
-        if len(got_b) != 4 or not np.allclose(got_b, want_b, rtol=1e-5):
-            raise ValueError(
-                f"append_layer: bounds mismatch (store {got_b}, grid {want_b})"
-            )
     if m.compressor is None:
         raise ValueError(
             "append_layer: uncompressed stores are not supported for "
@@ -864,9 +846,9 @@ def append_layer(
     names = list(m.attrs.get("species_names", [n for _, n in SPECIES[:n_layers]]))
     codes, names = codes[:idx] + [species_code], names[:idx] + [species_name]
     _write_staged(
-        meta, path, array, level, version,
+        meta, path, array, level, m.version,
         lambda _: _write_array_meta(
-            path, array, [new_n, gh, gw], [1, th, tw], level, version,
+            path, array, [new_n, gh, gw], [1, th, tw], level, m.version,
             _root_attrs(new_n, gw, gh, codes, names), m.compressor,
         ),
         layer=idx, codec=m.compressor,

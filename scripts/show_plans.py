@@ -44,17 +44,6 @@ def main() -> None:
     )
     knn._round(q, t, 5, 15, 1, True).explain("formatted")
 
-    # round-5 warp operators (PLANS §31, §37)
-    from gridfia_spark.constants import spec_for_sf_dir
-    from gridfia_spark.operators import warp
-
-    spec = spec_for_sf_dir(SF)
-    print("===== warp_tiles (one exchange = output pixels) =====")
-    warp.warp_tiles(tiles, spec, (3, 2, 1), (2, 3, 1)).explain("formatted")
-    print("===== warp_tiles_bilinear (<=4x output, no tile bytes) =====")
-    warp.warp_tiles_bilinear(
-        tiles, spec, (3, 2, 1), (2, 3, 1)
-    ).explain("formatted")
     # PLANS §22: store scan -> metric kernels, one Python node
     import tempfile
 

@@ -28,6 +28,32 @@ class TestCodecs:
             dec = codecs.decode(codecs.encode(arr, "qnt8"), spec.tile_w, spec.tile_h, "qnt8")
             assert codecs.psnr(arr, dec) >= 40.0
 
+    def test_psnr_peak_follows_dtype(self):
+        """One PSNR for both callers: a uint8 reference peaks at 255 (the
+        JPEG round trip), a float reference at its max |a| (the qnt8 gate)."""
+
+        def mse(a, b):
+            return float(np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2))
+
+        def peak_255(a, b):
+            return 10.0 * np.log10(255.0 * 255.0 / mse(a, b))
+
+        def peak_max(a, b):
+            peak = float(np.max(np.abs(a.astype(np.float64))))
+            return 10.0 * np.log10(peak * peak / mse(a, b))
+
+        rng = np.random.default_rng(7)
+        u8 = rng.integers(0, 200, (16, 16)).astype(np.uint8)
+        noise = rng.integers(-3, 4, u8.shape)
+        u8b = np.clip(u8.astype(np.int64) + noise, 0, 255).astype(np.uint8)
+        assert codecs.psnr(u8, u8b) == peak_255(u8, u8b)
+        f32, f32b = u8.astype(np.float32), u8b.astype(np.float32)
+        assert f32.max() < 255
+        assert codecs.psnr(f32, f32b) == peak_max(f32, f32b)
+        assert codecs.psnr(f32, f32b) < codecs.psnr(u8, u8b)
+        assert codecs.psnr(u8, u8) == float("inf")
+        assert codecs.psnr(np.zeros(4, np.float32), np.ones(4, np.float32)) == float("inf")
+
     def test_dim_validation(self):
         arr = np.zeros((4, 4), dtype=np.float32)
         data = codecs.encode(arr, "raw32")

@@ -43,10 +43,6 @@ zb = zarr_blosc_roundtrip(spark, "/root/testdata/sf0.001").toPandas()
 zb = zb.sort_values("image_id", ignore_index=True)
 gs = geotiff_strip_scan(spark, "/root/testdata/sf0.001").toPandas()
 gs = gs.sort_values("strip", ignore_index=True)
-# round-5 session 4: the warp gather (one shuffle whose contribution
-# grouping changes with cores) must assemble identical target tiles
-wr = Q.warp_regrid(spark, "/root/testdata/sf0.001").toPandas()
-wr = wr.sort_values("image_id", ignore_index=True)
 # round-6: the sorted batch-grouping metric pass holds a tile group across
 # Arrow batch boundaries — partition layout and batch splits change with
 # cores/shuffle settings, results must not
@@ -59,7 +55,6 @@ print("RESULT" + json.dumps({{"zonal": pdf.to_dict("records"),
                               "png": pn.to_dict("records"),
                               "blosc": zb.to_dict("records"),
                               "stripscan": gs.to_dict("records"),
-                              "warp": wr.to_dict("records"),
                               "metrics": mx.to_dict("records")}}))
 spark.stop()
 """

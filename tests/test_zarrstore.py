@@ -709,6 +709,35 @@ class TestStoreScan:
         back = zarrstore.read_zarr_store(spark, store, species=[2])
         assert back.count() == spec.tiles_x * spec.tiles_y
 
+    def test_off_grid_store_raises_at_read(self, spark, tmp_path):
+        """A store whose attrs put it on another grid (10 m pixels 1 km
+        east, or a foreign CRS) fails at read: the tile operators would
+        place its tiles on the canonical 30 m grid with no error."""
+        tiles = tgen.ensure_tiles(spark, SF_DIR)
+        store = str(tmp_path / "grid.zarr")
+        zarrstore.write_zarr_store(tiles, store)
+        keys = (".zattrs", "biomass/.zattrs")
+        docs = {k: json.load(open(os.path.join(store, k))) for k in keys}
+        consolidated = json.load(open(os.path.join(store, ".zmetadata")))
+
+        def rewrite(root: dict, arr: dict) -> None:
+            # root attrs, array attrs and their consolidated copies alike
+            for key, upd in zip(keys, (root, arr)):
+                doc = {**docs[key], **upd}
+                json.dump(doc, open(os.path.join(store, key), "w"))
+                consolidated["metadata"][key] = doc
+            json.dump(consolidated, open(os.path.join(store, ".zmetadata"), "w"))
+
+        rewrite(
+            {"transform": [10.0, 0.0, -1999000.0, 0.0, -10.0, -900000.0]},
+            {"transform": [-1999000.0, 10.0, 0.0, -900000.0, 0.0, -10.0]},
+        )
+        with pytest.raises(ValueError, match="transform"):
+            zarrstore.read_zarr_store(spark, store)
+        rewrite({"crs": "EPSG:5070"}, {"crs": "EPSG:5070"})
+        with pytest.raises(ValueError, match="crs"):
+            zarrstore.read_zarr_store(spark, store)
+
     def test_layer_beyond_code_list_fails_scan(self, spark, tmp_path):
         """A chunk whose layer index has no entry in species_codes fails
         the scan with a message naming the chunk."""
