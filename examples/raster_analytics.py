@@ -28,18 +28,17 @@ def main() -> None:
 
     spark = get_spark(cores=8, app_name="raster-analytics-example")
     tiles = tgen.ensure_tiles(spark, SF_DIR)
-    work = tempfile.mkdtemp(prefix="raster_analytics_")
-
-    # 1. persist the cube, scan it back
-    store = f"{work}/cube.zarr"
-    n = zarrstore.write_zarr_store(tiles, store)
-    print(f"store: {n} chunks -> {store}")
-    back = zarrstore.read_zarr_store(spark, store)
-    # 2. the scan's per-tile stats equal the tile table's
-    want = decode.decode_stats(tiles).agg({"vsum": "sum"}).first()[0]
-    got = decode.decode_stats(back).agg({"vsum": "sum"}).first()[0]
-    assert got == want, (got, want)
-    print(f"store scan: {back.count()} tiles, vsum={got:.0f}")
+    with tempfile.TemporaryDirectory(prefix="raster_analytics_") as work:
+        # 1. persist the cube, scan it back
+        store = f"{work}/cube.zarr"
+        n = zarrstore.write_zarr_store(tiles, store)
+        print(f"store: {n} chunks -> {store}")
+        back = zarrstore.read_zarr_store(spark, store)
+        # 2. the scan's per-tile stats equal the tile table's
+        want = decode.decode_stats(tiles).agg({"vsum": "sum"}).first()[0]
+        got = decode.decode_stats(back).agg({"vsum": "sum"}).first()[0]
+        assert got == want, (got, want)
+        print(f"store scan: {back.count()} tiles, vsum={got:.0f}")
 
     spark.stop()
     print("OK")

@@ -20,10 +20,17 @@ join of two tables) gives the target density; no caller passes statistics.
 Too few targets to ever prove a query fails fast, before any join. Only a
 self-join (``queries is targets``) drops a neighbor by id (the point itself).
 
-Scale notes: ring explosion is (2R+1)^2 rows per query, on the (small) query
-side only; the build side shuffles once on (cx, cy); AQE skew-join splits hot
-cells. Distances use exact arithmetic on coordinates (dist_sq), ties broken
-by neighbor id for determinism.
+Scale notes: ring explosion is (2R+1)^2 rows per query, on the query side
+only. The round has two plans, chosen from the target count the stats pass
+already has. When the targets fit under Spark's own
+``spark.sql.autoBroadcastJoinThreshold`` (48 B a row; -1 means never), the
+query side is hash-partitioned once on ``point_id`` and the targets are
+broadcast: the ring probes them inside the query partitions, so the top-k
+window runs in the join's stage, with no shuffle of candidate rows and one
+sort. Otherwise both sides shuffle on (cx, cy) and the window shuffles on
+``point_id``; AQE skew-join splits hot cells, and no target table has to fit
+in the driver. Distances use exact arithmetic on coordinates (dist_sq), ties
+broken by neighbor id for determinism.
 """
 
 from __future__ import annotations
@@ -36,6 +43,34 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import grid
+
+# An UnsafeRow of the five 8-byte target columns: null bitset + 5 fields.
+_T_ROW_BYTES = 48
+
+
+def _targets(targets: DataFrame, res: int) -> DataFrame:
+    """The build side of every round: (neighbor_id, nx, ny, cx, cy)."""
+    ix, iy = grid.cell_index_cols(F.col("x"), F.col("y"), res)
+    return targets.select(
+        F.col("point_id").alias("neighbor_id"),
+        F.col("x").alias("nx"),
+        F.col("y").alias("ny"),
+        ix.alias("cx"),
+        iy.alias("cy"),
+    )
+
+
+def _place(q: DataFrame, t: DataFrame, n_t: int) -> tuple[DataFrame, DataFrame]:
+    """The round's plan, from the target count: targets under Spark's
+    broadcast threshold are broadcast into the query side, hash-partitioned
+    once on ``point_id`` (so the top-k window needs no exchange of its
+    own); larger targets keep the shuffle join."""
+    spark = q.sparkSession
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if n_t * _T_ROW_BYTES > limit:
+        return q, t
+    n = spark.sparkContext.defaultParallelism
+    return q.repartition(n, "point_id"), F.broadcast(t)
 
 
 def _ring_cells(df: DataFrame, res: int, radius: int) -> DataFrame:
@@ -96,17 +131,14 @@ def knn_join(
     same pass). Fewer than k targets (k+1 in a self-join) raise
     ``ValueError`` before any join; a query still unproven at
     ``max_radius`` raises ``RuntimeError`` and leaves nothing cached.
+
+    The same target count picks one of two round plans against Spark's
+    ``spark.sql.autoBroadcastJoinThreshold`` (``_place``): broadcast targets
+    into queries partitioned on ``point_id``, or the shuffle join.
     """
     self_join = queries is targets
     q = queries.select("point_id", "x", "y")
-    ix, iy = grid.cell_index_cols(F.col("x"), F.col("y"), res)
-    t = targets.select(
-        F.col("point_id").alias("neighbor_id"),
-        F.col("x").alias("nx"),
-        F.col("y").alias("ny"),
-        ix.alias("cx"),
-        iy.alias("cy"),
-    )
+    t = _targets(targets, res)
 
     # Size the FIRST ring radius from target density: for k neighbors at
     # uniform density lam, d_k ~ sqrt(k/(pi*lam)), and the completeness
@@ -145,7 +177,7 @@ def knn_join(
         d_k = math.sqrt((k + 1) / (math.pi * lam))
         est = max(1, math.ceil(2.0 * d_k / cs))
     radius = min(est, max_radius)
-    qleft = q
+    qleft, t = _place(q, t, n_t)
     done: list[DataFrame] = []  # proven per-query top-k pieces
     kept: list[DataFrame] = []  # the persisted rounds those pieces read
     while True:

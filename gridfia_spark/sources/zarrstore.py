@@ -727,7 +727,9 @@ def validate_store(path: str, array: str | None = None) -> dict:
     (zarr_utils.py:1028-1065): same summary keys (path/shape/chunks/
     dtype/compression/num_species/crs/bounds/species) plus a chunk-file
     census (expected vs found per layer) and an ``errors`` list; purely
-    driver-side metadata + listing work, no chunk is opened."""
+    driver-side metadata + listing work, no chunk is opened. A store off
+    the canonical grid (``_check_grid``, which ``read_zarr_store``
+    enforces) is invalid, with the mismatch in ``errors``."""
     info: dict = {"path": path, "errors": []}
     try:
         if array is None:
@@ -778,6 +780,10 @@ def validate_store(path: str, array: str | None = None) -> dict:
                     for _, _, files in os.walk(os.path.join(base, s))
                 )
                 found[int(s)] = n
+    try:
+        _check_grid(m, "validate_store")
+    except ValueError as exc:
+        info["errors"].append(str(exc))
     info["chunks_per_layer_expected"] = per_layer
     info["chunks_per_layer_found"] = dict(sorted(found.items()))
     for s, n in found.items():

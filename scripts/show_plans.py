@@ -8,9 +8,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
-from gridfia_spark import grid
 from gridfia_spark.datagen import tiles as tgen
 from gridfia_spark.operators import broadcast_join, decode, knn, zonal
 from gridfia_spark.session import get_spark
@@ -31,18 +28,13 @@ def main() -> None:
     broadcast_join.zonal_stats_fast(tiles, polys, species=0, res=15).explain("formatted")
     print("===== zonal_stats_dist, species=None (in-cluster pairs per (tx, ty)) =====")
     zonal.zonal_stats_dist(tiles, polys, species=None, res=15).explain("formatted")
-    print("===== knn proof round (ring join on (cx, cy), disc, top-k) =====")
-    # one round's plan (the loop reuses it for the unproven queries)
+    print("===== knn proof round (queries on point_id, targets broadcast) =====")
+    # one round's plan as knn_join places it (the loop reuses it for the
+    # unproven queries); targets over the broadcast threshold keep the
+    # shuffle join
     q = pts.select("point_id", "x", "y")
-    cx, cy = grid.cell_index_cols(F.col("x"), F.col("y"), 15)
-    t = q.select(
-        F.col("point_id").alias("neighbor_id"),
-        F.col("x").alias("nx"),
-        F.col("y").alias("ny"),
-        cx.alias("cx"),
-        cy.alias("cy"),
-    )
-    knn._round(q, t, 5, 15, 1, True).explain("formatted")
+    qleft, t = knn._place(q, knn._targets(pts, 15), pts.count())
+    knn._round(qleft, t, 5, 15, 1, True).explain("formatted")
 
     # PLANS §22: store scan -> metric kernels, one Python node
     import tempfile

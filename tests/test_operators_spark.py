@@ -178,6 +178,19 @@ class TestKnn:
         monkeypatch.setattr(knn, "_round", spy)
         return radii
 
+    def _round_plans(self, monkeypatch):
+        """Record the physical plan of every proof round ``knn_join`` runs."""
+        plans = []
+        inner = knn._round
+
+        def spy(*args):
+            out = inner(*args)
+            plans.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        monkeypatch.setattr(knn, "_round", spy)
+        return plans
+
     def test_escalation_self_join_vs_bruteforce(self, spark, monkeypatch):
         xy = self._layout(150, seed=12)
         ids = np.arange(len(xy)) * 7 + 3
@@ -204,6 +217,25 @@ class TestKnn:
         assert {tuple(r) for r in got.collect()} == self._brute(
             q_ids, q_xy, t_ids, t_xy, 4, self_join=False
         )
+
+    def test_shuffle_plan_when_broadcast_is_off(self, spark, monkeypatch):
+        """With ``spark.sql.autoBroadcastJoinThreshold=-1`` no target table
+        fits, so every round keeps the shuffle join: the same rows as the
+        broadcast plan, both escalation layouts still exact, and no round
+        broadcasts the targets."""
+        pts = tgen.points_df(spark, SF_DIR)
+        want = sorted(knn.knn_join(pts, pts, k=3).collect())
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            plans = self._round_plans(monkeypatch)
+            assert sorted(knn.knn_join(pts, pts, k=3).collect()) == want
+            self.test_escalation_self_join_vs_bruteforce(spark, monkeypatch)
+            self.test_escalation_zero_candidate_query_vs_bruteforce(spark, monkeypatch)
+        finally:
+            spark.conf.set(key, old)
+        assert plans and not any("BroadcastExchange" in p for p in plans), plans
 
     def test_unconverged_leaves_no_cache(self, spark):
         """Round one proves the cluster and keeps its rows; the outliers

@@ -107,6 +107,41 @@ class TestPlanShapes:
         assert plan.count("Exchange") == 1, plan
         assert "FileScan binaryFile" in plan.split("Exchange", 1)[1]
 
+    def test_knn_round_is_one_stage(self, spark, monkeypatch):
+        """PLANS.md §4: targets under the broadcast threshold are broadcast
+        into queries hash-partitioned once on point_id. Each round, as
+        knn_join runs it, has that one exchange; the top-k window runs in
+        the join's stage (no ENSURE_REQUIREMENTS exchange, no map-side
+        Partial WindowGroupLimit)."""
+        from gridfia_spark.datagen import tiles as tgen
+        from gridfia_spark.operators import knn
+
+        plans = []
+        inner = knn._round
+
+        def spy(*args):
+            out = inner(*args)
+            plans.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        monkeypatch.setattr(knn, "_round", spy)
+        # knn_join's result stays persisted; an earlier test's identical
+        # round would otherwise stand in for this plan as an InMemoryTableScan
+        spark.catalog.clearCache()
+        pts = tgen.points_df(spark, SF_DIR)
+        knn.knn_join(pts, pts, k=3)
+        assert plans
+        for plan in plans:
+            exchanges = re.findall(r"(?<!Broadcast)Exchange (.*)", plan)
+            assert len(exchanges) == 1, plan
+            assert re.match(
+                r"hashpartitioning\(point_id#\d+L?, \d+\), REPARTITION_BY_NUM",
+                exchanges[0],
+            ), plan
+            assert re.search(r"BroadcastExchange .*\n.*\[neighbor_id#", plan), plan
+            assert "ENSURE_REQUIREMENTS" not in plan
+            assert not re.search(r"WindowGroupLimit .*Partial", plan), plan
+
     def test_zonal_percentiles_has_no_buffering_aggregate(self, spark):
         """PLANS.md §11: histogram percentiles — no `percentile(` aggregate
         (which buffers a group's value population) anywhere in the plan."""

@@ -712,7 +712,8 @@ class TestStoreScan:
     def test_off_grid_store_raises_at_read(self, spark, tmp_path):
         """A store whose attrs put it on another grid (10 m pixels 1 km
         east, or a foreign CRS) fails at read: the tile operators would
-        place its tiles on the canonical 30 m grid with no error."""
+        place its tiles on the canonical 30 m grid with no error. The
+        validator reports the same store invalid, naming the mismatch."""
         tiles = tgen.ensure_tiles(spark, SF_DIR)
         store = str(tmp_path / "grid.zarr")
         zarrstore.write_zarr_store(tiles, store)
@@ -728,15 +729,23 @@ class TestStoreScan:
                 consolidated["metadata"][key] = doc
             json.dump(consolidated, open(os.path.join(store, ".zmetadata"), "w"))
 
+        def assert_invalid(mismatch: str) -> None:
+            # the validator refuses what the reader refuses
+            info = zarrstore.validate_store(store)
+            assert not info["valid"]
+            assert any(mismatch in e for e in info["errors"]), info["errors"]
+
         rewrite(
             {"transform": [10.0, 0.0, -1999000.0, 0.0, -10.0, -900000.0]},
             {"transform": [-1999000.0, 10.0, 0.0, -900000.0, 0.0, -10.0]},
         )
         with pytest.raises(ValueError, match="transform"):
             zarrstore.read_zarr_store(spark, store)
+        assert_invalid("transform mismatch")
         rewrite({"crs": "EPSG:5070"}, {"crs": "EPSG:5070"})
         with pytest.raises(ValueError, match="crs"):
             zarrstore.read_zarr_store(spark, store)
+        assert_invalid("crs mismatch")
 
     def test_layer_beyond_code_list_fails_scan(self, spark, tmp_path):
         """A chunk whose layer index has no entry in species_codes fails
